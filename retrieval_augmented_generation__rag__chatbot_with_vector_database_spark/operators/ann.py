@@ -45,10 +45,24 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.fun
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
-    swap_partition_dirs,
+    delete_keys,
+    pick_survivors,
+    upsert_keys,
 )
 
 IVF_META = "_ivf_meta.json"
+
+
+def check_centroid_ids(centroids: list[tuple[int, list[float]]]) -> None:
+    """The IVF and IVFPQ layouts store ``centroid_id`` as int32; an id
+    outside that range would be silently truncated by the assignment
+    kernels, so a writer refuses it up front."""
+    for cid, _ in centroids:
+        if not -(2**31) <= int(cid) < 2**31:
+            raise ValueError(
+                f"centroid id {int(cid)} does not fit the layout's int32 "
+                "centroid_id; label the centroids 0..n-1"
+            )
 
 
 def _centroid_hash(centroids: list[tuple[int, list[float]]]) -> str:
@@ -519,6 +533,7 @@ def write_ivf_index(
 
     if compression not in (None, "int8"):
         raise ValueError("compression must be None or 'int8'")
+    check_centroid_ids(centroids)
     assign = assign_centroids_gemm if fast else assign_centroids
     assigned = assign(index, centroids, metric, vec_col)
     if compression == "int8":
@@ -600,16 +615,59 @@ def load_centroids(path: str) -> list[tuple[int, list[float]]]:
     return [(int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]]
 
 
+def sidecar_staleness(meta: dict) -> float:
+    """Fraction of a centroid layout changed (upserted + deleted) since
+    its last full build, from its sidecar — the retrain trigger of the
+    IVF and IVFPQ layouts alike."""
+    changed = int(meta.get("upserted_since_build", 0)) + int(
+        meta.get("deleted_since_build", 0)
+    )
+    return changed / max(int(meta.get("rows_at_build") or 1), 1)
+
+
+def bump_sidecar(path: str, meta_file: str, meta: dict, counter: str,
+                 n: int) -> float:
+    """Add ``n`` to the sidecar's ``counter`` (``upserted_since_build``
+    or ``deleted_since_build``), persist it, return the new staleness."""
+    meta[counter] = int(meta.get(counter, 0)) + n
+    with open(os.path.join(path, meta_file), "w") as f:
+        json.dump(meta, f)
+    return sidecar_staleness(meta)
+
+
+def delete_centroid_ids(spark: SparkSession, path: str,
+                        ids: DataFrame | list[int], id_col: str,
+                        meta_file: str) -> dict:
+    """Per-id delete shared by the IVF and IVFPQ layouts: rewrite only
+    the ``centroid_id`` partitions holding the ids and count the rows
+    removed into the sidecar's ``deleted_since_build``."""
+    check_not_torn(path)
+    with open(os.path.join(path, meta_file)) as f:
+        meta = json.load(f)
+    if isinstance(ids, list):
+        ids_df = spark.createDataFrame(
+            [(int(i),) for i in ids], f"{id_col} long"
+        )
+    else:
+        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
+    ids_df = ids_df.distinct().localCheckpoint(eager=True)
+    n_deleted, touched = delete_keys(
+        spark.read.parquet(path), path, "centroid_id", ids_df, id_col
+    )
+    staleness = (
+        bump_sidecar(path, meta_file, meta, "deleted_since_build", n_deleted)
+        if touched
+        else sidecar_staleness(meta)
+    )
+    return {"touched": touched, "n_deleted": n_deleted, "staleness": staleness}
+
+
 def ivf_staleness(path: str) -> float:
     """Fraction of the layout changed (upserted + deleted) since the
     last full build — the retrain trigger (centroids drift as the
     corpus moves, and deletions remove mass the quantizer was trained
     on; rebuild when this crosses a policy bound, e.g. 0.2)."""
-    meta = ivf_meta(path)
-    changed = int(meta.get("upserted_since_build", 0)) + int(
-        meta.get("deleted_since_build", 0)
-    )
-    return changed / max(meta["rows_at_build"] or 1, 1)
+    return sidecar_staleness(ivf_meta(path))
 
 
 def read_ivf_index(spark: SparkSession, path: str) -> DataFrame:
@@ -638,17 +696,16 @@ def upsert_ivf_index(
     1. assign each record to its nearest centroid (GEMM kernel by
        default; expression form with ``fast=False`` for bit-exact
        oracle parity) — a narrow map, no shuffle;
-    2. find the partitions holding OLD versions of the upserted ids
-       with a broadcast semi-join of the (tiny) id batch against the
-       layout's ``(id, centroid_id)`` columns — column-pruned scan,
-       parquet row-group stats skip files whose id range can't match;
-       at 100 TB co-maintain the id→centroid pair in the id-bucketed
-       flat index instead, making this lookup O(|batch|);
-    3. rewrite only the union of old+new partitions: surviving rows
-       (anti-join on id, batch side broadcast) ∪ newly assigned rows,
-       one output file per touched partition;
-    4. crash-consistent marker-fenced swap (``sources.layout``), then
-       bump the sidecar's staleness counter.
+    2. ``sources.layout.upsert_keys``: one collect finds the new
+       partitions and those holding OLD versions of the upserted ids
+       (broadcast join of the tiny id batch against the layout's
+       column-pruned ``(id, centroid_id)`` scan; at 100 TB co-maintain
+       the id→centroid pair in the id-bucketed flat index instead,
+       making this lookup O(|batch|)); only the union of old+new
+       partitions is rewritten — surviving rows (anti-join on id) ∪
+       newly assigned rows, one file per touched partition — under
+       the crash-consistent marker-fenced swap;
+    3. bump the sidecar's staleness counter.
 
     Metric and compression are read from the sidecar, so the merged
     partitions are produced by the same kernels as the original build.
@@ -687,56 +744,25 @@ def upsert_ivf_index(
             f"{meta['n_centroids']}"
         )
     assign = assign_centroids_gemm if fast else assign_centroids
-    assigned = assign(records, centroids, metric, vec_col)
     # intra-batch LWW: one survivor per id, same md5-payload total
     # order as merge_last_write_wins (deterministic across runs)
-    payload = sorted(c for c in assigned.columns if c != id_col)
-    dw = Window.partitionBy(id_col).orderBy(
-        F.md5(F.to_json(F.struct(*payload))).asc()
-    )
-    assigned = (
-        assigned.withColumn("__rn", F.row_number().over(dw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=True)
-    )
+    assigned = pick_survivors(
+        assign(records, centroids, metric, vec_col), id_col
+    ).localCheckpoint(eager=True)
     n_new = assigned.count()
     if n_new == 0:
-        return {"touched": [], "n_upserted": 0, "staleness": ivf_staleness(path)}
-    ids = assigned.select(id_col).distinct()
-    layout = spark.read.parquet(path)
-    new_parts = {
-        r["centroid_id"]
-        for r in assigned.select("centroid_id").distinct().collect()
-    }
-    old_parts = {
-        r["centroid_id"]
-        for r in layout.join(F.broadcast(ids), id_col)
-        .select("centroid_id")
-        .distinct()
-        .collect()
-    }
-    touched = sorted(new_parts | old_parts)
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids), id_col, "left_anti"
-    )
+        return {"touched": [], "n_upserted": 0,
+                "staleness": sidecar_staleness(meta)}
     fresh = _compress_int8(assigned, vec_col) if compression == "int8" else assigned
-    merged = survivors.unionByName(fresh.select(*survivors.columns))
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        merged.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
+    touched = upsert_keys(
+        spark.read.parquet(path), path, "centroid_id", fresh, id_col
     )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
-    meta["upserted_since_build"] = int(meta.get("upserted_since_build", 0)) + n_new
-    with open(os.path.join(path, IVF_META), "w") as f:
-        json.dump(meta, f)
     return {
         "touched": touched,
         "n_upserted": n_new,
-        "staleness": ivf_staleness(path),
+        "staleness": bump_sidecar(
+            path, IVF_META, meta, "upserted_since_build", n_new
+        ),
     }
 
 
@@ -748,60 +774,20 @@ def delete_ivf_ids(
 ) -> dict:
     """Right-to-be-forgotten / takedown propagation for the float IVF
     layout — same touched-partition discipline as
-    :func:`upsert_ivf_index`: a broadcast semi-join finds the
-    centroid partitions that HOLD the ids (column-pruned scan), only
-    those are re-merged via anti-join and crash-consistently swapped
-    (a partition emptied by the delete disappears from the layout);
-    untouched partitions stay byte-identical. Deleting absent ids is
-    a no-op. Deletions count into ``deleted_since_build`` — quantizer
-    drift exactly like upserts — so :func:`ivf_staleness` fires the
-    retrain policy on churn, not only growth. Composes with
-    ``VectorIndex.delete_ids`` / ``LexicalIndex.delete_docs`` /
-    ``pq.delete_ivfpq_ids`` for cross-layout takedown of a document.
+    :func:`upsert_ivf_index`: a broadcast join finds the centroid
+    partitions that HOLD the ids, only those are re-merged via
+    anti-join and crash-consistently swapped (a partition emptied by
+    the delete disappears from the layout); untouched partitions stay
+    byte-identical. Deleting absent ids is a no-op. Deletions count
+    into ``deleted_since_build`` — quantizer drift exactly like
+    upserts — so :func:`ivf_staleness` fires the retrain policy on
+    churn, not only growth. Composes with ``VectorIndex.delete_ids`` /
+    ``LexicalIndex.delete_docs`` / ``pq.delete_ivfpq_ids`` for
+    cross-layout takedown of a document.
 
     Returns ``{"touched": [...], "n_deleted": int, "staleness": float}``.
     """
-    check_not_torn(path)
-    meta = ivf_meta(path)
-    if isinstance(ids, list):
-        ids_df = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
-        )
-    else:
-        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-    layout = spark.read.parquet(path)
-    hits = (
-        layout.join(F.broadcast(ids_df), id_col)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    touched = sorted(int(r["centroid_id"]) for r in hits)
-    n_deleted = int(sum(r["n"] for r in hits))
-    if not touched:
-        return {"touched": [], "n_deleted": 0, "staleness": ivf_staleness(path)}
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids_df), id_col, "left_anti"
-    )
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        survivors.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
-    meta["deleted_since_build"] = (
-        int(meta.get("deleted_since_build", 0)) + n_deleted
-    )
-    with open(os.path.join(path, IVF_META), "w") as f:
-        json.dump(meta, f)
-    return {
-        "touched": touched,
-        "n_deleted": n_deleted,
-        "staleness": ivf_staleness(path),
-    }
+    return delete_centroid_ids(spark, path, ids, id_col, IVF_META)
 
 
 def ivf_topk(

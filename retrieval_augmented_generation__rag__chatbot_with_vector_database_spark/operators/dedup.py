@@ -499,9 +499,10 @@ def connected_components(
     per iteration, both on the node key). Iterations needed = graph
     diameter; duplicate clusters are small and dense in practice, so
     this converges in a handful of rounds. Convergence is detected
-    with a 1-row aggregate — per-node labels only ever decrease, so
-    the label sum is strictly decreasing until fixpoint. Each round's
-    frontier is ``localCheckpoint``'ed to cut the exponential lineage
+    by counting the labels that changed, in the same 1-row aggregate
+    job that materializes the round (a label sum would overflow on
+    64-bit ids under ANSI, or wrap and stop early without it). Each
+    round's frontier is ``localCheckpoint``'ed to cut the exponential lineage
     iterative joins would otherwise build. For web-scale graphs with
     long chains swap in large-star/small-star; the operator contract
     (pairs in, min-id components out) stays the same.
@@ -518,7 +519,6 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint()
     )
-    prev_sum = labels.agg(F.sum("comp")).first()[0]
     converged = False
     for _ in range(max_iter):
         nbr_min = (
@@ -529,21 +529,22 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("bcomp").alias("nbr_comp"))
         )
-        labels = (
+        step = (
             labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
             .select(
                 "id",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
                 ).alias("comp"),
+                (F.col("nbr_comp") < F.col("comp")).alias("__changed"),
             )
             .localCheckpoint()
         )
-        cur_sum = labels.agg(F.sum("comp")).first()[0]
-        if cur_sum == prev_sum:
+        n_changed = step.agg(F.count(F.when(F.col("__changed"), 1))).first()[0]
+        labels = step.drop("__changed")
+        if n_changed == 0:
             converged = True
             break
-        prev_sum = cur_sum
     if not converged:
         warnings.warn(
             f"connected_components hit max_iter={max_iter} before the "

@@ -42,26 +42,6 @@ IDF_DEC = "decimal(18,6)"
 # uncapped (unit tests of scoring math on tiny corpora use None).
 DF_CAP_DEFAULT = 0.5
 
-# Materialize the shared lexical statistics frames (dterms / tf)?
-# Each retrieval pass consumes them 2-3 times under one action. An
-# interleaved same-process A/B at sf0.1 measured BOTH sharing forms
-# slower than recomputation (lazy persist: bm25 3.57 vs 2.06 s min —
-# and a lazy persist is additionally inadmissible in bench paths, as
-# the CacheManager would serve later bench passes from the first
-# pass's cache; eager localCheckpoint: +2 fixed-cost jobs/query), so
-# the default recomputes: the frames are one cheap explode+aggregate
-# over a columnar scan, and the duplicate work is far below the
-# fixed cost a materialization adds at bench scale. On a 100 TB
-# corpus where tokenization CPU dominates, flip this to checkpoint
-# the frames once per pass (the knob exists for that deployment
-# choice and for scale checks; it is NOT a results cache — blocks
-# are per-query and freed on GC).
-CKPT_SHARED = False
-
-
-def _maybe_persist(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False) if CKPT_SHARED else df
-
 
 def _df_cap_filter(with_n: DataFrame, df_cap: float | int | None) -> DataFrame:
     """Apply the df cap to a frame carrying ``df`` and ``n`` columns."""
@@ -125,10 +105,10 @@ def _lex_frames(
     """The three frames every lexical stage consumes: (dterms, idf,
     qterms), built ONCE per retrieval pass and threaded through the
     scoring stages (round 16 — the PRF form previously re-derived all
-    three in each nested call). ``dterms`` is shared by reference;
-    whether it is MATERIALIZED is the CKPT_SHARED knob above (default
-    off — recomputation measured faster at bench scale)."""
-    dterms = _maybe_persist(doc_terms(docs, id_col, text_col))
+    three in each nested call). ``dterms`` is shared by reference and
+    recomputed per consumer: materializing it measured slower at bench
+    scale (round 16 A/B)."""
+    dterms = doc_terms(docs, id_col, text_col)
     n_docs = docs.agg(F.count("*").alias("n"))
     idf = idf_table(dterms, n_docs, df_cap=df_cap)
     qterms = doc_terms(
@@ -192,17 +172,14 @@ def doc_term_freqs(docs: DataFrame, id_col: str = "doc_id",
     re-aggregates the tf table (Σ_term tf ≡ the token count — same
     integers; the ``lexical_index._doc_side`` convention), so the
     token explode runs ONCE per tf reference instead of once per
-    statistic (round 16, guide §2.3); CKPT_SHARED above optionally
-    pins tf for the multi-reference BM25 consumer."""
+    statistic (round 16, guide §2.3)."""
     tok = docs.select(
         F.col(id_col).alias("id"),
         F.explode(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
         ).alias("term"),
     ).filter(F.col("term") != "")
-    tf = _maybe_persist(
-        tok.groupBy("id", "term").agg(F.count("*").alias("tf"))
-    )
+    tf = tok.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
     return tf.join(dl, "id")
 

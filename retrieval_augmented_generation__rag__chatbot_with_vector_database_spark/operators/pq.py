@@ -782,10 +782,12 @@ def write_ivfpq_index(
     """
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         assign_centroids_gemm,
+        check_centroid_ids,
     )
 
     if normalize and mips:
         raise ValueError("normalize and mips are mutually exclusive")
+    check_centroid_ids(centroids)
     meta_cols = list(meta_cols or [])
     reserved = {id_col, vec_col, "centroid_id", "codes", "__raw"}
     for c in meta_cols:
@@ -936,12 +938,11 @@ def ivfpq_staleness(path: str) -> float:
     correctness is unaffected meanwhile, only recall decays).
     Deletions count as drift too: the quantizers were trained on mass
     that is no longer there."""
-    meta = load_ivfpq_meta(path)
-    base = max(1, int(meta.get("rows_at_build", 1)))
-    changed = int(meta.get("upserted_since_build", 0)) + int(
-        meta.get("deleted_since_build", 0)
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        sidecar_staleness,
     )
-    return float(changed) / base
+
+    return sidecar_staleness(load_ivfpq_meta(path))
 
 
 def delete_ivfpq_ids(
@@ -972,56 +973,11 @@ def delete_ivfpq_ids(
 
     Returns ``{"touched": [...], "n_deleted": int, "staleness": float}``.
     """
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        check_not_torn,
-        swap_partition_dirs,
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        delete_centroid_ids,
     )
 
-    check_not_torn(path)
-    meta = load_ivfpq_meta(path)
-    if isinstance(ids, list):
-        ids_df = spark.createDataFrame(
-            [(int(i),) for i in ids], f"{id_col} long"
-        )
-    else:
-        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-    layout = spark.read.parquet(path)
-    hits = (
-        layout.join(F.broadcast(ids_df), id_col)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    touched = sorted(int(r["centroid_id"]) for r in hits)
-    n_deleted = int(sum(r["n"] for r in hits))
-    if not touched:
-        return {
-            "touched": [],
-            "n_deleted": 0,
-            "staleness": ivfpq_staleness(path),
-        }
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids_df), id_col, "left_anti"
-    )
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        survivors.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
-    meta["deleted_since_build"] = (
-        int(meta.get("deleted_since_build", 0)) + n_deleted
-    )
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(meta, f)
-    return {
-        "touched": touched,
-        "n_deleted": n_deleted,
-        "staleness": ivfpq_staleness(path),
-    }
+    return delete_centroid_ids(spark, path, ids, id_col, IVFPQ_META)
 
 
 def ivfpq_topk_rerank(
@@ -1730,10 +1686,12 @@ def upsert_ivfpq_index(
     """
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         assign_centroids_gemm,
+        bump_sidecar,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
-        swap_partition_dirs,
+        pick_survivors,
+        upsert_keys,
     )
 
     check_not_torn(path)
@@ -1774,78 +1732,49 @@ def upsert_ivfpq_index(
         # space (same rule as the quantizers)
         records = rotate_vectors(records, rotation, vec_col)
 
-    assigned = assign_centroids_gemm(records, centroids, "euclidean", vec_col)
     # __raw is derived from the same record as the transformed vector,
-    # so excluding it keeps the duplicate-survivor choice identical to
+    # so ignoring it keeps the duplicate-survivor choice identical to
     # codes-only layouts
-    payload = sorted(c for c in assigned.columns if c not in (id_col, "__raw"))
-    dw = Window.partitionBy(id_col).orderBy(
-        F.md5(F.to_json(F.struct(*payload))).asc()
+    assigned = pick_survivors(
+        assign_centroids_gemm(records, centroids, "euclidean", vec_col),
+        id_col,
+        ignore=("__raw",),
     )
-    assigned = (
-        assigned.withColumn("__rn", F.row_number().over(dw))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .localCheckpoint(eager=True)
-    )
-    n_new = assigned.count()
-    if n_new == 0:
-        return {"touched": [], "n_upserted": 0}
-    enc_src, enc_col = assigned, vec_col
-    if residual:
-        # encode exactly as the build did (flag persisted in sidecar)
-        enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
-    enc = pq_encode(enc_src, codebooks, id_col, enc_col)
-    keep = [F.col(id_col), F.col("centroid_id")]
-    if stores_vectors:
-        lcol = meta.get("vec_col") or vec_col
-        raw = "__raw" if transformed else vec_col
-        keep.append(F.col(raw).alias(lcol))
-    for c in meta.get("meta_cols", []) or []:
+    meta_cols = meta.get("meta_cols") or []
+    for c in meta_cols:
         # the layout carries metadata for filtered probes; an upsert
         # without it would write NULL-metadata rows that silently
         # vanish from every filtered search
         if c not in assigned.columns:
             raise ValueError(
-                f"layout carries meta_cols {meta.get('meta_cols')}; "
+                f"layout carries meta_cols {meta_cols}; "
                 f"upsert records are missing {c!r}"
             )
-        keep.append(F.col(c))
-    fresh = assigned.select(*keep).join(enc, id_col)
-
-    ids = assigned.select(id_col).distinct()
-    layout = spark.read.parquet(path)
-    new_parts = {
-        r["centroid_id"]
-        for r in assigned.select("centroid_id").distinct().collect()
-    }
-    old_parts = {
-        r["centroid_id"]
-        for r in layout.join(F.broadcast(ids), id_col)
-        .select("centroid_id")
-        .distinct()
-        .collect()
-    }
-    touched = sorted(new_parts | old_parts)
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids), id_col, "left_anti"
+    enc_src, enc_col = assigned, vec_col
+    if residual:
+        # encode exactly as the build did (flag persisted in sidecar)
+        enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
+    # layout columns ride through the encode kernel (as in
+    # write_ivfpq_index), and the encoded batch is materialized once:
+    # the merge reads it for its keys, its partitions and its rows
+    raw = "__raw" if transformed else vec_col
+    carry = ["centroid_id", *([raw] if stores_vectors else []), *meta_cols]
+    enc = pq_encode(enc_src, codebooks, id_col, enc_col, carry_cols=carry)
+    keep = [F.col(id_col), F.col("centroid_id")]
+    if stores_vectors:
+        keep.append(F.col(raw).alias(meta.get("vec_col") or vec_col))
+    keep.extend(F.col(c) for c in meta_cols)
+    fresh = enc.select(*keep, "codes").localCheckpoint(eager=True)
+    n_new = fresh.count()
+    if n_new == 0:
+        return {"touched": [], "n_upserted": 0}
+    touched = upsert_keys(
+        spark.read.parquet(path), path, "centroid_id", fresh, id_col
     )
-    merged = survivors.unionByName(fresh.select(*survivors.columns))
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        merged.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
-    meta["upserted_since_build"] = (
-        int(meta.get("upserted_since_build", 0)) + n_new
-    )
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(meta, f)
     return {
         "touched": touched,
         "n_upserted": n_new,
-        "staleness": ivfpq_staleness(path),
+        "staleness": bump_sidecar(
+            path, IVFPQ_META, meta, "upserted_since_build", n_new
+        ),
     }

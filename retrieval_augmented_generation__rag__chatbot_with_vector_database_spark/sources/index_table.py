@@ -36,11 +36,12 @@ later only affects *newly created* indexes, so old rows are never
 mis-addressed (pre-r3 the constant was used directly, and raising it
 against an existing index silently broke LWW pruning).
 
-Crash consistency: the per-bucket swap is rename-aside (live bucket →
-``_old_bucket=N`` aside, new → live, then delete the aside), fenced
-by a ``_swap_inprogress.json`` marker written before the first rename
-and removed after the last; ``read``/``upsert`` fail loudly while the
-marker is present so a torn swap is *detected*, and the
+Crash consistency: the merge and the per-id delete go through the
+touched-partition merge of ``sources.layout`` (``rewrite_partitions``
+and ``delete_keys``), whose rename-aside swap is fenced by a
+``_swap_inprogress.json`` marker — kept here in the index dir, next to
+the sidecar. ``read``/``upsert``/``delete_ids`` fail loudly while the
+marker is present, so a torn swap is *detected*, and the
 underscore-prefixed aside dirs (invisible to Spark's scanner)
 preserve the pre-swap data for recovery.
 """
@@ -51,12 +52,15 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     SWAP_MARKER,
-    swap_partition_dirs,
+    check_not_torn,
+    delete_keys,
+    pick_survivors,
+    rewrite_partitions,
 )
 
 PROPS_FILE = "_index_properties.json"
@@ -149,18 +153,6 @@ class VectorIndex:
     def _swap_marker_path(self) -> str:
         return os.path.join(self.path, SWAP_MARKER)
 
-    def _check_not_torn(self) -> None:
-        if os.path.exists(self._swap_marker_path):
-            with open(self._swap_marker_path) as f:
-                marker = json.load(f)
-            raise RuntimeError(
-                f"index {self.name!r} has a torn bucket swap (marker "
-                f"{SWAP_MARKER} present, touched partitions "
-                f"{marker.get('partitions', marker.get('touched'))}); pre-swap "
-                f"data is preserved in '_old_{BUCKET_COL}=N' aside dirs under "
-                f"{self._data_path} — recover manually, then delete the marker"
-            )
-
     # -- S6: delete ---------------------------------------------------
     def delete(self) -> None:
         if os.path.exists(self.path):
@@ -169,7 +161,7 @@ class VectorIndex:
     # -- read ---------------------------------------------------------
     def read(self) -> DataFrame:
         """Logical view of the index (bucket column dropped)."""
-        self._check_not_torn()
+        check_not_torn(self._data_path, self._swap_marker_path)
         if not os.path.exists(self._data_path):
             return self.spark.createDataFrame([], LOGICAL_SCHEMA)
         return self.spark.read.parquet(self._data_path).drop(BUCKET_COL)
@@ -202,7 +194,7 @@ class VectorIndex:
         """
         if on_mismatch not in ("raise", "reroute"):
             raise ValueError("on_mismatch must be 'raise' or 'reroute'")
-        self._check_not_torn()
+        check_not_torn(self._data_path, self._swap_marker_path)
         dim = self.dimension()
         new = records.select(
             F.col("id").cast("string"),
@@ -237,7 +229,7 @@ class VectorIndex:
             target.create(dimension=dims[0], metric=self.metric())
             # a pre-existing reroute target may itself be mid-swap:
             # detect BEFORE swapping partitions into it, not after
-            target._check_not_torn()
+            check_not_torn(target._data_path, target._swap_marker_path)
             if target.bucket_count() != self.bucket_count():
                 # re-address for the target's persisted layout (cheap:
                 # ``new`` is already checkpointed)
@@ -263,11 +255,6 @@ class VectorIndex:
             if fresh
             else self._pruned_existing(touched)
         )
-        merged = merge_last_write_wins(existing, new)
-        # co-locate each bucket into one task → one file per touched
-        # bucket (avoids the small-files explosion of 32 writers × 32
-        # buckets); the repartition moves only touched-bucket rows
-        tmp = data + "._tmp"
         # the returned index size rides the write as an observed
         # metric when the write IS the whole index (fresh create —
         # every ingest-funnel and throughput path): no post-write
@@ -278,23 +265,17 @@ class VectorIndex:
         # this return value is a size indicator; exact-count callers
         # should read().count() (the merge path already does).
         obs = Observation()
-        (
-            merged.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        if fresh:
-            os.rename(tmp, data)
-            return int(obs.get["n"])
-        # crash-consistent marker-fenced swap (sources.layout)
-        swap_partition_dirs(
+        rewrite_partitions(
+            merge_last_write_wins(existing, new).observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ),
             data,
-            tmp,
-            [f"{BUCKET_COL}={b}" for b in touched],
+            BUCKET_COL,
+            touched,
             self._swap_marker_path,
         )
+        if fresh:
+            return int(obs.get["n"])
         return self.read().count()
 
     # -- takedown: per-id delete -------------------------------------
@@ -309,7 +290,7 @@ class VectorIndex:
         the pruned scan, so the whole operation never reads an
         untouched bucket. Composes with ``LexicalIndex.delete_docs``
         for cross-layout takedown of a document."""
-        self._check_not_torn()
+        check_not_torn(self._data_path, self._swap_marker_path)
         if isinstance(ids, (list, tuple)):
             ids = self.spark.createDataFrame(
                 [(str(i),) for i in ids], "id string"
@@ -326,25 +307,15 @@ class VectorIndex:
         )
         if not touched or not os.path.exists(self._data_path):
             return 0
-        existing = self._pruned_existing(touched).localCheckpoint(eager=True)
-        n_doomed = existing.join(idf.select("id"), "id", "left_semi").count()
-        if n_doomed == 0:
-            return 0
-        kept = existing.join(idf.select("id"), "id", "left_anti")
-        tmp = self._data_path + "._tmp"
-        (
-            kept.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        swap_partition_dirs(
+        n_deleted, _ = delete_keys(
+            self._pruned_existing(touched),
             self._data_path,
-            tmp,
-            [f"{BUCKET_COL}={b}" for b in touched],
+            BUCKET_COL,
+            idf.select("id"),
+            "id",
             self._swap_marker_path,
         )
-        return n_doomed
+        return n_deleted
 
     # -- A2: stats ----------------------------------------------------
     def stats(self) -> DataFrame:
@@ -364,14 +335,8 @@ def merge_last_write_wins(
     over the payload columns, so two *different* rows sharing an id
     within one batch resolve to the same survivor on every run (and
     idempotent re-ingestion of identical rows is a true no-op)."""
-    allr = existing.unionByName(new, allowMissingColumns=True)
-    payload = sorted(c for c in allr.columns if c not in (id_col, version_col))
-    tb = F.md5(F.to_json(F.struct(*payload)))
-    w = Window.partitionBy(id_col).orderBy(F.col(version_col).desc(), tb.asc())
-    return (
-        allr.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return pick_survivors(
+        existing.unionByName(new, allowMissingColumns=True), id_col, version_col
     )
 
 

@@ -57,9 +57,9 @@ the doc store (id-bucket-pruned) for old term lists of incoming ids,
 touched term-buckets = buckets(old terms ∪ new terms), rewrite ONLY
 those postings partitions (drop rows of incoming ids, union the new
 postings) and only the touched doc-store partitions (last-write-wins
-merge), each under the crash-consistent marker-fenced swap of
-``sources.layout``. Work per batch is O(|batch| + |touched buckets|),
-not O(|index|). Re-running the same batch is a no-op by construction
+merge), each through ``sources.layout.rewrite_partitions`` and its
+crash-consistent marker-fenced swap. Work per batch is
+O(|batch| + |touched buckets|), not O(|index|). Re-running the same batch is a no-op by construction
 (delete-then-insert is idempotent; the LWW merge is deterministic), so
 an at-least-once ingest stream gets exactly-once end state —
 ``streaming.lexical_ingest`` rides exactly this.
@@ -85,7 +85,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
-    swap_partition_dirs,
+    rewrite_partitions,
 )
 
 PROPS_FILE = "_lexical_properties.json"
@@ -411,19 +411,11 @@ class LexicalIndex:
             .agg(F.count("*").alias("df"))
             .select("term", "df", TBUCKET)
         )
-        tmp = self._termdf_path + "._tmp"
-        (
-            fresh.repartition(max(len(tbuckets), 1), F.col(TBUCKET))
-            .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp)
-        )
-        if not os.path.exists(self._termdf_path):
-            # legacy layout built before the sidecar existed: adopt it
-            # incrementally (missing buckets are treated as
-            # unblocked-by-hint at probe time, which is always safe)
-            os.makedirs(self._termdf_path, exist_ok=True)
-        swap_partition_dirs(
-            self._termdf_path, tmp, [f"{TBUCKET}={b}" for b in tbuckets]
-        )
+        # a legacy layout built before the sidecar existed adopts it
+        # incrementally: the first rewrite creates the dir (missing
+        # buckets are treated as unblocked-by-hint at probe time, which
+        # is always safe)
+        rewrite_partitions(fresh, self._termdf_path, TBUCKET, tbuckets)
 
     def doc_store(self) -> DataFrame:
         self._check_not_torn()
@@ -533,13 +525,8 @@ class LexicalIndex:
         merged_postings = kept.select(new_postings.columns).unionByName(
             new_postings
         )
-        tmp_p = self._postings_path + "._tmp"
-        (
-            merged_postings.repartition(max(len(tbuckets), 1), F.col(TBUCKET))
-            .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp_p)
-        )
-        swap_partition_dirs(
-            self._postings_path, tmp_p, [f"{TBUCKET}={b}" for b in tbuckets]
+        rewrite_partitions(
+            merged_postings, self._postings_path, TBUCKET, tbuckets
         )
         self._refresh_termdf(tbuckets)
 
@@ -547,16 +534,11 @@ class LexicalIndex:
         incoming = new_docs.withColumn(
             "_batch", F.lit(batch).cast("long")
         ).withColumn(DBUCKET, _dbucket_of("id", db))
-        merged_docs = _lww_docs(
-            old_in_buckets, incoming
-        )
-        tmp_d = self._docs_path + "._tmp"
-        (
-            merged_docs.repartition(max(len(dbuckets), 1), F.col(DBUCKET))
-            .write.mode("overwrite").partitionBy(DBUCKET).parquet(tmp_d)
-        )
-        swap_partition_dirs(
-            self._docs_path, tmp_d, [f"{DBUCKET}={b}" for b in dbuckets]
+        rewrite_partitions(
+            _lww_docs(old_in_buckets, incoming),
+            self._docs_path,
+            DBUCKET,
+            dbuckets,
         )
         self.refresh_stats()
 
@@ -608,27 +590,16 @@ class LexicalIndex:
                 .filter(F.col(TBUCKET).isin(tbuckets))
                 .join(idf, "id", "left_anti")
             )
-            tmp_p = self._postings_path + "._tmp"
-            (
-                kept_postings.repartition(
-                    max(len(tbuckets), 1), F.col(TBUCKET)
-                )
-                .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp_p)
-            )
-            swap_partition_dirs(
-                self._postings_path, tmp_p,
-                [f"{TBUCKET}={b}" for b in tbuckets],
+            rewrite_partitions(
+                kept_postings, self._postings_path, TBUCKET, tbuckets
             )
             self._refresh_termdf(tbuckets)
 
-        kept_docs = old_in_buckets.join(idf, "id", "left_anti")
-        tmp_d = self._docs_path + "._tmp"
-        (
-            kept_docs.repartition(max(len(dbuckets), 1), F.col(DBUCKET))
-            .write.mode("overwrite").partitionBy(DBUCKET).parquet(tmp_d)
-        )
-        swap_partition_dirs(
-            self._docs_path, tmp_d, [f"{DBUCKET}={b}" for b in dbuckets]
+        rewrite_partitions(
+            old_in_buckets.join(idf, "id", "left_anti"),
+            self._docs_path,
+            DBUCKET,
+            dbuckets,
         )
         self.refresh_stats()
 

@@ -54,6 +54,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
+    delete_keys,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -195,10 +196,6 @@ def delete_line_occurrences(
     The blocklist may SHRINK as a result (a line dropping below K) —
     correct by design: counts must reflect only retained documents.
     Returns ``{"n_deleted": ..., "touched": [...]}``."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        swap_partition_dirs,
-    )
-
     if isinstance(ids, (list, tuple)):
         ids = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
     victims = ids.select(
@@ -212,27 +209,7 @@ def delete_line_occurrences(
     t = spark.read.schema(LINE_OCCURRENCE_SCHEMA).option(
         "basePath", counts_dir
     ).parquet(f"{counts_dir}/batch_id=*")
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(victims), "doc_id")
-        .select("batch_id")
-        .distinct()
-        .collect()
+    n_deleted, touched = delete_keys(
+        t, counts_dir, "batch_id", victims, "doc_id"
     )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    kept = held.join(
-        F.broadcast(victims), "doc_id", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_kept = kept.count()
-    tmp = counts_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(counts_dir, tmp, [f"batch_id={b}" for b in touched])
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    return {"n_deleted": n_deleted, "touched": touched}

@@ -240,7 +240,7 @@ def delete_bucket_table_ids(
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
-        swap_partition_dirs,
+        delete_keys,
     )
 
     if isinstance(ids, (list, tuple)):
@@ -257,31 +257,5 @@ def delete_bucket_table_ids(
         t = spark.read.parquet(bucket_dir)
     except AnalysisException:
         return {"n_deleted": 0, "touched": []}
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(idf), "id")
-        .select("batch_id")
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    # one execution of the anti-join feeds both the audit count and
-    # the rewrite (takedown counts are a compliance artifact)
-    kept = held.join(F.broadcast(idf), "id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    n_kept = kept.count()
-    tmp = bucket_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(
-        bucket_dir, tmp, [f"batch_id={b}" for b in touched]
-    )
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    n_deleted, touched = delete_keys(t, bucket_dir, "batch_id", idf, "id")
+    return {"n_deleted": n_deleted, "touched": touched}

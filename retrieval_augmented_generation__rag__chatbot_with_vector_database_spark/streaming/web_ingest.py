@@ -75,6 +75,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sou
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
+    delete_keys,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.warc import (
     _extracted_pages,
@@ -189,9 +190,6 @@ def delete_frontier_urls(
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.url import (
         canonicalize_url,
     )
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        swap_partition_dirs,
-    )
 
     if isinstance(urls, (list, tuple)):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -212,30 +210,10 @@ def delete_frontier_urls(
     t = spark.read.schema(FRONTIER_SCHEMA).option(
         "basePath", frontier_dir
     ).parquet(f"{frontier_dir}/batch_id=*")
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(victims), "canonical_url")
-        .select("batch_id")
-        .distinct()
-        .collect()
+    n_deleted, touched = delete_keys(
+        t, frontier_dir, "batch_id", victims, "canonical_url"
     )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    kept = held.join(
-        F.broadcast(victims), "canonical_url", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_kept = kept.count()
-    tmp = frontier_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(frontier_dir, tmp, [f"batch_id={b}" for b in touched])
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    return {"n_deleted": n_deleted, "touched": touched}
 
 
 def start_web_ingest_stream(

@@ -206,3 +206,23 @@ def test_upsert_intra_batch_lww(spark, emb, cents, tmp_path):
         ann.read_ivf_index(spark, path2).filter(F.col("vec_id") == 777).collect()
     )
     assert (rows2[0]["centroid_id"], rows2[0]["label"]) == survivor
+
+
+def test_writers_reject_centroid_ids_beyond_int32(spark, emb, tmp_path):
+    """Both layouts store ``centroid_id`` as int32. Centroids labelled
+    with 64-bit vector ids must fail the write loudly instead of
+    landing every row in one truncated partition."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        pq,
+    )
+
+    wide = emb.filter(F.col("vec_id") < 200).withColumn(
+        "vec_id", F.lit(2**40) + F.col("vec_id") * F.lit(2**33)
+    )
+    wide_cents = ann.seed_centroids(wide, 4)
+    assert wide_cents[0][0] == 2**40
+    books = pq.train_pq_codebooks(wide, m=4, k=8)
+    with pytest.raises(ValueError, match=str(2**40)):
+        ann.write_ivf_index(wide, str(tmp_path / "ivf"), wide_cents)
+    with pytest.raises(ValueError, match=str(2**40)):
+        pq.write_ivfpq_index(wide, str(tmp_path / "ivfpq"), wide_cents, books)

@@ -14,12 +14,14 @@ def _pairs(spark, rows):
     return spark.createDataFrame(rows, "id_a long, id_b long")
 
 
-def test_components_path_graph_converges(spark):
+@pytest.mark.parametrize("off", [0, 2**62])
+def test_components_path_graph_converges(spark, off):
     # a 6-node chain needs multiple propagation rounds; every node
-    # must still land on the global min label
-    chain = _pairs(spark, [(i, i + 1) for i in range(1, 6)])
+    # must still land on the global min label — also on ids near 2^62,
+    # where a convergence test that sums labels would overflow
+    chain = _pairs(spark, [(off + i, off + i + 1) for i in range(1, 6)])
     comp = {r["id"]: r["component"] for r in connected_components(chain).collect()}
-    assert comp == {i: 1 for i in range(1, 7)}
+    assert comp == {off + i: off + 1 for i in range(1, 7)}
 
 
 def test_components_two_islands_and_ordering(spark):
