@@ -608,11 +608,11 @@ def _kernel_apply(
 
 
 #: rules-per-host density at which the compiled-pattern kernel takes
-#: over from the expression path (tools/scale_check_robots_kernel.py,
-#: SCALE.md round 13): expression edges ahead at the web's typical
-#: 2–5 rules/host (kernel 1.05x there), the kernel wins from ~10 up
-#: (0.65–0.73x); the gate sits at 8 because the mis-pick penalties
-#: are asymmetric (module: robots_verdicts_auto)
+#: over from the expression path (SCALE.md round 13): expression
+#: edges ahead at the web's typical 2–5 rules/host (kernel 1.05x
+#: there), the kernel wins from ~10 up (0.65–0.73x); the gate sits
+#: at 8 because the mis-pick penalties are asymmetric (module:
+#: robots_verdicts_auto)
 KERNEL_RULES_PER_HOST = 8
 
 

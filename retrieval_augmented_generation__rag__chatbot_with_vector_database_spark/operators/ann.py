@@ -456,7 +456,7 @@ def ivf_topk_rerank(
     full-precision vectors. Quantization error reorders near-ties, so
     candidate RECALL survives compression much better than candidate
     RANKING — rerank recovers the exact ordering within the candidate
-    set (scale_check: 0.43 → ~1.0 recall@10 on a near-duplicate-dense
+    set (SCALE.md: 0.43 → ~1.0 recall@10 on a near-duplicate-dense
     corpus).
 
     Plan shape: candidate ids (|Q|·expand·k rows — driver-bounded) are

@@ -142,7 +142,7 @@ def train_bpe_local(
     naive loop is O(merges × corpus word-type symbols) — hours of
     driver Python at production 32k–50k merges; this is
     O(initial symbols + merges×log H + touched-word updates), which
-    SCALE.md times at 4k merges (tools/scale_check_bpe.py). Output is
+    SCALE.md times at 4k merges (its BPE trainer section). Output is
     identical to the naive recount by construction: counts are exact
     at every step and the heap orders by the same
     (count desc, left asc, right asc) key."""

@@ -459,6 +459,47 @@ def load_pq_codebooks(path: str) -> list[list[list[float]]]:
 MAX_PQ_QUERIES = 4096
 
 
+def _adc_luts(targets, books, sub: int):
+    """Stacked ADC lookup tables, one per target vector (b × m × k):
+    ``lut[t][j][c] = |targets[t]_j - books[j][c]|²``, the partial
+    squared distance of subspace ``j`` to codebook entry ``c``. One
+    small GEMM per subspace for the whole stack, not per target.
+    ``books`` are float64 arrays (m × k × sub)."""
+    import numpy as np
+
+    out = np.empty(
+        (targets.shape[0], len(books), books[0].shape[0]), dtype=np.float64
+    )
+    for j, Bj in enumerate(books):
+        T = targets[:, j * sub : (j + 1) * sub]
+        out[:, j, :] = (
+            (T * T).sum(axis=1)[:, None]
+            - 2.0 * (T @ Bj.T)
+            + (Bj ** 2).sum(axis=1)[None, :]
+        )
+    return out
+
+
+def _list_matrix(batch, name: str, width: int):
+    """Arrow list column ``name`` of ``batch`` as an n × ``width``
+    matrix viewing the values buffer (zero-copy, stored dtype).
+    Raises unless every row holds exactly ``width`` values — a ragged
+    row would silently shift every later row's codes or coordinates."""
+    import numpy as np
+
+    col = batch.column(name)
+    off = np.asarray(col.offsets, dtype=np.int64)
+    widths = np.diff(off)
+    if not (widths == width).all():
+        raise ValueError(
+            f"{name} column is not fixed-width {width}: widths "
+            f"{sorted(set(int(w) for w in widths))[:5]}"
+        )
+    return np.asarray(col.values)[off[0] : off[-1]].reshape(
+        batch.num_rows, width
+    )
+
+
 def pq_topk(
     queries: DataFrame,
     encoded: DataFrame,
@@ -503,22 +544,19 @@ def pq_topk(
         Qm = np.array(json.loads(q_payload), dtype=np.float64)
         qid = np.array(json.loads(qid_payload), dtype=np.int64)
         nq = Qm.shape[0]
-        # LUT[q][j][c] = |q_j - B[j][c]|^2
-        lut = np.empty((nq, m, B[0].shape[0]), dtype=np.float64)
-        for j in range(m):
-            Sq = Qm[:, j * sub : (j + 1) * sub]
-            lut[:, j, :] = (
-                (Sq * Sq).sum(axis=1)[:, None]
-                - 2.0 * (Sq @ B[j].T)
-                + (B[j] ** 2).sum(axis=1)[None, :]
-            )
+        lut = _adc_luts(Qm, B, sub)
         for batch in batches:
-            tbl = batch.to_pydict()
-            ids = np.array(tbl[id_col], dtype=np.int64)
-            n = len(ids)
+            n = batch.num_rows
             if n == 0:
                 continue
-            codes = np.array(tbl["codes"], dtype=np.int64)  # n × m
+            ids = (
+                batch.column(id_col)
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64, copy=False)
+            )
+            codes = _list_matrix(batch, "codes", m).astype(
+                np.int64, copy=False
+            )
             # dist[q][i] = sum_j lut[q][j][codes[i][j]]
             dist = np.zeros((nq, n), dtype=np.float64)
             for j in range(m):
@@ -695,14 +733,17 @@ def write_ivfpq_index(
     residual: bool | None = None,
     normalize: bool = False,
     mips: bool = False,
-    store_vectors: bool = True,
     meta_cols: list[str] | None = None,
     rotation: list[list[float]] | None = None,
 ) -> None:
     """FAISS-IVFPQ-shaped layout: rows are assigned to their nearest
     coarse centroid (euclidean — the ADC metric) and PQ-ENCODED, then
     written partitioned by ``centroid_id`` — probes read only nprobe
-    bucket directories of 16-byte codes. Both quantizers (coarse
+    bucket directories. Each bucket file holds the codes AND the RAW
+    full-precision vectors (``vec_col``), so the layout is
+    self-contained: :func:`ivfpq_topk_rerank` fuses the ADC probe and
+    the exact rerank into one job over the probed buckets, and serving
+    never reads a separate full-precision table. Both quantizers (coarse
     centroids + codebooks) live in the sidecar, like the IVF layout's
     centroid persistence: probing with a different quantizer is
     silent garbage, so it must be impossible.
@@ -742,16 +783,6 @@ def write_ivfpq_index(
     Passing ``residual=False`` WITH ``mips=True`` explicitly raises —
     a raw-code MIPS layout is a recall trap with no error anywhere
     downstream.
-
-    ``store_vectors=True`` (default) co-locates the RAW full-precision
-    vectors with the codes in each bucket file, making the layout
-    SELF-CONTAINED: the probe's exact rerank reads only the probed
-    bucket directories (parquet column pruning keeps the ADC scan on
-    the codes column) instead of scanning a separate full-precision
-    table — the only rerank shape that works at 100 TB, and it fuses
-    probe+rerank into a single job (see :func:`ivfpq_topk_rerank`).
-    ``False`` keeps the codes-only layout (4·d/m× smaller on disk);
-    probes then need the ``index`` frame for the rerank join.
 
     ``meta_cols`` co-locates METADATA columns with the codes in each
     bucket file — the layout-side prerequisite for metadata-filtered
@@ -811,7 +842,8 @@ def write_ivfpq_index(
     # stash the raw vectors before any space transform: the layout
     # stores RAW floats (the rerank metric is defined on them), while
     # assignment + encoding run in the transformed space
-    if store_vectors and (normalize or mips or rotation is not None):
+    transformed = normalize or mips or rotation is not None
+    if transformed:
         index = index.withColumn("__raw", F.col(vec_col))
     if normalize:
         index = _unit_normalized(index, vec_col)
@@ -846,20 +878,16 @@ def write_ivfpq_index(
     # passthrough) instead of self-joining the assigned frame on id:
     # the join recomputed the assignment GEMM for its second branch
     # and shuffled the full corpus once more — pure waste at 100 TB
-    raw = "__raw" if (normalize or mips or rotation is not None) else vec_col
-    carry = ["centroid_id"]
-    if store_vectors:
-        carry.append(raw)
-    carry.extend(meta_cols)
-    enc = pq_encode(enc_src, codebooks, id_col, enc_col, carry_cols=carry)
-    keep = [F.col(id_col), F.col("centroid_id")]
-    if store_vectors:
-        # stored AS-IS (no float cast): the fused rerank must see the
-        # exact values a side-table rerank would
-        keep.append(F.col(raw).alias(vec_col))
-    keep.extend(F.col(c) for c in meta_cols)
-    keep.append(F.col("codes"))
-    layout = enc.select(*keep)
+    raw = "__raw" if transformed else vec_col
+    enc = pq_encode(
+        enc_src, codebooks, id_col, enc_col,
+        carry_cols=["centroid_id", raw, *meta_cols],
+    )
+    # raw vectors stored AS-IS (no float cast): the fused rerank must
+    # see the exact values the exact paths score
+    layout = enc.select(
+        id_col, "centroid_id", F.col(raw).alias(vec_col), *meta_cols, "codes"
+    )
     n_parts = len(centroids)
     # row count rides the write job as an observed metric — the
     # round-14 form re-read the written footers as a separate count()
@@ -894,8 +922,7 @@ def write_ivfpq_index(
                 "normalize": normalize,
                 "mips": mips,
                 "mips_max_norm": max_norm,
-                "stores_vectors": store_vectors,
-                "vec_col": vec_col if store_vectors else None,
+                "vec_col": vec_col,
                 "meta_cols": meta_cols,
                 "rotation": rotation,
             },
@@ -983,7 +1010,6 @@ def delete_ivfpq_ids(
 def ivfpq_topk_rerank(
     queries: DataFrame,
     layout: DataFrame,
-    index: DataFrame,
     centroids: list[tuple[int, list[float]]],
     codebooks: list[list[list[float]]],
     k: int = 5,
@@ -1001,15 +1027,21 @@ def ivfpq_topk_rerank(
     rotation: list[list[float]] | None = None,
     adaptive_fetch: bool = False,
 ) -> DataFrame:
-    """The full ANN-at-scale composition: coarse probe (each query's
-    ``nprobe`` nearest centroids, chosen driver-side from the already-
-    collected bounded query matrix) → static ``isin`` partition prune
-    (only probed bucket DIRECTORIES are read — PartitionFilters, like
-    the float IVF layout) → ADC over the pruned codes with a per-query
-    bucket mask (a row scores only for queries probing its bucket) →
-    per-query ``fetch_k`` candidates → full-precision rerank against
-    the original vectors. Scan bytes: nprobe buckets × 16 B/vector;
-    rerank touches ``fetch_k`` float rows per query.
+    """The full ANN-at-scale composition in ONE job: coarse probe
+    (each query's ``nprobe`` nearest centroids, chosen driver-side
+    from the already-collected bounded query matrix) → static ``isin``
+    partition prune (only probed bucket DIRECTORIES are read —
+    PartitionFilters, like the float IVF layout) → ADC over the pruned
+    codes with a per-query bucket mask (a row scores only for queries
+    probing its bucket) → per-query ``fetch_k`` candidates → exact
+    rerank against the raw vectors that ``write_ivfpq_index`` stores
+    next to the codes. The rerank touches ``fetch_k`` float rows per
+    query and task; the only post-kernel op is the final per-query
+    top-k window. ``fetch_k`` below ``k`` is raised to ``k``: the
+    over-fetch can never cut the answer short.
+
+    ``layout`` must carry ``vec_col``; a layout written without it
+    (an older codes-only build) raises and has to be rebuilt.
 
     A transformed layout serves EXACTLY its metric (each transform
     defines the space the codes live in; mixing metrics would rank by
@@ -1045,7 +1077,7 @@ def ivfpq_topk_rerank(
     ``fetch_k ← max(k, ⌈fetch_k × surviving/probed⌉)``. ``fetch_k``
     is an over-fetch against quantization error sized relative to the
     candidate pool; when the filter shrinks the pool, an unscaled
-    fetch makes the per-bucket ADC cut, the cross-bucket merge, and
+    fetch makes the per-bucket ADC cut, the per-task merge, and
     the full-precision rerank all pay the UNfiltered budget. The
     floor at ``k`` is always preserved and the value only ever
     shrinks (never raises recall pressure beyond the caller's own
@@ -1053,9 +1085,6 @@ def ivfpq_topk_rerank(
     import numpy as np
     import pyarrow as pa
 
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
-        similarity_expr,
-    )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         collect_query_matrix,
     )
@@ -1074,6 +1103,13 @@ def ivfpq_topk_rerank(
             "transformed IVFPQ layout serves exactly its own metric; "
             "rebuild with the matching write_ivfpq_index flags"
         )
+    if vec_col not in layout.columns:
+        raise ValueError(
+            f"IVFPQ layout has no raw-vector column {vec_col!r} (a "
+            "codes-only layout from an older build); rebuild it with "
+            "write_ivfpq_index, which stores the vectors next to the codes"
+        )
+    fetch_k = max(fetch_k, k)
     qids, Q, _ = collect_query_matrix(
         queries, query_id_col, query_vec_col, "euclidean", MAX_PQ_QUERIES
     )
@@ -1149,144 +1185,6 @@ def ivfpq_topk_rerank(
     cent_payload = json.dumps(
         {int(c): [float(x) for x in v] for c, v in centroids}
     )
-    out_schema = "query_id long, vec_id long, adc_dist double"
-
-    def kernel(batches):
-        B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
-        Qm = np.array(json.loads(q_payload), dtype=np.float64)
-        qid = np.array(json.loads(qid_payload), dtype=np.int64)
-        probe = json.loads(probe_payload)
-        cvec = {
-            int(c): np.array(v, dtype=np.float64)
-            for c, v in json.loads(cent_payload).items()
-        }
-        nq = Qm.shape[0]
-
-        def make_luts(targets):
-            """Stacked LUT tensor (b × m × k) of partial squared
-            distances for ``b`` ADC target vectors (queries, or
-            query − bucket-centroid residual targets) — one small GEMM
-            per subspace for the whole stack, not per target."""
-            out = np.empty((targets.shape[0], m, B[0].shape[0]), dtype=np.float64)
-            for j in range(m):
-                T = targets[:, j * sub : (j + 1) * sub]
-                out[:, j, :] = (
-                    (T * T).sum(axis=1)[:, None]
-                    - 2.0 * (T @ B[j].T)
-                    + (B[j] ** 2).sum(axis=1)[None, :]
-                )
-            return out
-
-        # Invert the probe map once per task: bucket → the (sorted)
-        # query indices probing it; each probed bucket gets ONE
-        # stacked LUT tensor (nq_b × m × k) so every query scoring a
-        # bucket is a single fancy gather, not a Python loop. For
-        # residual layouts the ADC target is q - c_bucket
-        # (|q - (c + r)|^2 = |(q - c) - r|^2) so the tensor is built
-        # per bucket — LAZILY, on the bucket's first row in THIS task
-        # (a task holds a handful of bucket directories; building all
-        # probed buckets' LUTs in every task is buckets/task-count ×
-        # wasted work). Raw layouts share each query's own LUT across
-        # buckets (stack is a view-index into one nq × m × k array).
-        bq_lists: dict[int, list[int]] = {}
-        for qi in range(nq):
-            for cid in probe[qi]:
-                bq_lists.setdefault(int(cid), []).append(qi)
-        bucket_queries = {
-            c: np.array(v, dtype=np.int64) for c, v in bq_lists.items()
-        }
-        raw_luts = None if residual else make_luts(Qm)
-        lut_cache: dict[int, "np.ndarray"] = {}
-
-        def get_lut(cid):
-            hit = lut_cache.get(cid)
-            if hit is None:
-                qis = bucket_queries[cid]
-                hit = (
-                    make_luts(Qm[qis] - cvec[cid][None, :])
-                    if residual
-                    else raw_luts[qis]
-                )
-                lut_cache[cid] = hit
-            return hit
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = (
-                batch.column(id_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            codes_col = batch.column("codes")
-            off = np.asarray(codes_col.offsets, dtype=np.int64)
-            flat = np.asarray(codes_col.values)
-            widths = np.diff(off)
-            if not (widths == m).all():
-                raise ValueError(
-                    f"codes column is not fixed-width m={m}: widths "
-                    f"{sorted(set(int(w) for w in widths))[:5]}"
-                )
-            codes = flat[off[0] : off[-1]].reshape(n, m).astype(
-                np.int64, copy=False
-            )
-            bucket = (
-                batch.column("centroid_id")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            # the layout is partitioned by centroid_id so a batch is
-            # normally ONE bucket; group once regardless
-            out_q: list["np.ndarray"] = []
-            out_v: list["np.ndarray"] = []
-            out_d: list["np.ndarray"] = []
-            for cid in np.unique(bucket):
-                qis = bucket_queries.get(int(cid))
-                if qis is None:
-                    continue
-                sel = np.nonzero(bucket == cid)[0]
-                # ascending-id order so the stable argsort below
-                # breaks distance ties by vec_id — the exact key the
-                # downstream window uses
-                sel = sel[np.argsort(ids[sel], kind="stable")]
-                cs = codes[sel]  # n_sel × m
-                lut = get_lut(int(cid))  # nq_b × m × k
-                dist = lut[:, 0, cs[:, 0]]  # nq_b × n_sel
-                for j in range(1, m):
-                    dist = dist + lut[:, j, cs[:, j]]
-                n_sel = len(sel)
-                # emit only each query's LOCAL top-fetch_k by
-                # (adc_dist asc, vec_id asc): any candidate in the
-                # global per-query top-fetch_k is necessarily in its
-                # own batch's top-fetch_k under the same key, so the
-                # downstream exact window sees every winner while the
-                # kernel output shrinks from (rows scanned) to
-                # (queries × fetch_k) per batch — the post-kernel
-                # shuffle stops scaling with the corpus.
-                if n_sel > fetch_k:
-                    top = np.argsort(dist, axis=1, kind="stable")[
-                        :, :fetch_k
-                    ]  # nq_b × fetch_k
-                    out_q.append(
-                        np.repeat(qid[qis], fetch_k)
-                    )
-                    out_v.append(ids[sel][top].ravel())
-                    out_d.append(np.take_along_axis(dist, top, axis=1).ravel())
-                else:
-                    out_q.append(np.repeat(qid[qis], n_sel))
-                    out_v.append(np.tile(ids[sel], len(qis)))
-                    out_d.append(dist.ravel())
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_v), type=pa.int64()),
-                        pa.array(np.concatenate(out_d), type=pa.float64()),
-                    ],
-                    names=["query_id", "vec_id", "adc_dist"],
-                )
-
     lead_asc = metric == "euclidean"
 
     def fused_kernel(batches):
@@ -1304,12 +1202,12 @@ def ivfpq_topk_rerank(
         loop of vectorized adds over dims — not numpy pairwise
         summation), same zero-denominator NULL for cosine. The
         candidate set is the union of per-(query, task) ADC
-        top-``fetch_k`` cuts — a SUPERSET of the join path's global
-        top-``fetch_k`` (recall never lower; identical, hence
-        hash-equal, whenever ``fetch_k`` covers the probed rows, which
-        is how the full-value oracles are constructed). Every cut
-        breaks ADC ties by ``vec_id`` — the same key as the join
-        path's window — so the candidate set is deterministic given
+        top-``fetch_k`` cuts — a SUPERSET of the global ADC
+        top-``fetch_k`` (equal to it when one task reads the whole
+        probe, e.g. a ``coalesce(1)`` layout read; the whole probed
+        set whenever ``fetch_k`` covers the probed rows, which is how
+        the full-value oracles are constructed). Every cut breaks ADC
+        ties by ``vec_id``, so the candidate set is deterministic given
         the task's bucket assignment."""
         B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
         Qm = np.array(json.loads(q_payload), dtype=np.float64)
@@ -1322,19 +1220,6 @@ def ivfpq_topk_rerank(
         }
         nq = Qm.shape[0]
         d_raw = Qr.shape[1]
-
-        def make_luts(targets):
-            out = np.empty(
-                (targets.shape[0], m, B[0].shape[0]), dtype=np.float64
-            )
-            for j in range(m):
-                T = targets[:, j * sub : (j + 1) * sub]
-                out[:, j, :] = (
-                    (T * T).sum(axis=1)[:, None]
-                    - 2.0 * (T @ B[j].T)
-                    + (B[j] ** 2).sum(axis=1)[None, :]
-                )
-            return out
 
         def seq_dot(qv, W):
             """<q, w> per row of W with the SQL fold's add order."""
@@ -1357,6 +1242,17 @@ def ivfpq_topk_rerank(
 
         q_norms = [seq_l2(Qr[i]) for i in range(nq)]
 
+        # Invert the probe map once per task: bucket → the (sorted)
+        # query indices probing it; each probed bucket gets ONE
+        # stacked LUT tensor (nq_b × m × k) so every query scoring a
+        # bucket is a single fancy gather, not a Python loop. For
+        # residual layouts the ADC target is q - c_bucket
+        # (|q - (c + r)|^2 = |(q - c) - r|^2) so the tensor is built
+        # per bucket — LAZILY, on the bucket's first row in THIS task
+        # (a task holds a handful of bucket directories; building all
+        # probed buckets' LUTs in every task is buckets/task-count ×
+        # wasted work). Raw layouts share each query's own LUT across
+        # buckets (stack is a view-index into one nq × m × k array).
         bq_lists: dict[int, list[int]] = {}
         for qi in range(nq):
             for cid in probe[qi]:
@@ -1364,9 +1260,7 @@ def ivfpq_topk_rerank(
         bucket_queries = {
             c: np.array(v, dtype=np.int64) for c, v in bq_lists.items()
         }
-        # lazy per-bucket LUT tensors — built on a bucket's first row
-        # in THIS task only (see the codes-only kernel's rationale)
-        raw_luts = None if residual else make_luts(Qm)
+        raw_luts = None if residual else _adc_luts(Qm, B, sub)
         lut_cache: dict[int, "np.ndarray"] = {}
 
         def get_lut(cid):
@@ -1374,7 +1268,7 @@ def ivfpq_topk_rerank(
             if hit is None:
                 qis = bucket_queries[cid]
                 hit = (
-                    make_luts(Qm[qis] - cvec[cid][None, :])
+                    _adc_luts(Qm[qis] - cvec[cid][None, :], B, sub)
                     if residual
                     else raw_luts[qis]
                 )
@@ -1393,7 +1287,7 @@ def ivfpq_topk_rerank(
 
         def _compact(qi, keep):
             """Cut query ``qi``'s accumulator to its ADC top-``keep``
-            by (adc asc, vec_id asc) — the join path's window key."""
+            by (adc asc, vec_id asc)."""
             ids_c = np.concatenate(acc_ids[qi])
             adc_c = np.concatenate(acc_adc[qi])
             vec_c = np.concatenate(acc_vec[qi])
@@ -1419,36 +1313,21 @@ def ivfpq_topk_rerank(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64, copy=False)
             )
-            codes_col = batch.column("codes")
-            off = np.asarray(codes_col.offsets, dtype=np.int64)
-            flat = np.asarray(codes_col.values)
-            widths = np.diff(off)
-            if not (widths == m).all():
-                raise ValueError(
-                    f"codes column is not fixed-width m={m}: widths "
-                    f"{sorted(set(int(w) for w in widths))[:5]}"
-                )
-            codes = flat[off[0] : off[-1]].reshape(n, m).astype(
+            codes = _list_matrix(batch, "codes", m).astype(
                 np.int64, copy=False
             )
-            vcol = batch.column(vec_col)
-            voff = np.asarray(vcol.offsets, dtype=np.int64)
             # zero-copy view in the STORED dtype; only the ≤ fetch_k
             # candidate rows per query are copied out below — widening
             # the whole batch would copy ~n×d×8 bytes for rows the
             # rerank never touches
-            vflat = np.asarray(vcol.values)
-            vw = np.diff(voff)
-            if not (vw == d_raw).all():
-                raise ValueError(
-                    f"stored vector column is not fixed-width d={d_raw}"
-                )
-            V = vflat[voff[0] : voff[-1]].reshape(n, d_raw)
+            V = _list_matrix(batch, vec_col, d_raw)
             bucket = (
                 batch.column("centroid_id")
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64, copy=False)
             )
+            # the layout is partitioned by centroid_id so a batch is
+            # normally ONE bucket; group once regardless
             for cid in np.unique(bucket):
                 qis = bucket_queries.get(int(cid))
                 if qis is None:
@@ -1531,56 +1410,13 @@ def ivfpq_topk_rerank(
                 names=["query_id", "vec_id", "score"],
             )
 
-    if vec_col in layout.columns:
-        # self-contained layout: probe + exact rerank in ONE job over
-        # the pruned bucket reads; the only post-kernel op is the
-        # final per-query top-k window over ≤ |Q|·buckets·fetch_k rows
-        scored2 = pruned.select(
-            id_col, "codes", "centroid_id", vec_col
-        ).mapInArrow(fused_kernel, "query_id long, vec_id long, score double")
-        lead2 = F.col("score").asc() if lead_asc else F.col("score").desc()
-        wf = Window.partitionBy("query_id").orderBy(lead2, F.col("vec_id").asc())
-        return (
-            scored2.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= k)
-        )
-
-    if index is None:
-        raise ValueError(
-            "this IVFPQ layout stores codes only (store_vectors=False); "
-            "the rerank needs the full-precision index frame"
-        )
-    scored = pruned.select(id_col, "codes", "centroid_id").mapInArrow(
-        kernel, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= fetch_k)
-        .select("query_id", "vec_id")
-    )
-    qside = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    )
-    rescored = (
-        index.join(F.broadcast(cand), index[id_col] == cand["vec_id"])
-        .drop(cand["vec_id"])
-        .join(F.broadcast(qside), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("vec_id"),
-            similarity_expr(
-                metric, F.col("__qvec"), F.col(vec_col)
-            ).alias("score"),
-        )
-    )
-    lead = F.col("score").asc() if metric == "euclidean" else F.col("score").desc()
-    w2 = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
+    scored = pruned.select(
+        id_col, "codes", "centroid_id", vec_col
+    ).mapInArrow(fused_kernel, "query_id long, vec_id long, score double")
+    lead = F.col("score").asc() if lead_asc else F.col("score").desc()
+    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
     return (
-        rescored.withColumn("rank", F.row_number().over(w2))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -1594,9 +1430,8 @@ def retrain_ivfpq_index(
     lloyd_iters: int = 2,
 ) -> dict:
     """Full quantizer retrain + rebuild of an existing IVFPQ layout
-    from the FULL-PRECISION source of truth (the layout itself stores
-    only lossy codes, so retraining must read the primary vector
-    table).
+    from the FULL-PRECISION source of truth ``vectors`` (the primary
+    vector table, in its raw space).
 
     Shape parameters (m, k, centroid count, residual flag) are read
     from the live sidecar — a retrain refreshes the quantizers for the
@@ -1655,7 +1490,6 @@ def retrain_ivfpq_index(
     write_ivfpq_index(
         vectors, path, cents, books, id_col, vec_col,
         residual=residual, normalize=normalize, mips=mips,
-        store_vectors=bool(meta.get("stores_vectors", False)),
         meta_cols=meta.get("meta_cols") or None,
         rotation=rotation,
     )
@@ -1699,14 +1533,20 @@ def upsert_ivfpq_index(
     centroids = [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]]
     codebooks = meta["codebooks"]
     residual = bool(meta.get("residual", False))
-    stores_vectors = bool(meta.get("stores_vectors", False))
+    layout_vec_col = meta.get("vec_col")
+    if not layout_vec_col:
+        raise ValueError(
+            f"IVFPQ layout {path!r} stores no raw vectors (a codes-only "
+            "layout from an older build); rebuild it with "
+            "write_ivfpq_index or retrain_ivfpq_index before upserting"
+        )
     rotation = meta.get("rotation")
     transformed = (
         bool(meta.get("normalize", False))
         or bool(meta.get("mips", False))
         or rotation is not None
     )
-    if stores_vectors and transformed:
+    if transformed:
         # the layout stores RAW vectors next to the transformed-space
         # codes; stash them before entering the layout's space
         records = records.withColumn("__raw", F.col(vec_col))
@@ -1733,8 +1573,8 @@ def upsert_ivfpq_index(
         records = rotate_vectors(records, rotation, vec_col)
 
     # __raw is derived from the same record as the transformed vector,
-    # so ignoring it keeps the duplicate-survivor choice identical to
-    # codes-only layouts
+    # so ignoring it keeps the duplicate-survivor choice a function of
+    # the record alone, whatever the layout's transform
     assigned = pick_survivors(
         assign_centroids_gemm(records, centroids, "euclidean", vec_col),
         id_col,
@@ -1758,13 +1598,14 @@ def upsert_ivfpq_index(
     # write_ivfpq_index), and the encoded batch is materialized once:
     # the merge reads it for its keys, its partitions and its rows
     raw = "__raw" if transformed else vec_col
-    carry = ["centroid_id", *([raw] if stores_vectors else []), *meta_cols]
-    enc = pq_encode(enc_src, codebooks, id_col, enc_col, carry_cols=carry)
-    keep = [F.col(id_col), F.col("centroid_id")]
-    if stores_vectors:
-        keep.append(F.col(raw).alias(meta.get("vec_col") or vec_col))
-    keep.extend(F.col(c) for c in meta_cols)
-    fresh = enc.select(*keep, "codes").localCheckpoint(eager=True)
+    enc = pq_encode(
+        enc_src, codebooks, id_col, enc_col,
+        carry_cols=["centroid_id", raw, *meta_cols],
+    )
+    fresh = enc.select(
+        id_col, "centroid_id", F.col(raw).alias(layout_vec_col),
+        *meta_cols, "codes",
+    ).localCheckpoint(eager=True)
     n_new = fresh.count()
     if n_new == 0:
         return {"touched": [], "n_upserted": 0}

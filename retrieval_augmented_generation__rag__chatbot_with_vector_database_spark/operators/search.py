@@ -10,8 +10,8 @@ the decision space is the engine's real strategy ladder:
 |-------------|-------------------------------------------------|
 | ``ivfpq``   | layout dir carries ``_ivfpq_meta.json`` AND the metric matches the layout's transform: raw→euclidean, ``normalize``→cosine, ``mips``→dotproduct (a transformed layout serves exactly its own metric) |
 | ``ivf``     | layout dir carries ``_ivf_meta.json``           |
-| ``exact_gemm`` | no layout, index rows > ``hof_max_rows``; OR a layout exists but its sidecar ``rows_at_build`` < ``prefer_exact_below`` (size-aware crossover: below break-even the single-stage brute-force scan beats any probe's fixed overhead) |
-| ``exact_hof``  | no layout, small index (or ``parity=True``)  |
+| ``exact_gemm`` | no layout, index rows > ``DEFAULT_HOF_MAX_ROWS`` (or unknown); OR a layout exists but its sidecar ``rows_at_build`` < ``prefer_exact_below`` (size-aware crossover: below break-even the single-stage brute-force scan beats any probe's fixed overhead) |
+| ``exact_hof``  | no layout, small index                          |
 
 Rationale: a persisted inverted-file layout always beats rescanning
 (partition-pruned probe reads nprobe bucket dirs); with both quantized
@@ -19,8 +19,7 @@ and float layouts available the quantized one wins (16 B/row scan,
 full-precision rerank restores quality); without any layout the exact
 paths differ only in throughput — the Arrow GEMM kernel is ~100x less
 per-score CPU than the interpreted HOF fold, so the fold is reserved
-for small indexes and ``parity=True`` (bit-exact accumulation order
-vs SQL oracles, cf. ``operators/topk.py``).
+for small indexes.
 
 ``route()`` is a pure function of (layout sidecars, row count, flags)
 and is what tests pin; ``search()`` dispatches on its answer. Routing
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame
 
 #: above this, the interpreted HOF fold costs more CPU than the Arrow
 #: GEMM kernel's fixed overhead — measured crossover is far lower, the
-#: default just keeps tiny/test indexes on the dependency-free path
+#: bound just keeps tiny/test indexes on the dependency-free path
 DEFAULT_HOF_MAX_ROWS = 50_000
 
 
@@ -43,8 +42,6 @@ def route(
     layout_path: str | None = None,
     n_rows: int | None = None,
     metric: str = "cosine",
-    parity: bool = False,
-    hof_max_rows: int = DEFAULT_HOF_MAX_ROWS,
     prefer_exact_below: int = 0,
 ) -> dict:
     """Pick the search path. Returns {"path": ..., "reason": ...};
@@ -132,12 +129,10 @@ def route(
             f"layout_path {layout_path!r} has neither {IVFPQ_META} nor "
             f"{IVF_META} — not a persisted vector layout"
         )
-    if parity:
-        return {"path": "exact_hof", "reason": "parity=True: bit-exact fold order"}
-    if n_rows is not None and n_rows <= hof_max_rows:
+    if n_rows is not None and n_rows <= DEFAULT_HOF_MAX_ROWS:
         return {
             "path": "exact_hof",
-            "reason": f"small index ({n_rows} rows <= {hof_max_rows})",
+            "reason": f"small index ({n_rows} rows <= {DEFAULT_HOF_MAX_ROWS})",
         }
     return {
         "path": "exact_gemm",
@@ -154,8 +149,6 @@ def search(
     nprobe: int = 4,
     fetch_k: int = 50,
     n_rows: int | None = None,
-    parity: bool = False,
-    hof_max_rows: int = DEFAULT_HOF_MAX_ROWS,
     prefer_exact_below: int = 0,
     mips_fetch_floor: float = 0.01,
     pre_filter=None,
@@ -167,12 +160,12 @@ def search(
 ) -> DataFrame:
     """Dispatching batch top-k: (query_id, vec_id, score, rank) from
     whichever strategy :func:`route` picks. ``index`` is the
-    full-precision frame — required for the exact paths, and for the
-    IVFPQ rerank stage ONLY when the layout stores codes without
-    vectors (``store_vectors=False``); a self-contained layout serves
-    with ``index=None``. ``n_rows`` lets callers who know the index
-    size skip a count; when absent and no layout exists the router
-    treats the index as large (GEMM) rather than pay a count job.
+    full-precision frame the exact paths scan; the layout paths read
+    only ``layout_path`` (an IVFPQ layout stores the raw vectors its
+    rerank needs next to the codes) and ignore it. ``n_rows`` lets
+    callers who know the index size skip a count; when absent and no
+    layout exists the router treats the index as large (GEMM) rather
+    than pay a count job.
 
     ``mips_fetch_floor``: minimum over-fetch FRACTION of the index for
     dotproduct-over-IVFPQ — MIPS is the hardest metric for
@@ -196,9 +189,7 @@ def search(
     measured selectivity of the filtered probed scan, floored at
     ``k`` — see ``operators.pq.ivfpq_topk_rerank``. Off by default so
     hand-tuned fetch budgets stay byte-stable."""
-    decision = route(
-        layout_path, n_rows, metric, parity, hof_max_rows, prefer_exact_below
-    )
+    decision = route(layout_path, n_rows, metric, prefer_exact_below)
     path = decision["path"]
 
     if path == "ivfpq":
@@ -208,11 +199,6 @@ def search(
         )
 
         meta = load_ivfpq_meta(layout_path)
-        if index is None and not meta.get("stores_vectors", False):
-            raise ValueError(
-                "IVFPQ rerank needs the full-precision index frame for a "
-                "codes-only layout (store_vectors=False)"
-            )
         if metric == "dotproduct" and mips_fetch_floor > 0:
             import math
 
@@ -222,7 +208,6 @@ def search(
         return ivfpq_topk_rerank(
             queries,
             layout,
-            index,
             [(int(c), v) for c, v in meta["centroids"]],
             meta["codebooks"],
             k=k,

@@ -496,7 +496,7 @@ def ann_ivfpq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq.write_ivfpq_index(emb, path, cents, books)
         layout = spark.read.parquet(path)
         rer = pq.ivfpq_topk_rerank(
-            q, layout, emb, cents, books, k=K, nprobe=8, fetch_k=100
+            q, layout, cents, books, k=K, nprobe=8, fetch_k=100
         ).select("query_id", F.col("vec_id").alias("r_vec_id"))
         hits = exact.join(
             rer,

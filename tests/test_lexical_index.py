@@ -318,7 +318,7 @@ def test_file_count_bounded_under_many_hot_batches(spark, tmp_path):
     wholesale (repartition-by-bucket -> one file per bucket) and the
     swap deletes the _old_ aside — so a bucket dir holds exactly one
     data file no matter how many batches touched it. 100-batch run:
-    tools/scale_check_lexical_files.py (SCALE.md)."""
+    SCALE.md, lexical-index file-count trajectory."""
     import os
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.lexical_index import (

@@ -148,7 +148,7 @@ def test_ivfpq_full_probe_equals_flat_pq(spark, emb, tmp_path):
     ivf = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, layout, emb, cents, books, k=5, nprobe=16, fetch_k=50
+            q, layout, cents, books, k=5, nprobe=16, fetch_k=50
         ).collect()
     }
     assert ivf == flat
@@ -174,7 +174,7 @@ def test_ivfpq_pruned_probe_recall_and_partition_filter(spark, emb, tmp_path):
     layout = spark.read.parquet(path)
     q = _queries(emb)
     out = pq.ivfpq_topk_rerank(
-        q, layout, emb, cents, books, k=5, nprobe=8, fetch_k=50
+        q, layout, cents, books, k=5, nprobe=8, fetch_k=50
     )
     assert has_partition_filter(out, "centroid_id")
     exact = {
@@ -184,6 +184,40 @@ def test_ivfpq_pruned_probe_recall_and_partition_filter(spark, emb, tmp_path):
     got = {(r["query_id"], r["vec_id"]) for r in out.collect()}
     recall = len(got & exact) / len(exact)
     assert recall >= 0.8, f"ivfpq recall {recall}"
+
+
+def test_ivfpq_fetch_below_k_still_returns_k(spark, emb, tmp_path):
+    """fetch_k < k is raised to k: every query gets exactly k rows, the
+    same rows as the fetch_k=k call, however the layout read is split
+    into tasks (the probe cuts candidates per task)."""
+    from collections import Counter
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        ann,
+    )
+
+    books = pq.train_pq_codebooks(emb, m=8, k=16)
+    cents = ann.seed_centroids(emb, 8)
+    path = str(tmp_path / "ivfpq")
+    pq.write_ivfpq_index(emb, path, cents, books)
+    q = _queries(emb)
+    n_q = q.count()
+
+    def probe(layout, fetch_k):
+        return sorted(
+            (r["query_id"], r["rank"], r["vec_id"])
+            for r in pq.ivfpq_topk_rerank(
+                q, layout, cents, books, k=5, nprobe=8, fetch_k=fetch_k
+            ).collect()
+        )
+
+    read = spark.read.parquet(path)
+    for layout in (read, read.coalesce(1)):
+        short = probe(layout, 1)
+        per_query = Counter(qid for qid, _, _ in short)
+        assert len(per_query) == n_q
+        assert set(per_query.values()) == {5}
+        assert short == probe(layout, 5)
 
 
 def test_ivfpq_upsert_equals_rebuild(spark, emb, tmp_path):
@@ -237,13 +271,13 @@ def test_ivfpq_upsert_equals_rebuild(spark, emb, tmp_path):
     probe_inc = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(path), emb, cents, books, k=5, nprobe=16
+            q, spark.read.parquet(path), cents, books, k=5, nprobe=16
         ).collect()
     }
     probe_full = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(full), emb, cents, books, k=5, nprobe=16
+            q, spark.read.parquet(full), cents, books, k=5, nprobe=16
         ).collect()
     }
     assert probe_inc == probe_full
@@ -284,10 +318,15 @@ def test_residual_encoding_beats_raw_at_tight_code_budget(spark, tmp_path):
     }
 
     def recall(path, books, residual):
+        # one task reads the whole probe, so the probe's per-task
+        # fetch_k cut is the GLOBAL cut and recall is a pure function
+        # of ADC order, which is the property under test (a multi-task
+        # read over-fetches per task and would saturate both variants
+        # at this corpus size)
         got = {
             (r["query_id"], r["vec_id"])
             for r in pq.ivfpq_topk_rerank(
-                q, spark.read.parquet(path), emb, cents, books,
+                q, spark.read.parquet(path).coalesce(1), cents, books,
                 k=5, nprobe=8, fetch_k=25, residual=residual,
             ).collect()
         }
@@ -296,14 +335,8 @@ def test_residual_encoding_beats_raw_at_tight_code_budget(spark, tmp_path):
     raw_books = pq.train_pq_codebooks(emb, m=8, k=16)
     res_books = pq.train_pq_codebooks_residual(emb, cents, m=8, k=16)
     p_raw, p_res = str(tmp_path / "raw"), str(tmp_path / "res")
-    # codes-only layouts: the GLOBAL fetch_k cut makes recall a pure
-    # function of ADC order, which is the property under test (the
-    # fused store_vectors path over-fetches per batch and would
-    # saturate both variants at this corpus size)
-    pq.write_ivfpq_index(emb, p_raw, cents, raw_books, store_vectors=False)
-    pq.write_ivfpq_index(
-        emb, p_res, cents, res_books, residual=True, store_vectors=False
-    )
+    pq.write_ivfpq_index(emb, p_raw, cents, raw_books)
+    pq.write_ivfpq_index(emb, p_res, cents, res_books, residual=True)
     assert pq.load_ivfpq_meta(p_res)["residual"] is True
     r_raw, r_res = recall(p_raw, raw_books, False), recall(p_res, res_books, True)
     assert r_res > r_raw, f"residual {r_res} <= raw {r_raw}"
@@ -331,7 +364,7 @@ def test_residual_upsert_equals_rebuild(spark, emb, tmp_path):
     probe = lambda p: {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(p), emb, cents, books,
+            q, spark.read.parquet(p), cents, books,
             k=5, nprobe=16, residual=True,
         ).collect()
     }
@@ -640,7 +673,7 @@ def test_ivfpq_rotation_upsert_matches_rebuild(spark, emb, tmp_path):
         return {
             (r["query_id"], r["rank"]): (r["vec_id"], round(r["score"], 9))
             for r in pq.ivfpq_topk_rerank(
-                q, layout, None, cents, books, k=5, nprobe=8,
+                q, layout, cents, books, k=5, nprobe=8,
                 fetch_k=200, rotation=R,
             ).collect()
         }

@@ -54,10 +54,6 @@ def test_route_unknown_size_defaults_gemm():
     assert route()["path"] == "exact_gemm"
 
 
-def test_route_parity_forces_hof():
-    assert route(n_rows=10_000_000, parity=True)["path"] == "exact_hof"
-
-
 def test_route_ivf_layout(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     cents = ann.seed_centroids(emb, 8)
@@ -249,7 +245,6 @@ def test_search_ivfpq_layout_equals_direct_rerank(spark, emb, tmp_path):
     want = pq.ivfpq_topk_rerank(
         _queries(emb),
         spark.read.parquet(path),
-        emb,
         cents,
         books,
         k=5,
@@ -356,12 +351,12 @@ def test_search_crossover_matches_exact(spark, emb, tmp_path):
 
 
 def test_search_self_contained_layout_serves_without_index(spark, emb, tmp_path):
-    """store_vectors=True layouts carry the raw floats: the probe's
-    fused in-kernel rerank needs no side full-precision table — the
-    100 TB serving shape (only probed bucket dirs are read)."""
+    """IVFPQ layouts carry the raw floats: the probe's fused in-kernel
+    rerank needs no side full-precision table — the 100 TB serving
+    shape (only probed bucket dirs are read)."""
     path = str(tmp_path / "ivfpq")
     _euclid_ivfpq(spark, emb, path)
-    assert pq.load_ivfpq_meta(path)["stores_vectors"] is True
+    assert pq.load_ivfpq_meta(path)["vec_col"] == "embedding"
     q = _queries(emb)
     got = _rows(
         search(q, None, k=5, metric="euclidean", layout_path=path,
@@ -371,20 +366,40 @@ def test_search_self_contained_layout_serves_without_index(spark, emb, tmp_path)
     assert got == want
 
 
-def test_codes_only_layout_requires_index(spark, emb, tmp_path):
-    path = str(tmp_path / "ivfpq")
-    _euclid_ivfpq(spark, emb, path, store_vectors=False)
-    assert pq.load_ivfpq_meta(path)["stores_vectors"] is False
+def test_codes_only_layout_requires_rebuild(spark, emb, tmp_path):
+    """A layout written without the raw-vector column (an older
+    codes-only build, sidecar ``vec_col`` unset) is refused loudly by
+    the probe and by upsert; a retrain rebuilds it into a servable
+    layout."""
+    import json
+    import os
+    import shutil
+
+    built, path = str(tmp_path / "built"), str(tmp_path / "codes_only")
+    _euclid_ivfpq(spark, emb, built)
+    spark.read.parquet(built).drop("embedding").write.partitionBy(
+        "centroid_id"
+    ).parquet(path)
+    meta = pq.load_ivfpq_meta(built)
+    meta["vec_col"] = None
+    with open(os.path.join(path, pq.IVFPQ_META), "w") as f:
+        json.dump(meta, f)
+    shutil.rmtree(built)
     q = _queries(emb)
-    with pytest.raises(ValueError, match="full-precision index frame"):
+    with pytest.raises(ValueError, match="rebuild"):
         search(q, None, k=5, metric="euclidean", layout_path=path).collect()
+    with pytest.raises(ValueError, match="rebuild"):
+        pq.upsert_ivfpq_index(spark, path, emb.filter(F.col("vec_id") < 3))
+    pq.retrain_ivfpq_index(spark, path, emb)
+    got = search(q, None, k=5, metric="euclidean", layout_path=path)
+    assert got.count() == 5 * q.count()
 
 
-def test_fused_rerank_hash_equals_join_rerank(spark, emb, tmp_path):
-    """Same quantizers, both layout shapes, full-coverage fetch: the
-    fused in-kernel rescore (sequential float64 folds mirroring
-    similarity_expr) and the join-rerank path return IDENTICAL rows
-    including 6-decimal scores — for every metric."""
+def test_fused_rerank_hash_equals_exact(spark, emb, tmp_path):
+    """Full-coverage fetch over every metric's layout: the fused
+    in-kernel rescore (sequential float64 folds mirroring
+    similarity_expr) returns rows IDENTICAL to the exact reference
+    path, 6-decimal scores included."""
     cents_r = ann.seed_centroids(emb, 8)
     books_r = pq.train_pq_codebooks(emb, m=8, k=16)
     q = _queries(emb)
@@ -407,18 +422,13 @@ def test_fused_rerank_hash_equals_join_rerank(spark, emb, tmp_path):
         else:
             cents, books, kw = cents_r, books_r, {}
         p_f = str(tmp_path / f"f_{metric}")
-        p_j = str(tmp_path / f"j_{metric}")
         pq.write_ivfpq_index(emb, p_f, cents, books, **kw)
-        pq.write_ivfpq_index(emb, p_j, cents, books, store_vectors=False, **kw)
         fused = _rows(
             search(q, None, k=5, metric=metric, layout_path=p_f,
                    nprobe=8, fetch_k=10**6, mips_fetch_floor=0)
         )
-        joined = _rows(
-            search(q, emb, k=5, metric=metric, layout_path=p_j,
-                   nprobe=8, fetch_k=10**6, mips_fetch_floor=0)
-        )
-        assert fused == joined, metric
+        exact = _rows(topk_search(q, emb, k=5, metric=metric))
+        assert fused == exact, metric
 
 
 def test_mips_fetch_floor_only_raises_fetch(spark, emb, tmp_path):

@@ -592,13 +592,13 @@ def test_ivfpq_ingest_stream_keeps_search_layout_fresh(spark, tmp_path):
     live = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(path), emb, cents, books, k=5, nprobe=16
+            q, spark.read.parquet(path), cents, books, k=5, nprobe=16
         ).collect()
     }
     rebuilt = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(full), emb, cents, books, k=5, nprobe=16
+            q, spark.read.parquet(full), cents, books, k=5, nprobe=16
         ).collect()
     }
     assert live == rebuilt
@@ -736,7 +736,7 @@ def test_ivfpq_ingest_auto_retrain_past_threshold(spark, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     got = pq.ivfpq_topk_rerank(
-        q, spark.read.parquet(path), emb, new_cents, meta["codebooks"],
+        q, spark.read.parquet(path), new_cents, meta["codebooks"],
         k=5, nprobe=8,
     )
     self_hits = got.filter(
