@@ -726,9 +726,14 @@ def upsert_ivf_index(
     check_not_torn(path)
     meta = ivf_meta(path)
     metric, compression = meta["metric"], meta.get("compression")
+    if "centroid_hash" not in meta:
+        raise ValueError(
+            f"layout at {path} predates quantizer persistence (no "
+            f"centroid_hash in {IVF_META}); rebuild with write_ivf_index"
+        )
     if centroids is None:
         centroids = load_centroids(path)
-    elif "centroid_hash" in meta:
+    else:
         got = _centroid_hash(centroids)
         if got != meta["centroid_hash"]:
             raise ValueError(
@@ -737,12 +742,6 @@ def upsert_ivf_index(
                 "centroids=None to use the persisted list, or rebuild with "
                 "write_ivf_index to change quantizers"
             )
-    elif len(centroids) != meta["n_centroids"]:
-        # pre-persistence sidecar: length is the only check available
-        raise ValueError(
-            f"centroid count {len(centroids)} != layout's n_centroids "
-            f"{meta['n_centroids']}"
-        )
     assign = assign_centroids_gemm if fast else assign_centroids
     # intra-batch LWW: one survivor per id, same md5-payload total
     # order as merge_last_write_wins (deterministic across runs)

@@ -32,25 +32,45 @@ north-star extension every production RAG stack grows into.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numbers
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 IDF_DEC = "decimal(18,6)"
 
 # default document-frequency cap: drop terms present in > 50% of the
-# corpus. 0 < df_cap <= 1 → ratio of N; > 1 → absolute count; None →
-# uncapped (unit tests of scoring math on tiny corpora use None).
+# corpus (unit tests of scoring math on tiny corpora pass None). The
+# rule itself is :func:`df_cap_bound`.
 DF_CAP_DEFAULT = 0.5
+
+
+def df_cap_bound(
+    df_cap: float | int | None, n: float | int | Column
+) -> float | Column | None:
+    """The one df-cap rule: the largest df a term may have and still be
+    scored, for a corpus of ``n`` docs. ``0 < df_cap <= 1`` is a ratio
+    of N, ``df_cap > 1`` an absolute count, ``None`` means no cap (the
+    bound is None); any other value raises. ``n`` is a Python number
+    (the index probe, against the sidecar's N) or a ``Column`` (the raw
+    operators' plans); a ratio bound has the type of ``n``, an absolute
+    bound is a float."""
+    if df_cap is None:
+        return None
+    if (
+        isinstance(df_cap, bool)
+        or not isinstance(df_cap, numbers.Real)
+        or not df_cap > 0
+    ):
+        raise ValueError(f"df_cap must be positive or None, got {df_cap}")
+    cap = float(df_cap)
+    return n * cap if cap <= 1 else cap
 
 
 def _df_cap_filter(with_n: DataFrame, df_cap: float | int | None) -> DataFrame:
     """Apply the df cap to a frame carrying ``df`` and ``n`` columns."""
-    if df_cap is None:
-        return with_n
-    if df_cap <= 0:
-        raise ValueError(f"df_cap must be positive or None, got {df_cap}")
-    cap = F.col("n") * float(df_cap) if df_cap <= 1 else F.lit(float(df_cap))
-    return with_n.filter(F.col("df") <= cap)
+    bound = df_cap_bound(df_cap, F.col("n"))
+    return with_n if bound is None else with_n.filter(F.col("df") <= bound)
 
 
 def doc_terms(docs: DataFrame, id_col: str = "doc_id",

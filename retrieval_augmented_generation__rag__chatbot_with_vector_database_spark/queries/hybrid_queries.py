@@ -269,8 +269,8 @@ def _with_lexical_index(spark: SparkSession, sf_dir: str, probe):
 def hybrid_bm25_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 from the PERSISTED inverted-index layout
     (sources/lexical_index.py): postings carry (tf, dl), the scan is
-    pruned to the query terms' buckets, df is computed inside the
-    pruned scan. Hash-equal to ``hybrid_bm25_topk`` (same oracle SQL):
+    pruned to the query terms' buckets, df comes from the termdf
+    sidecar. Hash-equal to ``hybrid_bm25_topk`` (same oracle SQL):
     probe-from-layout ≡ rebuild-from-raw, the persistent-index contract
     of the reference (`app/services/pinecone_service.py:33-68`)."""
     docs = load(spark, sf_dir, "documents")

@@ -144,10 +144,16 @@ class VectorIndex:
         return str(self.properties().get("metric", "cosine"))
 
     def bucket_count(self) -> int:
-        """Persisted layout width; N_BUCKETS only for pre-r3 sidecars
-        written before bucket_count was persisted (those were always
-        laid out with the then-constant 32)."""
-        return int(self.properties().get("bucket_count", N_BUCKETS))
+        """Persisted layout width. A sidecar without it predates the
+        field; guessing the current ``N_BUCKETS`` would address the
+        wrong buckets once the default changes, so it raises."""
+        props = self.properties()
+        if "bucket_count" not in props:
+            raise ValueError(
+                f"vector index at {self.path} has no bucket_count in its "
+                "sidecar; delete it and rebuild with VectorIndex.create"
+            )
+        return int(props["bucket_count"])
 
     @property
     def _swap_marker_path(self) -> str:

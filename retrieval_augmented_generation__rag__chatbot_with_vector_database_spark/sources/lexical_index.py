@@ -13,7 +13,7 @@ Layout (catalog-free parquet + JSON sidecar, same discipline as
 ``VectorIndex``)::
 
     <path>/
-      _lexical_properties.json      # {term_buckets, doc_buckets}
+      _lexical_properties.json      # {term_buckets, doc_buckets, n, avgdl}
       postings/ tbucket=N/          # (term, id, tf, dl)
       termdf/   tbucket=N/          # (term, df)        — df sidecar
       docs/     dbucket=N/          # (id, dl, terms)   — the doc store
@@ -21,36 +21,31 @@ Layout (catalog-free parquet + JSON sidecar, same discipline as
 - **postings** are partitioned by ``tbucket = pmod(xxhash64(term),
   term_buckets)``: ALL postings of a term live in exactly one
   partition directory, so a probe prunes the scan to the (few) buckets
-  its query terms hash to, and ``df(term)`` is computable exactly from
-  the pruned scan alone.
+  its query terms hash to, and a bucket's df sidecar is an aggregate
+  of that bucket alone.
   ``dl`` (doc token length) is denormalized into each posting, Lucene
   norms-style, so BM25 needs no join against the doc store at probe
   time.
-- **termdf** (round 11) is the per-term document-frequency sidecar:
-  NOT an independently-maintained counter (those drift) but a pure
-  per-bucket AGGREGATE of postings, regenerated for exactly the term
-  buckets a mutation rewrites — it cannot diverge from a bucket it
-  was derived from. Its job is the df-cap decision BEFORE the
-  postings scan: without it, a stopword-grade query term's postings
-  (the largest in the index) are scanned once just to be df-capped
-  away; with it, the probe reads (term, df) rows for the query terms
-  — bytes proportional to the query, not to the stopword's posting
-  list — and scans only surviving terms. Since round 16 the sidecar
-  also supplies the probe's df VALUES outright when it fully covers
-  the probed buckets (the fast path in ``_pruned_candidates``), so
-  both staleness directions ride the crash contract the blocked
-  direction always had: the window between a postings swap and its
-  sidecar refresh is the postings/docs pair's existing
-  re-run-the-idempotent-mutation contract (the at-least-once streams
-  do). Layouts that fail the coverage check (legacy, partially
-  adopted) take the round-11 path, where the scan recomputes exact df
-  and re-applies the cap — there an allowed-direction staleness still
-  self-corrects.
+- **termdf** is the per-term document-frequency sidecar, and the
+  probe requires it: NOT an independently-maintained counter (those
+  drift) but a pure per-bucket AGGREGATE of postings, regenerated for
+  exactly the term buckets a mutation rewrites — it cannot diverge
+  from a bucket it was derived from. The probe reads (term, df) for
+  its query terms driver-side — bytes proportional to the query, not
+  to a stopword's posting list — applies the df cap to those exact
+  values, and scans only the surviving terms' postings; no df is
+  computed in Spark. A probed postings bucket without its termdf twin
+  is the crash window between a postings swap and its sidecar
+  refresh: the probe raises, and re-running the idempotent mutation
+  (what the at-least-once streams do) closes it. A layout without
+  ``termdf/`` or without the cached stats in the properties predates
+  this shape; probes and mutations raise and ask for a rebuild.
 - **docs** is the stored-fields side: (id, dl, terms) partitioned by
   id hash. Its job is incremental maintenance — replacing a document
   must delete the OLD version's postings, whose term buckets can only
-  be known from the old term list. It also supplies the corpus stats
-  (N via parquet footer counts, avgdl via a single slim column scan).
+  be known from the old term list. Every mutation rescans it for the
+  corpus stats (N via parquet footer counts, avgdl via a single slim
+  column scan) and caches them in the properties.
 
 Upsert = Lucene's delete-then-insert, expressed relationally: probe
 the doc store (id-bucket-pruned) for old term lists of incoming ids,
@@ -66,7 +61,7 @@ an at-least-once ingest stream gets exactly-once end state —
 
 At 100 TB: probes shuffle only postings of the query's terms (bounded
 by Σ df, further bounded by ``df_cap`` which drops stopword-grade
-terms BEFORE the candidate aggregation); the full corpus text is never
+terms BEFORE the postings scan); the full corpus text is never
 re-read. ``term_buckets`` should scale with corpus size (4096+) so one
 bucket ≈ an executor working set.
 """
@@ -82,6 +77,7 @@ from pyspark.sql import functions as F
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.hybrid import (
     DF_CAP_DEFAULT,
     IDF_DEC,
+    df_cap_bound,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
@@ -108,18 +104,6 @@ DBUCKET = "dbucket"
 # collecting.
 MAX_PROBE_TERMS = 65536
 
-#: corpus size below which the probe SKIPS the termdf pre-scan hint.
-#: Round-12 re-design (SCALE.md): as a Spark job the hint carried
-#: ~1.4 s of fixed scheduling/scan cost and measured a 0.69× SLOWDOWN
-#: at 500k docs — below any realistic crossover. The lookup is now a
-#: DRIVER-SIDE pyarrow read of the (hive-partitioned) sidecar —
-#: partition-pruned to the query terms' buckets, term-filtered, a few
-#: milliseconds at any corpus size, bounded by MAX_PROBE_TERMS like
-#: the terms collect it rides next to — so the gate is 0: always on
-#: when the sidecar exists and a df_cap applies. Kept as a module
-#: knob so scale checks can force the hint off to measure its value.
-TERMDF_HINT_MIN_DOCS = 0
-
 POSTINGS_SCHEMA = "term string, id long, tf long, dl long"
 TERMDF_SCHEMA = "term string, df long"
 DOCS_SCHEMA = "id long, dl long, terms array<string>, _batch long"
@@ -143,6 +127,24 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
         ).alias("term"),
     ).filter(F.col("term") != "")
+
+
+def _query_terms(
+    queries: DataFrame, query_id_col: str, query_text_col: str
+) -> DataFrame:
+    """(query_id, term): the distinct query terms, tokenized by the
+    index's analyzer."""
+    return (
+        _tokens(
+            queries.select(
+                F.col(query_id_col).alias("qid"), F.col(query_text_col)
+            ),
+            "qid",
+            query_text_col,
+        )
+        .distinct()
+        .withColumnRenamed("id", "query_id")
+    )
 
 
 def _doc_side(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -227,6 +229,20 @@ class LexicalIndex:
         for p in (self._postings_path, self._termdf_path, self._docs_path):
             if os.path.exists(p):
                 check_not_torn(p)
+
+    def _current_properties(self) -> dict:
+        """The properties of a layout in the one current shape — the
+        termdf sidecar present and (n, avgdl) cached — else ValueError
+        asking for a rebuild. Probes and mutations call it before they
+        read or write anything."""
+        props = self.properties()
+        if "n" not in props or not os.path.isdir(self._termdf_path):
+            raise ValueError(
+                f"lexical index at {self.path} predates the termdf sidecar "
+                "or the cached corpus stats; delete it and rebuild with "
+                "LexicalIndex.create"
+            )
+        return props
 
     # -- create -------------------------------------------------------
     def create(
@@ -398,10 +414,7 @@ class LexicalIndex:
         on disk, so it cannot drift from the buckets it derives from.
         Called by every mutation right after its postings swap; the
         crash window between the two swaps is the SAME contract as the
-        postings/docs pair (re-run the idempotent mutation), and a
-        stale-allowed sidecar self-corrects at probe time anyway
-        (``_pruned_candidates`` re-applies the exact cap on
-        scan-computed df)."""
+        postings/docs pair (re-run the idempotent mutation)."""
         if not tbuckets:
             return
         fresh = (
@@ -411,10 +424,6 @@ class LexicalIndex:
             .agg(F.count("*").alias("df"))
             .select("term", "df", TBUCKET)
         )
-        # a legacy layout built before the sidecar existed adopts it
-        # incrementally: the first rewrite creates the dir (missing
-        # buckets are treated as unblocked-by-hint at probe time, which
-        # is always safe)
         rewrite_partitions(fresh, self._termdf_path, TBUCKET, tbuckets)
 
     def doc_store(self) -> DataFrame:
@@ -424,30 +433,24 @@ class LexicalIndex:
         )
 
     def corpus_stats(self) -> DataFrame:
-        """1-row (n, avgdl), from the sidecar when present: every
+        """1-row (n, avgdl) from the properties sidecar: every
         mutation (:meth:`create` / :meth:`upsert` / :meth:`delete_docs`)
         recomputes the pair from the merged layout and persists it in
-        ``_lexical_properties.json``, so a probe pays a local-relation
-        lookup instead of a per-search doc-store scan job (VERDICT r9
+        ``_lexical_properties.json``, so a probe reads the pair from
+        there instead of running a per-search doc-store scan job (VERDICT r9
         item #2 — this was ``hybrid_rrf_topk_indexed``'s avoidable
         job). Recompute-at-mutation rather than increment-in-place
         keeps the counter self-healing: a crash between a partition
         swap and the sidecar write leaves stats one batch stale, and
-        the next mutation overwrites them with exact values.
-
-        Layouts written before the sidecar carried stats fall back to
-        the original scan: N from parquet footer row counts, avgdl
-        over one slim column. Token-free docs count toward N but not
-        avgdl, matching the raw operators (``doc_term_freqs`` never
-        emits a dl=0 row)."""
-        props = self.properties()
-        if "n" in props:
-            avgdl = props.get("avgdl")
-            return self.spark.createDataFrame(
-                [(int(props["n"]), None if avgdl is None else float(avgdl))],
-                "n long, avgdl double",
-            )
-        return self._scan_stats()
+        the next mutation overwrites them with exact values. Token-free
+        docs count toward N but not avgdl, matching the raw operators
+        (``doc_term_freqs`` never emits a dl=0 row)."""
+        props = self._current_properties()
+        avgdl = props.get("avgdl")
+        return self.spark.createDataFrame(
+            [(int(props["n"]), None if avgdl is None else float(avgdl))],
+            "n long, avgdl double",
+        )
 
     def _scan_stats(self) -> DataFrame:
         return self.doc_store().agg(
@@ -459,7 +462,7 @@ class LexicalIndex:
         """Recompute (n, avgdl) from the persisted doc store and write
         them into the sidecar (atomic tmp+rename). Spark's ``avg`` of
         a long is the double sum/count quotient, so the cached value is
-        bit-identical to what the fallback scan would return."""
+        bit-identical to what a rescan returns."""
         row = self._scan_stats().first()
         props = self.properties()
         props["n"] = int(row["n"])
@@ -483,6 +486,7 @@ class LexicalIndex:
         monotonic version for the doc-store LWW merge; replaying a
         batch with the same value converges to the same layout."""
         self._check_not_torn()
+        self._current_properties()
         tb, db = self.term_buckets(), self.doc_buckets()
 
         side = _doc_side(docs, id_col, text_col).localCheckpoint(eager=True)
@@ -558,6 +562,7 @@ class LexicalIndex:
         rows present — re-running the same delete converges (the
         whole operation is idempotent)."""
         self._check_not_torn()
+        self._current_properties()
         tb, db = self.term_buckets(), self.doc_buckets()
         if isinstance(ids, (list, tuple)):
             ids = self.spark.createDataFrame(
@@ -604,60 +609,16 @@ class LexicalIndex:
         self.refresh_stats()
 
     # -- probes -------------------------------------------------------
-    def _blocked_terms(
-        self,
-        terms: list[str],
-        buckets: list[int],
-        df_cap: float | int,
-        n_hint: int | None,
-    ) -> set[str]:
-        """Query terms the ``termdf`` sidecar marks over-cap — read
-        DRIVER-SIDE with pyarrow (hive partition pruning on
-        ``tbucket`` + a term filter), not as a Spark job: the lookup
-        is bounded by MAX_PROBE_TERMS rows exactly like the
-        terms-collect it rides next to, and as a job it carried ~1.4 s
-        of fixed cost that measured as a net probe SLOWDOWN at 500k
-        docs (SCALE.md round 12). Over-approximate-safe as before:
-        terms missing from the sidecar stay in the scan and the exact
-        scan-computed df re-applies the cap downstream."""
-        import pyarrow.dataset as pads
-
-        if df_cap <= 1:
-            n_corpus = (
-                n_hint
-                if n_hint is not None
-                else int(self.corpus_stats().first()["n"])
-            )
-            cap_val = n_corpus * float(df_cap)
-        else:
-            cap_val = float(df_cap)
-        dset = pads.dataset(
-            self._termdf_path, format="parquet", partitioning="hive"
-        )
-        tbl = dset.to_table(
-            columns=["term", "df"],
-            filter=(
-                pads.field(TBUCKET).isin(buckets)
-                & pads.field("term").isin(terms)
-                & (pads.field("df") > cap_val)
-            ),
-        )
-        return set(tbl["term"].to_pylist())
-
     def _sidecar_df_for(
         self, buckets: list[int], terms: list[str]
-    ) -> dict | None:
+    ) -> dict:
         """Exact ``term → df`` for the probe's terms, read DRIVER-SIDE
-        from the termdf sidecar (hive-pruned to ``buckets``), or None
-        when the sidecar cannot be trusted to fully cover the probe:
-        no sidecar dir, no cached corpus stats, or a postings bucket
-        whose sidecar twin is missing (legacy / partially-adopted
-        layouts — those keep the round-11 scan-computed-df path). A
-        bucket dir absent from BOTH postings and termdf simply holds
-        no data, which is covered trivially (df 0 ⇒ no postings)."""
-        props = self.properties()
-        if "n" not in props or not os.path.exists(self._termdf_path):
-            return None
+        from the termdf sidecar (hive-pruned to ``buckets``, bounded by
+        MAX_PROBE_TERMS rows like the pairs collect it rides next to).
+        A probed postings bucket whose termdf twin is missing raises: a
+        mutation swapped the postings and stopped before refreshing
+        the sidecar. A bucket dir absent from BOTH postings and termdf
+        simply holds no data (df 0 ⇒ no postings)."""
         have = {
             e
             for e in os.listdir(self._termdf_path)
@@ -673,8 +634,14 @@ class LexicalIndex:
         needed = {f"{TBUCKET}={b}" for b in buckets}
         if not (needed & post):
             return {}  # no probed bucket holds postings — nothing to scan
-        if (needed & post) - have:
-            return None
+        missing = (needed & post) - have
+        if missing:
+            raise ValueError(
+                f"lexical index at {self.path}: postings bucket(s) "
+                f"{sorted(missing)} have no termdf twin — the last upsert "
+                "or delete_docs did not finish; re-run it (mutations are "
+                "idempotent)"
+            )
         import pyarrow.dataset as pads
 
         dset = pads.dataset(
@@ -696,44 +663,28 @@ class LexicalIndex:
         term buckets the query terms hash to. Returns (query_id, term,
         id, tf, dl, df, n, avgdl).
 
-        df is exact — a term's postings are colocated in its bucket, so
-        counting ids inside the pruned scan IS the global document
-        frequency. The df-cap is applied to the per-term aggregate
-        BEFORE any row-level postings join (a partial-agg scan, never a
-        fan-out), so a stopword-grade hot term costs one map-side count
-        and is then dropped — the postings join only ever sees the
-        broadcast list of surviving (query term × stats) rows.
+        The small side resolves DRIVER-SIDE: one collect of the
+        distinct (query, term) pairs, df per term from the termdf
+        sidecar (:meth:`_sidecar_df_for`), N and avgdl from the
+        properties, and the df cap (``operators.hybrid.df_cap_bound``)
+        applied to those exact values. Over-cap terms are dropped
+        BEFORE the postings scan, so a stopword's posting list — the
+        largest read the cap would discard — is never touched. The
+        surviving (query_id, term, df, n, avgdl) rows are ONE broadcast
+        local relation joined to the bucket-pruned, term-filtered
+        postings scan; no df is computed in Spark.
 
-        The ``termdf`` sidecar is consulted FIRST (round 11): terms it
-        marks over-cap are dropped before the postings scan, so a
-        stopword's posting list — the largest row-proportional read the
-        cap would discard — is never touched. The hint is
-        over-approximate by construction: terms missing from the
-        sidecar (legacy layouts, partially-adopted buckets) stay in
-        the scan, and the scan-computed exact df re-applies the cap,
-        so a stale-allowed hint costs a wasted read, never a wrong
-        result.
-
-        Round 16 (VERDICT r15 #3): when the sidecar FULLY COVERS the
-        probed buckets (every bucket dir the query terms hash to that
-        exists under postings/ also exists under termdf/, and the
-        corpus stats live in the properties sidecar), the whole small
-        side of the probe resolves DRIVER-SIDE: df per term comes from
-        the same pyarrow sidecar read the blocked-terms hint already
-        pays, the cap is applied to those exact values, and the
-        scoring join's small side becomes ONE broadcast local relation
-        (query_id, term, df, n, avgdl). That removes the per-probe
-        Spark-side df aggregate (an exchange + AQE stage) and the
-        re-derived query-terms subtree from the probe plan — the scan
-        side keeps its bucket pruning and term filter unchanged. The
-        sidecar is exact by construction after any completed mutation
-        (it is regenerated per touched bucket from the live postings);
-        the crash window between a postings swap and its sidecar
-        refresh is the layout's existing re-run-the-mutation contract.
-        Layouts that fail the coverage check (legacy, partially
-        adopted) take the round-11 path: scan-computed df, cap
-        re-applied — exact either way."""
-        tb = self.term_buckets()
+        The sidecar is required and exact by construction after any
+        completed mutation (it is regenerated per touched bucket from
+        the live postings). A probed postings bucket without its
+        termdf twin raises instead of guessing — re-run the mutation
+        that was cut short."""
+        props = self._current_properties()
+        n_corpus = int(props["n"])
+        avgdl = props.get("avgdl")
+        avgdl = None if avgdl is None else float(avgdl)
+        cap_val = df_cap_bound(df_cap, n_corpus)
+        tb = int(props["term_buckets"])
         pairs = (
             qterms.select("query_id", "term")
             .limit(MAX_PROBE_TERMS + 1)
@@ -753,83 +704,26 @@ class LexicalIndex:
         )
         if not pairs:
             return empty
-        rows = [
-            {"term": t, "b": b}
-            for t, b in sorted({(r["term"], r["b"]) for r in pairs})
+        bucket_of = {r["term"]: r["b"] for r in pairs}
+        df = self._sidecar_df_for(
+            sorted(set(bucket_of.values())), sorted(bucket_of)
+        )
+        keep = {t for t, d in df.items() if cap_val is None or d <= cap_val}
+        local = [
+            (r["query_id"], r["term"], df[r["term"]], n_corpus, avgdl)
+            for r in pairs
+            if r["term"] in keep
         ]
-
-        fast = self._sidecar_df_for(
-            sorted({r["b"] for r in rows}), [r["term"] for r in rows]
-        )
-        if fast is not None:
-            props = self.properties()
-            n_corpus = int(props["n"])
-            avgdl = props.get("avgdl")
-            avgdl = None if avgdl is None else float(avgdl)
-            if df_cap is None:
-                cap_val = None
-            elif df_cap <= 1:
-                cap_val = n_corpus * float(df_cap)
-            else:
-                cap_val = float(df_cap)
-            keep = {
-                t
-                for t, d in fast.items()
-                if cap_val is None or d <= cap_val
-            }
-            local = [
-                (r["query_id"], r["term"], fast[r["term"]], n_corpus, avgdl)
-                for r in pairs
-                if r["term"] in keep
-            ]
-            if not local:
-                return empty
-            q_allowed = self.spark.createDataFrame(
-                local,
-                "query_id long, term string, df long, n long, avgdl double",
-            )
-            buckets = sorted(
-                {r["b"] for r in rows if r["term"] in keep}
-            )
-            qset = sorted(keep)
-            pruned = self.postings().filter(
-                F.col(TBUCKET).isin(buckets) & F.col("term").isin(qset)
-            )
-            return pruned.join(F.broadcast(q_allowed), "term").select(
-                "query_id", "term", "id", "tf", "dl", "df", "n", "avgdl"
-            )
-
-        use_hint = (
-            df_cap is not None
-            and df_cap > 0
-            and os.path.exists(self._termdf_path)
-        )
-        if use_hint:
-            props = self.properties()
-            n_hint = int(props["n"]) if "n" in props else None
-            use_hint = n_hint is None or n_hint >= TERMDF_HINT_MIN_DOCS
-        if use_hint:
-            blocked = self._blocked_terms(
-                [r["term"] for r in rows],
-                sorted({r["b"] for r in rows}),
-                df_cap,
-                n_hint,
-            )
-            if blocked:
-                rows = [r for r in rows if r["term"] not in blocked]
-        buckets = sorted({r["b"] for r in rows})
-        if not buckets:
+        if not local:
             return empty
-        qset = [r["term"] for r in rows]
+        q_allowed = self.spark.createDataFrame(
+            local,
+            "query_id long, term string, df long, n long, avgdl double",
+        )
         pruned = self.postings().filter(
-            F.col(TBUCKET).isin(buckets) & F.col("term").isin(qset)
+            F.col(TBUCKET).isin(sorted({bucket_of[t] for t in keep}))
+            & F.col("term").isin(sorted(keep))
         )
-        dfc = pruned.groupBy("term").agg(F.countDistinct("id").alias("df"))
-        allowed = (
-            dfc.crossJoin(F.broadcast(self.corpus_stats()))
-            .filter(_cap_pred(df_cap))
-        )
-        q_allowed = qterms.join(allowed, "term")
         return pruned.join(F.broadcast(q_allowed), "term").select(
             "query_id", "term", "id", "tf", "dl", "df", "n", "avgdl"
         )
@@ -847,18 +741,9 @@ class LexicalIndex:
         smoothed idf rounded to 6 dp in DECIMAL), but from the
         persisted layout: no corpus re-tokenization, scan pruned to the
         query terms' buckets."""
-        qterms = (
-            _tokens(
-                queries.select(
-                    F.col(query_id_col).alias("qid"), F.col(query_text_col)
-                ),
-                "qid",
-                query_text_col,
-            )
-            .distinct()
-            .withColumnRenamed("id", "query_id")
+        cand = self._pruned_candidates(
+            _query_terms(queries, query_id_col, query_text_col), df_cap
         )
-        cand = self._pruned_candidates(qterms, df_cap)
         scored = (
             cand.select(
                 "query_id",
@@ -890,20 +775,11 @@ class LexicalIndex:
     ) -> DataFrame:
         """(query_id, doc_id, bm25_score, bm25_rank) — identical to
         ``operators.hybrid.bm25_topk`` from the persisted layout:
-        tf and dl ride the postings, avgdl/N come from the doc store,
+        tf and dl ride the postings, avgdl/N come from the properties,
         per-contribution 6-dp DECIMAL rounding keeps engines exact."""
-        qterms = (
-            _tokens(
-                queries.select(
-                    F.col(query_id_col).alias("qid"), F.col(query_text_col)
-                ),
-                "qid",
-                query_text_col,
-            )
-            .distinct()
-            .withColumnRenamed("id", "query_id")
+        cand = self._pruned_candidates(
+            _query_terms(queries, query_id_col, query_text_col), df_cap
         )
-        cand = self._pruned_candidates(qterms, df_cap)
         contrib = (
             cand.select(
                 "query_id",
@@ -931,18 +807,6 @@ class LexicalIndex:
             contrib.withColumn("bm25_rank", F.row_number().over(w))
             .filter(F.col("bm25_rank") <= k)
         )
-
-
-def _cap_pred(df_cap: float | int | None) -> Column:
-    """df-cap predicate over (df, n) columns — same semantics as
-    ``operators.hybrid._df_cap_filter`` (<=1 ratio, >1 absolute,
-    None = uncapped)."""
-    if df_cap is None:
-        return F.lit(True)
-    if df_cap <= 0:
-        raise ValueError(f"df_cap must be positive or None, got {df_cap}")
-    cap = F.col("n") * float(df_cap) if df_cap <= 1 else F.lit(float(df_cap))
-    return F.col("df") <= cap
 
 
 def _lww_docs(existing: DataFrame, incoming: DataFrame) -> DataFrame:

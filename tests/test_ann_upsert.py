@@ -163,6 +163,28 @@ def test_upsert_rejects_mismatched_quantizer(spark, emb, cents, tmp_path):
     assert _files_md5(path) == before  # nothing was written
 
 
+def test_upsert_without_centroid_hash_requires_rebuild(
+    spark, emb, cents, tmp_path
+):
+    """A sidecar without ``centroid_hash`` cannot prove a caller's
+    quantizer is the build-time one; a same-length different list must
+    not slip through on a length check. Raises before any write."""
+    import json
+
+    path = str(tmp_path / "ivf")
+    ann.write_ivf_index(emb, path, cents)
+    meta = ann.ivf_meta(path)
+    del meta["centroid_hash"]
+    with open(os.path.join(path, ann.IVF_META), "w") as f:
+        json.dump(meta, f)
+    wrong = [(cid, [x + 1.0 for x in vec]) for cid, vec in cents]
+    before = _files_md5(path)
+    for centroids in (wrong, cents, None):
+        with pytest.raises(ValueError, match="rebuild"):
+            ann.upsert_ivf_index(spark, path, emb.limit(3), centroids)
+    assert _files_md5(path) == before
+
+
 def test_upsert_recovers_centroids_from_sidecar(spark, emb, cents, tmp_path):
     """centroids=None loads the exact build-time list back from the
     sidecar — the post-restart recovery path (ADVICE r3 #1)."""

@@ -77,6 +77,21 @@ def test_df_cap_active_in_probe(spark, index):
     assert uncapped.count() == 4
 
 
+@pytest.mark.parametrize("df_cap", [0, 0.0, -1])
+def test_probe_rejects_nonpositive_df_cap(spark, index, df_cap):
+    """A cap <= 0 raises on the indexed probe exactly as on the raw
+    operators — never a silent empty answer."""
+    q = _queries_df(spark)
+    for raw, probe in (
+        (lexical_topk, index.lexical_topk),
+        (bm25_topk, index.bm25_topk),
+    ):
+        with pytest.raises(ValueError, match="df_cap must be positive"):
+            raw(q, _docs_df(spark), k=5, df_cap=df_cap)
+        with pytest.raises(ValueError, match="df_cap must be positive"):
+            probe(q, k=5, df_cap=df_cap)
+
+
 def test_corpus_stats_count_tokenfree_docs(spark, index):
     row = index.corpus_stats().first()
     assert row["n"] == len(DOCS)
@@ -88,7 +103,7 @@ def test_corpus_stats_count_tokenfree_docs(spark, index):
 def test_corpus_stats_cached_in_sidecar_and_maintained(spark, index):
     """(n, avgdl) live in the sidecar: corpus_stats is a local relation
     (no doc-store scan in the probe plan) and every mutation refreshes
-    it to exactly what the fallback scan would compute."""
+    it to exactly what a doc-store scan computes."""
     props = index.properties()
     assert props["n"] == len(DOCS)
     plan = index.corpus_stats()._jdf.queryExecution().executedPlan().toString()
@@ -112,15 +127,15 @@ def test_corpus_stats_cached_in_sidecar_and_maintained(spark, index):
     index.delete_docs([0, 9, 2])
     c, s = stats_pair(index)
     assert c == s and c[0] == len(DOCS) - 2
-    # pre-stats layouts (older sidecar) fall back to the scan
+    # pre-stats layouts (older sidecar) must be rebuilt
     stale = dict(index.properties())
     stale.pop("n"), stale.pop("avgdl")
     import json as _json
 
     with open(index._props_path, "w") as f:
         _json.dump(stale, f)
-    legacy = index.corpus_stats().first()
-    assert (legacy["n"], legacy["avgdl"]) == s
+    with pytest.raises(ValueError, match="rebuild"):
+        index.corpus_stats()
 
 
 def test_upsert_equals_rebuild(spark, tmp_path):
@@ -391,17 +406,12 @@ def test_termdf_maintained_by_upsert_and_delete(spark, tmp_path):
 
 
 def test_probe_skips_termdf_blocked_terms_with_identical_results(
-    spark, index, monkeypatch
+    spark, index
 ):
-    # 'spark' appears in 5/9 docs -> over a 0.4 ratio cap; the sidecar
-    # hint drops it BEFORE the postings scan and results must equal
-    # the raw operator's (which drops it after counting). The hint is
-    # size-gated (fixture corpora skip it) — force it on.
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources import (
-        lexical_index as li,
-    )
-
-    monkeypatch.setattr(li, "TERMDF_HINT_MIN_DOCS", 0)
+    # 'spark' appears in 4/8 docs -> over a 0.4 ratio cap; the probe
+    # drops it from the termdf sidecar's df BEFORE the postings scan
+    # and results must equal the raw operator's (which drops it after
+    # counting).
     q = _queries_df(spark)
     raw = lexical_topk(q, _docs_df(spark), k=5, df_cap=0.4)
     idxed = index.lexical_topk(q, k=5, df_cap=0.4)
@@ -415,60 +425,29 @@ def test_probe_skips_termdf_blocked_terms_with_identical_results(
     )
 
 
-def test_stale_allowed_termdf_self_corrects(spark, index, monkeypatch):
-    # corrupt the sidecar in the ALLOWED direction (df understated for
-    # an over-cap term). Round-16 contract split: the FALLBACK path
-    # (round 11) recomputes exact df in-scan and must self-correct;
-    # the FAST path (sidecar-supplied df) deliberately trusts the
-    # sidecar — a completed mutation regenerates it exactly, and the
-    # crash window is the layout's existing re-run-the-mutation
-    # contract (module docstring). Pin the fallback's self-correction
-    # by forcing the fast path off.
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources import (
-        lexical_index as li,
-    )
-
-    monkeypatch.setattr(li, "TERMDF_HINT_MIN_DOCS", 0)
-    monkeypatch.setattr(
-        li.LexicalIndex, "_sidecar_df_for", lambda self, b, t: None
-    )
-
-    fresh = index.termdf().withColumn(
-        "df",
-        F.when(F.col("term") == "spark", F.lit(1)).otherwise(F.col("df")),
-    )
-    rows = fresh.collect()
-    tmpd = index._termdf_path
+def test_legacy_layout_without_termdf_requires_rebuild(spark, index):
+    # simulate a layout built before the termdf sidecar: probes and
+    # mutations raise before reading or writing anything
+    import hashlib
     import shutil
+    from pathlib import Path
 
-    shutil.rmtree(tmpd)
-    spark.createDataFrame(rows, fresh.schema).write.partitionBy(
-        "tbucket"
-    ).parquet(tmpd)
-    q = _queries_df(spark)
-    raw = lexical_topk(q, _docs_df(spark), k=5, df_cap=0.4)
-    idxed = index.lexical_topk(q, k=5, df_cap=0.4)
-    assert _rows(idxed, "query_id", "lex_rank") == _rows(
-        raw, "query_id", "lex_rank"
-    )
-
-
-def test_legacy_layout_without_termdf_still_probes(spark, index):
-    # simulate a pre-round-11 layout: drop the sidecar entirely
-    import shutil
+    def files():
+        return {
+            os.path.join(d, f): hashlib.md5(Path(d, f).read_bytes()).hexdigest()
+            for d, _, fs in os.walk(index.path)
+            for f in fs
+        }
 
     shutil.rmtree(index._termdf_path)
+    before = files()
     q = _queries_df(spark)
-    raw = lexical_topk(q, _docs_df(spark), k=5, df_cap=0.4)
-    idxed = index.lexical_topk(q, k=5, df_cap=0.4)
-    assert _rows(idxed, "query_id", "lex_rank") == _rows(
-        raw, "query_id", "lex_rank"
-    )
-    # and a mutation adopts the sidecar incrementally (touched buckets)
-    idx_rows = [(9, "spark adoption probe")]
-    index.upsert(_docs_df(spark, idx_rows), batch=2)
-    assert os.path.exists(index._termdf_path)
-    got = _sidecar_df(index)
-    assert got  # only the touched buckets' terms are present
-    full = _brute_df(spark, DOCS + idx_rows)
-    assert all(full[t] == df for t, df in got.items())
+    with pytest.raises(ValueError, match="rebuild"):
+        index.lexical_topk(q, k=5, df_cap=0.4)
+    with pytest.raises(ValueError, match="rebuild"):
+        index.bm25_topk(q, k=5, df_cap=0.4)
+    with pytest.raises(ValueError, match="rebuild"):
+        index.upsert(_docs_df(spark, [(9, "spark adoption probe")]), batch=2)
+    with pytest.raises(ValueError, match="rebuild"):
+        index.delete_docs([0])
+    assert files() == before

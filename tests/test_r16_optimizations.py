@@ -230,62 +230,49 @@ def lex_index(spark, tmp_path):
         [(0, "uniq0 w0 common"), (1, "uniq5 w5 nosuchterm")],
         "query_id long, text string",
     )
-    return idx, queries
+    return idx, queries, docs
 
 
-def test_lexical_probe_fast_path_matches_fallback(lex_index, monkeypatch):
-    """The sidecar fast path and the round-11 scan-computed-df path
-    must score identically (both TF-IDF and BM25, cap on and off)."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.lexical_index import (
-        LexicalIndex,
+def test_lexical_probe_equals_raw_operator(lex_index):
+    """The indexed probe (sidecar df, cap applied driver-side) scores
+    exactly like the raw operators (df counted in Spark), for TF-IDF
+    and BM25 and for a ratio cap, no cap and an absolute cap."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.hybrid import (
+        bm25_topk,
+        lexical_topk,
     )
 
-    idx, queries = lex_index
+    idx, queries, docs = lex_index
 
     def rows(df):
         return {tuple(r) for r in df.collect()}
 
     for df_cap in (0.5, None, 3):
-        fast_lex = rows(idx.lexical_topk(queries, k=5, df_cap=df_cap))
-        fast_bm = rows(idx.bm25_topk(queries, k=5, df_cap=df_cap))
-        monkeypatch.setattr(
-            LexicalIndex, "_sidecar_df_for", lambda self, b, t: None
-        )
-        slow_lex = rows(idx.lexical_topk(queries, k=5, df_cap=df_cap))
-        slow_bm = rows(idx.bm25_topk(queries, k=5, df_cap=df_cap))
-        monkeypatch.undo()
-        assert fast_lex == slow_lex, f"lexical mismatch at cap {df_cap}"
-        assert fast_bm == slow_bm, f"bm25 mismatch at cap {df_cap}"
-        assert fast_lex  # non-degenerate
+        idx_lex = rows(idx.lexical_topk(queries, k=5, df_cap=df_cap))
+        idx_bm = rows(idx.bm25_topk(queries, k=5, df_cap=df_cap))
+        raw_lex = rows(lexical_topk(queries, docs, k=5, df_cap=df_cap))
+        raw_bm = rows(bm25_topk(queries, docs, k=5, df_cap=df_cap))
+        assert idx_lex == raw_lex, f"lexical mismatch at cap {df_cap}"
+        assert idx_bm == raw_bm, f"bm25 mismatch at cap {df_cap}"
+        assert idx_lex  # non-degenerate
 
 
-def test_lexical_probe_partial_sidecar_falls_back(lex_index):
-    """A postings bucket whose termdf twin is missing (partially
-    adopted sidecar) must fall back — results still equal the
-    scan-computed path, never empty-from-partial-sidecar."""
+def test_lexical_probe_partial_sidecar_raises(spark, lex_index):
+    """A probed postings bucket whose termdf twin is missing (a
+    mutation cut between its postings swap and its sidecar refresh)
+    raises — never an empty or partial result — and re-running the
+    mutation restores the probe."""
     import shutil
 
-    idx, queries = lex_index
+    idx, queries, docs = lex_index
     before = {tuple(r) for r in idx.lexical_topk(queries, k=5).collect()}
-    # remove ONE termdf bucket dir that postings still has
-    tdirs = [
-        e
-        for e in os.listdir(idx._termdf_path)
-        if e.startswith("tbucket=")
-        and os.path.exists(os.path.join(idx._postings_path, e))
-    ]
-    assert tdirs
-    shutil.rmtree(os.path.join(idx._termdf_path, tdirs[0]))
-    assert (
-        idx._sidecar_df_for(
-            sorted(
-                int(e.split("=")[1])
-                for e in tdirs
-            ),
-            ["w0"],
-        )
-        is None
-    )
+    b = idx.postings().filter(F.col("term") == "w0").first()["tbucket"]
+    shutil.rmtree(os.path.join(idx._termdf_path, f"tbucket={b}"))
+    for probe in (idx.lexical_topk, idx.bm25_topk):
+        with pytest.raises(ValueError, match="re-run"):
+            probe(queries, k=5)
+    # replaying a mutation that touches the bucket regenerates its twin
+    idx.upsert(docs.filter(F.col("doc_id") == 0), batch=1)
     after = {tuple(r) for r in idx.lexical_topk(queries, k=5).collect()}
     assert after == before
 

@@ -261,6 +261,38 @@ def test_bucket_count_persisted_survives_default_change(spark, tmp_path, monkeyp
             assert after.get(p) == h, f"untouched file rewritten: {p}"
 
 
+def test_sidecar_without_bucket_count_requires_rebuild(spark, tmp_path):
+    """A sidecar without ``bucket_count`` must not be read as the current
+    ``N_BUCKETS``: upsert and delete_ids raise before writing."""
+    import json
+
+    idx = VectorIndex(spark, str(tmp_path), "idx-old").create(
+        dimension=2, bucket_count=8
+    )
+    cols = "id string, embedding array<float>, text string, source string, chunk_index int"
+    idx.upsert(
+        spark.createDataFrame(
+            [(f"id{i}", [1.0, 0.0], f"t{i}", "s", 0) for i in range(10)], cols
+        ),
+        batch=1,
+    )
+    props = idx.properties()
+    del props["bucket_count"]
+    with open(idx._props_path, "w") as f:
+        json.dump(props, f)
+    before = _files_md5(idx.path)
+    with pytest.raises(ValueError, match="rebuild"):
+        idx.bucket_count()
+    with pytest.raises(ValueError, match="rebuild"):
+        idx.upsert(
+            spark.createDataFrame([("id1", [0.0, 1.0], "t", "s", 0)], cols),
+            batch=2,
+        )
+    with pytest.raises(ValueError, match="rebuild"):
+        idx.delete_ids(["id1"])
+    assert _files_md5(idx.path) == before
+
+
 def test_reroute_rebuckets_for_target_layout(spark, tmp_path):
     """Dim-mismatch reroute into a target index whose persisted
     bucket_count differs from the source's must re-address rows."""
