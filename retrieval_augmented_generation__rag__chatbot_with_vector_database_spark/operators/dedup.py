@@ -45,17 +45,6 @@ def tokens(text: Column | str) -> Column:
     return F.filter(F.split(F.lower(t), TOKEN_SPLIT), lambda x: x != "")
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (array<string>); empty array for
-    docs with < n tokens."""
-    arr = tokens(text)
-    idx = F.sequence(F.lit(0), F.size(arr) - n)
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", *[arr[i + j] for j in range(n)]))
-    return F.when(F.size(arr) >= n, F.array_distinct(sh)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def exploded_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:

@@ -1430,16 +1430,23 @@ def retrain_ivfpq_index(
     lloyd_iters: int = 2,
 ) -> dict:
     """Full quantizer retrain + rebuild of an existing IVFPQ layout
-    from the FULL-PRECISION source of truth ``vectors`` (the primary
-    vector table, in its raw space).
+    from the FULL-PRECISION vectors ``vectors``, in their raw space:
+    the primary vector table, or a read of this layout itself (it
+    stores the raw vectors).
 
     Shape parameters (m, k, centroid count, residual flag) are read
     from the live sidecar — a retrain refreshes the quantizers for the
     drifted corpus, it does not change the index design. Coarse
     centroids are re-seeded deterministically and Lloyd-refined;
     codebooks re-train on the standard bounded sample;
-    ``write_ivfpq_index`` then rewrites the layout, resetting
-    ``upserted_since_build`` (staleness → 0).
+    ``write_ivfpq_index`` then writes the rebuilt layout, with
+    ``upserted_since_build`` reset (staleness → 0), into the sibling
+    dir ``<path>._retrain``. Only when that write and its sidecar are
+    complete are the buckets and the sidecar swapped into ``path``
+    under the layout's marker fence (``layout.swap_partition_dirs``),
+    so the live layout stays whole and readable until then — a crash
+    mid-rebuild leaves it as it was, and the retrain can simply be
+    re-run.
 
     Returns ``{"rows": int, "staleness_before": float}``.
     """
@@ -1447,7 +1454,12 @@ def retrain_ivfpq_index(
         lloyd_refine,
         seed_centroids,
     )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        check_not_torn,
+        swap_partition_dirs,
+    )
 
+    check_not_torn(path)
     meta = load_ivfpq_meta(path)
     before = ivfpq_staleness(path)
     n_cent = len(meta["centroids"])
@@ -1487,12 +1499,18 @@ def retrain_ivfpq_index(
         books = train_pq_codebooks(
             src, m=m, k=k, id_col=id_col, vec_col=vec_col
         )
+    tmp = path.rstrip("/") + "._retrain"
     write_ivfpq_index(
-        vectors, path, cents, books, id_col, vec_col,
+        vectors, tmp, cents, books, id_col, vec_col,
         residual=residual, normalize=normalize, mips=mips,
         meta_cols=meta.get("meta_cols") or None,
         rotation=rotation,
     )
+    buckets = {
+        e for d in (path, tmp) for e in os.listdir(d)
+        if e.startswith("centroid_id=")
+    }
+    swap_partition_dirs(path, tmp, [*sorted(buckets), IVFPQ_META])
     return {
         "rows": int(load_ivfpq_meta(path)["rows_at_build"]),
         "staleness_before": before,

@@ -18,10 +18,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if a parquet scan carries ``fragment`` in PushedFilters."""
     plan = physical_plan(df)

@@ -2559,6 +2559,9 @@ def _admit_recheck_and_wave(
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.url import (
         with_canonical_url,
     )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+        write_batch,
+    )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.web_ingest import (
         read_frontier,
     )
@@ -2631,13 +2634,12 @@ def _admit_recheck_and_wave(
         .localCheckpoint(eager=True)
     )
     obs = Observation()
-    (
+    write_batch(
         admitted.observe(
             obs, F.count(F.when(F.col("origin") == 2, 1)).alias("n2")
-        )
-        .select("canonical_url", "host")
-        .write.mode("overwrite")
-        .parquet(f"{pending_dir}/batch_id={wave}")
+        ).select("canonical_url", "host"),
+        pending_dir,
+        wave,
     )
     return int(obs.get["n2"]), admitted.select("canonical_url", "host")
 

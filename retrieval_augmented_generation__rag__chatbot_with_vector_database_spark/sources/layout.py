@@ -100,7 +100,8 @@ def swap_partition_dirs(
     ``tmp_path`` into ``data_path`` under the marker fence described in
     the module doc. Partitions present in ``partitions`` but absent
     from ``tmp_path`` are treated as deletions of the live dir (the
-    merge produced no rows for them)."""
+    merge produced no rows for them). An entry may also be a file (a
+    layout's sidecar); it is swapped the same way."""
     mp = marker_path or marker_path_for(data_path)
     with open(mp, "w") as f:
         json.dump({"partitions": partitions, "tmp": tmp_path}, f)
@@ -108,16 +109,21 @@ def swap_partition_dirs(
         src = os.path.join(tmp_path, part)
         dst = os.path.join(data_path, part)
         old = os.path.join(data_path, f"_old_{part}")
-        if os.path.exists(old):  # stale aside from a recovered run
-            shutil.rmtree(old)
+        _remove(old)  # stale aside from a recovered run
         if os.path.exists(dst):
             os.rename(dst, old)
         if os.path.exists(src):
             os.rename(src, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        _remove(old)
     shutil.rmtree(tmp_path)
     os.remove(mp)
+
+
+def _remove(p: str) -> None:
+    if os.path.isdir(p):
+        shutil.rmtree(p)
+    elif os.path.exists(p):
+        os.remove(p)
 
 
 def pick_survivors(

@@ -12,31 +12,36 @@ id-idempotent merge (LWW by id), a replayed micro-batch after a
 restart converges to the same layout — the checkpoint gives
 at-least-once delivery and the merge supplies the idempotence, the
 same exactly-once-end-state contract as the flat-index ingest stream
-(``streaming/ingest.py``).
+(``streaming/ingest.py``); the stream itself runs through
+``streaming.drive.start``.
 
 Retrain trigger: quantizers (coarse centroids + PQ codebooks) drift as
 the corpus moves — probe CORRECTNESS is unaffected meanwhile, but
 recall decays. ``retrain_threshold`` watches ``rows upserted / rows at
 build`` (the sidecar's staleness counter) after every micro-batch;
 past the threshold the stream retrains + rebuilds via
-``retrain_ivfpq_index`` from the caller-supplied full-precision
-``retrain_source`` (the layout stores only lossy codes, so the primary
-vector table must supply the training data). With a threshold but no
-source, the breach is loudly logged instead — staleness never fails
-silently either way.
+``retrain_ivfpq_index`` from the layout's own rows: every IVFPQ layout
+stores the full-precision vectors next to the codes, untransformed
+(``write_ivfpq_index`` keeps them in the raw space whatever its
+normalize / MIPS / OPQ transform), which is the space the retrain
+expects. The retrain writes the rebuilt layout beside the live one and
+swaps it in only once complete, so a crash mid-retrain leaves the live
+layout intact and the replayed batch upserts into it again.
 """
 
 from __future__ import annotations
 
 import logging
-import warnings
-from typing import TYPE_CHECKING, Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.pq import (
     retrain_ivfpq_index,
     upsert_ivfpq_index,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -56,58 +61,33 @@ def start_ivfpq_ingest_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     retrain_threshold: float | None = None,
-    retrain_source: Callable[[SparkSession], DataFrame] | None = None,
 ) -> "StreamingQuery":
     """Vectors drop into ``landing_glob``; every micro-batch is
     incrementally merged into the IVFPQ layout at ``layout_path``
     (which must already exist — ``write_ivfpq_index`` creates it).
-    availableNow + checkpoint: drain-then-stop, restart-safe.
 
     ``retrain_threshold`` (e.g. ``0.5`` = half the layout upserted
     since the last build): when a micro-batch pushes staleness past
-    it, ``retrain_source(spark)`` — the FULL-PRECISION corpus, i.e.
-    the primary vector table the layout serves — feeds a quantizer
-    retrain + rebuild (``retrain_ivfpq_index``), resetting staleness.
-    Without a source the breach is logged loudly (logging + warning)
-    so sustained drift is visible instead of silently eroding recall.
-    The rebuild overwrites the whole layout; a crash mid-rebuild is
-    recovered by re-running it (the source of truth is elsewhere)."""
+    it, the layout's own full-precision rows feed a quantizer retrain
+    + rebuild (``retrain_ivfpq_index``), resetting staleness."""
     if retrain_threshold is not None and retrain_threshold <= 0:
         raise ValueError("retrain_threshold must be positive")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        res = upsert_ivfpq_index(
-            batch.sparkSession, layout_path, batch, id_col, vec_col
-        )
+        s = batch.sparkSession
+        res = upsert_ivfpq_index(s, layout_path, batch, id_col, vec_col)
         stale = res.get("staleness", 0.0)
         if retrain_threshold is None or stale < retrain_threshold:
             return
-        if retrain_source is not None:
-            retrain_ivfpq_index(
-                batch.sparkSession,
-                layout_path,
-                retrain_source(batch.sparkSession),
-                id_col,
-                vec_col,
-            )
-            log.info(
-                "ivfpq layout %s retrained at staleness %.3f (threshold %.3f)",
-                layout_path, stale, retrain_threshold,
-            )
-        else:
-            msg = (
-                f"ivfpq layout {layout_path} staleness {stale:.3f} exceeds "
-                f"retrain_threshold {retrain_threshold:.3f} and no "
-                "retrain_source was given — recall is decaying; schedule a "
-                "retrain_ivfpq_index rebuild from the primary vector table"
-            )
-            log.warning(msg)
-            warnings.warn(msg, stacklevel=2)
+        rows = s.read.parquet(layout_path).drop("centroid_id", "codes")
+        retrain_ivfpq_index(s, layout_path, rows, id_col, vec_col)
+        log.info(
+            "ivfpq layout %s retrained at staleness %.3f (threshold %.3f)",
+            layout_path, stale, retrain_threshold,
+        )
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )

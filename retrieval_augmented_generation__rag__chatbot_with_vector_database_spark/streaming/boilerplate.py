@@ -43,18 +43,21 @@ next to the corpus — reaches the strip's anti-join as a broadcast.
 
 from __future__ import annotations
 
-import os
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.dedup import (
     strip_common_lines,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-    check_not_torn,
     delete_keys,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    read_batches,
+    start,
+    write_batch,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -62,6 +65,7 @@ if TYPE_CHECKING:  # pragma: no cover
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 LINE_OCCURRENCE_SCHEMA = "line string, doc_id long"
+SCRUBBED_SCHEMA = "doc_id long, text string, n_lines_before long, n_lines_after long"
 
 
 def read_line_occurrences(
@@ -72,17 +76,9 @@ def read_line_occurrences(
     excluding one batch's own dir (the replay guard). May contain
     duplicates ACROSS dirs after a re-batched replay — consumers
     must distinct (``line_blocklist`` does)."""
-    if os.path.isdir(counts_dir):
-        check_not_torn(counts_dir)
-        dirs = [
-            f"{counts_dir}/{e.name}"
-            for e in os.scandir(counts_dir)
-            if e.name.startswith("batch_id=")
-            and (exclude_batch is None or e.name != f"batch_id={exclude_batch}")
-        ]
-        if dirs:
-            return spark.read.schema(LINE_OCCURRENCE_SCHEMA).parquet(*dirs)
-    return spark.createDataFrame([], LINE_OCCURRENCE_SCHEMA)
+    return read_batches(
+        spark, counts_dir, LINE_OCCURRENCE_SCHEMA, exclude_batch
+    ).drop("batch_id")
 
 
 def line_blocklist(occurrences: DataFrame, min_count: int) -> DataFrame:
@@ -119,14 +115,12 @@ def start_boilerplate_stream(
     counts_dir: str,
     checkpoint_dir: str,
     min_count: int = 10,
-    available_now: bool = True,
 ) -> "StreamingQuery":
     """Scrub arriving docs (parquet files of ``DOC_STREAM_SCHEMA``)
     against the growing blocklist (module doc for state, ordering,
     and the as-of-arrival semantics contract). Scrubbed docs land in
     ``out_dir/batch_id=<n>`` with the per-doc audit counts
     ``n_lines_before``/``n_lines_after``."""
-    stream = spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(landing_dir)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -136,21 +130,14 @@ def start_boilerplate_stream(
         known = read_line_occurrences(spark, counts_dir, exclude_batch=batch_id)
         bl = line_blocklist(known.unionByName(occ), min_count)
         out = strip_common_lines(docs, bl)
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        write_batch(out, out_dir, batch_id)
         # occurrences LAST (crash ordering, module doc)
-        occ.write.mode("overwrite").parquet(
-            f"{counts_dir}/batch_id={batch_id}"
-        )
+        write_batch(occ, counts_dir, batch_id)
 
-    return (
-        stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .trigger(availableNow=True)
-        .start()
-        if available_now
-        else stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_process)
-        .start()
+    return start(
+        spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(landing_dir),
+        checkpoint_dir,
+        each_batch=_process,
     )
 
 
@@ -162,24 +149,12 @@ def read_scrubbed(spark: SparkSession, out_dir: str) -> DataFrame:
     doc twice; the latest batch dir wins (scrub output is monotone —
     a later batch scrubbed against a blocklist at least as large), the
     same dedup discipline as ``frontier_admit.pending_fetch_list``."""
-    if os.path.isdir(out_dir):
-        dirs = [
-            f"{out_dir}/{e.name}"
-            for e in os.scandir(out_dir)
-            if e.name.startswith("batch_id=")
-        ]
-        if dirs:
-            from pyspark.sql import Window
-
-            df = spark.read.option("basePath", out_dir).parquet(*dirs)
-            w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
-            return (
-                df.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .drop("_rk", "batch_id")
-            )
-    return spark.createDataFrame(
-        [], "doc_id long, text string, n_lines_before long, n_lines_after long"
+    w = Window.partitionBy("doc_id").orderBy(F.col("batch_id").desc())
+    return (
+        read_batches(spark, out_dir, SCRUBBED_SCHEMA)
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .drop("_rk", "batch_id")
     )
 
 
@@ -201,14 +176,7 @@ def delete_line_occurrences(
     victims = ids.select(
         F.col(ids.columns[0]).cast("long").alias("doc_id")
     ).distinct().localCheckpoint(eager=True)
-    if not os.path.isdir(counts_dir) or not any(
-        e.name.startswith("batch_id=") for e in os.scandir(counts_dir)
-    ):
-        return {"n_deleted": 0, "touched": []}
-    check_not_torn(counts_dir)
-    t = spark.read.schema(LINE_OCCURRENCE_SCHEMA).option(
-        "basePath", counts_dir
-    ).parquet(f"{counts_dir}/batch_id=*")
+    t = read_batches(spark, counts_dir, LINE_OCCURRENCE_SCHEMA)
     n_deleted, touched = delete_keys(
         t, counts_dir, "batch_id", victims, "doc_id"
     )

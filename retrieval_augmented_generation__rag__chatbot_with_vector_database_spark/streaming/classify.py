@@ -16,8 +16,9 @@ maintenance.
 
 Scale notes: per batch the work is one vocabulary-bounded model scan +
 (batch tokens × |K|) scoring rows — batch-bounded, never
-corpus-bounded; the sink is append-mode parquet (the compaction-aware
-``batch_id=N`` sink family). Docs with zero tokens carry a NULL
+corpus-bounded; the sink is one ``batch_id=<n>`` partition per
+micro-batch written by ``streaming.drive.write_batch`` (a replayed
+batch overwrites its own output, never appends a second copy). Docs with zero tokens carry a NULL
 prediction (explicitly emitted — the gate downstream decides their
 fate; silently dropping them would make the stream lossy).
 """
@@ -27,7 +28,11 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+    write_batch,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -75,23 +80,17 @@ def start_classify_stream(
     label_col: str = "lang",
     text_col: str = "text",
 ) -> "StreamingQuery":
-    """File-stream wrapper: parquet docs in, scored append-mode
-    parquet out (availableNow — drains pending files then stops, the
-    testable mode; production runs keep it continuous). The model
-    layout is re-read per micro-batch, so concurrent
-    ``update_nb_model`` folds take effect on the next batch without a
-    stream restart."""
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
+    """File-stream wrapper: parquet docs in, scored rows out to
+    ``sink_dir/batch_id=<n>`` (``streaming.drive``). The model layout
+    is re-read per micro-batch, so concurrent ``update_nb_model``
+    folds take effect on the next batch without a stream restart."""
 
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def _process(batch: DataFrame, batch_id: int) -> None:
         out = score_batch(batch, model_path, id_col, label_col, text_col)
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(sink_dir)
+        write_batch(out, sink_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )

@@ -16,9 +16,9 @@ suite changes, not per batch). Per micro-batch:
 2. join against the broadcast eval table → per-doc overlap counts;
 3. docs with >= 1 overlapping n-gram land in the ``flagged`` sink
    (with the count as evidence), everything else in the ``clean``
-   sink; both write per-batch ``batch_id=<n>`` partitions with
-   ``mode("overwrite")`` (replay overwrites its own torn partitions:
-   exactly-once end state).
+   sink; both write per-batch ``batch_id=<n>`` partitions through
+   ``streaming.drive.write_batch`` (replay overwrites its own torn
+   partitions: exactly-once end state).
 
 Clean ∪ flagged == input, and flagged ids == the batch
 ``eval_overlap`` over the union of all arrivals (parity-tested).
@@ -41,6 +41,10 @@ from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.dedup import (
     exploded_shingles,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+    write_batch,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -108,23 +112,18 @@ def start_decontam_stream(
     """File-stream wrapper: documents drop into ``landing_glob``;
     clean docs land in ``clean_sink`` and contaminated docs (with
     overlap counts) in ``flagged_sink``, both as per-batch
-    ``batch_id=<n>`` overwrite partitions. availableNow + checkpoint
-    (drain-then-stop, the testable mode)."""
+    ``batch_id=<n>`` partitions (``streaming.drive.write_batch``)."""
     ev = spark.read.parquet(eval_shingles_path)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         clean, flagged = decontam_batch(batch, ev, id_col, text_col, n)
-        clean.write.mode("overwrite").parquet(f"{clean_sink}/batch_id={batch_id}")
-        flagged.write.mode("overwrite").parquet(
-            f"{flagged_sink}/batch_id={batch_id}"
-        )
+        write_batch(clean, clean_sink, batch_id)
+        write_batch(flagged, flagged_sink, batch_id)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )
 
 

@@ -33,6 +33,10 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
@@ -74,15 +78,7 @@ def start_dedup_stream(
     delay: str = "24 hours",
 ) -> "StreamingQuery":
     """File-stream wrapper: parquet drops in, deduped append-mode
-    parquet out (availableNow — drains pending files then stops, the
-    testable mode; production runs keep it continuous)."""
+    parquet out (``streaming.drive.start``)."""
     stream = spark.readStream.schema(schema).parquet(landing_glob)
     out = dedup_within_watermark(stream, text_col, event_time_col, delay)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(out, checkpoint_dir, sink_dir=sink_dir)

@@ -35,6 +35,10 @@ from pyspark.sql import DataFrame, SparkSession
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.temporal import (
     asof_join,
 )
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+    write_batch,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -79,29 +83,24 @@ def start_enrich_stream(
     micro-batch is as-of enriched against ``state_source(spark)``
     (re-resolved EVERY batch — a parquet re-read sees state updates
     between batches; partition pruning keeps the re-read narrow) and
-    written to ``sink_dir``. availableNow + checkpoint: drains
-    pending files then stops.
+    written to ``sink_dir``.
 
     Exactly-once sink: each micro-batch lands in its own
-    ``batch_id=<n>`` partition directory with ``mode("overwrite")`` —
-    Structured Streaming replays a failed batch under the SAME
-    batch_id, so the replay overwrites the torn partition instead of
-    appending duplicate rows (the idempotent-by-batchId recipe from
-    the Structured Streaming guide). Readers see ``batch_id`` as an
-    extra partition column on ``spark.read.parquet(sink_dir)``.
+    ``batch_id=<n>`` partition (``streaming.drive.write_batch``), so a
+    replayed batch overwrites its torn partition instead of appending
+    duplicate rows. Readers see ``batch_id`` as an extra partition
+    column on ``spark.read.parquet(sink_dir)``.
     """
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         state = state_source(batch.sparkSession)
         out = enrich_batch(batch, state, on=on, tolerance_s=tolerance_s)
-        out.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
+        write_batch(out, sink_dir, batch_id)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )
 
 
@@ -157,12 +156,10 @@ def start_scd2_enrich_stream(
     def _process(batch: DataFrame, batch_id: int) -> None:
         dim = dim_source(batch.sparkSession)
         out = enrich_batch_scd2(batch, dim, on=on)
-        out.write.mode("overwrite").parquet(f"{sink_dir}/batch_id={batch_id}")
+        write_batch(out, sink_dir, batch_id)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )

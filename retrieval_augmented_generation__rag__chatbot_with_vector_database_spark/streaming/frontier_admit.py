@@ -77,6 +77,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    write_batch,
+)
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.web_ingest import (
     FRONTIER_SCHEMA,
     read_frontier,
@@ -178,7 +181,7 @@ def admit_frontier_candidates(
     admitted = fresh.select("canonical_url", "host").observe(
         obs_adm, F.count(F.lit(1)).alias("n")
     )
-    admitted.write.mode("overwrite").parquet(f"{pending_dir}/batch_id={wave}")
+    write_batch(admitted, pending_dir, wave)
     return {
         "wave": wave,
         "n_candidates": obs_cand.get["n"],

@@ -16,8 +16,9 @@ content-addressed ids (a reprocessed file upserts the same rows).
 No watermark: there is no event-time aggregation — late files are
 just later batches (SURVEY.md §2k).
 
-At scale: the landing dir is object storage; ``maxFilesPerTrigger``
-bounds batch size; the chunk+embed kernel is the only expensive stage
+The stream runs through ``streaming.drive.start`` (checkpoint +
+availableNow). At scale the landing dir is object storage and the
+chunk+embed kernel is the only expensive stage
 and runs as ONE Arrow-batched pass (``docs_to_records`` fuses the
 standalone ``chunk_documents`` / ``embed_text_column`` operators so
 the corpus crosses the Python boundary once, round 15).
@@ -42,6 +43,9 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.index_table import (
     VectorIndex,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -166,17 +170,13 @@ def start_ingest_stream(
     index: VectorIndex,
     provider: EmbeddingProvider,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
     lexical_index=None,
     scrub: bool = False,
 ) -> "StreamingQuery":
-    """Start the incremental-ingestion stream on ``landing_dir``.
-
-    ``available_now=True`` drains everything currently in the
-    directory then stops (the testable/batch-catch-up mode); pass
-    ``False`` for a continuously running ingest with default
-    micro-batch triggers.
+    """Start the incremental-ingestion stream on ``landing_dir``: it
+    drains everything currently in the directory then stops
+    (``streaming.drive.start``); restart with the same checkpoint to
+    pick up new files.
 
     ``lexical_index`` (a ``sources.lexical_index.LexicalIndex``, must
     already exist): when given, each micro-batch ALSO upserts its
@@ -194,17 +194,16 @@ def start_ingest_stream(
     of the batch scrub-ingest funnel
     (``queries.pii_queries.corpus_scrub_ingest_pipeline``).
     """
-    reader = (
+    stream = (
         spark.readStream.format("text")
         .option("wholetext", True)
         .option("recursiveFileLookup", True)
         .option("pathGlobFilter", "*.txt")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(landing_dir).select(
-        F.col("value").alias("text"),
-        F.input_file_name().alias("source"),
+        .load(landing_dir)
+        .select(
+            F.col("value").alias("text"),
+            F.input_file_name().alias("source"),
+        )
     )
 
     def _upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -223,9 +222,4 @@ def start_ingest_stream(
                 batch=batch_id,
             )
 
-    writer = stream.writeStream.foreachBatch(_upsert_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, checkpoint_dir, each_batch=_upsert_batch)

@@ -41,6 +41,13 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.rollup import (
+    EVENT_FILE_SCHEMA,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
@@ -110,20 +117,15 @@ def start_attribution_join_stream(
     upper_s: float = 0.0,
     watermark: str = "2 hours",
     join_type: str = "inner",
-    available_now: bool = True,
 ) -> "StreamingQuery":
-    """Two file-source event streams (parquet drops of the fixture
-    schema) → watermarked stream-stream range join → append-mode
-    parquet sink. ``availableNow`` drains pending files then stops
-    (the incremental-catch-up mode the tests use); the checkpoint
-    carries both watermarks and the join state across restarts, so a
-    pair is emitted exactly once even if a batch replays."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    )
-    lstream = spark.readStream.schema(schema).format("parquet").load(left_dir)
-    rstream = spark.readStream.schema(schema).format("parquet").load(right_dir)
+    """Two file-source event streams (parquet drops of
+    ``EVENT_FILE_SCHEMA``) → watermarked stream-stream range join →
+    append-mode parquet sink (``streaming.drive.start``); the
+    checkpoint carries both watermarks and the join state across
+    restarts, so a pair is emitted exactly once even if a batch
+    replays."""
+    lstream = spark.readStream.schema(EVENT_FILE_SCHEMA).parquet(left_dir)
+    rstream = spark.readStream.schema(EVENT_FILE_SCHEMA).parquet(right_dir)
     joined = stream_range_join(
         lstream,
         rstream,
@@ -133,12 +135,4 @@ def start_attribution_join_stream(
         watermark=watermark,
         join_type=join_type,
     )
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(joined, checkpoint_dir, sink_dir=sink_dir)

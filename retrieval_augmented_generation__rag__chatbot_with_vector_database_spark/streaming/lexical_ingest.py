@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.lexical_index import (
     LexicalIndex,
 )
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -46,17 +49,15 @@ def start_lexical_ingest_stream(
     """Documents drop into ``landing_glob``; every micro-batch is
     incrementally merged into the lexical index at ``index_path``
     (which must already exist — ``LexicalIndex.create`` builds it).
-    availableNow + checkpoint: drain-then-stop, restart-safe."""
+    Runs through ``streaming.drive.start``."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         LexicalIndex(batch.sparkSession, index_path).upsert(
             batch, batch=batch_id, id_col=id_col, text_col=text_col
         )
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )

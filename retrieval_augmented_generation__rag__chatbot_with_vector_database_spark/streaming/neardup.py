@@ -23,8 +23,8 @@ the band key and the full signature — and per micro-batch:
    (band index, band key) — the arriving doc only ever joins the
    buckets it lands in, never the whole corpus;
 4. estimated-Jaccard filter, emitted to the pairs sink (per-batch
-   ``batch_id=<n>`` partition, overwrite-on-replay = exactly-once)
-   with ``id_a < id_b`` normalized;
+   ``batch_id=<n>`` partition, overwrite-on-replay = exactly-once —
+   ``streaming.drive.write_batch``) with ``id_a < id_b`` normalized;
 5. the batch's band rows land in the bucket table the same way.
 
 Union over batches of the emitted pairs == the offline
@@ -58,6 +58,11 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
     est_jaccard_column,
     minhash_signatures,
 )
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    read_batches,
+    start,
+    write_batch,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -65,38 +70,15 @@ if TYPE_CHECKING:  # pragma: no cover
 DOC_STREAM_SCHEMA = "doc_id long, ts timestamp, text string, source string"
 
 
-def _read_bucket_table(
-    spark: SparkSession, bucket_dir: str, exclude_batch_id: int | None = None
-) -> DataFrame | None:
-    """Bucket table = union of per-batch ``batch_id=<n>`` partitions.
-
-    ``exclude_batch_id`` drops the CURRENT batch's own partition
-    (partition-pruned, never scanned): a replayed batch must see the
-    table exactly as it stood before its first, torn attempt —
-    otherwise the replay would self-suppress (its ids already present)
-    and overwrite its pairs partition with an empty result.
-
-    The table may contain a ``batch_id=-1`` partition: the settled
-    prefix folded by ``sources.compaction.compact_batch_partitions``
-    (never excluded — no real batch id is -1). A torn compaction is
-    detected here before any read."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        check_not_torn,
-    )
-
-    check_not_torn(bucket_dir)
-    try:
-        t = spark.read.parquet(bucket_dir)
-    except AnalysisException:
-        return None  # first batch: table not created yet
-    if exclude_batch_id is not None:
-        t = t.filter(F.col("batch_id") != exclude_batch_id)
-    return t.drop("batch_id")
+def _bucket_schema(id_type: str, n_hashes: int) -> str:
+    """The bucket table's row: ``band_explode`` output."""
+    sig = ", ".join(f"h{i} string" for i in range(n_hashes))
+    return f"id {id_type}, {sig}, b int, bk string"
 
 
 def neardup_batch(
     batch: DataFrame,
-    bucket_table: DataFrame | None,
+    bucket_table: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n_hashes: int = 16,
@@ -109,15 +91,14 @@ def neardup_batch(
     ``pairs``: (id_a, id_b, est_jaccard) with id_a < id_b — intra-batch
     and batch-vs-table candidates above ``min_est``. ``new_bucket_rows``:
     the batch's (id, h0.., b, bk) rows to append to the bucket table
-    (re-arrived ids excluded from both)."""
+    (re-arrived ids excluded from both). ``bucket_table`` may be
+    empty (first batch)."""
     sig = minhash_signatures(
         batch, id_col, text_col, n_hashes, shingle_n
     ).localCheckpoint(eager=True)
     wide = banded_wide(sig, n_hashes, bands)
-    if bucket_table is not None:
-        seen = bucket_table.select("id").distinct()
-        wide = wide.join(seen, "id", "left_anti")
-    wide = wide.localCheckpoint(eager=True)
+    seen = bucket_table.select("id").distinct()
+    wide = wide.join(seen, "id", "left_anti").localCheckpoint(eager=True)
     blong = band_explode(wide, n_hashes, bands)
 
     new_keys = blong.select("id", "b", "bk")
@@ -127,30 +108,18 @@ def neardup_batch(
     intra = a.join(c, ["b", "bk"]).filter(F.col("id_a") < F.col("id_b"))
     # batch-vs-table: the arriving doc joins only its buckets; the
     # batch side is broadcast so the table is never shuffled
-    sides = []
-    if bucket_table is not None:
-        old_keys = bucket_table.select(F.col("id").alias("id_o"), "b", "bk")
-        cross = old_keys.join(F.broadcast(new_keys), ["b", "bk"]).select(
-            F.least("id", "id_o").alias("id_a"),
-            F.greatest("id", "id_o").alias("id_b"),
-        )
-        sides.append(cross)
-    cand = intra.select("id_a", "id_b")
-    for s in sides:
-        cand = cand.unionByName(s)
-    cand = cand.distinct()
+    old_keys = bucket_table.select(F.col("id").alias("id_o"), "b", "bk")
+    cross = old_keys.join(F.broadcast(new_keys), ["b", "bk"]).select(
+        F.least("id", "id_o").alias("id_a"),
+        F.greatest("id", "id_o").alias("id_b"),
+    )
+    cand = intra.select("id_a", "id_b").unionByName(cross).distinct()
 
     # signature lookup: new docs from the batch, old docs from the table
-    sig_sources = [wide.select("id", *[f"h{i}" for i in range(n_hashes)])]
-    if bucket_table is not None:
-        sig_sources.append(
-            bucket_table.select(
-                "id", *[f"h{i}" for i in range(n_hashes)]
-            ).dropDuplicates(["id"])
-        )
-    all_sig = sig_sources[0]
-    for s in sig_sources[1:]:
-        all_sig = all_sig.unionByName(s)
+    hs = [f"h{i}" for i in range(n_hashes)]
+    all_sig = wide.select("id", *hs).unionByName(
+        bucket_table.select("id", *hs).dropDuplicates(["id"])
+    )
     sa = all_sig.select(
         F.col("id").alias("id_a"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(n_hashes)],
@@ -185,36 +154,36 @@ def start_neardup_stream(
 ) -> "StreamingQuery":
     """File-stream wrapper: documents drop into ``landing_glob``;
     near-dup pairs land in ``pairs_sink``; the bucket table grows in
-    ``bucket_dir``. availableNow + checkpoint (drain-then-stop, the
-    testable mode).
+    ``bucket_dir`` (``streaming.drive``).
 
-    Exactly-once: both sinks write per-batch ``batch_id=<n>``
-    partitions with ``mode("overwrite")`` — a replayed batch (same
-    batch_id) overwrites its own torn partitions instead of
-    duplicating rows — and the bucket-table read excludes the current
-    batch's partition, so the replay pairs against the table exactly
-    as it stood before the first attempt. The batch must still pair
-    against the PRE-batch table, never itself through the table; the
-    exclusion guarantees that on replay and the read-before-write
-    ordering guarantees it on first attempt."""
+    Exactly-once: both sinks are per-batch ``write_batch`` partitions
+    — a replayed batch (same batch_id) overwrites its own torn
+    partitions instead of duplicating rows — and the bucket-table read
+    excludes the current batch's partition, so the replay pairs
+    against the table exactly as it stood before the first attempt
+    (otherwise it would self-suppress: its ids already present). The
+    batch must still pair against the PRE-batch table, never itself
+    through the table; the exclusion guarantees that on replay and the
+    read-before-write ordering guarantees it on first attempt."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        table = _read_bucket_table(s, bucket_dir, exclude_batch_id=batch_id)
+        id_type = batch.schema[id_col].dataType.simpleString()
+        table = read_batches(
+            s, bucket_dir, _bucket_schema(id_type, n_hashes), batch_id
+        ).drop("batch_id")
         pairs, new_rows = neardup_batch(
             batch, table, id_col, text_col, n_hashes, bands, shingle_n, min_est
         )
         # pairs first (they reference the pre-batch table); new_rows is
         # localCheckpoint'd so the write below cannot change the pairing
-        pairs.write.mode("overwrite").parquet(f"{pairs_sink}/batch_id={batch_id}")
-        new_rows.write.mode("overwrite").parquet(f"{bucket_dir}/batch_id={batch_id}")
+        write_batch(pairs, pairs_sink, batch_id)
+        write_batch(new_rows, bucket_dir, batch_id)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )
 
 

@@ -18,8 +18,9 @@ fill) and the high-water id — and per micro-batch:
    to do (late docs belong in a new epoch, not a rewrite);
 3. run the same next-fit kernel, seeded from the open bin;
 4. write the batch's assignments and the updated per-shard state to
-   per-batch ``batch_id=<n>`` partitions with ``mode("overwrite")``
-   (replay overwrites its own torn output: exactly-once end state).
+   per-batch ``batch_id=<n>`` partitions (``streaming.drive.
+   write_batch``: replay overwrites its own torn output, exactly-once
+   end state).
 
 At 100 TB: state is O(shards) rows regardless of corpus size; each
 micro-batch costs one shuffle of the batch (never of history) plus a
@@ -40,7 +41,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    read_batches,
+    start,
+    write_batch,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -54,12 +60,12 @@ _OUT_SCHEMA = (
 
 def read_pack_state(
     spark: SparkSession, state_dir: str, exclude_batch_id: int | None = None
-) -> DataFrame | None:
+) -> DataFrame:
     """Latest state row per shard (each batch rewrites the full row of
-    every shard it touched; the newest ``batch_id`` wins). Excluding
-    the current batch's partition makes replays resume from the
-    pre-batch state — same recovery discipline as
-    ``streaming/neardup.py::_read_bucket_table``.
+    every shard it touched; the newest ``batch_id`` wins); empty before
+    the first batch. Excluding the current batch's partition makes
+    replays resume from the pre-batch state
+    (``streaming.drive.read_batches``).
 
     Do NOT fold this dir with ``compact_batch_partitions``: compaction
     merges many batches' rows into one ``batch_id=-1`` partition,
@@ -70,17 +76,7 @@ def read_pack_state(
     rows per year per shard — prune old batches by deleting
     ``batch_id=<n>`` dirs older than the checkpoint's replay horizon
     instead."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        check_not_torn,
-    )
-
-    check_not_torn(state_dir)
-    try:
-        t = spark.read.parquet(state_dir)
-    except AnalysisException:
-        return None  # first batch
-    if exclude_batch_id is not None:
-        t = t.filter(F.col("batch_id") != exclude_batch_id)
+    t = read_batches(spark, state_dir, STATE_SCHEMA, exclude_batch_id)
     w = Window.partitionBy("shard").orderBy(F.col("batch_id").desc())
     return (
         t.withColumn("__rn", F.row_number().over(w))
@@ -91,13 +87,15 @@ def read_pack_state(
 
 def pack_batch(
     batch: DataFrame,
-    state: DataFrame | None,
+    state: DataFrame,
     id_col: str = "doc_id",
     size_col: str = "n_tokens",
     budget: int = 2048,
     shards: int = 32,
 ) -> tuple[DataFrame, DataFrame]:
     """One micro-batch step: returns ``(assignments, new_state)``.
+    ``state`` is :func:`read_pack_state`'s frame (empty before the
+    first batch).
 
     ``assignments``: (id_col, shard, seq, offset, size) for the
     batch's docs — identical to what ``operators.packing.
@@ -118,23 +116,16 @@ def pack_batch(
         F.col(size_col).cast("long").alias("size"),
         F.pmod(F.col(id_col).cast("long"), F.lit(shards)).cast("int").alias("shard"),
     ).filter(F.col("size").isNotNull())
-    if state is not None:
-        base = base.join(
-            state.select(
-                "shard",
-                F.col("seq").alias("st_seq"),
-                F.col("fill").alias("st_fill"),
-                F.col("max_id").alias("st_max_id"),
-            ),
+    base = base.join(
+        state.select(
             "shard",
-            "left",
-        )
-    else:
-        base = (
-            base.withColumn("st_seq", F.lit(None).cast("long"))
-            .withColumn("st_fill", F.lit(None).cast("long"))
-            .withColumn("st_max_id", F.lit(None).cast("long"))
-        )
+            F.col("seq").alias("st_seq"),
+            F.col("fill").alias("st_fill"),
+            F.col("max_id").alias("st_max_id"),
+        ),
+        "shard",
+        "left",
+    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id").reset_index(drop=True)
@@ -204,9 +195,9 @@ def start_packing_stream(
 ) -> "StreamingQuery":
     """File-stream wrapper: (doc_id, n_tokens) rows drop into
     ``landing_glob``; packed assignments land in ``assignments_sink``;
-    per-shard open-bin state lives in ``state_dir``. availableNow +
-    checkpoint (drain-then-stop, the testable mode). Exactly-once via
-    per-batch partition overwrite + pre-batch state exclusion."""
+    per-shard open-bin state lives in ``state_dir``
+    (``streaming.drive``). Exactly-once via per-batch partition
+    overwrite + pre-batch state exclusion."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -214,19 +205,13 @@ def start_packing_stream(
         assignments, new_state = pack_batch(
             batch, state, id_col, size_col, budget, shards
         )
-        assignments.write.mode("overwrite").parquet(
-            f"{assignments_sink}/batch_id={batch_id}"
-        )
-        new_state.write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={batch_id}"
-        )
+        write_batch(assignments, assignments_sink, batch_id)
+        write_batch(new_state, state_dir, batch_id)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )
 
 

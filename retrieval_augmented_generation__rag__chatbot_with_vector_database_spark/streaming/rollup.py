@@ -26,10 +26,21 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
 DEFAULT_WATERMARK = "2 hours"
+
+#: the event parquet drops every event stream reads (rollups,
+#: sessions, the attribution join)
+EVENT_FILE_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, "
+    "event_type string, value double, props string"
+)
 
 
 def hourly_rollup(events: DataFrame, watermark: str | None = None) -> DataFrame:
@@ -67,35 +78,16 @@ def start_hourly_rollup_stream(
     sink_dir: str,
     checkpoint_dir: str,
     watermark: str = DEFAULT_WATERMARK,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> "StreamingQuery":
     """File-source stream of event parquet drops → watermarked hourly
-    rollup → append-mode parquet sink.
+    rollup → append-mode parquet sink (``streaming.drive.start``).
 
     Append mode emits a (window, event_type) row exactly once, when the
     watermark passes the window end — so the sink is immutable and
-    replay-safe (checkpoint restores the watermark across restarts;
-    ``available_now=True`` drains pending files then stops, the
-    incremental-catch-up mode used by the tests).
+    replay-safe (checkpoint restores the watermark across restarts).
     """
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    )
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    rolled = hourly_rollup(reader.load(landing_dir), watermark)
-    writer = (
-        rolled.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = spark.readStream.schema(EVENT_FILE_SCHEMA).parquet(landing_dir)
+    return start(hourly_rollup(src, watermark), checkpoint_dir, sink_dir=sink_dir)
 
 
 def hourly_histogram(
@@ -137,23 +129,10 @@ def start_histogram_rollup_stream(
     width: float = 10.0,
     n_bins: int = 50,
     watermark: str = DEFAULT_WATERMARK,
-    available_now: bool = True,
 ) -> "StreamingQuery":
     """File-source stream → watermarked hourly histogram partials →
     append-mode parquet sink (each closed (hour, bin) emitted exactly
     once; late rows inside the watermark merge into open state)."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    )
-    src = spark.readStream.schema(schema).format("parquet").load(landing_dir)
+    src = spark.readStream.schema(EVENT_FILE_SCHEMA).parquet(landing_dir)
     hist = hourly_histogram(src, lo, width, n_bins, watermark)
-    writer = (
-        hist.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(hist, checkpoint_dir, sink_dir=sink_dir)

@@ -27,6 +27,9 @@ from pyspark.sql import SparkSession
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.pii import (
     scrub_documents,
 )
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -41,23 +44,13 @@ def start_scrub_stream(
     checkpoint_dir: str,
     text_col: str = "text",
 ) -> "StreamingQuery":
-    """Landing dir -> scrubbed parquet sink. ``availableNow`` drains
-    what's present and stops (the ingest-stream convention here);
-    restart with the same checkpoint to pick up new files
-    exactly-once. ``text_col`` names the landing schema's text column
-    (the other two fields are fixed: doc_id, source)."""
-    stream = (
-        spark.readStream.schema(
-            f"doc_id long, source string, {text_col} string"
-        )
-        .parquet(landing_dir)
-    )
+    """Landing dir -> scrubbed parquet sink (``streaming.drive.start``:
+    drains what's present and stops; restart with the same checkpoint
+    to pick up new files exactly-once). ``text_col`` names the landing
+    schema's text column (the other two fields are fixed: doc_id,
+    source)."""
+    stream = spark.readStream.schema(
+        f"doc_id long, source string, {text_col} string"
+    ).parquet(landing_dir)
     scrubbed = scrub_documents(stream, text_col=text_col, keep_text=False)
-    return (
-        scrubbed.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(scrubbed, checkpoint_dir, sink_dir=sink_dir)

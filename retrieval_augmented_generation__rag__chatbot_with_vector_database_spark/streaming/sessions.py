@@ -26,6 +26,13 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.rollup import (
+    EVENT_FILE_SCHEMA,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
@@ -67,7 +74,6 @@ def start_session_stream(
     checkpoint_dir: str,
     gap: str = DEFAULT_GAP,
     watermark: str = "2 hours",
-    available_now: bool = True,
 ) -> "StreamingQuery":
     """File-source stream of event parquet drops → session rollup →
     append-mode parquet sink. A session row is emitted exactly once,
@@ -75,21 +81,9 @@ def start_session_stream(
     the open session lives in (checkpointed) state and absorbs any
     in-watermark events that extend it — including across stream
     restarts."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    )
     rolled = session_rollup(
-        spark.readStream.schema(schema).format("parquet").load(landing_dir),
+        spark.readStream.schema(EVENT_FILE_SCHEMA).parquet(landing_dir),
         gap=gap,
         watermark=watermark,
     )
-    writer = (
-        rolled.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(rolled, checkpoint_dir, sink_dir=sink_dir)

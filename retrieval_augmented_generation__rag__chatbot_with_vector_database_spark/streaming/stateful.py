@@ -30,8 +30,11 @@ from typing import TYPE_CHECKING, Any, Iterator, Tuple
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
@@ -140,11 +143,4 @@ def start_profile_stream(
     current profile)."""
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(landing_glob)
     out = running_user_profiles(stream, watermark)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(out, checkpoint_dir, sink_dir=sink_dir)

@@ -33,6 +33,10 @@ from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    start,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
@@ -184,10 +188,10 @@ def start_takedown_stream(
 ) -> "StreamingQuery":
     """Deletion requests (one id per row) drop into ``landing_glob``;
     every micro-batch localCheckpoints the (tiny) id set once, then
-    runs every hook against it, logging per-layout audit counts.
-    availableNow + checkpoint: drain-then-stop, restart-safe; a
-    replayed batch re-deletes already-absent ids — a no-op by the
-    hooks' idempotence, so the end state is exact."""
+    runs every hook against it, logging per-layout audit counts
+    (``streaming.drive.start``). A replayed batch re-deletes
+    already-absent ids — a no-op by the hooks' idempotence, so the
+    end state is exact."""
     if not hooks:
         raise ValueError("no takedown hooks given")
 
@@ -197,10 +201,8 @@ def start_takedown_stream(
             res = hook(batch.sparkSession, ids)
             log.info("takedown batch %s → %s: %s", batch_id, name, res)
 
-    stream = spark.readStream.schema(schema).parquet(landing_glob)
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start(
+        spark.readStream.schema(schema).parquet(landing_glob),
+        checkpoint_dir,
+        each_batch=_process,
     )

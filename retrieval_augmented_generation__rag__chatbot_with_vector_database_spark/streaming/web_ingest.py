@@ -57,7 +57,6 @@ bounded by kept-page count, never by crawl bytes.
 
 from __future__ import annotations
 
-import os
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -74,12 +73,16 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sou
     VectorIndex,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-    check_not_torn,
     delete_keys,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.warc import (
     _extracted_pages,
     records_from_binary,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+    read_batches,
+    start,
+    write_batch,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.ingest import (
     docs_to_records,
@@ -109,17 +112,9 @@ def read_frontier(
     the rewrite is idempotent from every crash position. Rows folded
     into the compacted ``batch_id=-1`` dir are never excluded — see
     the module doc for why that preserves replay convergence."""
-    if os.path.isdir(frontier_dir):
-        check_not_torn(frontier_dir)
-        dirs = [
-            f"{frontier_dir}/{e.name}"
-            for e in os.scandir(frontier_dir)
-            if e.name.startswith("batch_id=")
-            and (exclude_batch is None or e.name != f"batch_id={exclude_batch}")
-        ]
-        if dirs:
-            return spark.read.schema(FRONTIER_SCHEMA).parquet(*dirs)
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+    return read_batches(
+        spark, frontier_dir, FRONTIER_SCHEMA, exclude_batch
+    ).drop("batch_id")
 
 
 def compact_frontier(
@@ -200,16 +195,8 @@ def delete_frontier_urls(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if not os.path.isdir(frontier_dir) or not any(
-        e.name.startswith("batch_id=") for e in os.scandir(frontier_dir)
-    ):
-        return {"n_deleted": 0, "touched": []}
-    check_not_torn(frontier_dir)
-    # partition-discovery read (vs read_frontier's explicit-dir union):
     # the rewrite needs each row's batch_id lineage
-    t = spark.read.schema(FRONTIER_SCHEMA).option(
-        "basePath", frontier_dir
-    ).parquet(f"{frontier_dir}/batch_id=*")
+    t = read_batches(spark, frontier_dir, FRONTIER_SCHEMA)
     n_deleted, touched = delete_keys(
         t, frontier_dir, "batch_id", victims, "canonical_url"
     )
@@ -226,8 +213,6 @@ def start_web_ingest_stream(
     host_cap: int | None = None,
     main_content: bool = True,
     scrub: bool = True,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
     glob: str = "*.warc*",
     robots_rules: DataFrame | None = None,
     robots_agent: str = "*",
@@ -238,10 +223,11 @@ def start_web_ingest_stream(
     """Start the incremental web-crawl ingest on ``landing_dir``
     (module doc: funnel semantics, frontier state, crash ordering).
 
-    ``available_now=True`` drains the directory then stops; restart
-    with the same ``checkpoint_dir`` + ``frontier_dir`` to continue —
-    segments already processed are skipped by the checkpoint, pages
-    already kept are skipped by the frontier.
+    The stream drains the directory then stops
+    (``streaming.drive.start``); restart with the same
+    ``checkpoint_dir`` + ``frontier_dir`` to continue — segments
+    already processed are skipped by the checkpoint, pages already
+    kept are skipped by the frontier.
 
     ``robots_rules`` (parsed via ``functions.robots.parse_robots_rules``,
     one row per (host, agent, rule, pattern)) applies the RFC 9309
@@ -270,7 +256,7 @@ def start_web_ingest_stream(
     pending read, so the overwrite recomputes the identical set from
     every crash position. ``compact_every`` folds the pending dirs on
     the same cadence."""
-    reader = (
+    stream = (
         spark.readStream.format("binaryFile")
         # the binaryFile format's fixed schema — streaming file
         # sources require it stated explicitly
@@ -280,10 +266,8 @@ def start_web_ingest_stream(
         )
         .option("recursiveFileLookup", True)
         .option("pathGlobFilter", glob)
+        .load(landing_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(landing_dir)
 
     # the rules table is static across the stream's lifetime: probe
     # the density, select the path, and (kernel path) collect +
@@ -353,9 +337,7 @@ def start_web_ingest_stream(
         # frontier LAST (crash ordering, module doc); overwrite makes
         # a replayed batch rewrite the same path instead of doubling
         # host counts
-        kept.select("canonical_url", "host").write.mode("overwrite").parquet(
-            f"{frontier_dir}/batch_id={batch_id}"
-        )
+        write_batch(kept.select("canonical_url", "host"), frontier_dir, batch_id)
         if pending_dir is not None:
             # crawl-loop closure: the batch's extracted links become
             # pending frontier candidates. After the frontier write
@@ -385,9 +367,4 @@ def start_web_ingest_stream(
             if pending_dir is not None:
                 compact_frontier(spark, pending_dir, keep_latest=1)
 
-    writer = stream.writeStream.option("checkpointLocation", checkpoint_dir).foreachBatch(
-        _process
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, checkpoint_dir, each_batch=_process)

@@ -235,7 +235,6 @@ def test_stream_admits_extracted_links(spark, tmp_path):
             HashEmbedder(dimension=16),
             checkpoint_dir=f"{tmp_path}/ckpt",
             frontier_dir=fdir,
-            available_now=True,
             pending_dir=pdir,
         )
         q.awaitTermination(120)
@@ -363,7 +362,6 @@ def test_crawl_loop_two_waves_end_to_end(spark, tmp_path):
             HashEmbedder(dimension=16),
             checkpoint_dir=f"{tmp_path}/ckpt",
             frontier_dir=fdir,
-            available_now=True,
             pending_dir=pdir,
         )
         q.awaitTermination(120)

@@ -718,6 +718,13 @@ def test_ivfpq_rotation_composes_with_cosine_layout(spark, emb, tmp_path):
         ).collect()
     }
     assert got == want
+    # stored vectors are the untransformed input floats: the ingest
+    # stream's auto-retrain reads them back as its training source
+    stored = {
+        r["vec_id"]: list(r["embedding"])
+        for r in spark.read.parquet(path).collect()
+    }
+    assert stored == {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
 
 
 def test_ivfpq_rotation_composes_with_mips_layout(spark, emb, tmp_path):

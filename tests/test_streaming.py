@@ -604,7 +604,9 @@ def test_ivfpq_ingest_stream_keeps_search_layout_fresh(spark, tmp_path):
     assert live == rebuilt
 
 
-def test_neardup_stream_torn_batch_replay_is_exactly_once(spark, tmp_path):
+def test_neardup_stream_torn_batch_replay_is_exactly_once(
+    spark, tmp_path, tear_last_commit
+):
     """Crash-replay contract: deleting the checkpoint's last commit
     marker makes Structured Streaming re-execute that micro-batch
     under the SAME batch_id. The per-batch overwrite sinks plus the
@@ -613,7 +615,6 @@ def test_neardup_stream_torn_batch_replay_is_exactly_once(spark, tmp_path):
     append sinks) and no empty-overwrite (self-suppression on replay).
     """
     import datetime as dt
-    import os
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.neardup import (
         start_neardup_stream,
@@ -664,14 +665,7 @@ def test_neardup_stream_torn_batch_replay_is_exactly_once(spark, tmp_path):
     assert {p[:2] for p in before[0]} >= {(1, 3), (2, 3)}
 
     # tear the last commit: batch 1 will replay under the same id
-    # (the .crc sidecar must go too or the rename-on-commit collides)
-    commits = sorted(
-        f for f in os.listdir(ckpt / "commits") if not f.startswith(".")
-    )
-    os.remove(ckpt / "commits" / commits[-1])
-    crc = ckpt / "commits" / f".{commits[-1]}.crc"
-    if crc.exists():
-        os.remove(crc)
+    tear_last_commit(ckpt)
     run()
 
     assert snapshot() == before
@@ -679,10 +673,10 @@ def test_neardup_stream_torn_batch_replay_is_exactly_once(spark, tmp_path):
 
 def test_ivfpq_ingest_auto_retrain_past_threshold(spark, tmp_path):
     """Sustained drift must not silently erode recall: with
-    retrain_threshold + a full-precision retrain_source, the ingest
-    stream rebuilds the layout (fresh quantizers, staleness reset)
-    once upserts exceed the threshold, and the result is byte-
-    equivalent to a manual retrain_ivfpq_index over the same corpus
+    retrain_threshold, the ingest stream rebuilds the layout from its
+    own full-precision rows (fresh quantizers, staleness reset) once
+    upserts exceed the threshold, and the result is byte-equivalent
+    to a manual retrain_ivfpq_index over the same corpus
     (deterministic seeding/sampling)."""
     from pyspark.sql import functions as F
 
@@ -707,14 +701,10 @@ def test_ivfpq_ingest_auto_retrain_past_threshold(spark, tmp_path):
     landing.mkdir()
     batch.write.parquet(str(landing / "b1"))
 
-    # the primary full-precision table the layout serves
-    def source(s):
-        return s.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
     # batch ~doubles the layout -> staleness ~1.0 >= 0.5 -> retrain
     start_ivfpq_ingest_stream(
         spark, str(landing) + "/*", path, str(tmp_path / "ckpt"),
-        retrain_threshold=0.5, retrain_source=source,
+        retrain_threshold=0.5,
     ).awaitTermination(180)
 
     meta = pq.load_ivfpq_meta(path)
@@ -745,11 +735,15 @@ def test_ivfpq_ingest_auto_retrain_past_threshold(spark, tmp_path):
     assert self_hits == 8
 
 
-def test_ivfpq_ingest_threshold_without_source_warns(spark, tmp_path):
-    """A staleness breach with no retrain_source must be LOUD (warning
-    + log), while the upsert itself still lands."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+def test_ivfpq_ingest_retrain_crash_leaves_layout_whole(
+    spark, tmp_path, monkeypatch
+):
+    """The stream retrains from the layout's own rows, so the rebuild
+    must not touch the live layout before it is complete: a retrain
+    whose write job dies partway leaves the layout readable with its
+    rows and quantizers, and the replayed batch upserts into it and
+    then retrains it."""
+    import os
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
         ann,
@@ -764,19 +758,59 @@ def test_ivfpq_ingest_threshold_without_source_warns(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") % 2 == 1)
     books = pq.train_pq_codebooks(base, m=16, k=64)
     cents = ann.seed_centroids(base, 8)
-    path = str(tmp_path / "ivfpq_warn")
+    path = str(tmp_path / "ivfpq_crash")
     pq.write_ivfpq_index(base, path, cents, books)
-    landing = tmp_path / "landing_w"
+    built = pq.load_ivfpq_meta(path)
+
+    landing = tmp_path / "landing"
     landing.mkdir()
     batch.write.parquet(str(landing / "b1"))
 
-    with _pytest.warns(UserWarning, match="staleness .* exceeds"):
+    def drain():
         start_ivfpq_ingest_stream(
-            spark, str(landing) + "/*", path, str(tmp_path / "ckpt_w"),
+            spark, str(landing) + "/*", path, str(tmp_path / "ckpt"),
             retrain_threshold=0.5,
         ).awaitTermination(180)
+
+    def die_in_write(v):
+        raise RuntimeError("rebuild died mid-write")
+
+    real_write = pq.write_ivfpq_index
+    die = F.udf(die_in_write, "array<float>")
+
+    def dying_write(index, out, *args, **kwargs):
+        real_write(
+            index.withColumn("embedding", die("embedding")), out,
+            *args, **kwargs,
+        )
+
+    monkeypatch.setattr(pq, "write_ivfpq_index", dying_write)
+    # without AQE the rebuild's shuffle runs inside its write job, so
+    # the failure lands after the write has started on its target
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with pytest.raises(Exception, match="rebuild died mid-write"):
+            drain()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    # the live layout is whole: no torn-swap marker, every row of the
+    # upserted batch readable, the build's quantizers still in force
+    assert not os.path.exists(os.path.join(path, "_swap_inprogress.json"))
     assert spark.read.parquet(path).count() == emb.count()
-    assert pq.ivfpq_staleness(path) >= 0.5  # NOT reset: no rebuild ran
+    meta = pq.load_ivfpq_meta(path)
+    assert meta["centroids"] == built["centroids"]
+    assert meta["codebooks"] == built["codebooks"]
+    assert pq.ivfpq_staleness(path) >= 0.5
+
+    # the replay upserts the batch again and retrains the same layout
+    monkeypatch.setattr(pq, "write_ivfpq_index", real_write)
+    drain()
+    assert pq.ivfpq_staleness(path) == 0.0
+    assert int(pq.load_ivfpq_meta(path)["rows_at_build"]) == emb.count()
+    assert spark.read.parquet(path).count() == emb.count()
+    assert not os.path.exists(path + "._retrain")
 
 
 def test_bucket_table_compaction_preserves_stream_results(spark, tmp_path):
@@ -888,8 +922,8 @@ def test_compaction_torn_marker_fails_reads_loudly(spark, tmp_path):
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         marker_path_for,
     )
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.neardup import (
-        _read_bucket_table,
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.drive import (
+        read_batches,
     )
 
     path = str(tmp_path / "torn")
@@ -900,7 +934,7 @@ def test_compaction_torn_marker_fails_reads_loudly(spark, tmp_path):
     with pt.raises(RuntimeError, match="torn"):
         compact_batch_partitions(spark, path)
     with pt.raises(RuntimeError, match="torn"):
-        _read_bucket_table(spark, path)
+        read_batches(spark, path, "id long")
 
 
 def test_histogram_rollup_stream_partials_match_batch_and_merge(spark, tmp_path):

@@ -103,3 +103,28 @@ def test_model_update_applies_to_next_batch_without_restart(
     # confident ham prediction
     assert rows[21]["pred_lang"] == "ham"
     assert rows[21]["score"] != v1[20]
+
+
+def test_classify_stream_torn_batch_replay_is_exactly_once(
+    spark, tmp_path, model_path, tear_last_commit
+):
+    """Crash replay: with the checkpoint's last commit removed, the
+    restarted stream re-runs that micro-batch under the SAME batch_id.
+    The sink must still hold each doc once, with unchanged scores."""
+    landing, sink, ckpt = (
+        str(tmp_path / "in3"),
+        str(tmp_path / "out3"),
+        str(tmp_path / "ck3"),
+    )
+    spark.createDataFrame(_ARRIVING, CLASSIFY_STREAM_SCHEMA).write.parquet(landing)
+
+    def snapshot():
+        rows = spark.read.parquet(sink).collect()
+        return len(rows), {r["doc_id"]: r["score"] for r in rows}
+
+    _drain(spark, landing, model_path, sink, ckpt)
+    before = snapshot()
+    assert before[0] == len(_ARRIVING)
+    tear_last_commit(ckpt)
+    _drain(spark, landing, model_path, sink, ckpt)
+    assert snapshot() == before

@@ -8,6 +8,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
     pack_sequences,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.streaming.packing import (
+    STATE_SCHEMA,
     pack_batch,
     read_pack_state,
     start_packing_stream,
@@ -18,6 +19,10 @@ SCHEMA = "doc_id long, n_tokens long"
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
+
+
+def _no_state(spark):
+    return spark.createDataFrame([], STATE_SCHEMA)
 
 
 def _slots(df):
@@ -31,7 +36,7 @@ def test_pack_batch_matches_batch_packer_across_arrivals(spark):
     — the append-stability claim cashed out."""
     rows = [(i, (i * 7) % 40 + 1) for i in range(60)]
     batches = [rows[:20], rows[20:45], rows[45:]]
-    state = None
+    state = _no_state(spark)
     streamed = {}
     for chunk in batches:
         asg, new_state = pack_batch(
@@ -40,13 +45,10 @@ def test_pack_batch_matches_batch_packer_across_arrivals(spark):
         streamed.update(_slots(asg))
         # merge updated shards over prior state (what the state table
         # + latest-batch-wins read does)
-        if state is None:
-            state = new_state.localCheckpoint(eager=True)
-        else:
-            untouched = state.join(
-                new_state.select("shard"), "shard", "left_anti"
-            )
-            state = untouched.unionByName(new_state).localCheckpoint(eager=True)
+        untouched = state.join(
+            new_state.select("shard"), "shard", "left_anti"
+        )
+        state = untouched.unionByName(new_state).localCheckpoint(eager=True)
     offline = _slots(
         pack_sequences(_df(spark, rows), budget=64, shards=4)
     )
@@ -54,7 +56,9 @@ def test_pack_batch_matches_batch_packer_across_arrivals(spark):
 
 
 def test_pack_batch_rejects_out_of_order_arrival(spark):
-    asg, state = pack_batch(_df(spark, [(8, 5)]), None, budget=10, shards=1)
+    asg, state = pack_batch(
+        _df(spark, [(8, 5)]), _no_state(spark), budget=10, shards=1
+    )
     state = state.localCheckpoint(eager=True)
     asg.collect()
     with pytest.raises(Exception, match="append-only contract"):
@@ -74,7 +78,9 @@ def test_pack_batch_open_bin_continuation_vs_fresh_shard(spark):
     r2 = asg2.collect()[0]
     assert (r2.seq, r2.offset) == (2, 6)
     # fresh shard (no state): oversized doc still takes bin 0
-    asg3, _ = pack_batch(_df(spark, [(7, 99)]), None, budget=10, shards=1)
+    asg3, _ = pack_batch(
+        _df(spark, [(7, 99)]), _no_state(spark), budget=10, shards=1
+    )
     r3 = asg3.collect()[0]
     assert (r3.seq, r3.offset) == (0, 0)
 
@@ -123,13 +129,16 @@ def test_packing_stream_state_excludes_current_batch_on_replay(spark, tmp_path):
     """A replayed batch must resume from the PRE-batch state: feeding
     batch_id equal to the one that wrote the state row must not
     self-chain (which would double-advance seq/fill)."""
-    b1, _ = pack_batch(_df(spark, [(0, 5)]), None, budget=10, shards=1)
+    b1, _ = pack_batch(
+        _df(spark, [(0, 5)]), _no_state(spark), budget=10, shards=1
+    )
     state_dir = str(tmp_path / "rp_state")
-    _, st = pack_batch(_df(spark, [(0, 5)]), None, budget=10, shards=1)
+    _, st = pack_batch(
+        _df(spark, [(0, 5)]), _no_state(spark), budget=10, shards=1
+    )
     st.write.mode("overwrite").parquet(f"{state_dir}/batch_id=7")
     # replaying batch 7: exclusion yields no state -> fresh shard
-    assert read_pack_state(spark, state_dir, exclude_batch_id=7) is None or \
-        read_pack_state(spark, state_dir, exclude_batch_id=7).count() == 0
+    assert read_pack_state(spark, state_dir, exclude_batch_id=7).count() == 0
     # a later batch sees it
     later = read_pack_state(spark, state_dir, exclude_batch_id=8)
     assert later.collect()[0].fill == 5

@@ -67,7 +67,6 @@ def _drain(spark, landing, tmp, idx, cap=2):
         checkpoint_dir=f"{tmp}/ckpt",
         frontier_dir=f"{tmp}/frontier",
         host_cap=cap,
-        available_now=True,
     )
     q.awaitTermination(120)
 
@@ -172,7 +171,6 @@ def test_robots_gate_blocks_disallowed(spark, tmp_path, setup):
         checkpoint_dir=f"{tmp_path}/ckpt",
         frontier_dir=f"{tmp_path}/frontier",
         host_cap=2,
-        available_now=True,
         robots_rules=rules,
         robots_agent="TestBot",
     )
@@ -374,7 +372,6 @@ def test_inline_compaction_rides_the_ingest_loop(spark, tmp_path, setup):
             checkpoint_dir=f"{tmp_path}/ckpt",
             frontier_dir=fdir,
             host_cap=2,
-            available_now=True,
             compact_every=2,
         )
         q.awaitTermination(120)
@@ -422,7 +419,6 @@ def test_robots_gate_kernel_path_in_stream(spark, tmp_path, setup):
         checkpoint_dir=f"{tmp_path}/ckpt",
         frontier_dir=f"{tmp_path}/frontier",
         host_cap=2,
-        available_now=True,
         robots_rules=rules,
         robots_agent="TestBot",
     )
