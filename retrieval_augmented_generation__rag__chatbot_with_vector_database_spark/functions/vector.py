@@ -74,13 +74,20 @@ def similarity_expr(metric: str, a: Column | str, b: Column | str) -> Column:
     closer); ``topk`` handles the sort direction — this just returns
     the raw metric value.
     """
+    check_metric(metric)
     if metric == "cosine":
         return cosine_similarity(a, b)
     if metric == "dotproduct":
         return dot_product(a, b)
-    if metric == "euclidean":
-        return euclidean_distance(a, b)
-    raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+    return euclidean_distance(a, b)
+
+
+def check_metric(metric: str) -> None:
+    """Raise on a metric name outside :data:`METRICS` — every kernel
+    branches on the name, so a typo would otherwise rank by the wrong
+    order in silence (``"l2"`` sorted farthest-first)."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
 
 def quantization_scale(a: Column | str) -> Column:

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
+    check_metric,
     dot_product,
     l2_norm,
     similarity_expr,
@@ -183,9 +184,11 @@ def assign_centroids_gemm(
     folds per row (~50x at k=64). Same nearest-centroid argmax with
     the same lowest-cid tiebreak (np.argmax keeps the first maximum
     and the centroid list is cid-ordered). Use the expression form
-    when bit-exact oracle parity matters."""
+    when bit-exact oracle parity matters. An unknown ``metric`` raises
+    (the kernel's ``else`` branch would assign by euclidean)."""
     import numpy as np
 
+    check_metric(metric)
     cids, C = _centroid_matrix(centroids, metric)
     names = index.columns
     out_schema = ", ".join(
@@ -228,7 +231,9 @@ def assign_centroids_gemm(
     return index.mapInArrow(kernel, out_schema)
 
 
-MAX_GEMM_QUERIES = 4096  # driver-collect bound for GEMM query sides
+#: driver-collect bound for every GEMM/ADC query side (IVF, IVFPQ, PQ
+#: and the exact GEMM scan all collect through collect_query_matrix)
+MAX_GEMM_QUERIES = 4096
 
 
 def collect_query_matrix(
@@ -236,31 +241,32 @@ def collect_query_matrix(
     query_id_col: str,
     query_vec_col: str,
     metric: str,
-    max_queries: int = MAX_GEMM_QUERIES,
 ):
     """Collect the (bounded) query side for a GEMM kernel.
 
-    The collect is capped via ``limit(max_queries + 1)`` so an
-    oversized query side fails loudly with a clear error BEFORE
-    materializing on the driver — misuse can't OOM it. Zero-norm
-    query vectors are rejected under cosine (their similarity is
-    undefined; the expression path yields NULL scores, which a dense
-    kernel cannot represent)."""
+    An unknown ``metric`` raises before any job runs: every kernel
+    branches on the name, and an unrecognized one would fall into its
+    ``else`` branch and rank by the wrong order. The collect is capped
+    via ``limit(MAX_GEMM_QUERIES + 1)`` so an oversized query side
+    fails loudly with a clear error BEFORE materializing on the driver
+    — misuse can't OOM it. Zero-norm query vectors are rejected under
+    cosine (their similarity is undefined; the expression path yields
+    NULL scores, which a dense kernel cannot represent)."""
     import numpy as np
 
+    check_metric(metric)
     qrows = (
         queries.select(
             F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
         )
-        .limit(max_queries + 1)
+        .limit(MAX_GEMM_QUERIES + 1)
         .collect()
     )
-    if len(qrows) > max_queries:
+    if len(qrows) > MAX_GEMM_QUERIES:
         raise ValueError(
-            f"GEMM query side exceeds {max_queries} rows; the query matrix "
+            f"GEMM query side exceeds {MAX_GEMM_QUERIES} rows; the query matrix "
             "is collected to the driver by design (bounded user questions). "
-            "For corpus-scale 'query' sides use the join/expression paths, "
-            "or raise max_queries explicitly."
+            "For corpus-scale 'query' sides use the join/expression paths."
         )
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
     Q = np.array([list(r["qv"]) for r in qrows], dtype=np.float64)
@@ -286,7 +292,6 @@ def ivf_topk_gemm(
     query_vec_col: str = "qvec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = MAX_GEMM_QUERIES,
     pre_filter=None,
 ) -> DataFrame:
     """Production probe: GEMM scoring over an ``assigned`` index
@@ -311,7 +316,7 @@ def ivf_topk_gemm(
     compressed = "q8" in index.columns and vec_col not in index.columns
     cids, C = _centroid_matrix(centroids, metric)
     qids, Q, Qm = collect_query_matrix(
-        queries, query_id_col, query_vec_col, metric, max_queries
+        queries, query_id_col, query_vec_col, metric
     )
     # top-nprobe buckets per query, lowest-cid tiebreak via stable sort
     if metric == "euclidean":

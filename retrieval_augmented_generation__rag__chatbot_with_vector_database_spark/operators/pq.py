@@ -42,7 +42,9 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-PQ_META = "_pq_meta.json"
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
+    check_metric,
+)
 
 
 def _sample_matrix(
@@ -433,32 +435,6 @@ def pq_encode(
     return src.mapInArrow(kernel, out_schema)
 
 
-def write_pq_index(
-    index: DataFrame,
-    path: str,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the encoded layout + codebooks sidecar (the
-    quantizer is part of the layout, exactly like the IVF centroid
-    sidecar — a probe with different codebooks would be garbage)."""
-    pq_encode(index, codebooks, id_col, vec_col).write.mode("overwrite").parquet(
-        path
-    )
-    with open(os.path.join(path, PQ_META), "w") as f:
-        json.dump({"m": len(codebooks), "k": len(codebooks[0]),
-                   "sub": len(codebooks[0][0]), "codebooks": codebooks}, f)
-
-
-def load_pq_codebooks(path: str) -> list[list[list[float]]]:
-    with open(os.path.join(path, PQ_META)) as f:
-        return json.load(f)["codebooks"]
-
-
-MAX_PQ_QUERIES = 4096
-
-
 def _adc_luts(targets, books, sub: int):
     """Stacked ADC lookup tables, one per target vector (b × m × k):
     ``lut[t][j][c] = |targets[t]_j - books[j][c]|²``, the partial
@@ -514,7 +490,7 @@ def pq_topk(
     entry; a candidate's distance is m LUT gathers summed — the float
     vectors are never read. Returns (query_id, vec_id, adc_dist,
     rank), ascending distance, ties by id. Queries are collected
-    (bounded like the GEMM probe: loud error past ``MAX_PQ_QUERIES``)
+    (bounded like the GEMM probe: loud error past ``ann.MAX_GEMM_QUERIES``)
     and shipped inside the kernel closure; per-query top-k is the
     usual WindowGroupLimit window."""
     import pyarrow as pa
@@ -524,7 +500,7 @@ def pq_topk(
     )
 
     qids, Q, _ = collect_query_matrix(
-        queries, query_id_col, query_vec_col, "euclidean", MAX_PQ_QUERIES
+        queries, query_id_col, query_vec_col, "euclidean"
     )
     m = len(codebooks)
     sub = len(codebooks[0][0])
@@ -631,6 +607,33 @@ def pq_topk_rerank(
 # ---------------------------------------------------------------- IVF × PQ
 
 IVFPQ_META = "_ivfpq_meta.json"
+
+#: the (normalize, mips) build flags an IVFPQ layout needs to serve
+#: each metric: the ADC is squared-L2, which orders like cosine on
+#: unit vectors and like dot product on MIPS-augmented ones
+LAYOUT_FLAGS = {
+    "euclidean": (False, False),
+    "cosine": (True, False),
+    "dotproduct": (False, True),
+}
+
+
+def check_layout_metric(metric: str, normalize: bool, mips: bool) -> None:
+    """Raise unless a layout built with ``(normalize, mips)`` serves
+    ``metric``. A transformed layout serves EXACTLY its metric (each
+    transform defines the space the codes live in; mixing metrics
+    would rank by one geometry and score by another)."""
+    check_metric(metric)
+    flags = (bool(normalize), bool(mips))
+    if flags != LAYOUT_FLAGS[metric]:
+        raise ValueError(
+            f"metric={metric!r} needs an IVFPQ layout built with "
+            f"(normalize, mips)={LAYOUT_FLAGS[metric]}; this layout has "
+            f"{flags} — a transformed layout serves exactly its own "
+            "metric (normalize→cosine, mips→dotproduct, raw→euclidean); "
+            "rebuild with the matching write_ivfpq_index flags or use an "
+            "IVF/float layout"
+        )
 
 
 def _unit_normalized(index: DataFrame, vec_col: str) -> DataFrame:
@@ -1025,7 +1028,6 @@ def ivfpq_topk_rerank(
     mips: bool = False,
     pre_filter=None,
     rotation: list[list[float]] | None = None,
-    adaptive_fetch: bool = False,
 ) -> DataFrame:
     """The full ANN-at-scale composition in ONE job: coarse probe
     (each query's ``nprobe`` nearest centroids, chosen driver-side
@@ -1043,9 +1045,8 @@ def ivfpq_topk_rerank(
     ``layout`` must carry ``vec_col``; a layout written without it
     (an older codes-only build) raises and has to be rebuilt.
 
-    A transformed layout serves EXACTLY its metric (each transform
-    defines the space the codes live in; mixing metrics would rank by
-    one geometry and score by another):
+    A transformed layout serves EXACTLY its metric
+    (:func:`check_layout_metric`):
 
     - raw layout → ``euclidean``: ADC is squared-L2, rerank exact
       euclidean ascending;
@@ -1068,20 +1069,7 @@ def ivfpq_topk_rerank(
     top-k is the filtered corpus's own (single-stage filtering — the
     semantics of the reference's Pinecone filter argument; recall does
     not degrade with filter selectivity the way post-filtering a
-    fixed-k result does).
-
-    ``adaptive_fetch``: with a ``pre_filter``, scale ``fetch_k`` by
-    the MEASURED selectivity of the probed scan — two cheap jobs
-    (a footer-only count of the probed buckets and a pushed-filter
-    count over the same buckets' slim metadata columns), then
-    ``fetch_k ← max(k, ⌈fetch_k × surviving/probed⌉)``. ``fetch_k``
-    is an over-fetch against quantization error sized relative to the
-    candidate pool; when the filter shrinks the pool, an unscaled
-    fetch makes the per-bucket ADC cut, the per-task merge, and
-    the full-precision rerank all pay the UNfiltered budget. The
-    floor at ``k`` is always preserved and the value only ever
-    shrinks (never raises recall pressure beyond the caller's own
-    fetch_k)."""
+    fixed-k result does)."""
     import numpy as np
     import pyarrow as pa
 
@@ -1089,20 +1077,7 @@ def ivfpq_topk_rerank(
         collect_query_matrix,
     )
 
-    required = {
-        "euclidean": (False, False),
-        "cosine": (True, False),
-        "dotproduct": (False, True),
-    }
-    if metric not in required:
-        raise ValueError(f"unknown IVFPQ metric {metric!r}")
-    if (normalized, mips) != required[metric]:
-        raise ValueError(
-            f"metric={metric!r} needs layout flags (normalize, mips)="
-            f"{required[metric]}, got ({normalized}, {mips}) — a "
-            "transformed IVFPQ layout serves exactly its own metric; "
-            "rebuild with the matching write_ivfpq_index flags"
-        )
+    check_layout_metric(metric, normalized, mips)
     if vec_col not in layout.columns:
         raise ValueError(
             f"IVFPQ layout has no raw-vector column {vec_col!r} (a "
@@ -1111,7 +1086,7 @@ def ivfpq_topk_rerank(
         )
     fetch_k = max(fetch_k, k)
     qids, Q, _ = collect_query_matrix(
-        queries, query_id_col, query_vec_col, "euclidean", MAX_PQ_QUERIES
+        queries, query_id_col, query_vec_col, "euclidean"
     )
     Qraw = Q  # raw query space — the rerank metric is defined on it
     if metric == "cosine":
@@ -1158,24 +1133,7 @@ def ivfpq_topk_rerank(
 
     pruned = layout.filter(F.col("centroid_id").isin(all_probed))
     if pre_filter is not None:
-        if adaptive_fetch:
-            probed_rows = pruned.count()  # footer-only (partition prune)
         pruned = pruned.filter(pre_filter)
-        if adaptive_fetch and probed_rows > 0:
-            import math
-
-            surviving = pruned.count()  # pushed filter, slim meta cols
-            # proportional scaling keeps the caller's over-fetch RATIO
-            # constant; the 4·k absolute floor keeps an error margin
-            # that does NOT shrink with the pool (quantization noise
-            # near the top-k boundary is independent of selectivity)
-            fetch_k = max(
-                k,
-                min(
-                    fetch_k,
-                    max(4 * k, math.ceil(fetch_k * surviving / probed_rows)),
-                ),
-            )
 
     q_payload = json.dumps([[float(x) for x in row] for row in Q])
     qraw_payload = json.dumps([[float(x) for x in row] for row in Qraw])

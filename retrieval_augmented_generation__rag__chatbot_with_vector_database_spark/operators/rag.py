@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.text import (
@@ -167,8 +167,3 @@ def pack_context_budget(
 def truncate_docs(matches: DataFrame, n: int = 200) -> DataFrame:
     """P3: response-doc truncation (app/rag/chain.py:113-120)."""
     return matches.withColumn("text", truncate_ellipsis("text", n))
-
-
-def clamp_question_filter(df: DataFrame, question_col: str = "question") -> Column:
-    """P4: min_length=1 validation (app/api/routes.py:30)."""
-    return F.length(F.col(question_col)) >= 1

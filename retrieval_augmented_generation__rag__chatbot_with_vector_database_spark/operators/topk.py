@@ -64,7 +64,6 @@ def topk_search(
     per_query_filter: Column | None = None,
     query_extra_cols: tuple[str, ...] = (),
     payload_cols: tuple[str, ...] = (),
-    clamp: bool = True,
 ) -> DataFrame:
     """Batch top-k: for every row of ``queries``, the ``k`` closest rows
     of ``index`` under ``metric``.
@@ -81,8 +80,7 @@ def topk_search(
     Queries whose filter matches nothing simply have no output rows
     (the P5 empty-guard joins them back).
     """
-    if clamp:
-        k = clamp_top_k(k)
+    k = clamp_top_k(k)
     if pre_filter is not None:
         index = index.filter(pre_filter)
 
@@ -136,8 +134,6 @@ def topk_search_gemm(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     pre_filter: Column | None = None,
-    clamp: bool = True,
-    max_queries: int | None = None,
 ) -> DataFrame:
     """Batch top-k by blocked matrix multiply — the high-throughput
     exact path for large indexes.
@@ -159,7 +155,8 @@ def topk_search_gemm(
     speed — GEMM reorders the accumulation). Assumes null-free,
     equal-length vectors (the index dim invariant).
 
-    The query collect is bounded (``max_queries``, loud failure) and
+    The query collect is bounded (``ann.MAX_GEMM_QUERIES``, loud
+    failure; an unknown metric raises there too) and
     zero-norm index vectors under cosine are dropped before top-k
     selection — a 0/0 NaN would sort ABOVE every real score in a
     descending numpy partition, handing NaN rows the top-k slots the
@@ -168,22 +165,14 @@ def topk_search_gemm(
     import numpy as np
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        MAX_GEMM_QUERIES,
         collect_query_matrix,
     )
 
-    if clamp:
-        k = clamp_top_k(k)
+    k = clamp_top_k(k)
     if pre_filter is not None:
         index = index.filter(pre_filter)
 
-    qids, Q, Qm = collect_query_matrix(
-        queries,
-        query_id_col,
-        query_vec_col,
-        metric,
-        MAX_GEMM_QUERIES if max_queries is None else max_queries,
-    )
+    qids, Q, Qm = collect_query_matrix(queries, query_id_col, query_vec_col, metric)
     smaller_better = metric == "euclidean"
     q_sq = (Q * Q).sum(axis=1)
 

@@ -857,12 +857,6 @@ def ann_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             nprobe=N_CENTROIDS,
             fetch_k=100,
             pre_filter=filter_dict_to_column({"label": {"$in": [1, 3, 5, 7]}}),
-            # measured-selectivity fetch scaling (~0.5 here): the ADC
-            # cut/merge/rerank pay the filtered pool's budget, and the
-            # scaled fetch still provably covers the fixture's
-            # filtered top-K (verified byte-identical to the unscaled
-            # probe at sf0.001/0.01/0.1 — test_pq.py)
-            adaptive_fetch=True,
         ).select(
             "query_id", "vec_id", F.round("score", 6).alias("score"), "rank"
         )

@@ -57,7 +57,7 @@ def _matches(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    hits = topk_search(queries, emb, k=k, metric="cosine", clamp=True)
+    hits = topk_search(queries, emb, k=k, metric="cosine")
     hits = hits.withColumn("score", F.round("score", 6))
     return rag.project_matches(
         hits.join(docs, hits.vec_id == docs.doc_id, "left").select(
@@ -438,7 +438,7 @@ def rag_chat_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "source")
     hits = topk_search(
-        q.select("query_id", "qvec"), emb, k=3, metric="cosine", clamp=True
+        q.select("query_id", "qvec"), emb, k=3, metric="cosine"
     ).withColumn("score", F.round("score", 6))
     m = rag.project_matches(
         hits.join(docs, hits.vec_id == docs.doc_id, "left").select(

@@ -93,10 +93,10 @@ def topk_cosine_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_cosine_dispatched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same search routed through the front-door dispatcher
     (operators.search.search — the reference's route-then-query shape,
-    `app/api/routes.py:78-116`): no persisted layout and a known row
-    count, so route() picks an exact path; either exact path matches
-    this oracle, and the hash must equal ``topk_cosine``'s. The
-    routing contract itself is pinned in tests/test_search_dispatch.py."""
+    `app/api/routes.py:78-116`): no persisted layout, so route() picks
+    the exact GEMM scan; its 6-decimal scores match this oracle, and the
+    hash must equal ``topk_cosine``'s. The routing contract itself is
+    pinned in tests/test_search_dispatch.py."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.search import (
         search,
     )
@@ -107,7 +107,6 @@ def topk_cosine_dispatched(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         k=K,
         metric="cosine",
-        n_rows=emb.count(),
     )
     return out.select(
         "query_id", "vec_id", F.round("score", 6).alias("score"), "rank"

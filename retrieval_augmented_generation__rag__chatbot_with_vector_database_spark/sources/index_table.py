@@ -345,39 +345,3 @@ def merge_last_write_wins(
         existing.unionByName(new, allowMissingColumns=True), id_col, version_col
     )
 
-
-def best_index_argmax(spark: SparkSession, root: str, candidates: list[str]) -> str | None:
-    """A3: probe candidate indexes, pick the one with the most vectors
-    (app/api/routes.py:78-116); None if all empty/missing.
-
-    All existing candidates are counted in ONE Spark job (union of
-    footer-metadata scans), not a driver-side loop of per-index jobs;
-    ties resolve to the earliest candidate, matching the reference's
-    first-wins scan order."""
-    existing = [
-        name
-        for name in candidates
-        if VectorIndex(spark, root, name).exists()
-    ]
-    if not existing:
-        return None
-    from functools import reduce
-
-    counted = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            VectorIndex(spark, root, name)
-            .read()
-            .select(F.lit(name).alias("__name"))
-            for name in existing
-        ],
-    )
-    counts = {
-        r["__name"]: r["n"]
-        for r in counted.groupBy("__name").agg(F.count("*").alias("n")).collect()
-    }
-    best_name, best_count = None, 0
-    for name in existing:  # candidate order = reference scan order
-        if counts.get(name, 0) > best_count:
-            best_name, best_count = name, counts[name]
-    return best_name

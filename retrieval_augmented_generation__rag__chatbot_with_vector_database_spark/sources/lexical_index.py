@@ -81,6 +81,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
+    pick_survivors,
     rewrite_partitions,
 )
 
@@ -539,7 +540,10 @@ class LexicalIndex:
             "_batch", F.lit(batch).cast("long")
         ).withColumn(DBUCKET, _dbucket_of("id", db))
         rewrite_partitions(
-            _lww_docs(old_in_buckets, incoming),
+            pick_survivors(
+                old_in_buckets.unionByName(incoming), "id", "_batch",
+                ignore=(DBUCKET,),
+            ),
             self._docs_path,
             DBUCKET,
             dbuckets,
@@ -807,16 +811,3 @@ class LexicalIndex:
             contrib.withColumn("bm25_rank", F.row_number().over(w))
             .filter(F.col("bm25_rank") <= k)
         )
-
-
-def _lww_docs(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Keep the newest doc-store row per id (ties: deterministic md5
-    over the payload — the ``merge_last_write_wins`` convention)."""
-    allr = existing.unionByName(incoming)
-    tb = F.md5(F.to_json(F.struct("dl", "terms")))
-    w = Window.partitionBy("id").orderBy(F.col("_batch").desc(), tb.asc())
-    return (
-        allr.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

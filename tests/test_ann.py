@@ -241,10 +241,11 @@ def test_int8_layout_smaller_and_high_recall(spark, emb, cents, tmp_path):
             assert abs(round(r["score"], 6) - full_scores[key]) <= 1e-6
 
 
-def test_gemm_query_bound_raises(emb, cents):
+def test_gemm_query_bound_raises(emb, cents, monkeypatch):
+    monkeypatch.setattr(ann, "MAX_GEMM_QUERIES", 100)
     q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     with pytest.raises(ValueError, match="exceeds 100"):
-        ann.ivf_topk_gemm(q, emb, cents, max_queries=100)
+        ann.ivf_topk_gemm(q, emb, cents)
 
 
 def test_gemm_zero_norm_query_raises(spark, emb, cents):

@@ -96,27 +96,6 @@ def test_rerank_recovers_exact_topk_recall(spark, emb):
     assert raw_recall <= recall  # rerank never hurts
 
 
-def test_pq_layout_is_much_smaller(spark, emb, tmp_path):
-    import os
-
-    def parquet_bytes(p):
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    books = pq.train_pq_codebooks(emb, m=8, k=16)
-    full = str(tmp_path / "full")
-    emb.select("vec_id", "embedding").write.parquet(full)
-    coded = str(tmp_path / "pq")
-    pq.write_pq_index(emb, coded, books)
-    assert pq.load_pq_codebooks(coded) == books
-    # 64 float32 (256 B) -> 8 codes; parquet framing eats some of it
-    assert parquet_bytes(coded) < 0.35 * parquet_bytes(full)
-
-
 def test_dim_mismatch_rejected(spark, emb):
     books = pq.train_pq_codebooks(emb, m=8, k=16)
     bad_q = spark.createDataFrame(
@@ -534,17 +513,6 @@ def test_ivfpq_filtered_matches_exact_filtered(spark, emb, tmp_path):
         r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()
     }
     assert all(labels[v] in (1, 3, 5, 7) for v, _ in got.values())
-    # adaptive fetch (fetch_k scaled by measured ~0.5 selectivity)
-    # changes the budget, not the answer
-    adaptive = {
-        (r["query_id"], r["rank"]): (r["vec_id"], round(r["score"], 9))
-        for r in search(
-            _queries(emb), emb, k=5, metric="cosine",
-            layout_path=path, nprobe=8, fetch_k=200, pre_filter=flt,
-            adaptive_fetch=True,
-        ).collect()
-    }
-    assert adaptive == want
 
 
 def test_ivfpq_meta_cols_validation(spark, emb, tmp_path):

@@ -42,14 +42,6 @@ def _rows(df):
 # -- route() decisions --------------------------------------------------
 
 
-def test_route_small_index_is_hof():
-    assert route(n_rows=1000)["path"] == "exact_hof"
-
-
-def test_route_large_index_is_gemm():
-    assert route(n_rows=10_000_000)["path"] == "exact_gemm"
-
-
 def test_route_unknown_size_defaults_gemm():
     assert route()["path"] == "exact_gemm"
 
@@ -59,8 +51,6 @@ def test_route_ivf_layout(spark, emb, tmp_path):
     cents = ann.seed_centroids(emb, 8)
     ann.write_ivf_index(emb, path, cents)
     assert route(layout_path=path)["path"] == "ivf"
-    # layout presence beats any row-count argument
-    assert route(layout_path=path, n_rows=10)["path"] == "ivf"
 
 
 def test_route_ivfpq_layout_and_metric_guard(spark, emb, tmp_path):
@@ -205,14 +195,8 @@ def test_route_rejects_non_layout_dir(tmp_path):
 # -- search() dispatch equals the direct path ----------------------------
 
 
-def test_search_small_equals_hof(spark, emb):
-    got = search(_queries(emb), emb, k=5, n_rows=emb.count())
-    want = topk_search(_queries(emb), emb, k=5)
-    assert _rows(got) == _rows(want)
-
-
 def test_search_forced_gemm_equals_gemm(spark, emb):
-    got = search(_queries(emb), emb, k=5)  # unknown size -> gemm
+    got = search(_queries(emb), emb, k=5)  # no layout -> gemm
     want = topk_search_gemm(_queries(emb), emb, k=5)
     assert _rows(got) == _rows(want)
 
@@ -296,58 +280,13 @@ def test_search_exact_needs_index(spark, emb):
         search(_queries(emb), None, k=5)
 
 
-# -- size-aware crossover + self-contained layouts (round 9) -------------
+# -- self-contained layouts (round 9) -------------------------------------
 
 
 def _euclid_ivfpq(spark, emb, path, **kw):
     cents = ann.seed_centroids(emb, 8)
     books = pq.train_pq_codebooks(emb, m=8, k=16)
     pq.write_ivfpq_index(emb, path, cents, books, **kw)
-
-
-def test_route_prefer_exact_below_crossover(spark, emb, tmp_path):
-    """Both sides of the threshold: a present layout whose sidecar
-    rows_at_build is under prefer_exact_below routes to the exact GEMM
-    scan (SCALE.md: brute force beats any probe's fixed overhead below
-    the crossover); above it (or with the override off) the layout is
-    served."""
-    path = str(tmp_path / "ivfpq")
-    _euclid_ivfpq(spark, emb, path)
-    built = int(pq.load_ivfpq_meta(path)["rows_at_build"])
-    assert built > 0
-    under = route(layout_path=path, metric="euclidean",
-                  prefer_exact_below=built + 1)
-    assert under["path"] == "exact_gemm"
-    assert "crossover" in under["reason"]
-    over = route(layout_path=path, metric="euclidean",
-                 prefer_exact_below=built)
-    assert over["path"] == "ivfpq"
-    off = route(layout_path=path, metric="euclidean")
-    assert off["path"] == "ivfpq"
-
-
-def test_route_prefer_exact_below_ivf(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    cents = ann.seed_centroids(emb, 8)
-    ann.write_ivf_index(emb, path, cents)
-    built = int(ann.ivf_meta(path)["rows_at_build"])
-    assert route(layout_path=path, prefer_exact_below=built + 1)[
-        "path"
-    ] == "exact_gemm"
-    assert route(layout_path=path, prefer_exact_below=built)["path"] == "ivf"
-
-
-def test_search_crossover_matches_exact(spark, emb, tmp_path):
-    """search() with the crossover active returns the exact GEMM rows."""
-    path = str(tmp_path / "ivfpq")
-    _euclid_ivfpq(spark, emb, path)
-    q = _queries(emb)
-    got = _rows(
-        search(q, emb, k=5, metric="euclidean", layout_path=path,
-               prefer_exact_below=10**9)
-    )
-    want = _rows(topk_search_gemm(q, emb, k=5, metric="euclidean"))
-    assert got == want
 
 
 def test_search_self_contained_layout_serves_without_index(spark, emb, tmp_path):
@@ -425,16 +364,20 @@ def test_fused_rerank_hash_equals_exact(spark, emb, tmp_path):
         pq.write_ivfpq_index(emb, p_f, cents, books, **kw)
         fused = _rows(
             search(q, None, k=5, metric=metric, layout_path=p_f,
-                   nprobe=8, fetch_k=10**6, mips_fetch_floor=0)
+                   nprobe=8, fetch_k=10**6)
         )
         exact = _rows(topk_search(q, emb, k=5, metric=metric))
         assert fused == exact, metric
 
 
-def test_mips_fetch_floor_only_raises_fetch(spark, emb, tmp_path):
+def test_mips_fetch_floor_only_raises_fetch(spark, emb, tmp_path, monkeypatch):
     """The dotproduct over-fetch floor (fraction of rows_at_build)
     can only ADD candidates: at full coverage the results equal the
     floor-disabled call."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        search as search_mod,
+    )
+
     M = pq.mips_max_norm(emb, "embedding")
     aug = pq.mips_augmented(emb, "embedding", M, 72)
     cents = ann.seed_centroids(aug, 8)
@@ -442,12 +385,38 @@ def test_mips_fetch_floor_only_raises_fetch(spark, emb, tmp_path):
     path = str(tmp_path / "mips")
     pq.write_ivfpq_index(emb, path, cents, books, mips=True)
     q = _queries(emb)
-    with_floor = _rows(
-        search(q, None, k=5, metric="dotproduct", layout_path=path,
-               nprobe=8, fetch_k=10**6, mips_fetch_floor=1.0)
+    rows = {}
+    for floor in (1.0, 0.0):
+        monkeypatch.setattr(search_mod, "MIPS_FETCH_FLOOR", floor)
+        rows[floor] = _rows(
+            search(q, None, k=5, metric="dotproduct", layout_path=path,
+                   nprobe=8, fetch_k=10**6)
+        )
+    assert rows[1.0] == rows[0.0]
+
+
+def test_unknown_metric_raises(spark, tmp_path):
+    """A metric name outside functions.vector.METRICS raises on every
+    path instead of falling into a kernel's else-branch: "l2" used to
+    rank the exact GEMM scan farthest-first (rows 9, 8, 7 here)."""
+    idx = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(10)],
+        "vec_id long, embedding array<double>",
     )
-    no_floor = _rows(
-        search(q, None, k=5, metric="dotproduct", layout_path=path,
-               nprobe=8, fetch_k=10**6, mips_fetch_floor=0)
-    )
-    assert with_floor == no_floor
+    q = spark.createDataFrame([(0, [0.0, 1.0])], "query_id long, qvec array<double>")
+    assert [r["vec_id"] for r in search(q, idx, k=3, metric="euclidean")
+            .orderBy("rank").collect()] == [0, 1, 2]
+    path = str(tmp_path / "ivf")
+    ann.write_ivf_index(idx, path, ann.seed_centroids(idx, 2))
+    for bad in ("l2", "Euclidean"):
+        with pytest.raises(ValueError, match="unknown metric"):
+            search(q, idx, k=3, metric=bad).collect()
+        with pytest.raises(ValueError, match="unknown metric"):
+            search(q, idx, k=3, metric=bad, layout_path=path).collect()
+        with pytest.raises(ValueError, match="unknown metric"):
+            topk_search_gemm(q, idx, k=3, metric=bad).collect()
+        with pytest.raises(ValueError, match="unknown metric"):
+            route(metric=bad)
+        with pytest.raises(ValueError, match="unknown metric"):
+            ann.write_ivf_index(idx, str(tmp_path / bad), [(0, [1.0, 1.0])],
+                                metric=bad)

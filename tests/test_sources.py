@@ -11,7 +11,6 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sou
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.index_table import (
     VectorIndex,
-    best_index_argmax,
     merge_last_write_wins,
 )
 
@@ -197,23 +196,6 @@ def test_upsert_dim_mismatch_reroute(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="mixed"):
         idx.upsert(mixed, batch=2, on_mismatch="reroute")
-
-
-def test_best_index_argmax(spark, tmp_path):
-    root = str(tmp_path)
-    cols = "id string, embedding array<float>, text string, source string, chunk_index int"
-    small = VectorIndex(spark, root, "base").create(dimension=2)
-    small.upsert(spark.createDataFrame([("a", [1.0, 0.0], "t", "s", 0)], cols), batch=1)
-    big = VectorIndex(spark, root, "base-384").create(dimension=2)
-    big.upsert(
-        spark.createDataFrame(
-            [(f"b{i}", [0.0, 1.0], "t", "s", 0) for i in range(3)], cols
-        ),
-        batch=1,
-    )
-    cands = ["base", "base-3072", "base-384", "missing"]
-    assert best_index_argmax(spark, root, cands) == "base-384"
-    assert best_index_argmax(spark, root, ["missing"]) is None
 
 
 def test_bucket_count_persisted_survives_default_change(spark, tmp_path, monkeypatch):

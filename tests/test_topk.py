@@ -137,14 +137,18 @@ def test_gemm_zero_norm_index_rows_never_win(spark):
     assert all(np.isfinite(r["score"]) for r in out)
 
 
-def test_gemm_query_bound_raises(spark, emb):
+def test_gemm_query_bound_raises(spark, emb, monkeypatch):
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        ann,
+    )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
         topk_search_gemm,
     )
 
+    monkeypatch.setattr(ann, "MAX_GEMM_QUERIES", 50)
     q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     with pytest.raises(ValueError, match="exceeds 50"):
-        topk_search_gemm(q, emb, k=5, max_queries=50)
+        topk_search_gemm(q, emb, k=5)
 
 
 def _mmr_reference(ids, rel, vecs, k, lam):
