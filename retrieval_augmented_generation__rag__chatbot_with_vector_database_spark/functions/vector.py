@@ -45,10 +45,17 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
+def cosine_from(dot: Column, a_norm: Column, b_norm: Column) -> Column:
+    """The one null-safe cosine: ``dot / (a_norm·b_norm)``, NULL when
+    either norm is zero. Callers that pre-project a norm pass its
+    column, so each side folds once per row."""
+    denom = a_norm * b_norm
+    return F.when(denom != 0.0, dot / denom)
+
+
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b) = <a,b> / (|a||b|); null-safe on zero norms (returns NULL)."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0.0, dot_product(a, b) / denom)
+    return cosine_from(dot_product(a, b), l2_norm(a), l2_norm(b))
 
 
 def euclidean_distance(a: Column | str, b: Column | str) -> Column:
@@ -80,6 +87,12 @@ def similarity_expr(metric: str, a: Column | str, b: Column | str) -> Column:
     if metric == "dotproduct":
         return dot_product(a, b)
     return euclidean_distance(a, b)
+
+
+def smaller_is_better(metric: str) -> bool:
+    """The one metric-order rule: euclidean is a distance (ascending);
+    cosine and dotproduct are similarities (descending)."""
+    return metric == "euclidean"
 
 
 def check_metric(metric: str) -> None:

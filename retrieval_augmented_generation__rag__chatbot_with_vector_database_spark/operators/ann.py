@@ -40,9 +40,14 @@ from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
     check_metric,
+    cosine_from,
     dot_product,
     l2_norm,
     similarity_expr,
+    smaller_is_better,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
+    rank_top_k,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
@@ -105,6 +110,22 @@ def _py_l2(vec: list[float]) -> float:
     return s ** 0.5
 
 
+def check_centroid_norms(centroids: list[tuple[int, list[float]]],
+                         metric: str) -> None:
+    """Under cosine a zero-norm centroid has no direction: the
+    expression path would give every row a NULL score against it and
+    the GEMM path a NaN, and the two disagree on which rows it
+    captures. Both assign paths and both probes refuse it up front."""
+    if metric != "cosine":
+        return
+    for cid, vec in centroids:
+        if _py_l2(vec) == 0.0:
+            raise ValueError(
+                f"centroid {int(cid)} has norm 0, so its cosine is undefined; "
+                "seed the quantizer from nonzero vectors"
+            )
+
+
 def _centroid_literal(centroids: list[tuple[int, list[float]]]) -> Column:
     return F.array(
         *[
@@ -128,16 +149,15 @@ def _best_centroids(vec: Column, centroids: list[tuple[int, list[float]]],
     For cosine, pass ``vec_norm`` (pre-projected once) — centroid
     norms are baked into the literal — so each of the k comparisons
     folds only the dot product instead of re-folding both norms."""
+    check_centroid_norms(centroids, metric)
     carr = _centroid_literal(centroids)
-    # euclidean: smaller is better → sort ascending on score;
-    # cosine/dot: larger is better → sort ascending on -score
+    # sort ascending on the score when smaller is better, else on -score
     def keyed(c: Column) -> Column:
         if metric == "cosine" and vec_norm is not None:
-            denom = vec_norm * c["cnorm"]
-            s = F.when(denom != 0.0, dot_product(vec, c["cvec"]) / denom)
+            s = cosine_from(dot_product(vec, c["cvec"]), vec_norm, c["cnorm"])
         else:
             s = similarity_expr(metric, vec, c["cvec"])
-        key = s if metric == "euclidean" else -s
+        key = s if smaller_is_better(metric) else -s
         return F.struct(key.alias("key"), c["cid"].alias("cid"))
 
     ranked = F.array_sort(F.transform(carr, keyed))
@@ -165,6 +185,7 @@ def assign_centroids(
 def _centroid_matrix(centroids: list[tuple[int, list[float]]], metric: str):
     import numpy as np
 
+    check_centroid_norms(centroids, metric)
     cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
     C = np.array([v for _, v in centroids], dtype=np.float64)
     if metric == "cosine":
@@ -185,34 +206,27 @@ def assign_centroids_gemm(
     the same lowest-cid tiebreak (np.argmax keeps the first maximum
     and the centroid list is cid-ordered). Use the expression form
     when bit-exact oracle parity matters. An unknown ``metric`` raises
-    (the kernel's ``else`` branch would assign by euclidean)."""
+    (the kernel's ``else`` branch would assign by euclidean), and so
+    does a null vector or one whose length is not the centroid
+    dimension."""
     import numpy as np
 
     check_metric(metric)
     cids, C = _centroid_matrix(centroids, metric)
+    dim = C.shape[1]
     names = index.columns
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in index.schema.fields]
         + [f"{out_col} int"]
     )
-    vec_idx = names.index(vec_col)
 
     def kernel(batches):
         import pyarrow as pa
 
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
-            vec_arr = rb.column(vec_idx)
-            if isinstance(vec_arr, pa.ChunkedArray):
-                vec_arr = vec_arr.combine_chunks()
-            B = (
-                vec_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, -1)
-                .astype(np.float64, copy=False)
-            )
+            B = list_matrix(rb, vec_col, dim).astype(np.float64, copy=False)
             if metric == "cosine":
                 with np.errstate(divide="ignore", invalid="ignore"):
                     B = B / np.linalg.norm(B, axis=1, keepdims=True)
@@ -281,6 +295,131 @@ def collect_query_matrix(
     return qids, Q, Qm
 
 
+def list_matrix(batch, name: str, width: int):
+    """The one Arrow vector decode: list column ``name`` of ``batch`` as
+    an n × ``width`` matrix viewing the values buffer (zero-copy,
+    stored dtype). Raises unless every row is non-null and holds
+    exactly ``width`` values — a ragged row would silently shift every
+    later row's codes or coordinates."""
+    import numpy as np
+
+    col = batch.column(name)
+    if col.null_count:
+        raise ValueError(
+            f"{name} column is not fixed-width {width}: "
+            f"{col.null_count} null row(s)"
+        )
+    off = np.asarray(col.offsets, dtype=np.int64)
+    widths = np.diff(off)
+    if not (widths == width).all():
+        raise ValueError(
+            f"{name} column is not fixed-width {width}: widths "
+            f"{sorted(set(int(w) for w in widths))[:5]}"
+        )
+    return np.asarray(col.values)[off[0] : off[-1]].reshape(
+        batch.num_rows, width
+    )
+
+
+def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
+              q_by_bucket: dict | None = None) -> DataFrame:
+    """The one GEMM block kernel of the exact scan and the IVF probe:
+    (query_id, vec_id, score, rank) of the collected queries
+    (``collect_query_matrix``'s ``qids, Q, Qm``) against ``cand``, which
+    carries ``vec_id``, ``__vec`` (or an int8 layout's
+    ``q8``/``q8_scale``) and, for a probe, ``centroid_id``.
+
+    Per Arrow batch: decode → under cosine drop zero-norm rows (a 0/0
+    NaN would sort FIRST in a descending partition, where the
+    expression path's NULL sorts last) and normalize → per bucket, one
+    score block against only the queries probing it (``q_by_bucket``:
+    bucket → query indices; ``None`` is the unpruned scan, one bucket
+    every query probes) → per-query ``argpartition`` top-k, merged by
+    :func:`topk.rank_top_k`."""
+    import numpy as np
+
+    dim = Q.shape[1]
+    compressed = "q8" in cand.columns
+    smaller = smaller_is_better(metric)
+    q_sq = (Q * Q).sum(axis=1)
+    q_all = np.arange(len(qids))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            ids = rb.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+            if compressed:
+                B = list_matrix(rb, "q8", dim).astype(np.float64)
+                B = B * rb.column("q8_scale").to_numpy(zero_copy_only=False)[:, None]
+            else:
+                B = list_matrix(rb, "__vec", dim).astype(np.float64, copy=False)
+            bucket = (
+                None
+                if q_by_bucket is None
+                else rb.column("centroid_id").to_numpy(zero_copy_only=False)
+            )
+            if metric == "cosine":
+                bn = np.linalg.norm(B, axis=1)
+                valid = bn != 0
+                if not valid.all():
+                    ids, B, bn = ids[valid], B[valid], bn[valid]
+                    if bucket is not None:
+                        bucket = bucket[valid]
+                    if B.shape[0] == 0:
+                        continue
+                B = B / bn[:, None]
+            # the layout is partitioned by centroid_id, so a batch
+            # holds one (rarely a few) buckets: score each bucket's
+            # rows against ONLY the queries that probe it — compute
+            # is exactly the probed (query, vector) pairs
+            blocks = (
+                [(q_all, slice(None))]
+                if bucket is None
+                else [
+                    (q_by_bucket.get(int(c)), np.nonzero(bucket == c)[0])
+                    for c in np.unique(bucket)
+                ]
+            )
+            out_q, out_i, out_s = [], [], []
+            for qsel, rsel in blocks:
+                if qsel is None:
+                    continue
+                Bb = B[rsel]
+                if metric == "euclidean":
+                    S = np.sqrt(
+                        np.maximum(
+                            (Bb * Bb).sum(axis=1)[:, None]
+                            - 2.0 * (Bb @ Qm[qsel].T)
+                            + q_sq[qsel][None, :],
+                            0.0,
+                        )
+                    )
+                else:
+                    S = Bb @ Qm[qsel].T  # (rows_in_bucket, probing_q)
+                kk = min(k, Bb.shape[0])
+                part = np.argpartition(S if smaller else -S, kk - 1, axis=0)[:kk, :]
+                rows_q = np.repeat(np.arange(len(qsel)), kk)
+                rows_i = part.T.reshape(-1)
+                out_q.append(qids[qsel][rows_q])
+                out_i.append(ids[rsel][rows_i])
+                out_s.append(S[rows_i, rows_q])
+            if out_q:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.concatenate(out_q), type=pa.int64()),
+                        pa.array(np.concatenate(out_i), type=pa.int64()),
+                        pa.array(np.concatenate(out_s), type=pa.float64()),
+                    ],
+                    names=["query_id", "vec_id", "score"],
+                )
+
+    scored = cand.mapInArrow(kernel, "query_id long, vec_id long, score double")
+    return rank_top_k(scored, k, metric)
+
+
 def ivf_topk_gemm(
     queries: DataFrame,
     index: DataFrame,
@@ -299,12 +438,10 @@ def ivf_topk_gemm(
     (``pinecone_service.py:33-39``). Probe sets are computed
     driver-side from the centroid matrix (tiny), the scan is
     statically pruned to the probed buckets, and each Arrow batch is
-    scored bucket-by-bucket against only the queries probing it.
-
-    Zero-norm index vectors under cosine are dropped before top-k
-    selection (the expression path gives them NULL scores, which sort
-    last; a NaN from 0/0 would instead sort FIRST in descending numpy
-    partitions — the one place the two paths could diverge).
+    scored bucket-by-bucket against only the queries probing it
+    (:func:`gemm_topk`). A null vector, or one whose length differs
+    from the query dimension, raises ``ValueError``; so does a
+    zero-norm centroid under cosine.
 
     Transparently handles int8-compressed layouts
     (``write_ivf_index(compression="int8")``): when the index carries
@@ -336,9 +473,6 @@ def ivf_topk_gemm(
         # the SAME pruned scan (PushedFilters next to PartitionFilters)
         # — filtered rows never reach the GEMM kernel
         pruned = pruned.filter(pre_filter)
-    names = ["query_id", "vec_id", "score"]
-    smaller_better = metric == "euclidean"
-    q_sq = (Q * Q).sum(axis=1)
 
     # queries probing each bucket, precomputed once per worker
     q_by_bucket: dict[int, "np.ndarray"] = {}
@@ -347,98 +481,12 @@ def ivf_topk_gemm(
             q_by_bucket.setdefault(c, []).append(qi)
     q_by_bucket = {c: np.array(v, dtype=np.int64) for c, v in q_by_bucket.items()}
 
-    def kernel(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            name_list = rb.schema.names
-            ids = rb.column(name_list.index("vec_id")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            bucket = rb.column(name_list.index("centroid_id")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            vec_arr = rb.column(name_list.index("q8" if compressed else "__vec"))
-            if isinstance(vec_arr, pa.ChunkedArray):
-                vec_arr = vec_arr.combine_chunks()
-            B = (
-                vec_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, -1)
-                .astype(np.float64, copy=False)
-            )
-            if compressed:
-                scales = rb.column(name_list.index("q8_scale")).to_numpy(
-                    zero_copy_only=False
-                )
-                B = B * scales[:, None]
-            if metric == "cosine":
-                bn = np.linalg.norm(B, axis=1)
-                valid = bn != 0
-                if not valid.all():
-                    ids, bucket, B, bn = ids[valid], bucket[valid], B[valid], bn[valid]
-                    if B.shape[0] == 0:
-                        continue
-                B = B / bn[:, None]
-            out_q, out_i, out_s = [], [], []
-            # the layout is partitioned by centroid_id, so a batch
-            # holds one (rarely a few) buckets: score each bucket's
-            # rows against ONLY the queries that probe it — compute
-            # is exactly the probed (query, vector) pairs
-            for c in np.unique(bucket):
-                qsel = q_by_bucket.get(int(c))
-                if qsel is None:
-                    continue
-                rsel = np.nonzero(bucket == c)[0]
-                if metric == "euclidean":
-                    Bb = B[rsel]
-                    S = np.sqrt(
-                        np.maximum(
-                            (Bb * Bb).sum(axis=1)[:, None]
-                            - 2.0 * (Bb @ Qm[qsel].T)
-                            + q_sq[qsel][None, :],
-                            0.0,
-                        )
-                    )
-                else:
-                    S = B[rsel] @ Qm[qsel].T  # (rows_in_bucket, probing_q)
-                kk = min(k, len(rsel))
-                part = np.argpartition(S if smaller_better else -S, kk - 1, axis=0)[
-                    :kk, :
-                ]
-                rows_q = np.repeat(np.arange(len(qsel)), kk)
-                rows_i = part.T.reshape(-1)
-                out_q.append(qids[qsel][rows_q])
-                out_i.append(ids[rsel][rows_i])
-                out_s.append(S[rows_i, rows_q])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_i), type=pa.int64()),
-                        pa.array(np.concatenate(out_s), type=pa.float64()),
-                    ],
-                    names=names,
-                )
-
     cand_cols = [F.col(id_col).alias("vec_id"), F.col("centroid_id")] + (
         [F.col("q8"), F.col("q8_scale")]
         if compressed
         else [F.col(vec_col).alias("__vec")]
     )
-    cand = pruned.select(*cand_cols).mapInArrow(
-        kernel, "query_id long, vec_id long, score double"
-    )
-    lead = F.col("score").asc() if smaller_better else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return gemm_topk(pruned.select(*cand_cols), qids, Q, Qm, metric, k, q_by_bucket)
 
 
 def ivf_topk_rerank(
@@ -491,20 +539,15 @@ def ivf_topk_rerank(
     )
     pairs = idx.join(F.broadcast(cand), "vec_id").join(F.broadcast(qb), "query_id")
     if metric == "cosine":
-        denom = F.col("__qnorm") * l2_norm(F.col("__vec"))
-        score = F.when(
-            denom != 0.0, dot_product(F.col("__qvec"), F.col("__vec")) / denom
+        score = cosine_from(
+            dot_product(F.col("__qvec"), F.col("__vec")),
+            F.col("__qnorm"),
+            l2_norm(F.col("__vec")),
         )
     else:
         score = similarity_expr(metric, F.col("__qvec"), F.col("__vec"))
     scored = pairs.select("query_id", "vec_id", score.alias("score"))
-    lead = F.col("score").asc() if metric == "euclidean" else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return rank_top_k(scored, k, metric)
 
 
 def write_ivf_index(
@@ -531,11 +574,6 @@ def write_ivf_index(
     bounded by max|x|/254 per coordinate (see
     ``functions.vector.quantize_int8``; quality profiled by the
     ``vector_quantization_error`` query)."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
-        quantization_scale,
-        quantize_int8,
-    )
-
     if compression not in (None, "int8"):
         raise ValueError("compression must be None or 'int8'")
     check_centroid_ids(centroids)
@@ -611,11 +649,15 @@ def load_centroids(path: str) -> list[tuple[int, list[float]]]:
     """Recover the exact build-time quantizer from the layout sidecar
     (survives process restarts — ``seed_centroids`` re-run against the
     since-mutated corpus would yield a DIFFERENT list)."""
-    meta = ivf_meta(path)
+    return sidecar_centroids(ivf_meta(path))
+
+
+def sidecar_centroids(meta: dict) -> list[tuple[int, list[float]]]:
+    """The build-time centroid list of an already-parsed sidecar."""
     if "centroids" not in meta:
         raise ValueError(
-            f"layout at {path} predates centroid persistence (no 'centroids' "
-            "in sidecar); rebuild with write_ivf_index to enable recovery"
+            "layout sidecar predates centroid persistence (no 'centroids'); "
+            "rebuild with write_ivf_index to enable recovery"
         )
     return [(int(cid), [float(x) for x in vec]) for cid, vec in meta["centroids"]]
 
@@ -737,7 +779,7 @@ def upsert_ivf_index(
             f"centroid_hash in {IVF_META}); rebuild with write_ivf_index"
         )
     if centroids is None:
-        centroids = load_centroids(path)
+        centroids = sidecar_centroids(meta)
     else:
         got = _centroid_hash(centroids)
         if got != meta["centroid_hash"]:
@@ -849,9 +891,10 @@ def ivf_topk(
         idx = assign_centroids(index, centroids, metric, vec_col)
     if metric == "cosine":
         idx = idx.withColumn("__vnorm", l2_norm(F.col(vec_col).cast("array<double>")))
-        denom = F.col("__qnorm") * F.col("__vnorm")
-        score = F.when(
-            denom != 0.0, dot_product(F.col("__qvec"), F.col(vec_col)) / denom
+        score = cosine_from(
+            dot_product(F.col("__qvec"), F.col(vec_col)),
+            F.col("__qnorm"),
+            F.col("__vnorm"),
         )
     else:
         score = similarity_expr(metric, F.col("__qvec"), F.col(vec_col))
@@ -860,13 +903,7 @@ def ivf_topk(
         F.col(id_col).alias("vec_id"),
         score.alias("score"),
     )
-    lead = F.col("score").asc() if metric == "euclidean" else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return rank_top_k(scored, k, metric)
 
 
 def split_skewed_centroids(

@@ -438,6 +438,7 @@ def embedding_neardup_pairs_ivf(
     Per-side norms are pre-projected once so each candidate pair
     folds only the dot product."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
+        cosine_from,
         dot_product,
         l2_norm,
     )
@@ -459,9 +460,11 @@ def embedding_neardup_pairs_ivf(
         v.alias("__vb"),
         l2_norm(v).alias("__nb"),
     )
-    denom = F.col("__na") * F.col("__nb")
     cos = F.round(
-        F.when(denom != 0.0, dot_product(F.col("__va"), F.col("__vb")) / denom), 6
+        cosine_from(
+            dot_product(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb")
+        ),
+        6,
     )
     return (
         a.join(b, "centroid_id")

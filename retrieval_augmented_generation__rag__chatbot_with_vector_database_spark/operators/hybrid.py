@@ -45,6 +45,35 @@ IDF_DEC = "decimal(18,6)"
 DF_CAP_DEFAULT = 0.5
 
 
+def smoothed_idf() -> Column:
+    """The one TF-IDF term weight, from the ``n`` (corpus size) and
+    ``df`` columns: ``ln((N+1)/(df+1))`` rounded to 6 dp and cast to
+    DECIMAL so downstream sums are exact and order-free."""
+    return (
+        F.round(F.ln((F.col("n") + 1.0) / (F.col("df") + 1.0)), 6)
+        .cast(IDF_DEC)
+    )
+
+
+def bm25_idf() -> Column:
+    """BM25's smoothed IDF ``ln(1 + (N - df + 0.5)/(df + 0.5))`` from
+    the ``n`` and ``df`` columns."""
+    return F.ln(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+
+
+def bm25_weight(idf: Column, k1: float, b: float) -> Column:
+    """The one BM25 per-(doc, term) contribution from the ``tf``,
+    ``dl`` and ``avgdl`` columns: ``idf·tf·(k1+1) / (tf +
+    k1·(1-b+b·dl/avgdl))``, rounded to 6 dp and cast to DECIMAL so the
+    per-doc sum is exact across engines."""
+    return F.round(
+        idf
+        * (F.col("tf") * (k1 + 1.0))
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
+        6,
+    ).cast(IDF_DEC)
+
+
 def df_cap_bound(
     df_cap: float | int | None, n: float | int | Column
 ) -> float | Column | None:
@@ -105,12 +134,7 @@ def idf_table(
     capped = _df_cap_filter(
         df_counts.crossJoin(F.broadcast(n_docs_df)), df_cap
     )
-    return capped.select(
-        "term",
-        F.round(F.ln((F.col("n") + 1.0) / (F.col("df") + 1.0)), 6)
-        .cast(IDF_DEC)
-        .alias("idf"),
-    )
+    return capped.select("term", smoothed_idf().alias("idf"))
 
 
 def _lex_frames(
@@ -240,12 +264,7 @@ def bm25_topk(
     df_counts = tfs.groupBy("term").agg(F.countDistinct("id").alias("df"))
     idf = _df_cap_filter(
         df_counts.crossJoin(F.broadcast(stats)), df_cap
-    ).select(
-        "term",
-        F.ln(
-            1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
-    )
+    ).select("term", bm25_idf().alias("idf"))
     qterms = doc_terms(
         queries.select(F.col(query_id_col), F.col(query_text_col)),
         query_id_col,
@@ -258,17 +277,7 @@ def bm25_topk(
         .select(
             "query_id",
             F.col("id").alias("doc_id"),
-            F.round(
-                F.col("idf")
-                * (F.col("tf") * (k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-                ),
-                6,
-            )
-            .cast(IDF_DEC)
-            .alias("c"),
+            bm25_weight(F.col("idf"), k1, b).alias("c"),
         )
     )
     scores = contrib.groupBy("query_id", "doc_id").agg(

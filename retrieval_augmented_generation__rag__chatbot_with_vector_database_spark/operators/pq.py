@@ -39,11 +39,18 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
     check_metric,
+    smaller_is_better,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+    list_matrix,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
+    rank_top_k,
 )
 
 
@@ -456,26 +463,6 @@ def _adc_luts(targets, books, sub: int):
     return out
 
 
-def _list_matrix(batch, name: str, width: int):
-    """Arrow list column ``name`` of ``batch`` as an n × ``width``
-    matrix viewing the values buffer (zero-copy, stored dtype).
-    Raises unless every row holds exactly ``width`` values — a ragged
-    row would silently shift every later row's codes or coordinates."""
-    import numpy as np
-
-    col = batch.column(name)
-    off = np.asarray(col.offsets, dtype=np.int64)
-    widths = np.diff(off)
-    if not (widths == width).all():
-        raise ValueError(
-            f"{name} column is not fixed-width {width}: widths "
-            f"{sorted(set(int(w) for w in widths))[:5]}"
-        )
-    return np.asarray(col.values)[off[0] : off[-1]].reshape(
-        batch.num_rows, width
-    )
-
-
 def pq_topk(
     queries: DataFrame,
     encoded: DataFrame,
@@ -530,7 +517,7 @@ def pq_topk(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64, copy=False)
             )
-            codes = _list_matrix(batch, "codes", m).astype(
+            codes = list_matrix(batch, "codes", m).astype(
                 np.int64, copy=False
             )
             # dist[q][i] = sum_j lut[q][j][codes[i][j]]
@@ -546,13 +533,7 @@ def pq_topk(
             )
 
     scored = encoded.select(id_col, "codes").mapInArrow(kernel, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_top_k(scored, k, "euclidean", score="adc_dist")
 
 
 def pq_topk_rerank(
@@ -596,12 +577,7 @@ def pq_topk_rerank(
             similarity_expr(metric, F.col("__qvec"), F.col(vec_col)).alias("score"),
         )
     )
-    lead = F.col("score").asc() if metric == "euclidean" else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_top_k(rescored, k, metric)
 
 
 # ---------------------------------------------------------------- IVF × PQ
@@ -1143,7 +1119,7 @@ def ivfpq_topk_rerank(
     cent_payload = json.dumps(
         {int(c): [float(x) for x in v] for c, v in centroids}
     )
-    lead_asc = metric == "euclidean"
+    lead_asc = smaller_is_better(metric)
 
     def fused_kernel(batches):
         """Single-pass probe: ADC over the batch's probed buckets →
@@ -1271,14 +1247,14 @@ def ivfpq_topk_rerank(
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64, copy=False)
             )
-            codes = _list_matrix(batch, "codes", m).astype(
+            codes = list_matrix(batch, "codes", m).astype(
                 np.int64, copy=False
             )
             # zero-copy view in the STORED dtype; only the ≤ fetch_k
             # candidate rows per query are copied out below — widening
             # the whole batch would copy ~n×d×8 bytes for rows the
             # rerank never touches
-            V = _list_matrix(batch, vec_col, d_raw)
+            V = list_matrix(batch, vec_col, d_raw)
             bucket = (
                 batch.column("centroid_id")
                 .to_numpy(zero_copy_only=False)
@@ -1371,12 +1347,7 @@ def ivfpq_topk_rerank(
     scored = pruned.select(
         id_col, "codes", "centroid_id", vec_col
     ).mapInArrow(fused_kernel, "query_id long, vec_id long, score double")
-    lead = F.col("score").asc() if lead_asc else F.col("score").desc()
-    w = Window.partitionBy("query_id").orderBy(lead, F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_top_k(scored, k, metric)
 
 
 def retrain_ivfpq_index(

@@ -9,7 +9,7 @@ decision space is the engine's real strategy ladder:
 | path        | when                                            |
 |-------------|-------------------------------------------------|
 | ``ivfpq``   | layout dir carries ``_ivfpq_meta.json`` AND the metric matches the layout's transform: raw→euclidean, ``normalize``→cosine, ``mips``→dotproduct (a transformed layout serves exactly its own metric) |
-| ``ivf``     | layout dir carries ``_ivf_meta.json``           |
+| ``ivf``     | layout dir carries ``_ivf_meta.json`` AND the metric is the one the layout was assigned under |
 | ``exact_gemm`` | no layout: Arrow GEMM exact scan             |
 
 Rationale: a persisted inverted-file layout always beats rescanning
@@ -41,15 +41,19 @@ MIPS_FETCH_FLOOR = 0.01
 
 
 def route(layout_path: str | None = None, metric: str = "cosine") -> dict:
-    """Pick the search path. Returns {"path": ..., "reason": ...};
-    raises on an unknown metric and on contradictions (an IVFPQ
-    layout's ADC is squared-L2, so it serves exactly the metric its
-    build flags define — see ``pq.check_layout_metric``)."""
+    """Pick the search path. Returns {"path": ..., "reason": ...,
+    "meta": the parsed layout sidecar, None without a layout}; raises
+    on an unknown metric and on contradictions (an IVFPQ layout's ADC
+    is squared-L2, so it serves exactly the metric its build flags
+    define — see ``pq.check_layout_metric``; an IVF layout's buckets
+    are nearest-centroid cells under its build metric, so probing them
+    in another metric's centroid order would prune the wrong cells)."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
         check_metric,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         IVF_META,
+        ivf_meta,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.pq import (
         IVFPQ_META,
@@ -59,7 +63,11 @@ def route(layout_path: str | None = None, metric: str = "cosine") -> dict:
 
     check_metric(metric)
     if layout_path is None:
-        return {"path": "exact_gemm", "reason": "no layout: Arrow GEMM exact scan"}
+        return {
+            "path": "exact_gemm",
+            "reason": "no layout: Arrow GEMM exact scan",
+            "meta": None,
+        }
     if os.path.exists(os.path.join(layout_path, IVFPQ_META)):
         meta = load_ivfpq_meta(layout_path)
         check_layout_metric(
@@ -72,11 +80,18 @@ def route(layout_path: str | None = None, metric: str = "cosine") -> dict:
             "dotproduct": f"{IVFPQ_META} present, MIPS-augmented: ADC "
             "order ≡ dot-product order + dotproduct rerank",
         }[metric]
-        return {"path": "ivfpq", "reason": reason}
+        return {"path": "ivfpq", "reason": reason, "meta": meta}
     if os.path.exists(os.path.join(layout_path, IVF_META)):
+        meta = ivf_meta(layout_path)
+        if meta["metric"] != metric:
+            raise ValueError(
+                f"IVF layout at {layout_path!r} was assigned under "
+                f"{meta['metric']!r}; it cannot serve metric={metric!r}"
+            )
         return {
             "path": "ivf",
             "reason": f"{IVF_META} present: partition-pruned nprobe probe",
+            "meta": meta,
         }
     raise ValueError(
         f"layout_path {layout_path!r} has neither {IVFPQ_META} nor "
@@ -114,15 +129,14 @@ def search(
     pruned buckets, and the IVFPQ probe needs the layout built with
     ``meta_cols`` carrying the filtered columns (single-stage
     filtering: the top-k is the filtered corpus's own)."""
-    path = route(layout_path, metric)["path"]
+    r = route(layout_path, metric)
+    path, meta = r["path"], r["meta"]
 
     if path == "ivfpq":
         from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.pq import (
             ivfpq_topk_rerank,
-            load_ivfpq_meta,
         )
 
-        meta = load_ivfpq_meta(layout_path)
         if metric == "dotproduct":
             import math
 
@@ -151,15 +165,15 @@ def search(
     if path == "ivf":
         from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
             ivf_topk_gemm,
-            load_centroids,
             read_ivf_index,
+            sidecar_centroids,
         )
 
         spark = queries.sparkSession
         return ivf_topk_gemm(
             queries,
             read_ivf_index(spark, layout_path),
-            load_centroids(layout_path),
+            sidecar_centroids(meta),
             k=k,
             nprobe=nprobe,
             metric=metric,

@@ -33,9 +33,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
+    cosine_from,
     dot_product,
     l2_norm,
     similarity_expr,
+    smaller_is_better,
 )
 
 TOP_K_MIN, TOP_K_MAX = 1, 20  # app/api/routes.py:31
@@ -46,9 +48,23 @@ def clamp_top_k(k: int) -> int:
 
 
 def _order(metric: str, score: Column, id_col: Column) -> list[Column]:
-    # euclidean: smaller is closer; cosine/dotproduct: larger is better
-    lead = score.asc() if metric == "euclidean" else score.desc()
+    lead = score.asc() if smaller_is_better(metric) else score.desc()
     return [lead, id_col.asc()]
+
+
+def rank_top_k(scored: DataFrame, k: int, metric: str,
+               score: str = "score") -> DataFrame:
+    """The one per-query vector top-k window: ``rank`` = row_number
+    over (``score`` in the metric's order, ``vec_id`` asc) per
+    ``query_id``, kept while ``rank <= k``. Spark inserts a
+    WindowGroupLimit below the shuffle, so each map task ships only its
+    local top-k per query."""
+    w = Window.partitionBy("query_id").orderBy(
+        *_order(metric, F.col(score), F.col("vec_id"))
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def topk_search(
@@ -102,9 +118,10 @@ def topk_search(
         else index.join(F.broadcast(q))
     )
     if metric == "cosine":
-        denom = F.col("__qnorm") * F.col("__vnorm")
-        score = F.when(
-            denom != 0.0, dot_product(F.col("__qvec"), F.col(vec_col)) / denom
+        score = cosine_from(
+            dot_product(F.col("__qvec"), F.col(vec_col)),
+            F.col("__qnorm"),
+            F.col("__vnorm"),
         )
     else:
         score = similarity_expr(metric, F.col("__qvec"), F.col(vec_col))
@@ -114,13 +131,8 @@ def topk_search(
         score.alias("score"),
         *[F.col(c) for c in payload_cols],
     )
-    w = Window.partitionBy("query_id").orderBy(
-        *_order(metric, F.col("score"), F.col("vec_id"))
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank", *payload_cols)
+    return rank_top_k(scored, k, metric).select(
+        "query_id", "vec_id", "score", "rank", *payload_cols
     )
 
 
@@ -144,16 +156,18 @@ def topk_search_gemm(
     batch becomes one dense GEMM against it, and only each batch's
     local top-k per query survives to the global top-k window. The
     shuffle moves O(|Q|·k·batches) rows; the index is scanned once,
-    never shuffled.
+    never shuffled. The kernel is the IVF probe's
+    (``ann.gemm_topk``) with no pruning: one bucket that every query
+    probes.
 
     ``mapInArrow`` (not mapInPandas) matters: the vector column is
-    reshaped from the Arrow list buffer in one zero-copy flatten —
-    pandas would convert every cell to an ndarray individually,
-    costing ~50x the GEMM itself. ~100x less per-score CPU than the
-    interpreted higher-order-function fold (use ``topk_search`` when
-    bit-exact fold-order parity with a SQL oracle matters more than
-    speed — GEMM reorders the accumulation). Assumes null-free,
-    equal-length vectors (the index dim invariant).
+    viewed straight from the Arrow list buffer — pandas would convert
+    every cell to an ndarray individually, costing ~50x the GEMM
+    itself. ~100x less per-score CPU than the interpreted
+    higher-order-function fold (use ``topk_search`` when bit-exact
+    fold-order parity with a SQL oracle matters more than speed —
+    GEMM reorders the accumulation). A null vector, or one whose
+    length differs from the query dimension, raises ``ValueError``.
 
     The query collect is bounded (``ann.MAX_GEMM_QUERIES``, loud
     failure; an unknown metric raises there too) and
@@ -162,78 +176,17 @@ def topk_search_gemm(
     descending numpy partition, handing NaN rows the top-k slots the
     expression path (NULL score, sorts last) would never give them.
     """
-    import numpy as np
-
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         collect_query_matrix,
+        gemm_topk,
     )
 
     k = clamp_top_k(k)
     if pre_filter is not None:
         index = index.filter(pre_filter)
-
     qids, Q, Qm = collect_query_matrix(queries, query_id_col, query_vec_col, metric)
-    smaller_better = metric == "euclidean"
-    q_sq = (Q * Q).sum(axis=1)
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            vec_arr = rb.column(1)
-            if isinstance(vec_arr, pa.ChunkedArray):
-                vec_arr = vec_arr.combine_chunks()
-            flat = vec_arr.flatten().to_numpy(zero_copy_only=False)
-            B = flat.reshape(n, -1).astype(np.float64, copy=False)
-            if metric == "cosine":
-                bn = np.linalg.norm(B, axis=1)
-                valid = bn != 0
-                if not valid.all():
-                    ids, B, bn = ids[valid], B[valid], bn[valid]
-                    n = B.shape[0]
-                    if n == 0:
-                        continue
-                B = B / bn[:, None]
-                S = B @ Qm.T  # (batch, q)
-            elif metric == "dotproduct":
-                S = B @ Qm.T
-            else:  # euclidean: |b|^2 - 2 b.q + |q|^2
-                S = np.sqrt(
-                    np.maximum(
-                        (B * B).sum(axis=1)[:, None] - 2.0 * (B @ Qm.T) + q_sq[None, :],
-                        0.0,
-                    )
-                )
-            kk = min(k, n)
-            # per-query local top-k within this batch
-            key = S if smaller_better else -S
-            part = np.argpartition(key, kk - 1, axis=0)[:kk, :]  # (kk, q)
-            rows_q = np.repeat(np.arange(len(qids)), kk)
-            rows_i = part.T.reshape(-1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rows_q], type=pa.int64()),
-                    pa.array(ids[rows_i], type=pa.int64()),
-                    pa.array(S[rows_i, rows_q], type=pa.float64()),
-                ],
-                names=["query_id", "vec_id", "score"],
-            )
-
-    cand = index.select(F.col(id_col).alias(id_col), F.col(vec_col)).mapInArrow(
-        kernel, "query_id long, vec_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        *_order(metric, F.col("score"), F.col("vec_id"))
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    cand = index.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec"))
+    return gemm_topk(cand, qids, Q, Qm, metric, k)
 
 
 def topk_single(
@@ -261,8 +214,9 @@ def topk_single(
         for x in query_vector:
             qn += float(x) * float(x)
         qn **= 0.5
-        denom = F.lit(qn) * l2_norm(F.col(vec_col))
-        score = F.when(denom != 0.0, dot_product(qvec, F.col(vec_col)) / denom)
+        score = cosine_from(
+            dot_product(qvec, F.col(vec_col)), F.lit(qn), l2_norm(F.col(vec_col))
+        )
     else:
         score = similarity_expr(metric, qvec, F.col(vec_col))
     scored = index.select(

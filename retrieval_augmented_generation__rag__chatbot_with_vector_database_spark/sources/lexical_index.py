@@ -76,8 +76,10 @@ from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.hybrid import (
     DF_CAP_DEFAULT,
-    IDF_DEC,
+    bm25_idf,
+    bm25_weight,
     df_cap_bound,
+    smoothed_idf,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
@@ -752,9 +754,7 @@ class LexicalIndex:
             cand.select(
                 "query_id",
                 F.col("id").alias("doc_id"),
-                F.round(
-                    F.ln((F.col("n") + 1.0) / (F.col("df") + 1.0)), 6
-                ).cast(IDF_DEC).alias("idf"),
+                smoothed_idf().alias("idf"),
             )
             .groupBy("query_id", "doc_id")
             .agg(F.sum("idf").alias("lex_score"))
@@ -788,18 +788,7 @@ class LexicalIndex:
             cand.select(
                 "query_id",
                 F.col("id").alias("doc_id"),
-                F.round(
-                    F.ln(
-                        1.0
-                        + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    )
-                    * (F.col("tf") * (k1 + 1.0))
-                    / (
-                        F.col("tf")
-                        + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-                    ),
-                    6,
-                ).cast(IDF_DEC).alias("c"),
+                bm25_weight(bm25_idf(), k1, b).alias("c"),
             )
             .groupBy("query_id", "doc_id")
             .agg(F.sum("c").alias("bm25_score"))

@@ -53,6 +53,17 @@ def test_route_ivf_layout(spark, emb, tmp_path):
     assert route(layout_path=path)["path"] == "ivf"
 
 
+def test_route_ivf_layout_metric_guard(spark, emb, tmp_path):
+    """An IVF layout's buckets are nearest-centroid cells under its
+    build metric; probing them in another metric's centroid order
+    would prune the wrong cells, so the router refuses."""
+    path = str(tmp_path / "ivf")
+    ann.write_ivf_index(emb, path, ann.seed_centroids(emb, 8), metric="cosine")
+    with pytest.raises(ValueError, match="assigned under 'cosine'"):
+        search(_queries(emb), k=3, metric="euclidean", layout_path=path)
+    assert route(layout_path=path, metric="cosine")["meta"]["metric"] == "cosine"
+
+
 def test_route_ivfpq_layout_and_metric_guard(spark, emb, tmp_path):
     path = str(tmp_path / "ivfpq")
     books = pq.train_pq_codebooks(emb, m=8, k=16)

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
     clamp_top_k,
     topk_search,
+    topk_search_gemm,
     topk_single,
 )
 
@@ -149,6 +150,31 @@ def test_gemm_query_bound_raises(spark, emb, monkeypatch):
     q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     with pytest.raises(ValueError, match="exceeds 50"):
         topk_search_gemm(q, emb, k=5)
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
+def test_gemm_scan_matches_expression_reference(emb, metric):
+    """Same (query_id, rank) → vec_id as the bit-exact expression scan,
+    scores equal to 1e-9. Euclidean compares squared distances: the
+    GEMM expands |b-q|² = |b|² - 2b·q + |q|², whose ~1e-16 cancellation
+    error becomes ~1e-8 after the sqrt at a self match (distance 0)."""
+    q = emb.filter(F.col("vec_id") % 50 == 7).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    ref = {
+        (r["query_id"], r["rank"]): (r["vec_id"], r["score"])
+        for r in topk_search(q, emb, k=6, metric=metric).collect()
+    }
+    got = {
+        (r["query_id"], r["rank"]): (r["vec_id"], r["score"])
+        for r in topk_search_gemm(q, emb, k=6, metric=metric).collect()
+    }
+    assert len(ref) == 60
+    assert set(got) == set(ref)
+    sq = (lambda x: x * x) if metric == "euclidean" else (lambda x: x)
+    for key, (vid, score) in ref.items():
+        assert got[key][0] == vid
+        assert sq(got[key][1]) == pytest.approx(sq(score), abs=1e-9)
 
 
 def _mmr_reference(ids, rel, vecs, k, lam):
