@@ -1,6 +1,5 @@
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
     topk_search,
-    topk_single,
 )
 
-__all__ = ["topk_search", "topk_single"]
+__all__ = ["topk_search"]

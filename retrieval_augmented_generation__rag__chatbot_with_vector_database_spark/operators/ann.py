@@ -12,19 +12,19 @@ Design (FAISS-style IVF, Spark-first):
    them with standard k-means iterations when quality matters more
    than oracle parity.
 2. **Assignment is a map, not a join**: centroids are collected to
-   the driver (k·dim doubles — tiny by construction) and inlined as
-   a literal array, so every index vector gets its nearest-centroid
-   id inside a single narrow projection. No shuffle, no join; at
-   100 TB this is one pass over the index, fully parallel.
+   the driver (k·dim doubles — tiny by construction) and closed over
+   by one ``mapInArrow`` GEMM kernel, so every index vector gets its
+   nearest-centroid id inside a single narrow stage. No shuffle, no
+   join; at 100 TB this is one pass over the index, fully parallel.
 3. **Layout**: ``write_ivf_index`` writes the assigned index
-   partitioned by ``centroid_id``. A probe that joins on
-   ``centroid_id`` then touches only ``nprobe`` of ``k`` partitions
-   (Parquet partition pruning / dynamic partition pruning at scale).
-4. **Probe**: score query↔centroids (tiny), take ``nprobe`` best
-   centroids per query, join the (query, centroid) probe pairs
-   against the assigned index — a broadcast hash join on
-   ``centroid_id`` — and run the exact scorer + per-query top-k
-   window on the surviving ~nprobe/k fraction of the index.
+   partitioned by ``centroid_id``. A probe touches only the ``nprobe``
+   of ``k`` partitions its queries pick (static Parquet partition
+   pruning).
+4. **Probe**: score query↔centroids on the driver (tiny), take the
+   ``nprobe`` best centroids per query, scan only the probed
+   partitions and score each Arrow batch bucket by bucket against the
+   queries probing it (``gemm_topk``), then the per-query top-k
+   window.
 
 Recall is tunable by ``nprobe`` (see the ``ann_ivf_recall`` query:
 IVF@nprobe vs the exact scan, per query).
@@ -35,7 +35,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
@@ -112,10 +112,10 @@ def _py_l2(vec: list[float]) -> float:
 
 def check_centroid_norms(centroids: list[tuple[int, list[float]]],
                          metric: str) -> None:
-    """Under cosine a zero-norm centroid has no direction: the
-    expression path would give every row a NULL score against it and
-    the GEMM path a NaN, and the two disagree on which rows it
-    captures. Both assign paths and both probes refuse it up front."""
+    """Under cosine a zero-norm centroid has no direction: every row
+    would score NaN against it, and which rows it captured would be an
+    accident of the kernel. The assignment kernel and the probe refuse
+    it up front."""
     if metric != "cosine":
         return
     for cid, vec in centroids:
@@ -126,66 +126,13 @@ def check_centroid_norms(centroids: list[tuple[int, list[float]]],
             )
 
 
-def _centroid_literal(centroids: list[tuple[int, list[float]]]) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(cid).cast("int").alias("cid"),
-                F.lit(vec).cast("array<double>").alias("cvec"),
-                F.lit(_py_l2(vec)).alias("cnorm"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-
-
-def _best_centroids(vec: Column, centroids: list[tuple[int, list[float]]],
-                    metric: str, n: int, vec_norm: Column | None = None) -> Column:
-    """Array of the ``n`` best centroid ids for ``vec`` — computed
-    entirely inside one projection (sort a k-element struct array;
-    ties break to the lower centroid id, mirroring the oracle's
-    ``ORDER BY sim DESC, cid``).
-
-    For cosine, pass ``vec_norm`` (pre-projected once) — centroid
-    norms are baked into the literal — so each of the k comparisons
-    folds only the dot product instead of re-folding both norms."""
-    check_centroid_norms(centroids, metric)
-    carr = _centroid_literal(centroids)
-    # sort ascending on the score when smaller is better, else on -score
-    def keyed(c: Column) -> Column:
-        if metric == "cosine" and vec_norm is not None:
-            s = cosine_from(dot_product(vec, c["cvec"]), vec_norm, c["cnorm"])
-        else:
-            s = similarity_expr(metric, vec, c["cvec"])
-        key = s if smaller_is_better(metric) else -s
-        return F.struct(key.alias("key"), c["cid"].alias("cid"))
-
-    ranked = F.array_sort(F.transform(carr, keyed))
-    return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
-
-
-def assign_centroids(
-    index: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    metric: str = "cosine",
-    vec_col: str = "embedding",
-    out_col: str = "centroid_id",
-) -> DataFrame:
-    """Add ``centroid_id`` = nearest centroid, as a narrow map stage
-    (no shuffle — see module doc #2)."""
-    v = F.col(vec_col).cast("array<double>")
-    if metric == "cosine":
-        index = index.withColumn("__vnorm", l2_norm(v))
-        best = _best_centroids(v, centroids, metric, 1, vec_norm=F.col("__vnorm"))
-        return index.withColumn(out_col, best[0]).drop("__vnorm")
-    best = _best_centroids(v, centroids, metric, 1)
-    return index.withColumn(out_col, best[0])
-
-
 def _centroid_matrix(centroids: list[tuple[int, list[float]]], metric: str):
+    """(cids, C) in ascending cid order, so a first-maximum argmax or a
+    stable argsort over C breaks score ties to the lowest cid."""
     import numpy as np
 
     check_centroid_norms(centroids, metric)
+    centroids = sorted(centroids, key=lambda c: c[0])
     cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
     C = np.array([v for _, v in centroids], dtype=np.float64)
     if metric == "cosine":
@@ -200,15 +147,14 @@ def assign_centroids_gemm(
     vec_col: str = "embedding",
     out_col: str = "centroid_id",
 ) -> DataFrame:
-    """GEMM variant of ``assign_centroids`` for the build path: one
-    ``mapInArrow`` matmul per Arrow batch instead of k interpreted
-    folds per row (~50x at k=64). Same nearest-centroid argmax with
-    the same lowest-cid tiebreak (np.argmax keeps the first maximum
-    and the centroid list is cid-ordered). Use the expression form
-    when bit-exact oracle parity matters. An unknown ``metric`` raises
-    (the kernel's ``else`` branch would assign by euclidean), and so
-    does a null vector or one whose length is not the centroid
-    dimension."""
+    """Add ``out_col`` = the nearest centroid's id under ``metric``: one
+    ``mapInArrow`` matmul per Arrow batch (the engine's only centroid
+    assignment kernel). Ties go to the lowest cid (np.argmax keeps the
+    first maximum over the cid-ordered centroid matrix); under cosine
+    a zero-norm row scores -inf everywhere and so lands in the lowest
+    cid. An unknown ``metric`` raises (the kernel's ``else`` branch
+    would assign by euclidean), and so does a null vector or one whose
+    length is not the centroid dimension."""
     import numpy as np
 
     check_metric(metric)
@@ -334,8 +280,11 @@ def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
     expression path's NULL sorts last) and normalize → per bucket, one
     score block against only the queries probing it (``q_by_bucket``:
     bucket → query indices; ``None`` is the unpruned scan, one bucket
-    every query probes) → per-query ``argpartition`` top-k, merged by
-    :func:`topk.rank_top_k`."""
+    every query probes) → per query, every row whose score is at least
+    as good as the k-th best, merged by :func:`topk.rank_top_k`. Rows
+    tied at the k-th score all survive the batch, so the window's
+    (score, ``vec_id``) order decides among them, as it does on every
+    other route."""
     import numpy as np
 
     dim = Q.shape[1]
@@ -399,10 +348,13 @@ def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
                     )
                 else:
                     S = Bb @ Qm[qsel].T  # (rows_in_bucket, probing_q)
+                key = S if smaller else -S
                 kk = min(k, Bb.shape[0])
-                part = np.argpartition(S if smaller else -S, kk - 1, axis=0)[:kk, :]
-                rows_q = np.repeat(np.arange(len(qsel)), kk)
-                rows_i = part.T.reshape(-1)
+                # a NaN k-th key (fewer than kk non-NaN scores) keeps
+                # the whole column, as a top-kk cut would have
+                kth = np.partition(key, kk - 1, axis=0)[kk - 1]
+                keep = (key <= kth[None, :]) | np.isnan(kth)[None, :]
+                rows_q, rows_i = np.nonzero(keep.T)
                 out_q.append(qids[qsel][rows_q])
                 out_i.append(ids[rsel][rows_i])
                 out_s.append(S[rows_i, rows_q])
@@ -433,8 +385,9 @@ def ivf_topk_gemm(
     vec_col: str = "embedding",
     pre_filter=None,
 ) -> DataFrame:
-    """Production probe: GEMM scoring over an ``assigned`` index
-    (``write_ivf_index`` layout), any of the reference's three metrics
+    """The IVF probe: GEMM scoring over an index that carries
+    ``centroid_id`` (a ``write_ivf_index`` layout, or a frame from
+    :func:`assign_centroids_gemm`), any of the reference's three metrics
     (``pinecone_service.py:33-39``). Probe sets are computed
     driver-side from the centroid matrix (tiny), the scan is
     statically pruned to the probed buckets, and each Arrow batch is
@@ -556,14 +509,11 @@ def write_ivf_index(
     centroids: list[tuple[int, list[float]]],
     metric: str = "cosine",
     vec_col: str = "embedding",
-    fast: bool = True,
     compression: str | None = None,
 ) -> None:
     """Materialize the IVF layout: parquet partitioned by
-    ``centroid_id`` so probes prune to ``nprobe`` directories.
-    ``fast=True`` assigns via the GEMM kernel (build throughput);
-    ``fast=False`` uses the expression form (bit-exact with the
-    oracle queries).
+    ``centroid_id`` so probes prune to ``nprobe`` directories. Rows are
+    assigned by :func:`assign_centroids_gemm`.
 
     ``compression="int8"`` stores symmetric per-vector int8
     quantization (``q8`` array<tinyint> + ``q8_scale``) INSTEAD of the
@@ -577,8 +527,7 @@ def write_ivf_index(
     if compression not in (None, "int8"):
         raise ValueError("compression must be None or 'int8'")
     check_centroid_ids(centroids)
-    assign = assign_centroids_gemm if fast else assign_centroids
-    assigned = assign(index, centroids, metric, vec_col)
+    assigned = assign_centroids_gemm(index, centroids, metric, vec_col)
     if compression == "int8":
         assigned = _compress_int8(assigned, vec_col)
     # sidecar row count rides the write job as an observed metric
@@ -730,7 +679,6 @@ def upsert_ivf_index(
     centroids: list[tuple[int, list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fast: bool = True,
 ) -> dict:
     """Incrementally merge ``records`` into an existing
     ``write_ivf_index`` layout — the ANN-side analogue of the flat
@@ -740,9 +688,8 @@ def upsert_ivf_index(
 
     Cost is O(|batch| + |touched centroid partitions|), not O(|index|):
 
-    1. assign each record to its nearest centroid (GEMM kernel by
-       default; expression form with ``fast=False`` for bit-exact
-       oracle parity) — a narrow map, no shuffle;
+    1. assign each record to its nearest centroid
+       (:func:`assign_centroids_gemm`) — a narrow map, no shuffle;
     2. ``sources.layout.upsert_keys``: one collect finds the new
        partitions and those holding OLD versions of the upserted ids
        (broadcast join of the tiny id batch against the layout's
@@ -789,11 +736,10 @@ def upsert_ivf_index(
                 "centroids=None to use the persisted list, or rebuild with "
                 "write_ivf_index to change quantizers"
             )
-    assign = assign_centroids_gemm if fast else assign_centroids
     # intra-batch LWW: one survivor per id, same md5-payload total
     # order as merge_last_write_wins (deterministic across runs)
     assigned = pick_survivors(
-        assign(records, centroids, metric, vec_col), id_col
+        assign_centroids_gemm(records, centroids, metric, vec_col), id_col
     ).localCheckpoint(eager=True)
     n_new = assigned.count()
     if n_new == 0:
@@ -836,76 +782,6 @@ def delete_ivf_ids(
     return delete_centroid_ids(spark, path, ids, id_col, IVF_META)
 
 
-def ivf_topk(
-    queries: DataFrame,
-    index: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assigned: bool = False,
-) -> DataFrame:
-    """IVF-pruned top-k: exact scoring restricted to the ``nprobe``
-    most promising centroid buckets per query.
-
-    ``assigned=True`` means ``index`` already carries ``centroid_id``
-    (e.g. read back from ``write_ivf_index`` — the production path,
-    which also gets partition pruning); otherwise assignment is
-    computed on the fly in the same scan.
-    """
-    qv = F.col(query_vec_col).cast("array<double>")
-    qbase = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        qv.alias("__qvec"),
-        *( [l2_norm(qv).alias("__qnorm")] if metric == "cosine" else [] ),
-    )
-    probe_pairs = qbase.select(
-        "query_id",
-        "__qvec",
-        *( ["__qnorm"] if metric == "cosine" else [] ),
-        F.explode(
-            _best_centroids(
-                F.col("__qvec"),
-                centroids,
-                metric,
-                nprobe,
-                vec_norm=F.col("__qnorm") if metric == "cosine" else None,
-            )
-        ).alias("centroid_id"),
-    )
-    if assigned:
-        # static partition-prune: the union of probed buckets is tiny
-        # and known up front (|Q| x nprobe driver-side rows), so an
-        # isin filter guarantees the parquet scan skips unprobed
-        # centroid_id partitions without relying on DPP kicking in
-        probed = [
-            r["centroid_id"]
-            for r in probe_pairs.select("centroid_id").distinct().collect()
-        ]
-        idx = index.filter(F.col("centroid_id").isin(probed))
-    else:
-        idx = assign_centroids(index, centroids, metric, vec_col)
-    if metric == "cosine":
-        idx = idx.withColumn("__vnorm", l2_norm(F.col(vec_col).cast("array<double>")))
-        score = cosine_from(
-            dot_product(F.col("__qvec"), F.col(vec_col)),
-            F.col("__qnorm"),
-            F.col("__vnorm"),
-        )
-    else:
-        score = similarity_expr(metric, F.col("__qvec"), F.col(vec_col))
-    scored = idx.join(F.broadcast(probe_pairs), "centroid_id").select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        score.alias("score"),
-    )
-    return rank_top_k(scored, k, metric)
-
-
 def split_skewed_centroids(
     index: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -914,7 +790,6 @@ def split_skewed_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_rounds: int = 5,
-    fast: bool = True,
 ) -> list[tuple[int, list[float]]]:
     """Split oversized IVF cells before materializing the layout
     (VERDICT r2 "what's wrong" #3): on skewed corpora (near-duplicate
@@ -951,10 +826,9 @@ def split_skewed_centroids(
     import warnings
 
     cur = sorted(centroids)
-    assign = assign_centroids_gemm if fast else assign_centroids
     need: dict[int, int] = {}
     for _ in range(max_rounds):
-        assigned = assign(index, cur, metric, vec_col)
+        assigned = assign_centroids_gemm(index, cur, metric, vec_col)
         counts = {
             int(r["centroid_id"]): int(r["n"])
             for r in assigned.groupBy("centroid_id")

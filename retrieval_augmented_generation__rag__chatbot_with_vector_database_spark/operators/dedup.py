@@ -428,7 +428,7 @@ def embedding_neardup_pairs_ivf(
     """Embedding near-dup pairs restricted to INTRA-CENTROID pairs —
     the sub-quadratic scale route the exact ``embedding_neardup_pairs``
     docstring promises: assign each vector to its nearest centroid
-    (narrow map, no shuffle — centroids inlined), then self-join on
+    (narrow GEMM map, no shuffle), then self-join on
     ``centroid_id`` only. Work drops from O(N²) to Σ|bucket|², the
     shuffle key is the centroid id, and near-duplicates — which sit
     close in embedding space — co-locate into the same bucket with
@@ -443,10 +443,10 @@ def embedding_neardup_pairs_ivf(
         l2_norm,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        assign_centroids,
+        assign_centroids_gemm,
     )
 
-    assigned = assign_centroids(df, centroids, metric="cosine", vec_col=vec_col)
+    assigned = assign_centroids_gemm(df, centroids, metric="cosine", vec_col=vec_col)
     v = F.col(vec_col).cast("array<double>")
     a = assigned.select(
         F.col(id_col).alias("id_a"),
@@ -478,110 +478,39 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
+    max_iter: int = 30,
 ) -> DataFrame:
     """Duplicate-GROUP clustering: undirected candidate pairs →
     ``(id, component)`` where ``component`` is the minimum id in the
     connected component — the step that turns pairwise near-dup
     evidence (LSH/SimHash/embedding pairs) into keep/drop decisions
-    (canonical survivor = the component id itself).
+    (canonical survivor = the component id itself). Every id named in
+    a pair gets one row; a self-pair ``(x, x)`` alone makes ``x`` its
+    own component.
 
-    Min-label propagation: each iteration every node takes the min of
-    its own label and its neighbors' labels (one join + one groupBy
-    per iteration, both on the node key). Iterations needed = graph
-    diameter; duplicate clusters are small and dense in practice, so
-    this converges in a handful of rounds. Convergence is detected
-    by counting the labels that changed, in the same 1-row aggregate
-    job that materializes the round (a label sum would overflow on
-    64-bit ids under ANSI, or wrap and stop early without it). Each
-    round's frontier is ``localCheckpoint``'ed to cut the exponential lineage
-    iterative joins would otherwise build. For web-scale graphs with
-    long chains swap in large-star/small-star; the operator contract
-    (pairs in, min-id components out) stays the same.
-    """
-    edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    edges = (
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("id").alias("b"), F.col("comp").alias("bcomp")),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("bcomp").alias("nbr_comp"))
-        )
-        step = (
-            labels.join(nbr_min, labels["id"] == nbr_min["a"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-                (F.col("nbr_comp") < F.col("comp")).alias("__changed"),
-            )
-            .localCheckpoint()
-        )
-        n_changed = step.agg(F.count(F.when(F.col("__changed"), 1))).first()[0]
-        labels = step.drop("__changed")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"connected_components hit max_iter={max_iter} before the "
-            "label fixpoint — long chains may be split across components; "
-            "raise max_iter or switch to large-star/small-star",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select("id", F.col("comp").alias("component"))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Same contract as :func:`connected_components` — undirected pairs
-    in, ``(id, component=min id in component)`` out — via alternating
-    LARGE-STAR / SMALL-STAR rounds (Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): the web-scale form whose
-    round count is O(log n) for ANY graph shape, where min-label
-    propagation needs diameter-many rounds (a 10^6-node chain = 10^6
-    rounds vs ~20).
-
-    Each round is two keyed groupBys + joins (the same shuffle cost as
-    one label-propagation round); per-round results are
+    Alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): the round count
+    is O(log n) for ANY graph shape, where min-label propagation needs
+    diameter-many rounds (a 10^6-node chain = 10^6 rounds vs ~20).
+    Each round is two keyed groupBys + joins; per-round results are
     ``localCheckpoint``'ed to cut iterative-join lineage. Convergence
     is an edge-set fixpoint, detected with a count + order-insensitive
-    xxhash checksum (1-row aggregate).
+    xxhash checksum (1-row aggregate; a label sum would overflow on
+    64-bit ids).
 
     - large-star: every node's strictly-larger neighbors re-attach to
       the min of its neighborhood (incl. itself);
     - small-star: oriented edges (big → small) re-attach each node's
       smaller neighbors (and itself) to that min.
 
-    At fixpoint the edges form stars (node → component min); isolated
-    input ids never appear (same as connected_components).
+    At fixpoint the edges form stars (node → component min).
     """
-    e = (
+    pairs = (
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
     )
+    e = pairs.filter(F.col("a") != F.col("b"))
 
     def checksum(edges: DataFrame):
         c = edges.select(
@@ -634,16 +563,21 @@ def connected_components_star(
         prev = cur
     if not converged:
         warnings.warn(
-            f"connected_components_star hit max_iter={max_iter} before the "
+            f"connected_components hit max_iter={max_iter} before the "
             "edge fixpoint — components may be unmerged; raise max_iter",
             RuntimeWarning,
             stacklevel=2,
         )
-    # stars: every edge is (node, component-min); roots label themselves
+    # stars: every edge is (node, component-min); roots label themselves,
+    # and so do self-pair ids, which the rounds never see. A self-pair id
+    # that also sits in a star keeps the star's (smaller) label.
+    loops = pairs.filter(F.col("a") == F.col("b"))
     return (
         e.select(F.col("a").alias("id"), F.col("b").alias("component"))
         .union(e.select(F.col("b").alias("id"), F.col("b").alias("component")))
-        .distinct()
+        .union(loops.select(F.col("a").alias("id"), F.col("a").alias("component")))
+        .groupBy("id")
+        .agg(F.min("component").alias("component"))
     )
 
 
@@ -651,21 +585,12 @@ def duplicate_groups(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
-    algorithm: str = "label_propagation",
+    max_iter: int = 30,
 ) -> DataFrame:
     """Component summary: one row per duplicate group —
     ``(component, n_members, members)`` with members as a sorted CSV
-    (the keep-id is the component id; everything else is droppable).
-    ``algorithm="star"`` swaps in large-star/small-star (O(log n)
-    rounds on any graph shape — the web-scale form); components are
-    identical either way."""
-    if algorithm == "star":
-        comp = connected_components_star(pairs, id_a, id_b, max_iter)
-    elif algorithm == "label_propagation":
-        comp = connected_components(pairs, id_a, id_b, max_iter)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    (the keep-id is the component id; everything else is droppable)."""
+    comp = connected_components(pairs, id_a, id_b, max_iter)
     return comp.groupBy("component").agg(
         F.count("*").alias("n_members"),
         F.concat_ws(",", F.sort_array(F.collect_list("id"))).alias("members"),

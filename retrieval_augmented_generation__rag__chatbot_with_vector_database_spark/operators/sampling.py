@@ -142,8 +142,8 @@ def leakage_safe_split(
 
     ``pairs`` is any near-dup pair set (id_a, id_b) — MinHash-LSH,
     SimHash, embedding — or a union of them; groups are its connected
-    components (min-label, ``operators.dedup``), singleton docs form
-    their own group. The group key feeds the same Knuth multiplicative
+    components (large-star/small-star, ``operators.dedup``), singleton
+    docs form their own group. The group key feeds the same Knuth multiplicative
     uniform as ``weighted_priority_sample`` (pure integer function →
     re-run/backfill stable and SQL-oracle-mirrorable), cut at
     ``bounds`` into train/val/test.

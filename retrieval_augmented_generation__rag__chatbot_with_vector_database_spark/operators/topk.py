@@ -189,48 +189,6 @@ def topk_search_gemm(
     return gemm_topk(cand, qids, Q, Qm, metric, k)
 
 
-def topk_single(
-    index: DataFrame,
-    query_vector: list[float],
-    k: int = 5,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pre_filter: Column | None = None,
-    payload_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Single-query top-k — ``ORDER BY score LIMIT k`` so Catalyst plans
-    TakeOrderedAndProject (per-partition heap, no full sort, no window
-    shuffle). This is the latency path for one interactive question.
-    """
-    k = clamp_top_k(k)
-    if pre_filter is not None:
-        index = index.filter(pre_filter)
-    qvec = F.lit(query_vector).cast("array<double>")
-    if metric == "cosine":
-        # query norm folds driver-side (same left-fold IEEE order as
-        # the engine); index norm projected once per row
-        qn = 0.0
-        for x in query_vector:
-            qn += float(x) * float(x)
-        qn **= 0.5
-        score = cosine_from(
-            dot_product(qvec, F.col(vec_col)), F.lit(qn), l2_norm(F.col(vec_col))
-        )
-    else:
-        score = similarity_expr(metric, qvec, F.col(vec_col))
-    scored = index.select(
-        F.col(id_col).alias("vec_id"),
-        score.alias("score"),
-        *[F.col(c) for c in payload_cols],
-    )
-    ordered = scored.orderBy(*_order(metric, F.col("score"), F.col("vec_id"))).limit(k)
-    w = Window.orderBy(*_order(metric, F.col("score"), F.col("vec_id")))
-    return ordered.withColumn("rank", F.row_number().over(w)).select(
-        "vec_id", "score", "rank", *payload_cols
-    )
-
-
 def mmr_rerank(
     candidates: DataFrame,
     k: int,

@@ -98,24 +98,27 @@ FROM ivf_ranked WHERE rank <= {K}
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned top-k (nprobe={N_PROBE} of {N_CENTROIDS} buckets):
-    exact scoring on ~nprobe/k of the index per query."""
+    exact scoring on ~nprobe/k of the index per query, over an index
+    assigned in the same plan (no layout written)."""
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
-    out = ann.ivf_topk(queries, emb, cents, k=K, nprobe=N_PROBE, metric="cosine")
+    out = ann.ivf_topk_gemm(
+        queries, ann.assign_centroids_gemm(emb, cents, "cosine"), cents,
+        k=K, nprobe=N_PROBE, metric="cosine",
+    )
     return out.select("query_id", "vec_id", F.round("score", 6).alias("score"), "rank")
 
 
 def _ivf_gemm_over_layout(spark: SparkSession, sf_dir: str, metric: str,
                           pre_filter=None) -> DataFrame:
     """Shared body for the production-path GEMM queries: materialize
-    the ``write_ivf_index`` partitioned layout (expression assignment,
-    bit-exact with the oracle's ``assign`` CTE), read it back, probe
+    the ``write_ivf_index`` partitioned layout, read it back, probe
     with ``ivf_topk_gemm`` (partition-pruned, bucket-wise GEMM)."""
     import tempfile
 
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivf"
-        ann.write_ivf_index(emb, path, cents, metric=metric, fast=False)
+        ann.write_ivf_index(emb, path, cents, metric=metric)
         layout = spark.read.parquet(path)
         out = ann.ivf_topk_gemm(
             queries, layout, cents, k=K, nprobe=N_PROBE, metric=metric,
@@ -202,9 +205,7 @@ def ann_ivf_topk_gemm_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivf8"
-        ann.write_ivf_index(
-            emb, path, cents, metric="cosine", fast=False, compression="int8"
-        )
+        ann.write_ivf_index(emb, path, cents, metric="cosine", compression="int8")
         layout = spark.read.parquet(path)
         out = ann.ivf_topk_gemm(
             queries, layout, cents, k=K, nprobe=N_PROBE, metric="cosine"
@@ -285,9 +286,7 @@ def ann_ivf_topk_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivf8"
-        ann.write_ivf_index(
-            emb, path, cents, metric="cosine", fast=False, compression="int8"
-        )
+        ann.write_ivf_index(emb, path, cents, metric="cosine", compression="int8")
         layout = spark.read.parquet(path)
         out = ann.ivf_topk_rerank(
             queries, layout, emb, cents, k=K, nprobe=N_PROBE, expand=4
@@ -315,11 +314,9 @@ def ann_ivf_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivf"
-        ann.write_ivf_index(
-            emb.filter(F.col("vec_id") % 5 != 0), path, cents, fast=False
-        )
+        ann.write_ivf_index(emb.filter(F.col("vec_id") % 5 != 0), path, cents)
         ann.upsert_ivf_index(
-            spark, path, emb.filter(F.col("vec_id") % 5 == 0), cents, fast=False
+            spark, path, emb.filter(F.col("vec_id") % 5 == 0), cents
         )
         layout = ann.read_ivf_index(spark, path)
         out = ann.ivf_topk_gemm(
@@ -382,7 +379,10 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@{K} of the IVF probe vs the exact brute-force scan,
     per query — the tuning dial for nprobe."""
     emb, queries, cents = _queries_and_centroids(spark, sf_dir)
-    ivf = ann.ivf_topk(queries, emb, cents, k=K, nprobe=N_PROBE, metric="cosine")
+    ivf = ann.ivf_topk_gemm(
+        queries, ann.assign_centroids_gemm(emb, cents, "cosine"), cents,
+        k=K, nprobe=N_PROBE, metric="cosine",
+    )
     exact = topk_search(queries, emb, k=K, metric="cosine")
     return (
         exact.select("query_id", "vec_id")
@@ -414,7 +414,7 @@ def ann_ivf_partition_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs before choosing k (empty/overfull buckets hurt recall and
     probe cost)."""
     emb, _, cents = _queries_and_centroids(spark, sf_dir)
-    assigned = ann.assign_centroids(emb, cents, metric="cosine")
+    assigned = ann.assign_centroids_gemm(emb, cents, metric="cosine")
     return assigned.groupBy("centroid_id").agg(F.count("*").alias("n_vectors"))
 
 

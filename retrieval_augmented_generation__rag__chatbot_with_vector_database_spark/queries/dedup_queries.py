@@ -222,7 +222,7 @@ FROM comp GROUP BY component
 @register("dedup_duplicate_groups", _DUP_GROUPS_ORACLE)
 def dedup_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate GROUPS: LSH candidate pairs (est Jaccard >= 0.25)
-    clustered into connected components via min-label propagation —
+    clustered into connected components via large-star/small-star —
     the keep/drop decision stage of corpus dedup (keep = component
     id, drop the rest). The oracle mirrors the closure with a
     recursive CTE."""
@@ -234,15 +234,14 @@ def dedup_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_duplicate_groups_star", _DUP_GROUPS_ORACLE)
 def dedup_duplicate_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate groups, clustered by LARGE-STAR/SMALL-STAR
-    connected components (O(log n) rounds on any graph shape — the
-    form that survives web-scale long-chain graphs where min-label
-    propagation needs diameter-many rounds). Same oracle: the
-    algorithms must agree exactly."""
+    """The same body as ``dedup_duplicate_groups``, kept under its
+    registered name: ``duplicate_groups`` has one connected-components
+    algorithm, large-star/small-star (O(log n) rounds on any graph
+    shape)."""
     pairs = dedup.minhash_lsh_pairs(
         load(spark, sf_dir, "documents"), n_hashes=16, bands=4, min_est=0.25
     )
-    return dedup.duplicate_groups(pairs, algorithm="star")
+    return dedup.duplicate_groups(pairs)
 
 
 @register(

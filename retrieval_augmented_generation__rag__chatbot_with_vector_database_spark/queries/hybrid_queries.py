@@ -364,7 +364,7 @@ def hybrid_rrf_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").alias("vec_rank"),
     )
     with tempfile.TemporaryDirectory() as tmp:
-        ann.write_ivf_index(emb, f"{tmp}/ivf", cents, metric="cosine", fast=False)
+        ann.write_ivf_index(emb, f"{tmp}/ivf", cents, metric="cosine")
         layout = spark.read.parquet(f"{tmp}/ivf")
         ivf = ann.ivf_topk_gemm(
             qv, layout, cents, k=VEC_K, nprobe=N_PROBE, metric="cosine"

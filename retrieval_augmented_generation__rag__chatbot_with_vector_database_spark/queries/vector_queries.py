@@ -629,7 +629,7 @@ def corpus_cluster_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cents = ann.seed_centroids(emb, N_MIX_CENTROIDS)
-    assigned = ann.assign_centroids(emb, cents, metric="cosine")
+    assigned = ann.assign_centroids_gemm(emb, cents, metric="cosine")
     w = Window.partitionBy("centroid_id").orderBy(
         key_uniform("vec_id").asc(), F.col("vec_id").asc()
     )

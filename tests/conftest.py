@@ -25,6 +25,24 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="module", autouse=True)
+def no_cached_frames_left_behind():
+    """Fail a module that leaves entries in Spark's CacheManager. A
+    cached frame outlives its module: later modules' plans read the
+    cached relation instead of the Parquet scan, and tests that pin
+    plan shape or an empty cache fail depending on module order. The
+    cache is cleared after reporting, so one leak fails one module."""
+    yield
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    if s is None:
+        return
+    if not s._jsparkSession.sharedState().cacheManager().isEmpty():
+        s.catalog.clearCache()
+        pytest.fail("module left CacheManager entries behind; unpersist what it caches")
+
+
 @pytest.fixture()
 def tear_last_commit():
     """Delete a stream checkpoint's last commit file (and its ``.crc``

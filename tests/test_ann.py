@@ -4,8 +4,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
+    similarity_expr,
+    smaller_is_better,
+)
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import ann
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
+    rank_top_k,
     topk_search,
 )
 
@@ -22,6 +27,11 @@ def cents(emb):
     return ann.seed_centroids(emb, 16)
 
 
+def _assigned(emb, cents, metric="cosine"):
+    """The fixture with its ``centroid_id``, assigned in the plan."""
+    return ann.assign_centroids_gemm(emb, cents, metric)
+
+
 def _queries(emb, n=8):
     return emb.filter(F.col("vec_id") < n).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -34,21 +44,59 @@ def test_seed_centroids_deterministic(emb, cents):
     assert cents[3][1] == again[3][1]
 
 
+def _np_matrix(emb):
+    """(ids, vectors) of the fixture, in ascending id order."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return ids, np.array([r["embedding"] for r in rows], dtype=np.float64)
+
+
+def _np_best(A, B, metric, n):
+    """Per row of ``A``: the column indices of its ``n`` best rows of
+    ``B`` under ``metric`` and their scores, ties to the lowest index
+    (a stable sort on the metric's key)."""
+    if metric == "cosine":
+        A = A / np.linalg.norm(A, axis=1, keepdims=True)
+        B = B / np.linalg.norm(B, axis=1, keepdims=True)
+    if metric == "euclidean":
+        S = np.linalg.norm(A[:, None, :] - B[None, :, :], axis=2)
+    else:
+        S = A @ B.T
+    best = np.argsort(S if metric == "euclidean" else -S, axis=1, kind="stable")[:, :n]
+    return best, np.take_along_axis(S, best, axis=1)
+
+
 def test_assignment_is_nearest(emb, cents):
-    rows = ann.assign_centroids(emb, cents, metric="cosine").collect()
-    cmat = np.array([v for _, v in cents])
-    cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-    for r in rows[:50]:
-        v = np.array(r["embedding"], dtype=np.float64)
-        sims = cnorm @ (v / np.linalg.norm(v))
-        best = int(np.argmax(sims))
-        assert r["centroid_id"] == cents[best][0]
+    """Every row of the fixture lands in its nearest centroid, the
+    lowest cid winning ties, in all three metrics (numpy reference).
+    Copies of four centroids under higher cids, in a reversed list,
+    tie with their originals and must change nothing."""
+    ids, V = _np_matrix(emb)
+    cids = np.array([c for c, _ in cents])
+    C = np.array([v for _, v in cents], dtype=np.float64)
+    copies = list(reversed(cents + [(1000 + c, v) for c, v in cents[:4]]))
+
+    def assigned(centroids, metric):
+        return {
+            r["vec_id"]: r["centroid_id"]
+            for r in ann.assign_centroids_gemm(emb, centroids, metric=metric)
+            .select("vec_id", "centroid_id")
+            .collect()
+        }
+
+    for metric in ("cosine", "euclidean", "dotproduct"):
+        best, _ = _np_best(V, C, metric, 1)
+        want = dict(zip(ids.tolist(), cids[best[:, 0]].tolist()))
+        assert assigned(cents, metric) == want, metric
+    assert assigned(copies, "dotproduct") == want
 
 
 def test_ivf_self_match_rank1(emb, cents):
     """A query vector that IS in the index always lands in its own
     best bucket, so IVF must return it at rank 1 (cosine 1.0)."""
-    out = ann.ivf_topk(_queries(emb), emb, cents, k=1, nprobe=2).collect()
+    out = ann.ivf_topk_gemm(
+        _queries(emb), _assigned(emb, cents), cents, k=1, nprobe=2
+    ).collect()
     assert len(out) == 8
     for r in out:
         assert r["query_id"] == r["vec_id"]
@@ -64,21 +112,21 @@ def test_ivf_recall_vs_exact(emb, cents):
     }
     approx = {
         (r["query_id"], r["vec_id"])
-        for r in ann.ivf_topk(q, emb, cents, k=k, nprobe=4).collect()
+        for r in ann.ivf_topk_gemm(q, _assigned(emb, cents), cents, k=k, nprobe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"recall@{k} too low: {recall}"
     # probing everything == exact
     full = {
         (r["query_id"], r["vec_id"])
-        for r in ann.ivf_topk(q, emb, cents, k=k, nprobe=16).collect()
+        for r in ann.ivf_topk_gemm(q, _assigned(emb, cents), cents, k=k, nprobe=16).collect()
     }
     assert full == exact
 
 
 def test_lloyd_refine_improves_quantization(emb, cents):
     def mean_best_dist(centroids):
-        a = ann.assign_centroids(emb, centroids, metric="euclidean")
+        a = ann.assign_centroids_gemm(emb, centroids, metric="euclidean")
         cmap = {cid: np.array(v) for cid, v in centroids}
         tot, n = 0.0, 0
         for r in a.collect():
@@ -123,19 +171,52 @@ def test_write_ivf_index_prunes_partitions(spark, emb, cents, tmp_path):
     pruned = back.filter(F.col("centroid_id") == cents[0][0])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "centroid_id" in plan
-    # probing the written layout gives the same result as on-the-fly
-    q = _queries(emb)
-    on_disk = ann.ivf_topk(q, back, cents, k=5, nprobe=4, assigned=True)
-    on_fly = ann.ivf_topk(q, emb, cents, k=5, nprobe=4)
-    assert sorted(map(tuple, on_disk.collect())) == sorted(map(tuple, on_fly.collect()))
+
+
+def _expr_best_centroids(vec, centroids, metric, n):
+    """Spark SQL expression reference: the ``n`` best centroid ids for
+    ``vec``, scored by ``similarity_expr`` over a literal centroid
+    array and sorted in the metric's order, ties to the lower cid."""
+    carr = F.array(*[
+        F.struct(F.lit(cid).cast("int").alias("cid"),
+                 F.lit(v).cast("array<double>").alias("cvec"))
+        for cid, v in centroids
+    ])
+
+    def keyed(c):
+        s = similarity_expr(metric, vec, c["cvec"])
+        key = s if smaller_is_better(metric) else -s
+        return F.struct(key.alias("key"), c["cid"].alias("cid"))
+
+    ranked = F.array_sort(F.transform(carr, keyed))
+    return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
+
+
+def _expr_ivf_topk(queries, layout, centroids, k, nprobe, metric):
+    """Spark SQL expression reference for the IVF probe: each query
+    joins the rows of its ``nprobe`` best lists, scored row by row with
+    ``similarity_expr`` and ranked by the shared top-k window."""
+    qv = F.col("qvec").cast("array<double>")
+    probes = queries.select(
+        "query_id",
+        qv.alias("__qvec"),
+        F.explode(_expr_best_centroids(qv, centroids, metric, nprobe)).alias("centroid_id"),
+    )
+    scored = layout.join(probes, "centroid_id").select(
+        "query_id",
+        "vec_id",
+        similarity_expr(metric, F.col("__qvec"), F.col("embedding")).alias("score"),
+    )
+    return rank_top_k(scored, k, metric)
 
 
 def test_gemm_assignment_agrees_with_expression(emb, cents):
+    v = F.col("embedding").cast("array<double>")
     a = {
         r["vec_id"]: r["centroid_id"]
-        for r in ann.assign_centroids(emb, cents, metric="cosine")
-        .select("vec_id", "centroid_id")
-        .collect()
+        for r in emb.select(
+            "vec_id", _expr_best_centroids(v, cents, "cosine", 1)[0].alias("centroid_id")
+        ).collect()
     }
     b = {
         r["vec_id"]: r["centroid_id"]
@@ -153,7 +234,7 @@ def test_ivf_gemm_probe_agrees_with_expression(spark, emb, cents, tmp_path):
     q = _queries(emb)
     expr = {
         (r["query_id"], r["vec_id"], r["rank"])
-        for r in ann.ivf_topk(q, layout, cents, k=5, nprobe=4, assigned=True).collect()
+        for r in _expr_ivf_topk(q, layout, cents, k=5, nprobe=4, metric="cosine").collect()
     }
     gemm = {
         (r["query_id"], r["vec_id"], r["rank"])
@@ -165,14 +246,12 @@ def test_ivf_gemm_probe_agrees_with_expression(spark, emb, cents, tmp_path):
 @pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
 def test_ivf_gemm_all_metrics_agree_with_expression(spark, emb, cents, tmp_path, metric):
     path = str(tmp_path / f"ivf-{metric}")
-    ann.write_ivf_index(emb, path, cents, metric=metric, fast=False)
+    ann.write_ivf_index(emb, path, cents, metric=metric)
     layout = spark.read.parquet(path)
     q = _queries(emb)
     expr = {
         (r["query_id"], r["rank"]): (r["vec_id"], round(r["score"], 6))
-        for r in ann.ivf_topk(
-            q, layout, cents, k=5, nprobe=4, metric=metric, assigned=True
-        ).collect()
+        for r in _expr_ivf_topk(q, layout, cents, k=5, nprobe=4, metric=metric).collect()
     }
     gemm = {
         (r["query_id"], r["rank"]): (r["vec_id"], round(r["score"], 6))
@@ -181,6 +260,35 @@ def test_ivf_gemm_all_metrics_agree_with_expression(spark, emb, cents, tmp_path,
         ).collect()
     }
     assert expr == gemm
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
+def test_ivf_gemm_matches_numpy_reference(emb, cents, metric):
+    """Probing every list is the exact scan: per query, the k best rows
+    by (score, vec_id), against a numpy reference. Euclidean compares
+    squared distances: the GEMM's expanded |b|² − 2b·q + |q|² leaves
+    ~1e-8 after the sqrt at a self match."""
+    k = 5
+    ids, V = _np_matrix(emb)
+    qids, Q = ids[:8], V[:8]
+    best, scores = _np_best(Q, V, metric, k)
+    want = {
+        (int(qids[i]), r + 1): (int(ids[best[i, r]]), float(scores[i, r]))
+        for i in range(len(qids))
+        for r in range(k)
+    }
+    got = {
+        (r["query_id"], r["rank"]): (r["vec_id"], r["score"])
+        for r in ann.ivf_topk_gemm(
+            _queries(emb), _assigned(emb, cents, metric), cents, k=k,
+            nprobe=len(cents), metric=metric,
+        ).collect()
+    }
+    assert got.keys() == want.keys()
+    sq = (lambda x: x * x) if metric == "euclidean" else (lambda x: x)
+    for key, (vid, score) in want.items():
+        assert got[key][0] == vid, key
+        assert abs(sq(got[key][1]) - sq(score)) <= 1e-9, key
 
 
 def test_int8_layout_smaller_and_high_recall(spark, emb, cents, tmp_path):
@@ -198,10 +306,8 @@ def test_int8_layout_smaller_and_high_recall(spark, emb, cents, tmp_path):
         )
 
     full, comp = str(tmp_path / "ivf-f"), str(tmp_path / "ivf-c")
-    ann.write_ivf_index(emb, full, cents, metric="cosine", fast=False)
-    ann.write_ivf_index(
-        emb, comp, cents, metric="cosine", fast=False, compression="int8"
-    )
+    ann.write_ivf_index(emb, full, cents, metric="cosine")
+    ann.write_ivf_index(emb, comp, cents, metric="cosine", compression="int8")
     # embedding bytes shrink ~4x; whole-file ratio is looser because of
     # the shared id/metadata columns and parquet framing
     assert disk_bytes(comp) < 0.55 * disk_bytes(full)
@@ -300,7 +406,10 @@ def test_split_skewed_centroids_bounds_partitions(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     k = 5
-    ivf = ann.ivf_topk(q, df, split, k=k, nprobe=8, metric="cosine")
+    ivf = ann.ivf_topk_gemm(
+        q, ann.assign_centroids_gemm(df, split, "cosine"), split, k=k,
+        nprobe=8, metric="cosine",
+    )
     exact = topk_search(q, df, k=k, metric="cosine")
     got = {(r["query_id"], r["vec_id"]) for r in ivf.collect()}
     want = {(r["query_id"], r["vec_id"]) for r in exact.collect()}

@@ -68,59 +68,63 @@ def test_stratified_mod_sample(spark):
         stratified_mod_sample(df, "grp", "id", {"a": (3, 2)})
 
 
-def test_star_cc_equals_label_propagation_on_random_graphs(spark):
-    """large-star/small-star must produce exactly min-label
-    propagation's components on seeded random pair sets (clusters,
-    overlaps, singleton pairs)."""
+def _union_find(pairs):
+    """{id: min id of its component} over undirected ``pairs``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _components_without_warning(spark, pairs):
+    import warnings as w
+
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    with w.catch_warnings(record=True) as caught:
+        w.simplefilter("always")
+        got = connected_components(df).collect()
+    assert not [x for x in caught if issubclass(x.category, RuntimeWarning)]
+    comp = {r["id"]: r["component"] for r in got}
+    assert len(comp) == len(got)  # one row per id
+    return comp
+
+
+def test_connected_components_matches_union_find(spark):
+    """Three seeded random graphs (clusters, overlaps, repeated and
+    reversed pairs), one of them with ids offset by 2^62, plus
+    self-pairs: a self-pair alone keeps its id as a singleton
+    component, one beside other edges changes nothing. One call over
+    the disjoint union, checked against a union-find reference."""
     import random
 
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    for seed in (1, 2, 3):
+    pairs = []
+    for seed, off in ((1, 0), (2, 1000), (3, 2**62)):
         rng = random.Random(seed)
-        pairs = [
-            (rng.randrange(120), rng.randrange(120)) for _ in range(150)
+        pairs += [
+            (off + rng.randrange(120), off + rng.randrange(120)) for _ in range(150)
         ]
-        pairs = [(a, b) for a, b in pairs if a != b]
-        df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        lp = {
-            (r["id"], r["component"])
-            for r in connected_components(df).collect()
-        }
-        star = {
-            (r["id"], r["component"])
-            for r in connected_components_star(df).collect()
-        }
-        assert star == lp, f"seed={seed}"
+    # (5000, 5000) alone → {5000: 5000}; (5002, 5002) beside (5002, 5003)
+    pairs += [(5000, 5000), (5002, 5003), (5002, 5002)]
+    assert _components_without_warning(spark, pairs) == _union_find(pairs)
 
 
 def test_star_cc_handles_long_chain_within_log_rounds(spark):
-    """A 300-node path: min-label propagation needs 300 rounds (its
-    default max_iter=20 warns and splits the chain); the star variant
-    converges inside its default budget (O(log n) rounds) and labels
+    """A 300-node path converges inside the default max_iter (O(log n)
+    rounds, where min-label propagation would need 300) and labels
     every node with component 0."""
-    import warnings as w
-
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(300)], "id_a long, id_b long"
-    )
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        got = connected_components_star(chain).collect()
-    assert not [x for x in caught if issubclass(x.category, RuntimeWarning)]
-    assert len(got) == 301
-    assert {r["component"] for r in got} == {0}
-
-    with pytest.warns(RuntimeWarning, match="max_iter"):
-        connected_components(chain).collect()
+    chain = [(i, i + 1) for i in range(300)]
+    comp = _components_without_warning(spark, chain)
+    assert comp == _union_find(chain) == {i: 0 for i in range(301)}
 
 
 def test_substring_span_pairs_detects_shared_passage(spark):

@@ -10,7 +10,6 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
     topk_search,
-    topk_single,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.plans.inspect import (
     broadcast_join_count,
@@ -63,19 +62,13 @@ def test_scoring_reads_only_needed_columns(spark, emb):
     assert cols and "label" not in cols  # vec_id + embedding only
 
 
-def test_topk_single_is_take_ordered(spark, emb):
-    qvec = [0.1] * 64
-    out = topk_single(emb, qvec, k=5, metric="cosine")
-    assert "TakeOrderedAndProject" in physical_plan(out)
-
-
 def test_ivf_layout_partition_pruning(spark, emb, tmp_path):
     cents = ann.seed_centroids(emb, 8)
     path = str(tmp_path / "ivf")
     ann.write_ivf_index(emb, path, cents, metric="cosine")
     layout = spark.read.parquet(path)
     q = _queries(emb)
-    out = ann.ivf_topk(q, layout, cents, k=5, nprobe=2, assigned=True)
+    out = ann.ivf_topk_gemm(q, layout, cents, k=5, nprobe=2)
     assert has_partition_filter(out, "centroid_id")
 
 

@@ -387,5 +387,6 @@ def test_jsonl_ingest_empty_dir_is_empty_not_error(spark, tmp_path):
     d = tmp_path / "empty"
     d.mkdir()
     (d / "a.jsonl").write_text("")  # zero-line file: schema is explicit
-    clean, quarantined, _ = load_jsonl_documents(spark, str(d))
+    clean, quarantined, source_scan = load_jsonl_documents(spark, str(d))
     assert clean.count() == 0 and quarantined.count() == 0
+    source_scan.unpersist()

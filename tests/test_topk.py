@@ -6,7 +6,6 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
     clamp_top_k,
     topk_search,
     topk_search_gemm,
-    topk_single,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -16,7 +15,8 @@ SF = "/root/testdata/sf0.001"
 def emb(spark):
     df = spark.read.parquet(f"{SF}/embeddings.parquet")
     df.cache().count()
-    return df
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -98,15 +98,6 @@ def test_per_query_filter(emb):
     joined = got.join(emb.select("vec_id", "label"), "vec_id").collect()
     for r in joined:
         assert r["label"] == r["query_id"] % 2
-
-
-def test_topk_single_matches_batch(emb, emb_np):
-    ids, mat = emb_np
-    qvec = [float(x) for x in mat[7]]
-    got = topk_single(emb, qvec, k=5)
-    rows = sorted(got.collect(), key=lambda r: r["rank"])
-    exp = _np_topk(ids, mat, mat[7], 5)
-    assert [r["vec_id"] for r in rows] == [e[0] for e in exp]
 
 
 def test_euclidean_orders_ascending(emb):

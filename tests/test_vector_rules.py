@@ -1,10 +1,13 @@
 """The one vector ranking core: a source scan that keeps each ranking
-rule in one place, and the malformed inputs the shared kernel and the
-centroid checks refuse."""
+rule and each kernel in one place, the tie rule every route follows,
+and the malformed inputs the shared kernel and the centroid checks
+refuse."""
 
+import ast
 import pathlib
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,8 +45,10 @@ def test_each_vector_ranking_rule_is_written_once():
     # metric order: functions.vector.smaller_is_better (the remaining
     # `if metric == "euclidean":` branches pick a formula, not an order)
     assert _holders(srcs, r'metric == "euclidean"(?!:)') == {"functions/vector.py": 1}
-    # the GEMM block kernel: ann.gemm_topk
-    assert _holders(srcs, re.escape("np.argpartition")) == {"operators/ann.py": 1}
+    # the GEMM block kernel: ann.gemm_topk (its k-th-key cut keeps
+    # every row tied at the k-th place)
+    assert _holders(srcs, re.escape("np.partition(")) == {"operators/ann.py": 1}
+    assert _holders(srcs, re.escape("np.argpartition")) == {}
     # the Arrow vector decode: ann.list_matrix
     assert _holders(srcs, r"\.flatten\(\)\s*\.to_numpy\(") == {}
     assert _holders(srcs, r"ChunkedArray") == {}
@@ -62,6 +67,49 @@ def test_each_vector_ranking_rule_is_written_once():
         if n
     }
     assert vector_windows == {"operators/topk.py": 1}
+
+
+def test_each_operation_has_one_kernel():
+    """No kernel twin and no switch that picks one: no ``fast``,
+    ``assigned`` or ``algorithm`` option (a parameter with a default;
+    a required DataFrame argument named ``assigned`` is data, not a
+    switch), none of the deleted twins, and one mapInArrow
+    centroid-assignment kernel (a function whose kernel appends an
+    ``int`` column holding an argmax/argmin)."""
+    srcs = _sources("operators")
+    trees = {f: ast.parse(s) for f, s in srcs.items()}
+
+    def options(args):
+        positional = args.posonlyargs + args.args
+        yield from positional[len(positional) - len(args.defaults):]
+        yield from (a for a, d in zip(args.kwonlyargs, args.kw_defaults) if d)
+
+    switches = {
+        (f, getattr(node, "name", "lambda"), a.arg)
+        for f, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.Lambda))
+        for a in options(node.args)
+        if a.arg in ("fast", "assigned", "algorithm")
+    }
+    assert switches == set()
+    top = [
+        (f, fn, ast.get_source_segment(srcs[f], fn))
+        for f, tree in trees.items()
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+    ]
+    gone = {"_best_centroids", "_centroid_literal", "assign_centroids",
+            "ivf_topk", "connected_components_star", "topk_single"}
+    assert {fn.name for _, fn, _ in top} & gone == set()
+    assigners = [
+        (f, fn.name)
+        for f, fn, src in top
+        if ".mapInArrow(" in src
+        and re.search(r"np\.arg(max|min)\(", src)
+        and re.search(r' int"\s*\]', src)
+    ]
+    assert assigners == [("operators/ann.py", "assign_centroids_gemm")]
 
 
 def test_each_lexical_weight_is_written_once():
@@ -107,12 +155,43 @@ def test_zero_norm_centroid_raises_under_cosine(spark, tmp_path):
     cents = ann.seed_centroids(df, 3)
     assert [0.0, 0.0] in [v for _, v in cents]
     with pytest.raises(ValueError, match="centroid 0 has norm 0"):
-        ann.assign_centroids(df, cents, "cosine")
-    with pytest.raises(ValueError, match="centroid 0 has norm 0"):
         ann.assign_centroids_gemm(df, cents, "cosine")
-    for fast in (True, False):
-        with pytest.raises(ValueError, match="centroid 0 has norm 0"):
-            ann.write_ivf_index(df, str(tmp_path / f"ivf{fast}"), cents, fast=fast)
+    with pytest.raises(ValueError, match="centroid 0 has norm 0"):
+        ann.write_ivf_index(df, str(tmp_path / "ivf"), cents)
     # a zero vector is an ordinary centroid under euclidean
     assigned = ann.assign_centroids_gemm(df, cents, "euclidean")
     assert assigned.filter(F.col("vec_id") == 0).first()["centroid_id"] == 0
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
+def test_gemm_ties_break_by_lowest_vec_id(spark, metric):
+    """40 exact copies of the query among 200 rows, shuffled ids, one
+    partition and one Arrow batch: the GEMM scan and the IVF probe over
+    every list must return the 5 lowest copy ids, the engine's
+    (score, vec_id) rule. A per-batch top-k cut that keeps an arbitrary
+    subset of the rows tied at the k-th place fails this."""
+    rng = np.random.default_rng(3)
+    q = rng.normal(size=8)
+    # the other rows are short, so no dot product reaches |q|^2
+    vecs = 0.1 * rng.normal(size=(200, 8))
+    copies = rng.choice(200, size=40, replace=False)
+    vecs[copies] = q
+    ids = rng.permutation(1000)[:200]
+    index = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    queries = spark.createDataFrame(
+        [(0, [float(x) for x in q])], "query_id long, qvec array<double>"
+    )
+    want = sorted(ids[copies].tolist())[:5]
+
+    def ranked(df):
+        return [r["vec_id"] for r in sorted(df.collect(), key=lambda r: r["rank"])]
+
+    assert ranked(topk_search_gemm(queries, index, k=5, metric=metric)) == want
+    cents = ann.seed_centroids(index, 4)
+    assigned = ann.assign_centroids_gemm(index, cents, metric)
+    assert ranked(
+        ann.ivf_topk_gemm(queries, assigned, cents, k=5, nprobe=len(cents), metric=metric)
+    ) == want
