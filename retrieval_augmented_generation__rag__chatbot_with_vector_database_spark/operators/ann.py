@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -267,107 +268,137 @@ def list_matrix(batch, name: str, width: int):
     )
 
 
+def probe_plan(Q, centroids: list[tuple[int, list[float]]], nprobe: int,
+               metric: str):
+    """The one probe plan: each query's ``nprobe`` best centroids under
+    ``metric`` (ties to the lowest cid), returned as (probed cids
+    ascending, bucket → ascending indices of the queries probing it).
+    ``Q`` is the query matrix in the metric's scoring form (unit rows
+    under cosine). The euclidean order drops |q|², which is constant
+    per query and only adds rounding."""
+    import numpy as np
+
+    cids, C = _centroid_matrix(centroids, metric)
+    if metric == "euclidean":
+        key = -2.0 * (Q @ C.T) + (C * C).sum(axis=1)[None, :]
+    else:
+        key = -(Q @ C.T)
+    probed = cids[np.argsort(key, axis=1, kind="stable")[:, :nprobe]]
+    by_bucket: dict[int, list[int]] = {}
+    for qi, row in enumerate(probed):
+        for c in row:
+            by_bucket.setdefault(int(c), []).append(qi)
+    return sorted(by_bucket), {
+        c: np.array(v, dtype=np.int64) for c, v in by_bucket.items()
+    }
+
+
+def gemm_blocks(batches, *, qids, Qm, q_sq, metric: str, k: int,
+                compressed: bool, by_bucket: dict | None):
+    """The one GEMM block kernel (see :func:`gemm_topk`): per Arrow
+    batch of ``cand``, each bucket's rows scored against the queries
+    probing it, and per query every row at least as good as the k-th."""
+    import numpy as np
+    import pyarrow as pa
+
+    dim = Qm.shape[1]
+    smaller = smaller_is_better(metric)
+    q_all = np.arange(len(qids))
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        ids = rb.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        if compressed:
+            B = list_matrix(rb, "q8", dim).astype(np.float64)
+            B = B * rb.column("q8_scale").to_numpy(zero_copy_only=False)[:, None]
+        else:
+            B = list_matrix(rb, "__vec", dim).astype(np.float64, copy=False)
+        bucket = (
+            None
+            if by_bucket is None
+            else rb.column("centroid_id").to_numpy(zero_copy_only=False)
+        )
+        if metric == "cosine":
+            bn = np.linalg.norm(B, axis=1)
+            valid = bn != 0
+            if not valid.all():
+                ids, B, bn = ids[valid], B[valid], bn[valid]
+                if bucket is not None:
+                    bucket = bucket[valid]
+                if B.shape[0] == 0:
+                    continue
+            B = B / bn[:, None]
+        # the layout is partitioned by centroid_id, so a batch holds
+        # one (rarely a few) buckets: score each bucket's rows against
+        # ONLY the queries that probe it — compute is exactly the
+        # probed (query, vector) pairs
+        blocks = (
+            [(q_all, slice(None))]
+            if bucket is None
+            else [
+                (by_bucket.get(int(c)), np.nonzero(bucket == c)[0])
+                for c in np.unique(bucket)
+            ]
+        )
+        out_q, out_i, out_s = [], [], []
+        for qsel, rsel in blocks:
+            if qsel is None:
+                continue
+            Bb = B[rsel]
+            if metric == "euclidean":
+                S = np.sqrt(
+                    np.maximum(
+                        (Bb * Bb).sum(axis=1)[:, None]
+                        - 2.0 * (Bb @ Qm[qsel].T)
+                        + q_sq[qsel][None, :],
+                        0.0,
+                    )
+                )
+            else:
+                S = Bb @ Qm[qsel].T  # (rows_in_bucket, probing_q)
+            key = S if smaller else -S
+            kk = min(k, Bb.shape[0])
+            # a NaN k-th key (fewer than kk non-NaN scores) keeps the
+            # whole column, as a top-kk cut would have
+            kth = np.partition(key, kk - 1, axis=0)[kk - 1]
+            keep = (key <= kth[None, :]) | np.isnan(kth)[None, :]
+            rows_q, rows_i = np.nonzero(keep.T)
+            out_q.append(qids[qsel][rows_q])
+            out_i.append(ids[rsel][rows_i])
+            out_s.append(S[rows_i, rows_q])
+        if out_q:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_q), type=pa.int64()),
+                    pa.array(np.concatenate(out_i), type=pa.int64()),
+                    pa.array(np.concatenate(out_s), type=pa.float64()),
+                ],
+                names=["query_id", "vec_id", "score"],
+            )
+
+
 def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
-              q_by_bucket: dict | None = None) -> DataFrame:
-    """The one GEMM block kernel of the exact scan and the IVF probe:
-    (query_id, vec_id, score, rank) of the collected queries
+              by_bucket: dict | None = None) -> DataFrame:
+    """The exact scan's and the IVF probe's GEMM top-k: (query_id,
+    vec_id, score, rank) of the collected queries
     (``collect_query_matrix``'s ``qids, Q, Qm``) against ``cand``, which
     carries ``vec_id``, ``__vec`` (or an int8 layout's
     ``q8``/``q8_scale``) and, for a probe, ``centroid_id``.
 
-    Per Arrow batch: decode → under cosine drop zero-norm rows (a 0/0
-    NaN would sort FIRST in a descending partition, where the
-    expression path's NULL sorts last) and normalize → per bucket, one
-    score block against only the queries probing it (``q_by_bucket``:
-    bucket → query indices; ``None`` is the unpruned scan, one bucket
-    every query probes) → per query, every row whose score is at least
-    as good as the k-th best, merged by :func:`topk.rank_top_k`. Rows
-    tied at the k-th score all survive the batch, so the window's
-    (score, ``vec_id``) order decides among them, as it does on every
-    other route."""
-    import numpy as np
-
-    dim = Q.shape[1]
-    compressed = "q8" in cand.columns
-    smaller = smaller_is_better(metric)
-    q_sq = (Q * Q).sum(axis=1)
-    q_all = np.arange(len(qids))
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            if compressed:
-                B = list_matrix(rb, "q8", dim).astype(np.float64)
-                B = B * rb.column("q8_scale").to_numpy(zero_copy_only=False)[:, None]
-            else:
-                B = list_matrix(rb, "__vec", dim).astype(np.float64, copy=False)
-            bucket = (
-                None
-                if q_by_bucket is None
-                else rb.column("centroid_id").to_numpy(zero_copy_only=False)
-            )
-            if metric == "cosine":
-                bn = np.linalg.norm(B, axis=1)
-                valid = bn != 0
-                if not valid.all():
-                    ids, B, bn = ids[valid], B[valid], bn[valid]
-                    if bucket is not None:
-                        bucket = bucket[valid]
-                    if B.shape[0] == 0:
-                        continue
-                B = B / bn[:, None]
-            # the layout is partitioned by centroid_id, so a batch
-            # holds one (rarely a few) buckets: score each bucket's
-            # rows against ONLY the queries that probe it — compute
-            # is exactly the probed (query, vector) pairs
-            blocks = (
-                [(q_all, slice(None))]
-                if bucket is None
-                else [
-                    (q_by_bucket.get(int(c)), np.nonzero(bucket == c)[0])
-                    for c in np.unique(bucket)
-                ]
-            )
-            out_q, out_i, out_s = [], [], []
-            for qsel, rsel in blocks:
-                if qsel is None:
-                    continue
-                Bb = B[rsel]
-                if metric == "euclidean":
-                    S = np.sqrt(
-                        np.maximum(
-                            (Bb * Bb).sum(axis=1)[:, None]
-                            - 2.0 * (Bb @ Qm[qsel].T)
-                            + q_sq[qsel][None, :],
-                            0.0,
-                        )
-                    )
-                else:
-                    S = Bb @ Qm[qsel].T  # (rows_in_bucket, probing_q)
-                key = S if smaller else -S
-                kk = min(k, Bb.shape[0])
-                # a NaN k-th key (fewer than kk non-NaN scores) keeps
-                # the whole column, as a top-kk cut would have
-                kth = np.partition(key, kk - 1, axis=0)[kk - 1]
-                keep = (key <= kth[None, :]) | np.isnan(kth)[None, :]
-                rows_q, rows_i = np.nonzero(keep.T)
-                out_q.append(qids[qsel][rows_q])
-                out_i.append(ids[rsel][rows_i])
-                out_s.append(S[rows_i, rows_q])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), type=pa.int64()),
-                        pa.array(np.concatenate(out_i), type=pa.int64()),
-                        pa.array(np.concatenate(out_s), type=pa.float64()),
-                    ],
-                    names=["query_id", "vec_id", "score"],
-                )
-
+    Per Arrow batch (:func:`gemm_blocks`): decode → under cosine drop
+    zero-norm rows (their score is undefined, so no route returns them)
+    and normalize → per bucket, one score block against only the
+    queries probing it (``by_bucket`` from :func:`probe_plan`; ``None``
+    is the unpruned scan, one bucket every query probes) → per query,
+    every row whose score is at least as good as the k-th best, merged
+    by :func:`topk.rank_top_k`. Rows tied at the k-th score all survive
+    the batch, so the window's (score, ``vec_id``) order decides among
+    them, as it does on every other route."""
+    kernel = partial(
+        gemm_blocks, qids=qids, Qm=Qm, q_sq=(Q * Q).sum(axis=1),
+        metric=metric, k=k, compressed="q8" in cand.columns,
+        by_bucket=by_bucket,
+    )
     scored = cand.mapInArrow(kernel, "query_id long, vec_id long, score double")
     return rank_top_k(scored, k, metric)
 
@@ -388,58 +419,36 @@ def ivf_topk_gemm(
     """The IVF probe: GEMM scoring over an index that carries
     ``centroid_id`` (a ``write_ivf_index`` layout, or a frame from
     :func:`assign_centroids_gemm`), any of the reference's three metrics
-    (``pinecone_service.py:33-39``). Probe sets are computed
-    driver-side from the centroid matrix (tiny), the scan is
-    statically pruned to the probed buckets, and each Arrow batch is
-    scored bucket-by-bucket against only the queries probing it
-    (:func:`gemm_topk`). A null vector, or one whose length differs
-    from the query dimension, raises ``ValueError``; so does a
-    zero-norm centroid under cosine.
+    (``pinecone_service.py:33-39``). The probe plan
+    (:func:`probe_plan`) is computed driver-side from the centroid
+    matrix (tiny), the scan is statically pruned to the probed buckets,
+    and each Arrow batch is scored bucket-by-bucket against only the
+    queries probing it (:func:`gemm_topk`). A null vector, or one whose
+    length differs from the query dimension, raises ``ValueError``; so
+    does a zero-norm centroid under cosine.
 
     Transparently handles int8-compressed layouts
     (``write_ivf_index(compression="int8")``): when the index carries
     ``q8``/``q8_scale`` instead of the vector column, each Arrow batch
     is dequantized in-kernel (one int8→float64 multiply) before the
     GEMM — the scan moves ~4x fewer bytes."""
-    import numpy as np
-
     compressed = "q8" in index.columns and vec_col not in index.columns
-    cids, C = _centroid_matrix(centroids, metric)
     qids, Q, Qm = collect_query_matrix(
         queries, query_id_col, query_vec_col, metric
     )
-    # top-nprobe buckets per query, lowest-cid tiebreak via stable sort
-    if metric == "euclidean":
-        key = (
-            -2.0 * (Q @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )  # |q|^2 constant per row — irrelevant to the argsort
-    else:
-        key = -(Qm @ C.T)
-    order = np.argsort(key, axis=1, kind="stable")[:, :nprobe]
-    probed_per_q = [set(cids[row].tolist()) for row in order]
-    probed_union = sorted(set().union(*probed_per_q))
-
-    pruned = index.filter(F.col("centroid_id").isin(probed_union))
+    probed, by_bucket = probe_plan(Qm, centroids, nprobe, metric)
+    pruned = index.filter(F.col("centroid_id").isin(probed))
     if pre_filter is not None:
         # Pinecone-style filtered ANN: the metadata predicate lands in
         # the SAME pruned scan (PushedFilters next to PartitionFilters)
         # — filtered rows never reach the GEMM kernel
         pruned = pruned.filter(pre_filter)
-
-    # queries probing each bucket, precomputed once per worker
-    q_by_bucket: dict[int, "np.ndarray"] = {}
-    for qi, s in enumerate(probed_per_q):
-        for c in s:
-            q_by_bucket.setdefault(c, []).append(qi)
-    q_by_bucket = {c: np.array(v, dtype=np.int64) for c, v in q_by_bucket.items()}
-
     cand_cols = [F.col(id_col).alias("vec_id"), F.col("centroid_id")] + (
         [F.col("q8"), F.col("q8_scale")]
         if compressed
         else [F.col(vec_col).alias("__vec")]
     )
-    return gemm_topk(pruned.select(*cand_cols), qids, Q, Qm, metric, k, q_by_bucket)
+    return gemm_topk(pruned.select(*cand_cols), qids, Q, Qm, metric, k, by_bucket)
 
 
 def ivf_topk_rerank(

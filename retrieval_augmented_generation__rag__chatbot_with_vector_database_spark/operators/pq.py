@@ -15,14 +15,16 @@ Spark shapes:
 - **Encoding** (`pq_encode`): one `mapInArrow` pass; per Arrow batch,
   m small GEMMs (batch × k per subspace) pick argmin codes. Output is
   (id, codes array<int>, bit-packed by parquet) — the layout that lands in parquet.
-- **Probing** (`pq_topk`): queries are collected (bounded, loud error
-  past the cap — same contract as the GEMM probe) and broadcast; per
-  Arrow batch of codes, each query's LUT[m][k] of partial squared
-  distances is gathered and summed — no decompression, no float
-  vectors read. Per-query top-k via the usual window.
-- **Recall recovery**: like the int8 tier, PQ candidates over-fetch
-  (`fetch_k`) and a full-precision rerank against the original
-  vectors restores exact ordering (`pq_topk_rerank`).
+- **Probing** (`ivfpq_topk_rerank`, one kernel: `adc_rerank_blocks`):
+  queries are collected (bounded, loud error past the cap — same
+  contract as the GEMM probe) and the probe plan (`ann.probe_plan`)
+  picks the buckets each query reads; the kernel is a plain function
+  bound over numpy arrays. Per Arrow batch of codes, each query's
+  LUT[m][k] of partial squared distances is gathered and summed — no
+  decompression — and each query's ADC top-``fetch_k`` is reranked
+  at full precision against the raw vectors stored next to the codes,
+  restoring exact ordering. Flat PQ (`pq_topk_rerank`) is the
+  one-list case of the same probe.
 
 Codes are data-dependent (k-means), so PQ queries use boolean
 contract oracles (recall ≥ bound pinned TRUE) rather than value
@@ -38,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -289,17 +292,16 @@ def rotate_vectors(
     float32 — one Arrow-batched pandas UDF doing a single (batch × d)
     @ (d × d) BLAS matmul per batch; every other column rides along
     untouched. Orthonormal R ⇒ distances/inner products preserved."""
+    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    R_payload = json.dumps(rotation)
+    R = np.array(rotation, dtype=np.float64)
     out = out_col or vec_col
 
     @pandas_udf("array<float>")
     def _rot(s):
-        import numpy as np
         import pandas as pd
 
-        R = np.array(json.loads(R_payload), dtype=np.float64)
         V = np.array(list(s), dtype=np.float64)
         if V.ndim != 2 or V.shape[1] != R.shape[0]:
             raise ValueError(
@@ -325,23 +327,20 @@ def pq_reconstruction_sse(
     chosen centroid, squared diff summed), then a single 2-number
     aggregate — no shuffle proportional to rows, holds at any corpus
     size."""
+    import numpy as np
     import pyarrow as pa
 
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    books_payload = json.dumps(codebooks)
+    B = [np.array(b, dtype=np.float64) for b in codebooks]
     out_schema = "sum_sq_err double, n long"
 
     def kernel(batches):
-        import numpy as np
-
-        B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
         for batch in batches:
-            tbl = batch.to_pydict()
-            V = np.array(tbl[vec_col], dtype=np.float64)
-            n = V.shape[0]
+            n = batch.num_rows
             if n == 0:
                 continue
+            V = list_matrix(batch, vec_col, m * sub).astype(np.float64)
             err = 0.0
             for j in range(m):
                 S = V[:, j * sub : (j + 1) * sub]
@@ -383,6 +382,7 @@ def pq_encode(
     instead of self-joining the assigned frame on id afterwards —
     which recomputed the whole assignment GEMM for the second branch
     AND shuffled the full corpus once more."""
+    import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import (
         ArrayType,
@@ -395,7 +395,7 @@ def pq_encode(
     carry_cols = list(carry_cols or [])
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    books_payload = json.dumps(codebooks)
+    B = [np.array(b, dtype=np.float64) for b in codebooks]
     in_cols = [id_col, vec_col] + [
         c for c in carry_cols if c not in (id_col, vec_col)
     ]
@@ -413,16 +413,11 @@ def pq_encode(
     )
 
     def kernel(batches):
-        import numpy as np
-
-        B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
         for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col)).to_pylist()
-            V = np.array(
-                batch.column(names.index(vec_col)).to_pylist(), dtype=np.float64
-            )
-            codes = np.empty((len(ids), m), dtype=np.int32)
+            # float32 → float64 widening is exact, so the codes match a
+            # decode through Python floats bit for bit
+            V = list_matrix(batch, vec_col, m * sub).astype(np.float64)
+            codes = np.empty((batch.num_rows, m), dtype=np.int32)
             for j in range(m):
                 S = V[:, j * sub : (j + 1) * sub]
                 # |s - c|^2 = |s|^2 - 2 s·c + |c|^2; |s|^2 constant per row
@@ -432,9 +427,9 @@ def pq_encode(
             # and Spark's reader rejects the child-type mismatch
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array([int(x) for x in ids], type=pa.int64()),
+                    batch.column(id_col).cast(pa.int64()),
                     pa.array(codes.tolist(), type=pa.list_(pa.int32())),
-                    *[batch.column(names.index(c)) for c in carry_cols],
+                    *[batch.column(c) for c in carry_cols],
                 ],
                 names=[id_col, "codes", *carry_cols],
             )
@@ -463,121 +458,37 @@ def _adc_luts(targets, books, sub: int):
     return out
 
 
-def pq_topk(
-    queries: DataFrame,
-    encoded: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qvec",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k by ADC (squared euclidean): per query a
-    LUT[m][k_codes] of partial squared distances to every codebook
-    entry; a candidate's distance is m LUT gathers summed — the float
-    vectors are never read. Returns (query_id, vec_id, adc_dist,
-    rank), ascending distance, ties by id. Queries are collected
-    (bounded like the GEMM probe: loud error past ``ann.MAX_GEMM_QUERIES``)
-    and shipped inside the kernel closure; per-query top-k is the
-    usual WindowGroupLimit window."""
-    import pyarrow as pa
-
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        collect_query_matrix,
-    )
-
-    qids, Q, _ = collect_query_matrix(
-        queries, query_id_col, query_vec_col, "euclidean"
-    )
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    if Q.shape[1] != m * sub:
-        raise ValueError(
-            f"query dim {Q.shape[1]} != codebook dim {m * sub} (m={m}, sub={sub})"
-        )
-    q_payload = json.dumps([[float(x) for x in row] for row in Q])
-    qid_payload = json.dumps([int(x) for x in qids])
-    books_payload = json.dumps(codebooks)
-    out_schema = "query_id long, vec_id long, adc_dist double"
-
-    def kernel(batches):
-        import numpy as np
-
-        B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
-        Qm = np.array(json.loads(q_payload), dtype=np.float64)
-        qid = np.array(json.loads(qid_payload), dtype=np.int64)
-        nq = Qm.shape[0]
-        lut = _adc_luts(Qm, B, sub)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = (
-                batch.column(id_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            codes = list_matrix(batch, "codes", m).astype(
-                np.int64, copy=False
-            )
-            # dist[q][i] = sum_j lut[q][j][codes[i][j]]
-            dist = np.zeros((nq, n), dtype=np.float64)
-            for j in range(m):
-                dist += lut[:, j, :][:, codes[:, j]]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": np.repeat(qid, n),
-                    "vec_id": np.tile(ids, nq),
-                    "adc_dist": dist.reshape(-1),
-                }
-            )
-
-    scored = encoded.select(id_col, "codes").mapInArrow(kernel, out_schema)
-    return rank_top_k(scored, k, "euclidean", score="adc_dist")
-
-
 def pq_topk_rerank(
     queries: DataFrame,
     encoded: DataFrame,
-    index: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 5,
     fetch_k: int = 25,
-    metric: str = "euclidean",
     query_id_col: str = "query_id",
     query_vec_col: str = "qvec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Two-stage probe: PQ/ADC over-fetches ``fetch_k`` candidates per
-    query from the compressed codes, then a FULL-PRECISION rescore
-    against the original vectors restores exact ordering within the
-    candidate set — the same recall-recovery pattern as the int8
-    rerank (candidates broadcast, index joined on its id, never
-    shuffled)."""
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
-        similarity_expr,
+    """Flat PQ probe (squared-L2 ADC, exact euclidean rerank): the
+    one-list case of :func:`ivfpq_topk_rerank`, one zero centroid that
+    every row belongs to and every query probes. ``encoded`` carries
+    the codes and the raw vectors (``pq_encode(..., carry_cols=
+    [vec_col])``). Each task reranks its own ADC top-``fetch_k`` per
+    query, a superset of the global ADC top-``fetch_k``."""
+    dim = len(codebooks) * len(codebooks[0][0])
+    return ivfpq_topk_rerank(
+        queries,
+        encoded.withColumn("centroid_id", F.lit(0)),
+        [(0, [0.0] * dim)],
+        codebooks,
+        k=k,
+        nprobe=1,
+        fetch_k=fetch_k,
+        query_id_col=query_id_col,
+        query_vec_col=query_vec_col,
+        id_col=id_col,
+        vec_col=vec_col,
     )
-
-    cand = pq_topk(
-        queries, encoded, codebooks, k=fetch_k,
-        query_id_col=query_id_col, query_vec_col=query_vec_col, id_col=id_col,
-    ).select("query_id", "vec_id")
-    qside = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    )
-    rescored = (
-        index.join(F.broadcast(cand), index[id_col] == cand["vec_id"])
-        .drop(cand["vec_id"])
-        .join(F.broadcast(qside), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("vec_id"),
-            similarity_expr(metric, F.col("__qvec"), F.col(vec_col)).alias("score"),
-        )
-    )
-    return rank_top_k(rescored, k, metric)
 
 
 # ---------------------------------------------------------------- IVF × PQ
@@ -1045,12 +956,15 @@ def ivfpq_topk_rerank(
     top-k is the filtered corpus's own (single-stage filtering — the
     semantics of the reference's Pinecone filter argument; recall does
     not degrade with filter selectivity the way post-filtering a
-    fixed-k result does)."""
+    fixed-k result does).
+
+    Under cosine a zero-norm row has no score, so it is never
+    returned."""
     import numpy as np
-    import pyarrow as pa
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         collect_query_matrix,
+        probe_plan,
     )
 
     check_layout_metric(metric, normalized, mips)
@@ -1058,7 +972,8 @@ def ivfpq_topk_rerank(
         raise ValueError(
             f"IVFPQ layout has no raw-vector column {vec_col!r} (a "
             "codes-only layout from an older build); rebuild it with "
-            "write_ivfpq_index, which stores the vectors next to the codes"
+            "write_ivfpq_index, which stores the vectors next to the codes "
+            "(pq_encode carries them with carry_cols=[vec_col])"
         )
     fetch_k = max(fetch_k, k)
     qids, Q, _ = collect_query_matrix(
@@ -1095,259 +1010,236 @@ def ivfpq_topk_rerank(
         raise ValueError(
             f"query dim {Q.shape[1]} != codebook dim {m * sub} (m={m}, sub={sub})"
         )
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    C = np.array([v for _, v in centroids], dtype=np.float64)
-    d2 = (
-        (Q * Q).sum(axis=1)[:, None]
-        - 2.0 * (Q @ C.T)
-        + (C * C).sum(axis=1)[None, :]
-    )
-    # deterministic nprobe pick: distance, then centroid id
-    order = np.lexsort((cids[None, :].repeat(len(qids), 0), d2), axis=1)
-    probed = cids[order[:, :nprobe]]  # nq × nprobe
-    all_probed = sorted({int(c) for row in probed for c in row})
-
-    pruned = layout.filter(F.col("centroid_id").isin(all_probed))
+    # the probe runs in the layout's (transformed) euclidean space
+    probed, by_bucket = probe_plan(Q, centroids, nprobe, "euclidean")
+    pruned = layout.filter(F.col("centroid_id").isin(probed))
     if pre_filter is not None:
         pruned = pruned.filter(pre_filter)
-
-    q_payload = json.dumps([[float(x) for x in row] for row in Q])
-    qraw_payload = json.dumps([[float(x) for x in row] for row in Qraw])
-    qid_payload = json.dumps([int(x) for x in qids])
-    probe_payload = json.dumps([[int(c) for c in row] for row in probed])
-    books_payload = json.dumps(codebooks)
-    cent_payload = json.dumps(
-        {int(c): [float(x) for x in v] for c, v in centroids}
-    )
-    lead_asc = smaller_is_better(metric)
-
-    def fused_kernel(batches):
-        """Single-pass probe: ADC over the batch's probed buckets →
-        per-(query, bucket) top-``fetch_k`` ADC cut → per-query ADC
-        top-``fetch_k`` MERGE across all of the task's batches (codes
-        are cheap to compare; carrying every bucket's full cut to the
-        rerank would re-score ~``fetch_k × buckets`` rows per query —
-        at fetch 2000 × 100 probed buckets that is half the corpus
-        again) → ONE exact rerank per task of each query's surviving
-        ``fetch_k`` candidates against the raw vectors CO-LOCATED in
-        the layout. The rescore reproduces
-        ``functions.vector.similarity_expr`` bit-for-bit: float64
-        everywhere, per-dimension SEQUENTIAL left-fold adds (a Python
-        loop of vectorized adds over dims — not numpy pairwise
-        summation), same zero-denominator NULL for cosine. The
-        candidate set is the union of per-(query, task) ADC
-        top-``fetch_k`` cuts — a SUPERSET of the global ADC
-        top-``fetch_k`` (equal to it when one task reads the whole
-        probe, e.g. a ``coalesce(1)`` layout read; the whole probed
-        set whenever ``fetch_k`` covers the probed rows, which is how
-        the full-value oracles are constructed). Every cut breaks ADC
-        ties by ``vec_id``, so the candidate set is deterministic given
-        the task's bucket assignment."""
-        B = [np.array(b, dtype=np.float64) for b in json.loads(books_payload)]
-        Qm = np.array(json.loads(q_payload), dtype=np.float64)
-        Qr = np.array(json.loads(qraw_payload), dtype=np.float64)
-        qid = np.array(json.loads(qid_payload), dtype=np.int64)
-        probe = json.loads(probe_payload)
-        cvec = {
+    kernel = partial(
+        adc_rerank_blocks,
+        qids=qids,
+        Q=Q,
+        Qr=Qraw,
+        books=[np.array(b, dtype=np.float64) for b in codebooks],
+        cvec={
             int(c): np.array(v, dtype=np.float64)
-            for c, v in json.loads(cent_payload).items()
-        }
-        nq = Qm.shape[0]
-        d_raw = Qr.shape[1]
-
-        def seq_dot(qv, W):
-            """<q, w> per row of W with the SQL fold's add order."""
-            acc = np.zeros(W.shape[0], dtype=np.float64)
-            for j in range(W.shape[1]):
-                acc = acc + qv[j] * W[:, j]
-            return acc
-
-        def seq_sq(W):
-            acc = np.zeros(W.shape[0], dtype=np.float64)
-            for j in range(W.shape[1]):
-                acc = acc + W[:, j] * W[:, j]
-            return acc
-
-        def seq_l2(qv):
-            acc = 0.0
-            for x in qv:
-                acc = acc + x * x
-            return float(np.sqrt(acc))
-
-        q_norms = [seq_l2(Qr[i]) for i in range(nq)]
-
-        # Invert the probe map once per task: bucket → the (sorted)
-        # query indices probing it; each probed bucket gets ONE
-        # stacked LUT tensor (nq_b × m × k) so every query scoring a
-        # bucket is a single fancy gather, not a Python loop. For
-        # residual layouts the ADC target is q - c_bucket
-        # (|q - (c + r)|^2 = |(q - c) - r|^2) so the tensor is built
-        # per bucket — LAZILY, on the bucket's first row in THIS task
-        # (a task holds a handful of bucket directories; building all
-        # probed buckets' LUTs in every task is buckets/task-count ×
-        # wasted work). Raw layouts share each query's own LUT across
-        # buckets (stack is a view-index into one nq × m × k array).
-        bq_lists: dict[int, list[int]] = {}
-        for qi in range(nq):
-            for cid in probe[qi]:
-                bq_lists.setdefault(int(cid), []).append(qi)
-        bucket_queries = {
-            c: np.array(v, dtype=np.int64) for c, v in bq_lists.items()
-        }
-        raw_luts = None if residual else _adc_luts(Qm, B, sub)
-        lut_cache: dict[int, "np.ndarray"] = {}
-
-        def get_lut(cid):
-            hit = lut_cache.get(cid)
-            if hit is None:
-                qis = bucket_queries[cid]
-                hit = (
-                    _adc_luts(Qm[qis] - cvec[cid][None, :], B, sub)
-                    if residual
-                    else raw_luts[qis]
-                )
-                lut_cache[cid] = hit
-            return hit
-
-        # per-query candidate accumulators over the WHOLE task:
-        # parallel lists of (ids, adc, vectors) arrays, compacted to
-        # the ADC top-``fetch_k`` whenever they grow past 4×fetch_k —
-        # bounded memory (≤ 4·fetch_k·d floats per query), one exact
-        # rerank at generator end instead of one per (query, bucket)
-        acc_ids: list[list] = [[] for _ in range(nq)]
-        acc_adc: list[list] = [[] for _ in range(nq)]
-        acc_vec: list[list] = [[] for _ in range(nq)]
-        acc_n = [0] * nq
-
-        def _compact(qi, keep):
-            """Cut query ``qi``'s accumulator to its ADC top-``keep``
-            by (adc asc, vec_id asc)."""
-            ids_c = np.concatenate(acc_ids[qi])
-            adc_c = np.concatenate(acc_adc[qi])
-            vec_c = np.concatenate(acc_vec[qi])
-            if len(ids_c) > keep:
-                order_c = np.lexsort((ids_c, adc_c))[:keep]
-                ids_c, adc_c, vec_c = (
-                    ids_c[order_c],
-                    adc_c[order_c],
-                    vec_c[order_c],
-                )
-            acc_ids[qi] = [ids_c]
-            acc_adc[qi] = [adc_c]
-            acc_vec[qi] = [vec_c]
-            acc_n[qi] = len(ids_c)
-            return ids_c, adc_c, vec_c
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = (
-                batch.column(id_col)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            codes = list_matrix(batch, "codes", m).astype(
-                np.int64, copy=False
-            )
-            # zero-copy view in the STORED dtype; only the ≤ fetch_k
-            # candidate rows per query are copied out below — widening
-            # the whole batch would copy ~n×d×8 bytes for rows the
-            # rerank never touches
-            V = list_matrix(batch, vec_col, d_raw)
-            bucket = (
-                batch.column("centroid_id")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-            )
-            # the layout is partitioned by centroid_id so a batch is
-            # normally ONE bucket; group once regardless
-            for cid in np.unique(bucket):
-                qis = bucket_queries.get(int(cid))
-                if qis is None:
-                    continue
-                sel = np.nonzero(bucket == cid)[0]
-                sel = sel[np.argsort(ids[sel], kind="stable")]
-                cs = codes[sel]
-                lut = get_lut(int(cid))
-                dist = lut[:, 0, cs[:, 0]]
-                for j in range(1, m):
-                    dist = dist + lut[:, j, cs[:, j]]
-                n_sel = len(sel)
-                t = min(fetch_k, n_sel)
-                # per-query ADC cut by (dist asc, vec_id asc) — ids
-                # are pre-sorted so the stable argsort's tie order is
-                # the window's tie order
-                top = np.argsort(dist, axis=1, kind="stable")[:, :t]
-                for bi, qi in enumerate(qis):
-                    rows = sel[top[bi]]
-                    acc_ids[qi].append(ids[rows])
-                    acc_adc[qi].append(dist[bi][top[bi]])
-                    # copy out of the Arrow buffer (stored dtype) —
-                    # the batch's memory is released after iteration
-                    acc_vec[qi].append(V[rows].copy())
-                    acc_n[qi] += t
-                    if acc_n[qi] > 4 * fetch_k:
-                        _compact(qi, fetch_k)
-
-        out_q: list["np.ndarray"] = []
-        out_v: list["np.ndarray"] = []
-        out_s: list["np.ndarray"] = []
-        out_nul: list["np.ndarray"] = []
-        for qi in range(nq):
-            if not acc_n[qi]:
-                continue
-            ids_f, _, vec_f = _compact(qi, fetch_k)
-            W = vec_f.astype(np.float64)  # exact widening
-            t = len(ids_f)
-            if metric == "euclidean":
-                diff = Qr[qi][None, :] - W
-                s = np.sqrt(seq_sq(diff))
-                nul = np.zeros(t, dtype=bool)
-            elif metric == "dotproduct":
-                s = seq_dot(Qr[qi], W)
-                nul = np.zeros(t, dtype=bool)
-            else:  # cosine
-                denom = q_norms[qi] * np.sqrt(seq_sq(W))
-                nul = denom == 0.0
-                s = np.divide(
-                    seq_dot(Qr[qi], W),
-                    np.where(nul, 1.0, denom),
-                )
-            # exact scores are FINAL, so only the per-task top-k can
-            # reach the global top-k — emit k rows per (query, task),
-            # not fetch_k (the post-kernel shuffle shrinks fetch_k/k
-            # ×). Order mirrors the downstream window exactly: euclid
-            # (score asc, vec_id asc); cosine/dot (score desc NULLS
-            # LAST, vec_id asc) — nulls mapped past every real score.
-            if t > k:
-                key = s if lead_asc else np.where(nul, np.inf, -s)
-                keep = np.lexsort((ids_f, key))[:k]
-                ids_f, s, nul = ids_f[keep], s[keep], nul[keep]
-                t = k
-            out_q.append(np.full(t, qid[qi], dtype=np.int64))
-            out_v.append(ids_f)
-            out_s.append(s)
-            out_nul.append(nul)
-        if out_q:
-            nul_all = np.concatenate(out_nul)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_v), type=pa.int64()),
-                    pa.array(
-                        np.concatenate(out_s),
-                        type=pa.float64(),
-                        mask=nul_all if nul_all.any() else None,
-                    ),
-                ],
-                names=["query_id", "vec_id", "score"],
-            )
-
+            for c, v in centroids
+            if int(c) in by_bucket
+        },
+        by_bucket=by_bucket,
+        residual=residual,
+        metric=metric,
+        k=k,
+        fetch_k=fetch_k,
+        id_col=id_col,
+        vec_col=vec_col,
+    )
     scored = pruned.select(
         id_col, "codes", "centroid_id", vec_col
-    ).mapInArrow(fused_kernel, "query_id long, vec_id long, score double")
+    ).mapInArrow(kernel, "query_id long, vec_id long, score double")
     return rank_top_k(scored, k, metric)
+
+
+def adc_rerank_blocks(batches, *, qids, Q, Qr, books, cvec, by_bucket,
+                      residual: bool, metric: str, k: int, fetch_k: int,
+                      id_col: str, vec_col: str):
+    """The one IVFPQ kernel (see :func:`ivfpq_topk_rerank`): ADC over
+    the batch's probed buckets → per-(query, bucket) top-``fetch_k`` ADC
+    cut → per-query ADC top-``fetch_k`` MERGE across all of the task's
+    batches (codes are cheap to compare; carrying every bucket's full
+    cut to the rerank would re-score ~``fetch_k × buckets`` rows per
+    query — at fetch 2000 × 100 probed buckets that is half the corpus
+    again) → ONE exact rerank per task of each query's surviving
+    ``fetch_k`` candidates against the raw vectors CO-LOCATED in the
+    layout. ``Q`` is the query matrix in the layout's space, ``Qr`` in
+    the raw space, ``by_bucket`` the :func:`ann.probe_plan` map and
+    ``cvec`` the probed centroids (the residual target). The rescore
+    reproduces ``functions.vector.similarity_expr`` bit-for-bit:
+    float64 everywhere, per-dimension SEQUENTIAL left-fold adds (a
+    Python loop of vectorized adds over dims — not numpy pairwise
+    summation); under cosine a row with a zero denominator is dropped.
+    The candidate set is the union of per-(query, task) ADC
+    top-``fetch_k`` cuts — a SUPERSET of the global ADC top-``fetch_k``
+    (equal to it when one task reads the whole probe, e.g. a
+    ``coalesce(1)`` layout read; the whole probed set whenever
+    ``fetch_k`` covers the probed rows, which is how the full-value
+    oracles are constructed). Every cut breaks ADC ties by ``vec_id``,
+    so the candidate set is deterministic given the task's bucket
+    assignment."""
+    import numpy as np
+    import pyarrow as pa
+
+    m = len(books)
+    sub = books[0].shape[1]
+    nq = Q.shape[0]
+    d_raw = Qr.shape[1]
+
+    def seq_dot(qv, W):
+        """<q, w> per row of W with the SQL fold's add order."""
+        acc = np.zeros(W.shape[0], dtype=np.float64)
+        for j in range(W.shape[1]):
+            acc = acc + qv[j] * W[:, j]
+        return acc
+
+    def seq_sq(W):
+        acc = np.zeros(W.shape[0], dtype=np.float64)
+        for j in range(W.shape[1]):
+            acc = acc + W[:, j] * W[:, j]
+        return acc
+
+    def seq_l2(qv):
+        acc = 0.0
+        for x in qv:
+            acc = acc + x * x
+        return float(np.sqrt(acc))
+
+    q_norms = [seq_l2(Qr[i]) for i in range(nq)]
+
+    # Each probed bucket gets ONE stacked LUT tensor (nq_b × m × k) so
+    # every query scoring a bucket is a single fancy gather, not a
+    # Python loop. For residual layouts the ADC target is q - c_bucket
+    # (|q - (c + r)|^2 = |(q - c) - r|^2) so the tensor is built per
+    # bucket — LAZILY, on the bucket's first row in THIS task (a task
+    # holds a handful of bucket directories; building all probed
+    # buckets' LUTs in every task is buckets/task-count × wasted
+    # work). Raw layouts share each query's own LUT across buckets
+    # (stack is a view-index into one nq × m × k array).
+    raw_luts = None if residual else _adc_luts(Q, books, sub)
+    lut_cache: dict[int, "np.ndarray"] = {}
+
+    def get_lut(cid):
+        hit = lut_cache.get(cid)
+        if hit is None:
+            qis = by_bucket[cid]
+            hit = (
+                _adc_luts(Q[qis] - cvec[cid][None, :], books, sub)
+                if residual
+                else raw_luts[qis]
+            )
+            lut_cache[cid] = hit
+        return hit
+
+    # per-query candidate accumulators over the WHOLE task:
+    # parallel lists of (ids, adc, vectors) arrays, compacted to
+    # the ADC top-``fetch_k`` whenever they grow past 4×fetch_k —
+    # bounded memory (≤ 4·fetch_k·d floats per query), one exact
+    # rerank at generator end instead of one per (query, bucket)
+    acc_ids: list[list] = [[] for _ in range(nq)]
+    acc_adc: list[list] = [[] for _ in range(nq)]
+    acc_vec: list[list] = [[] for _ in range(nq)]
+    acc_n = [0] * nq
+
+    def _compact(qi, keep):
+        """Cut query ``qi``'s accumulator to its ADC top-``keep``
+        by (adc asc, vec_id asc)."""
+        ids_c = np.concatenate(acc_ids[qi])
+        adc_c = np.concatenate(acc_adc[qi])
+        vec_c = np.concatenate(acc_vec[qi])
+        if len(ids_c) > keep:
+            order_c = np.lexsort((ids_c, adc_c))[:keep]
+            ids_c, adc_c, vec_c = (
+                ids_c[order_c],
+                adc_c[order_c],
+                vec_c[order_c],
+            )
+        acc_ids[qi] = [ids_c]
+        acc_adc[qi] = [adc_c]
+        acc_vec[qi] = [vec_c]
+        acc_n[qi] = len(ids_c)
+        return ids_c, adc_c, vec_c
+
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        ids = (
+            batch.column(id_col)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64, copy=False)
+        )
+        codes = list_matrix(batch, "codes", m).astype(
+            np.int64, copy=False
+        )
+        # zero-copy view in the STORED dtype; only the ≤ fetch_k
+        # candidate rows per query are copied out below — widening
+        # the whole batch would copy ~n×d×8 bytes for rows the
+        # rerank never touches
+        V = list_matrix(batch, vec_col, d_raw)
+        bucket = (
+            batch.column("centroid_id")
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64, copy=False)
+        )
+        # the layout is partitioned by centroid_id so a batch is
+        # normally ONE bucket; group once regardless
+        for cid in np.unique(bucket):
+            qis = by_bucket.get(int(cid))
+            if qis is None:
+                continue
+            sel = np.nonzero(bucket == cid)[0]
+            sel = sel[np.argsort(ids[sel], kind="stable")]
+            cs = codes[sel]
+            lut = get_lut(int(cid))
+            dist = lut[:, 0, cs[:, 0]]
+            for j in range(1, m):
+                dist = dist + lut[:, j, cs[:, j]]
+            n_sel = len(sel)
+            t = min(fetch_k, n_sel)
+            # per-query ADC cut by (dist asc, vec_id asc) — ids
+            # are pre-sorted so the stable argsort's tie order is
+            # the window's tie order
+            top = np.argsort(dist, axis=1, kind="stable")[:, :t]
+            for bi, qi in enumerate(qis):
+                rows = sel[top[bi]]
+                acc_ids[qi].append(ids[rows])
+                acc_adc[qi].append(dist[bi][top[bi]])
+                # copy out of the Arrow buffer (stored dtype) —
+                # the batch's memory is released after iteration
+                acc_vec[qi].append(V[rows].copy())
+                acc_n[qi] += t
+                if acc_n[qi] > 4 * fetch_k:
+                    _compact(qi, fetch_k)
+
+    smaller = smaller_is_better(metric)
+    out_q: list["np.ndarray"] = []
+    out_v: list["np.ndarray"] = []
+    out_s: list["np.ndarray"] = []
+    for qi in range(nq):
+        if not acc_n[qi]:
+            continue
+        ids_f, _, vec_f = _compact(qi, fetch_k)
+        W = vec_f.astype(np.float64)  # exact widening
+        if metric == "euclidean":
+            diff = Qr[qi][None, :] - W
+            s = np.sqrt(seq_sq(diff))
+        elif metric == "dotproduct":
+            s = seq_dot(Qr[qi], W)
+        else:  # cosine
+            denom = q_norms[qi] * np.sqrt(seq_sq(W))
+            live = denom > 0.0
+            ids_f, W, denom = ids_f[live], W[live], denom[live]
+            s = seq_dot(Qr[qi], W) / denom
+        t = len(ids_f)
+        # exact scores are FINAL, so only the per-task top-k can reach
+        # the global top-k — emit k rows per (query, task), not fetch_k
+        # (the post-kernel shuffle shrinks fetch_k/k ×), in the
+        # downstream window's (score, vec_id) order
+        if t > k:
+            keep = np.lexsort((ids_f, s if smaller else -s))[:k]
+            ids_f, s = ids_f[keep], s[keep]
+            t = k
+        out_q.append(np.full(t, qids[qi], dtype=np.int64))
+        out_v.append(ids_f)
+        out_s.append(s)
+    if out_q:
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate(out_q), type=pa.int64()),
+                pa.array(np.concatenate(out_v), type=pa.int64()),
+                pa.array(np.concatenate(out_s), type=pa.float64()),
+            ],
+            names=["query_id", "vec_id", "score"],
+        )
 
 
 def retrain_ivfpq_index(

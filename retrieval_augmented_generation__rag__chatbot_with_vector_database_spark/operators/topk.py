@@ -123,6 +123,8 @@ def topk_search(
             F.col("__qnorm"),
             F.col("__vnorm"),
         )
+        # a zero-norm row has no cosine (NULL), so no route returns it
+        joined = joined.filter(score.isNotNull())
     else:
         score = similarity_expr(metric, F.col("__qvec"), F.col(vec_col))
     scored = joined.select(

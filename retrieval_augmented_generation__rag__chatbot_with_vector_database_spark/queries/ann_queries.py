@@ -443,12 +443,12 @@ def ann_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     books = pq.train_pq_codebooks(emb, m=16, k=64)
-    enc = pq.pq_encode(emb, books)
+    enc = pq.pq_encode(emb, books, carry_cols=["embedding"])
     exact = topk_search(q, emb, k=K, metric="euclidean").select(
         "query_id", "vec_id"
     )
     rer = pq.pq_topk_rerank(
-        q, enc, emb, books, k=K, fetch_k=100, metric="euclidean"
+        q, enc, books, k=K, fetch_k=100
     ).select("query_id", F.col("vec_id").alias("r_vec_id"))
     hits = exact.join(
         rer,
@@ -714,12 +714,12 @@ def ann_opq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q_rot = pq.rotate_vectors(q, R, vec_col="qvec")
     books = pq.train_pq_codebooks(emb_rot, m=16, k=64)
-    enc = pq.pq_encode(emb_rot, books)
+    enc = pq.pq_encode(emb_rot, books, carry_cols=["embedding"])
     exact = topk_search(q, emb, k=K, metric="euclidean").select(
         "query_id", "vec_id"
     )
     rer = pq.pq_topk_rerank(
-        q_rot, enc, emb_rot, books, k=K, fetch_k=100, metric="euclidean"
+        q_rot, enc, books, k=K, fetch_k=100
     ).select("query_id", F.col("vec_id").alias("r_vec_id"))
     hits = exact.join(
         rer,

@@ -232,16 +232,8 @@ def dedup_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_groups(pairs)
 
 
-@register("dedup_duplicate_groups_star", _DUP_GROUPS_ORACLE)
-def dedup_duplicate_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same body as ``dedup_duplicate_groups``, kept under its
-    registered name: ``duplicate_groups`` has one connected-components
-    algorithm, large-star/small-star (O(log n) rounds on any graph
-    shape)."""
-    pairs = dedup.minhash_lsh_pairs(
-        load(spark, sf_dir, "documents"), n_hashes=16, bands=4, min_est=0.25
-    )
-    return dedup.duplicate_groups(pairs)
+# the same query under the name the registry and driver contract list
+register("dedup_duplicate_groups_star", _DUP_GROUPS_ORACLE)(dedup_duplicate_groups)
 
 
 @register(

@@ -40,29 +40,34 @@ def test_encode_identity_on_codebook_vectors(spark):
 
 
 def test_adc_matches_numpy_reference(spark, emb):
-    """ADC distances must equal a transparent numpy computation of
-    sum-of-subspace |q_j - codebook[codes_j]|^2 for every (q, vec)."""
+    """On a one-task read with ``fetch_k = k`` the flat probe reranks
+    exactly each query's ADC top-k, so its ids per query must equal a
+    transparent numpy ADC top-k: sum over subspaces of
+    |q_j - codebook_j[code_j]|², ties by vec_id."""
     import numpy as np
 
     books = pq.train_pq_codebooks(emb, m=8, k=16)
-    enc = {r["vec_id"]: r["codes"] for r in pq.pq_encode(emb, books).collect()}
-    vecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 8).collect()
-    }
-    got = {
-        (r["query_id"], r["vec_id"]): r["adc_dist"]
-        for r in pq.pq_topk(_queries(emb), pq.pq_encode(emb, books), books, k=5).collect()
-    }
+    enc = pq.pq_encode(emb.coalesce(1), books, carry_cols=["embedding"])
+    rows = enc.collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    codes = np.array([r["codes"] for r in rows])
+    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
+    got: dict[int, set] = {}
+    for r in pq.pq_topk_rerank(_queries(emb), enc, books, k=5, fetch_k=5).collect():
+        got.setdefault(r["query_id"], set()).add(r["vec_id"])
     B = [np.array(b) for b in books]
     sub = B[0].shape[1]
-    for (qid, vid), dist in got.items():
-        q = np.array(vecs[qid])
-        want = sum(
-            ((q[j * sub : (j + 1) * sub] - B[j][enc[vid][j]]) ** 2).sum()
+    assert sorted(got) == list(range(8))
+    for qid, found in got.items():
+        q = vecs[qid]
+        adc = sum(
+            ((q[j * sub : (j + 1) * sub][None, :] - B[j][codes[:, j]]) ** 2).sum(axis=1)
             for j in range(len(B))
         )
-        assert dist == pytest.approx(want, rel=1e-9), (qid, vid)
+        order = np.lexsort((ids, adc))
+        # the cut is not a near-tie, so rounding cannot move it
+        assert adc[order[5]] - adc[order[4]] > 1e-9, qid
+        assert found == set(ids[order[:5]].tolist()), qid
 
 
 def test_rerank_recovers_exact_topk_recall(spark, emb):
@@ -74,25 +79,22 @@ def test_rerank_recovers_exact_topk_recall(spark, emb):
     )
 
     books = pq.train_pq_codebooks(emb, m=16, k=64)
-    enc = pq.pq_encode(emb, books).localCheckpoint()
+    enc = pq.pq_encode(emb, books, carry_cols=["embedding"]).localCheckpoint()
     q = _queries(emb)
     exact = {
         (r["query_id"], r["vec_id"])
         for r in topk_search(q, emb, k=5, metric="euclidean").collect()
     }
-    rer = {
-        (r["query_id"], r["vec_id"])
-        for r in pq.pq_topk_rerank(
-            q, enc, emb, books, k=5, fetch_k=50, metric="euclidean"
-        ).collect()
-    }
-    recall = len(rer & exact) / len(exact)
+
+    def probe(fetch_k):
+        return {
+            (r["query_id"], r["vec_id"])
+            for r in pq.pq_topk_rerank(q, enc, books, k=5, fetch_k=fetch_k).collect()
+        }
+
+    recall = len(probe(50) & exact) / len(exact)
     assert recall >= 0.95, f"rerank recall {recall}"
-    raw = {
-        (r["query_id"], r["vec_id"])
-        for r in pq.pq_topk(q, enc, books, k=5).collect()
-    }
-    raw_recall = len(raw & exact) / len(exact)
+    raw_recall = len(probe(5) & exact) / len(exact)
     assert raw_recall <= recall  # rerank never hurts
 
 
@@ -101,8 +103,31 @@ def test_dim_mismatch_rejected(spark, emb):
     bad_q = spark.createDataFrame(
         [(0, [1.0] * 32)], "query_id long, qvec array<float>"
     )
+    enc = pq.pq_encode(emb, books, carry_cols=["embedding"])
     with pytest.raises(ValueError, match="codebook dim"):
-        pq.pq_topk(bad_q, pq.pq_encode(emb, books), books)
+        pq.pq_topk_rerank(bad_q, enc, books)
+
+
+def test_encode_and_sse_reject_vectors_wider_than_the_codebooks(spark):
+    """A 6-dim vector against m=2, sub=2 codebooks: slicing the first
+    4 dims would encode it from 4 of its 6 coordinates and report zero
+    reconstruction error for dims that hold ±9. Both kernels decode
+    through ``ann.list_matrix`` and raise; ragged and null vectors
+    raise the same way."""
+    books = [[[0.0, 0.0], [1.0, 1.0]], [[2.0, 2.0], [3.0, 3.0]]]
+    wide = spark.createDataFrame(
+        [(0, [0.0, 0.0, 3.0, 3.0, 9.0, 9.0]), (1, [1.0, 1.0, 2.0, 2.0, -9.0, -9.0])],
+        "vec_id long, embedding array<float>",
+    )
+    ragged = spark.createDataFrame(
+        [(0, [0.0, 0.0, 3.0, 3.0]), (1, [1.0, 1.0]), (2, None)],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    for bad in (wide, ragged):
+        with pytest.raises(Exception, match="fixed-width 4"):
+            pq.pq_encode(bad, books).collect()
+        with pytest.raises(Exception, match="fixed-width 4"):
+            pq.pq_reconstruction_sse(bad, books).collect()
 
 
 def test_ivfpq_full_probe_equals_flat_pq(spark, emb, tmp_path):
@@ -121,7 +146,8 @@ def test_ivfpq_full_probe_equals_flat_pq(spark, emb, tmp_path):
     flat = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.pq_topk_rerank(
-            q, pq.pq_encode(emb, books), emb, books, k=5, fetch_k=50
+            q, pq.pq_encode(emb, books, carry_cols=["embedding"]), books,
+            k=5, fetch_k=50,
         ).collect()
     }
     ivf = {

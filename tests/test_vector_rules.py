@@ -112,6 +112,40 @@ def test_each_operation_has_one_kernel():
     assert assigners == [("operators/ann.py", "assign_centroids_gemm")]
 
 
+def test_one_probe_plan_and_plain_kernels():
+    """The probe plan (each query's nprobe centroids, bucket → queries)
+    is ``ann.probe_plan`` alone; the GEMM and IVFPQ kernels are
+    module-level functions bound with ``functools.partial`` over numpy
+    arrays, so no payload is JSON-encoded for a task to decode; flat PQ
+    is the one-list IVFPQ probe (no ``pq_topk``, and
+    ``pq_topk_rerank`` takes no separate index or metric); PQ kernels
+    decode vectors through ``ann.list_matrix``."""
+    import inspect
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        pq,
+    )
+
+    srcs = _sources("operators")
+    assert _holders(srcs, r"def probe_plan\(") == {"operators/ann.py": 1}
+    assert _holders(srcs, r":nprobe\]") == {"operators/ann.py": 1}
+    assert _holders(srcs, r"json\.loads\(") == {}
+    assert "json.dumps(" not in srcs["operators/pq.py"]
+    assert _holders({"pq": srcs["operators/pq.py"]}, r"to_py(list|dict)\(") == {}
+    tree = ast.parse(srcs["operators/pq.py"])
+    assert "pq_topk" not in {fn.name for fn in tree.body if isinstance(fn, ast.FunctionDef)}
+    params = inspect.signature(pq.pq_topk_rerank).parameters
+    assert "index" not in params and "metric" not in params
+    for f, name in (("operators/ann.py", "gemm_topk"), ("operators/pq.py", "ivfpq_topk_rerank")):
+        fn = next(
+            n for n in ast.parse(srcs[f]).body
+            if isinstance(n, ast.FunctionDef) and n.name == name
+        )
+        nested = [n.name for n in ast.walk(fn) if isinstance(n, ast.FunctionDef) and n is not fn]
+        assert nested == [], (name, nested)
+        assert "partial(" in ast.get_source_segment(srcs[f], fn), name
+
+
 def test_each_lexical_weight_is_written_once():
     srcs = _sources("operators", "sources")
     lexical = {f: s for f, s in srcs.items() if f in ("operators/hybrid.py", "sources/lexical_index.py")}
