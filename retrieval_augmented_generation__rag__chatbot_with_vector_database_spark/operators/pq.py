@@ -475,12 +475,10 @@ def pq_topk_rerank(
     the codes and the raw vectors (``pq_encode(..., carry_cols=
     [vec_col])``). Each task reranks its own ADC top-``fetch_k`` per
     query, a superset of the global ADC top-``fetch_k``."""
-    dim = len(codebooks) * len(codebooks[0][0])
     return ivfpq_topk_rerank(
         queries,
         encoded.withColumn("centroid_id", F.lit(0)),
-        [(0, [0.0] * dim)],
-        codebooks,
+        {"centroids": [(0, [0.0] * _book_dim(codebooks))], "codebooks": codebooks},
         k=k,
         nprobe=1,
         fetch_k=fetch_k,
@@ -495,9 +493,17 @@ def pq_topk_rerank(
 
 IVFPQ_META = "_ivfpq_meta.json"
 
-#: the (normalize, mips) build flags an IVFPQ layout needs to serve
-#: each metric: the ADC is squared-L2, which orders like cosine on
-#: unit vectors and like dot product on MIPS-augmented ones
+#: The layout-space rule. An IVFPQ layout stores RAW full-precision
+#: vectors (the rerank metric is defined on them) next to codes that
+#: live in the layout's SPACE, which its sidecar alone describes: the
+#: (normalize, mips) flags below, the MIPS scale ``mips_max_norm``
+#: and the OPQ ``rotation``. Rows enter that space in one place
+#: (:func:`_in_layout_space`, applied by :func:`_layout_rows` for
+#: build, upsert and retrain alike), always with the sidecar's own
+#: M and R; queries enter it in :func:`ivfpq_topk_rerank`. The ADC is
+#: squared-L2, which orders like cosine on unit vectors and like dot
+#: product on MIPS-augmented ones, so each flag pair serves exactly one
+#: metric:
 LAYOUT_FLAGS = {
     "euclidean": (False, False),
     "cosine": (True, False),
@@ -505,21 +511,30 @@ LAYOUT_FLAGS = {
 }
 
 
-def check_layout_metric(metric: str, normalize: bool, mips: bool) -> None:
-    """Raise unless a layout built with ``(normalize, mips)`` serves
+def layout_metric(meta: dict) -> str:
+    """The one metric an IVFPQ layout serves, from its sidecar's
+    (normalize, mips) flags."""
+    flags = (bool(meta.get("normalize")), bool(meta.get("mips")))
+    for metric, want in LAYOUT_FLAGS.items():
+        if flags == want:
+            return metric
+    raise ValueError(f"IVFPQ sidecar flags (normalize, mips)={flags} serve no metric")
+
+
+def check_layout_metric(metric: str, meta: dict) -> None:
+    """Raise unless the IVFPQ layout with sidecar ``meta`` serves
     ``metric``. A transformed layout serves EXACTLY its metric (each
     transform defines the space the codes live in; mixing metrics
     would rank by one geometry and score by another)."""
     check_metric(metric)
-    flags = (bool(normalize), bool(mips))
-    if flags != LAYOUT_FLAGS[metric]:
+    if layout_metric(meta) != metric:
         raise ValueError(
             f"metric={metric!r} needs an IVFPQ layout built with "
-            f"(normalize, mips)={LAYOUT_FLAGS[metric]}; this layout has "
-            f"{flags} — a transformed layout serves exactly its own "
-            "metric (normalize→cosine, mips→dotproduct, raw→euclidean); "
-            "rebuild with the matching write_ivfpq_index flags or use an "
-            "IVF/float layout"
+            f"(normalize, mips)={LAYOUT_FLAGS[metric]}; this layout serves "
+            f"{layout_metric(meta)!r} — a transformed layout serves exactly "
+            "its own metric (normalize→cosine, mips→dotproduct, "
+            "raw→euclidean); rebuild with the matching write_ivfpq_index "
+            "flags or use an IVF/float layout"
         )
 
 
@@ -546,15 +561,15 @@ def mips_max_norm(index: DataFrame, vec_col: str = "embedding") -> float:
     """Max L2 norm over the index — the MIPS transform's scale
     constant ``M``. One aggregate; exact and order-independent (float
     max), so build and callers compute the identical value."""
-    return _mips_norm_and_dim(index, vec_col)[0]
+    return _mips_norm(index, vec_col, None)
 
 
-def _mips_norm_and_dim(
-    index: DataFrame, vec_col: str = "embedding"
-) -> tuple[float, int]:
-    """(max L2 norm, max vector dim) in ONE aggregate — the build path
-    needs both (M for the transform, dim to validate the codebook
-    covers the augmented vector) and shouldn't pay two scans."""
+def _mips_norm(index: DataFrame, vec_col: str, book_dim: int | None) -> float:
+    """``M`` in ONE aggregate that also reads the max vector dim: a
+    MIPS layout's codebooks must cover the augmented vector (input dim
+    + 1), or the sqrt coordinate would be sliced off and ADC order
+    would silently stop being dot-product order, so a ``book_dim``
+    below that raises."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.functions.vector import (
         l2_norm,
     )
@@ -566,7 +581,16 @@ def _mips_norm_and_dim(
     m = row["m"]
     if m is None or m <= 0:
         raise ValueError("MIPS transform needs at least one non-zero vector")
-    return float(m), int(row["d"])
+    if book_dim is not None and book_dim < int(row["d"]) + 1:
+        raise ValueError(
+            f"MIPS codebook dim m*sub={book_dim} < input dim "
+            f"{int(row['d'])} + 1: the augmented vector [x/M, sqrt(1-|x/M|²)] "
+            "would be truncated and ADC order would silently stop "
+            "being dot-product order — train codebooks on the "
+            "augmented frame (dim >= input + 1, padded to the "
+            "subspace grid)"
+        )
+    return float(m)
 
 
 def mips_augmented(
@@ -613,6 +637,11 @@ def mips_augmented(
     )
 
 
+def _book_dim(codebooks: list[list[list[float]]]) -> int:
+    """m × sub: the dimension of the layout's space."""
+    return len(codebooks) * len(codebooks[0][0])
+
+
 def write_ivfpq_index(
     index: DataFrame,
     path: str,
@@ -634,35 +663,26 @@ def write_ivfpq_index(
     self-contained: :func:`ivfpq_topk_rerank` fuses the ADC probe and
     the exact rerank into one job over the probed buckets, and serving
     never reads a separate full-precision table. Both quantizers (coarse
-    centroids + codebooks) live in the sidecar, like the IVF layout's
-    centroid persistence: probing with a different quantizer is
-    silent garbage, so it must be impossible.
+    centroids + codebooks) live in the sidecar with the layout's space
+    (:data:`LAYOUT_FLAGS`): probing with a different quantizer is
+    silent garbage, so it must be impossible. Centroids, codebooks and
+    ``rotation`` must be trained on the frame in the layout's space.
 
     ``residual=False`` encodes RAW vectors (IVF-Flat-PQ);
     ``residual=True`` encodes ``v - centroid(v)`` with codebooks from
     :func:`train_pq_codebooks_residual` — residuals concentrate near
     zero, so the same code budget quantizes finer (the classic IVFPQ).
-    The flag is persisted; probe and upsert read it back.
 
-    ``normalize=True`` unit-normalizes every vector BEFORE assignment
-    and encoding (train centroids/codebooks on the normalized frame
-    too) and persists the flag: on unit vectors squared-L2 order ≡
-    cosine order (|a-b|² = 2-2·cos), so a normalized layout serves
-    ``metric="cosine"`` through the same ADC machinery — the
+    ``normalize=True`` builds the unit-sphere layout that serves
+    ``metric="cosine"`` (|a-b|² = 2-2·cos on unit vectors) — the
     reference's default metric (`app/api/routes.py:139,152`) on the
-    engine's cheapest layout. ``route()`` accepts cosine only against
-    a normalized sidecar.
+    engine's cheapest layout.
 
-    ``mips=True`` applies the MIPS→L2 augmentation instead
-    (:func:`mips_augmented`, target dim = the codebooks' m×sub;
-    ``M`` recomputed here — deterministic, equal to the caller's
-    :func:`mips_max_norm`): the layout serves ``metric="dotproduct"``.
-    Mutually exclusive with ``normalize`` (each transform defines the
-    layout's space). Centroids/codebooks must be trained on the SAME
-    augmented frame, and the codebook dim must cover the augmented
-    vector (input dim + 1) — a smaller codebook would silently slice
-    off the sqrt coordinate and ADC order would no longer be
-    dot-product order, so it raises here.
+    ``mips=True`` builds the MIPS-augmented layout that serves
+    ``metric="dotproduct"`` (:func:`mips_augmented`, target dim = the
+    codebooks' m×sub, ``M`` computed here once and persisted; the
+    codebook dim must cover input dim + 1, or this raises). Mutually
+    exclusive with ``normalize``.
 
     ``residual=None`` (the default) resolves to ``mips``: MIPS is
     intrinsically the hardest metric for reconstruction-optimal PQ
@@ -686,29 +706,14 @@ def write_ivfpq_index(
     retrain carry them through.
 
     ``rotation`` bakes an OPQ rotation (:func:`train_opq_rotation`)
-    into the layout: vectors are rotated AFTER the metric transform
-    (unit-normalize / MIPS-augment) and before coarse assignment and
-    encoding, so centroids and codebooks must be trained on the same
-    rotated frame. R is orthonormal — every L2 distance and inner
-    product is preserved, so ADC order, metric mapping, and the
-    raw-vector rerank are all unchanged semantically; only the code
-    budget's variance allocation improves (SCALE.md: 0.18× SSE under
-    1000× scale anisotropy; no gain on isotropic data — opt-in, not a
-    default). R is PERSISTED in the sidecar — the probe rotates
-    queries with the layout's own R, upsert encodes new rows in the
-    same rotated frame, retrain re-learns R for the drifted corpus;
-    serving never needs R out-of-band (the same "probing with a
-    different quantizer must be impossible" rule as the
-    centroids/codebooks).
+    into the layout, applied after the metric transform. R is
+    orthonormal, so every L2 distance and inner product is preserved;
+    only the code budget's variance allocation improves (SCALE.md:
+    0.18× SSE under 1000× scale anisotropy; no gain on isotropic data —
+    opt-in, not a default).
     """
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        assign_centroids_gemm,
-        check_centroid_ids,
-    )
-
     if normalize and mips:
         raise ValueError("normalize and mips are mutually exclusive")
-    check_centroid_ids(centroids)
     meta_cols = list(meta_cols or [])
     reserved = {id_col, vec_col, "centroid_id", "codes", "__raw"}
     for c in meta_cols:
@@ -716,8 +721,6 @@ def write_ivfpq_index(
             raise ValueError(
                 f"meta_cols entry {c!r} collides with a layout column"
             )
-        if c not in index.columns:
-            raise ValueError(f"meta_cols entry {c!r} not in the index frame")
     if residual is None:
         residual = mips
     if mips and not residual:
@@ -728,96 +731,125 @@ def write_ivfpq_index(
             "with train_pq_codebooks_residual on the augmented frame "
             "and pass residual=True (or leave residual=None)"
         )
-    max_norm = None
-    # stash the raw vectors before any space transform: the layout
-    # stores RAW floats (the rerank metric is defined on them), while
-    # assignment + encoding run in the transformed space
-    transformed = normalize or mips or rotation is not None
-    if transformed:
-        index = index.withColumn("__raw", F.col(vec_col))
-    if normalize:
-        index = _unit_normalized(index, vec_col)
-    if mips:
-        target_dim = len(codebooks) * len(codebooks[0][0])
-        max_norm, in_dim = _mips_norm_and_dim(index, vec_col)
-        if target_dim < in_dim + 1:
-            raise ValueError(
-                f"MIPS codebook dim m*sub={target_dim} < input dim "
-                f"{in_dim} + 1: the augmented vector [x/M, sqrt(1-|x/M|²)] "
-                "would be truncated and ADC order would silently stop "
-                "being dot-product order — train codebooks on the "
-                "augmented frame (dim >= input + 1, padded to the "
-                "subspace grid)"
-            )
-        index = mips_augmented(index, vec_col, max_norm, target_dim)
+    book_dim = _book_dim(codebooks)
     if rotation is not None:
         rd = len(rotation)
-        book_dim = len(codebooks) * len(codebooks[0][0])
         if rd != book_dim or any(len(r) != rd for r in rotation):
             raise ValueError(
                 f"rotation must be a {book_dim}×{book_dim} matrix over "
                 f"the layout's (transformed) frame; got {rd}×"
                 f"{len(rotation[0]) if rotation else 0}"
             )
-        index = rotate_vectors(index, rotation, vec_col)
-    assigned = assign_centroids_gemm(index, centroids, "euclidean", vec_col)
-    enc_src, enc_col = assigned, vec_col
-    if residual:
-        enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
-    # carry layout columns THROUGH the encode kernel (zero-copy Arrow
-    # passthrough) instead of self-joining the assigned frame on id:
-    # the join recomputed the assignment GEMM for its second branch
-    # and shuffled the full corpus once more — pure waste at 100 TB
+    _write_ivfpq(
+        index,
+        path,
+        {
+            "m": len(codebooks),
+            "k": len(codebooks[0]),
+            "centroids": centroids,
+            "codebooks": codebooks,
+            "residual": residual,
+            "normalize": normalize,
+            "mips": mips,
+            "mips_max_norm": _mips_norm(index, vec_col, book_dim) if mips else None,
+            "vec_col": vec_col,
+            "meta_cols": meta_cols,
+            "rotation": rotation,
+        },
+        id_col,
+        vec_col,
+    )
+
+
+def _write_ivfpq(index: DataFrame, path: str, meta: dict, id_col: str,
+                 vec_col: str) -> None:
+    """Build (or rebuild) the layout ``meta`` describes from ``index``."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        write_centroid_layout,
+    )
+
+    write_centroid_layout(
+        _layout_rows(index, meta, id_col, vec_col, one_per_id=False),
+        path,
+        IVFPQ_META,
+        meta,
+    )
+
+
+def _in_layout_space(rows: DataFrame, meta: dict, vec_col: str) -> DataFrame:
+    """``vec_col`` moved into the layout space ``meta`` describes (see
+    :data:`LAYOUT_FLAGS`): unit-normalized, or MIPS-augmented with the
+    sidecar's M to the codebooks' dimension, then rotated by the
+    sidecar's R. The sidecar's own M and R, never ones recomputed on
+    the rows: a batch would otherwise land in a different space."""
+    if meta.get("normalize"):
+        rows = _unit_normalized(rows, vec_col)
+    if meta.get("mips"):
+        rows = mips_augmented(
+            rows, vec_col, float(meta["mips_max_norm"]),
+            _book_dim(meta["codebooks"]),
+        )
+    if meta.get("rotation") is not None:
+        rows = rotate_vectors(rows, meta["rotation"], vec_col)
+    return rows
+
+
+def _layout_rows(rows: DataFrame, meta: dict, id_col: str, vec_col: str, *,
+                 one_per_id: bool) -> DataFrame:
+    """The one row pipeline of an IVFPQ layout, shared by build,
+    upsert and retrain: stash the raw vectors, enter the layout space
+    (:func:`_in_layout_space`), assign to the nearest coarse centroid
+    (euclidean — the ADC metric), keep one survivor per id when
+    ``one_per_id`` (an upsert batch; ``__raw`` is derived from the same
+    record as the transformed vector, so ignoring it keeps the choice a
+    function of the record alone), take residuals when the layout is
+    residual, PQ-encode with the sidecar's codebooks and project to the
+    layout's columns. The carried columns ride THROUGH the encode
+    kernel (zero-copy Arrow passthrough) instead of a self-join on id,
+    which would recompute the assignment GEMM and shuffle the batch
+    again. The raw vectors are stored as-is (no float cast): the fused
+    rerank must see the exact values the exact paths score."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        assign_centroids_gemm,
+        sidecar_centroids,
+    )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        pick_survivors,
+    )
+
+    meta_cols = meta.get("meta_cols") or []
+    for c in meta_cols:
+        # rows without a metadata column would land with NULL metadata
+        # and silently vanish from every filtered probe
+        if c not in rows.columns:
+            raise ValueError(
+                f"meta_cols entry {c!r} not in the index frame (the layout "
+                f"carries meta_cols {meta_cols}; rows are missing {c!r})"
+            )
+    centroids = sidecar_centroids(meta)
+    transformed = (
+        meta.get("normalize") or meta.get("mips")
+        or meta.get("rotation") is not None
+    )
     raw = "__raw" if transformed else vec_col
+    if transformed:
+        rows = rows.withColumn("__raw", F.col(vec_col))
+    assigned = assign_centroids_gemm(
+        _in_layout_space(rows, meta, vec_col), centroids, "euclidean", vec_col
+    )
+    if one_per_id:
+        assigned = pick_survivors(assigned, id_col, ignore=("__raw",))
+    enc_src, enc_col = assigned, vec_col
+    if meta.get("residual"):
+        enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
     enc = pq_encode(
-        enc_src, codebooks, id_col, enc_col,
+        enc_src, meta["codebooks"], id_col, enc_col,
         carry_cols=["centroid_id", raw, *meta_cols],
     )
-    # raw vectors stored AS-IS (no float cast): the fused rerank must
-    # see the exact values the exact paths score
-    layout = enc.select(
-        id_col, "centroid_id", F.col(raw).alias(vec_col), *meta_cols, "codes"
+    return enc.select(
+        id_col, "centroid_id", F.col(raw).alias(meta["vec_col"]),
+        *meta_cols, "codes",
     )
-    n_parts = len(centroids)
-    # row count rides the write job as an observed metric — the
-    # round-14 form re-read the written footers as a separate count()
-    # job (cheap per call, but every rebuild-per-call serving query
-    # pays it). At-scale caveat (ADVICE r15): observed metrics count
-    # per ATTEMPTED task, so retries/speculation can over-count;
-    # rows_at_build is a staleness indicator, not an exactness
-    # contract (see write_ivf_index for the same note).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        layout.observe(obs, F.count(F.lit(1)).alias("n"))
-        .repartition(n_parts, F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
-    n_rows = int(obs.get["n"])
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(
-            {
-                "m": len(codebooks),
-                "k": len(codebooks[0]),
-                "centroids": [
-                    [int(c), [float(x) for x in v]] for c, v in centroids
-                ],
-                "codebooks": codebooks,
-                "rows_at_build": n_rows,
-                "upserted_since_build": 0,
-                "residual": residual,
-                "normalize": normalize,
-                "mips": mips,
-                "mips_max_norm": max_norm,
-                "vec_col": vec_col,
-                "meta_cols": meta_cols,
-                "rotation": rotation,
-            },
-            f,
-        )
 
 
 def _with_residual(
@@ -844,8 +876,11 @@ def _with_residual(
 
 
 def load_ivfpq_meta(path: str) -> dict:
-    with open(os.path.join(path, IVFPQ_META)) as f:
-        return json.load(f)
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        read_sidecar,
+    )
+
+    return read_sidecar(path, IVFPQ_META)
 
 
 def ivfpq_staleness(path: str) -> float:
@@ -900,53 +935,39 @@ def delete_ivfpq_ids(
 def ivfpq_topk_rerank(
     queries: DataFrame,
     layout: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[list[list[float]]],
+    meta: dict,
     k: int = 5,
     nprobe: int = 4,
     fetch_k: int = 50,
+    pre_filter=None,
     query_id_col: str = "query_id",
     query_vec_col: str = "qvec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    residual: bool = False,
-    metric: str = "euclidean",
-    normalized: bool = False,
-    mips: bool = False,
-    pre_filter=None,
-    rotation: list[list[float]] | None = None,
 ) -> DataFrame:
-    """The full ANN-at-scale composition in ONE job: coarse probe
-    (each query's ``nprobe`` nearest centroids, chosen driver-side
-    from the already-collected bounded query matrix) → static ``isin``
-    partition prune (only probed bucket DIRECTORIES are read —
-    PartitionFilters, like the float IVF layout) → ADC over the pruned
-    codes with a per-query bucket mask (a row scores only for queries
-    probing its bucket) → per-query ``fetch_k`` candidates → exact
-    rerank against the raw vectors that ``write_ivfpq_index`` stores
-    next to the codes. The rerank touches ``fetch_k`` float rows per
-    query and task; the only post-kernel op is the final per-query
-    top-k window. ``fetch_k`` below ``k`` is raised to ``k``: the
-    over-fetch can never cut the answer short.
+    """The full ANN-at-scale composition in ONE job over the layout
+    ``meta`` (its parsed sidecar) describes: coarse probe (each query's
+    ``nprobe`` nearest centroids, chosen driver-side from the
+    already-collected bounded query matrix) → static ``isin`` partition
+    prune (only probed bucket DIRECTORIES are read — PartitionFilters,
+    like the float IVF layout) → ADC over the pruned codes with a
+    per-query bucket mask (a row scores only for queries probing its
+    bucket) → per-query ``fetch_k`` candidates → exact rerank against
+    the raw vectors that ``write_ivfpq_index`` stores next to the
+    codes. The rerank touches ``fetch_k`` float rows per query and
+    task; the only post-kernel op is the final per-query top-k window.
+    ``fetch_k`` below ``k`` is raised to ``k``: the over-fetch can
+    never cut the answer short.
+
+    The metric is the one the layout serves (:func:`layout_metric`);
+    queries enter the layout space through the sidecar (unit rows under
+    cosine, zero-padded to the augmented dimension under MIPS —
+    ``q' = [q, 0…]`` — then rotated by R) and are reranked in the raw
+    space, so rows hash-equal the exact path on the candidate set. A
+    zero-norm query under cosine raises, as on every route.
 
     ``layout`` must carry ``vec_col``; a layout written without it
     (an older codes-only build) raises and has to be rebuilt.
-
-    A transformed layout serves EXACTLY its metric
-    (:func:`check_layout_metric`):
-
-    - raw layout → ``euclidean``: ADC is squared-L2, rerank exact
-      euclidean ascending;
-    - ``normalize=True`` layout → ``cosine``: queries unit-normalized
-      driver-side, ADC candidate order ≡ cosine order on unit vectors,
-      rerank exact cosine (scale-invariant → RAW full-precision frame)
-      descending — rows hash-equal the exact cosine path on the
-      candidate set;
-    - ``mips=True`` layout → ``dotproduct``: queries zero-padded to
-      the augmented dimension (``q' = [q, 0…]`` — scaling a single
-      query never changes its own ranking), ADC candidate order ≡
-      dot-product order by the MIPS reduction, rerank exact dot
-      product on the RAW frame descending.
 
     ``pre_filter`` (a Column over layout columns — built-ins or
     ``meta_cols`` carried by ``write_ivfpq_index``) applies BEFORE the
@@ -965,9 +986,10 @@ def ivfpq_topk_rerank(
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         collect_query_matrix,
         probe_plan,
+        sidecar_centroids,
     )
 
-    check_layout_metric(metric, normalized, mips)
+    metric = layout_metric(meta)
     if vec_col not in layout.columns:
         raise ValueError(
             f"IVFPQ layout has no raw-vector column {vec_col!r} (a "
@@ -976,40 +998,33 @@ def ivfpq_topk_rerank(
             "(pq_encode carries them with carry_cols=[vec_col])"
         )
     fetch_k = max(fetch_k, k)
-    qids, Q, _ = collect_query_matrix(
-        queries, query_id_col, query_vec_col, "euclidean"
+    codebooks = meta["codebooks"]
+    book_dim = _book_dim(codebooks)
+    # Qraw is the raw query space the rerank metric is defined on; Q
+    # is its scoring form (unit rows under cosine), moved below into
+    # the rest of the layout space
+    qids, Qraw, Q = collect_query_matrix(
+        queries, query_id_col, query_vec_col, metric
     )
-    Qraw = Q  # raw query space — the rerank metric is defined on it
-    if metric == "cosine":
-        # probe/ADC in the layout's unit-sphere space; zero-norm
-        # queries pass through (their cosine is undefined anywhere)
-        nrm = np.linalg.norm(Q, axis=1, keepdims=True)
-        Q = np.where(nrm > 0, Q / np.where(nrm == 0, 1.0, nrm), Q)
-    if metric == "dotproduct":
-        # pad to the augmented dimension; the sqrt/pad coordinates are
-        # zero on the query side by construction
-        aug_dim = len(codebooks) * len(codebooks[0][0])
-        if Q.shape[1] > aug_dim:
+    if meta.get("mips"):
+        if Q.shape[1] > book_dim:
             raise ValueError(
-                f"query dim {Q.shape[1]} exceeds MIPS layout dim {aug_dim}"
+                f"query dim {Q.shape[1]} exceeds MIPS layout dim {book_dim}"
             )
-        Q = np.hstack([Q, np.zeros((Q.shape[0], aug_dim - Q.shape[1]))])
-    if rotation is not None:
-        # an OPQ layout's centroids/codes live in the rotated frame;
-        # queries enter it through the SAME persisted R (orthonormal,
-        # so ADC order and the raw-space rerank are unchanged)
-        R = np.array(rotation, dtype=np.float64)
+        Q = np.hstack([Q, np.zeros((Q.shape[0], book_dim - Q.shape[1]))])
+    if meta.get("rotation") is not None:
+        R = np.array(meta["rotation"], dtype=np.float64)
         if Q.shape[1] != R.shape[0]:
             raise ValueError(
                 f"query dim {Q.shape[1]} != layout rotation dim {R.shape[0]}"
             )
         Q = Q @ R
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    if Q.shape[1] != m * sub:
+    if Q.shape[1] != book_dim:
         raise ValueError(
-            f"query dim {Q.shape[1]} != codebook dim {m * sub} (m={m}, sub={sub})"
+            f"query dim {Q.shape[1]} != codebook dim {book_dim} "
+            f"(m={len(codebooks)}, sub={len(codebooks[0][0])})"
         )
+    centroids = sidecar_centroids(meta)
     # the probe runs in the layout's (transformed) euclidean space
     probed, by_bucket = probe_plan(Q, centroids, nprobe, "euclidean")
     pruned = layout.filter(F.col("centroid_id").isin(probed))
@@ -1022,12 +1037,12 @@ def ivfpq_topk_rerank(
         Qr=Qraw,
         books=[np.array(b, dtype=np.float64) for b in codebooks],
         cvec={
-            int(c): np.array(v, dtype=np.float64)
+            c: np.array(v, dtype=np.float64)
             for c, v in centroids
-            if int(c) in by_bucket
+            if c in by_bucket
         },
         by_bucket=by_bucket,
-        residual=residual,
+        residual=bool(meta.get("residual")),
         metric=metric,
         k=k,
         fetch_k=fetch_k,
@@ -1255,25 +1270,27 @@ def retrain_ivfpq_index(
     the primary vector table, or a read of this layout itself (it
     stores the raw vectors).
 
-    Shape parameters (m, k, centroid count, residual flag) are read
-    from the live sidecar — a retrain refreshes the quantizers for the
-    drifted corpus, it does not change the index design. Coarse
-    centroids are re-seeded deterministically and Lloyd-refined;
-    codebooks re-train on the standard bounded sample;
-    ``write_ivfpq_index`` then writes the rebuilt layout, with
-    ``upserted_since_build`` reset (staleness → 0), into the sibling
-    dir ``<path>._retrain``. Only when that write and its sidecar are
-    complete are the buckets and the sidecar swapped into ``path``
-    under the layout's marker fence (``layout.swap_partition_dirs``),
-    so the live layout stays whole and readable until then — a crash
-    mid-rebuild leaves it as it was, and the retrain can simply be
-    re-run.
+    The design (m, k, centroid count, residual flag, space flags,
+    ``meta_cols``) is read from the live sidecar — a retrain refreshes
+    the quantizers for the drifted corpus, it does not change the index
+    design. Every quantizer parameter is re-learned on the drifted
+    corpus in the layout space: a fresh MIPS scale M (computed once),
+    a fresh OPQ rotation when the layout has one, coarse centroids
+    re-seeded deterministically and Lloyd-refined, codebooks on the
+    standard bounded sample. The rebuilt layout, with staleness reset,
+    is written into the sibling dir ``<path>._retrain``. Only when that
+    write and its sidecar are complete are the buckets and the sidecar
+    swapped into ``path`` under the layout's marker fence
+    (``layout.swap_partition_dirs``), so the live layout stays whole and
+    readable until then — a crash mid-rebuild leaves it as it was, and
+    the retrain can simply be re-run.
 
     Returns ``{"rows": int, "staleness_before": float}``.
     """
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         lloyd_refine,
         seed_centroids,
+        sidecar_staleness,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
@@ -1282,37 +1299,28 @@ def retrain_ivfpq_index(
 
     check_not_torn(path)
     meta = load_ivfpq_meta(path)
-    before = ivfpq_staleness(path)
-    n_cent = len(meta["centroids"])
     m, k = int(meta["m"]), int(meta["k"])
-    residual = bool(meta.get("residual", False))
-    normalize = bool(meta.get("normalize", False))
-    mips = bool(meta.get("mips", False))
-
-    # train quantizers in the layout's own space (unit sphere for a
-    # normalized/cosine layout; the MIPS-augmented space — with a
-    # FRESH M for the drifted corpus — for a dotproduct layout)
-    src = vectors
-    if normalize:
-        src = _unit_normalized(vectors, vec_col)
-    if mips:
-        sub = len(meta["codebooks"][0][0])
-        src = mips_augmented(
-            vectors, vec_col, mips_max_norm(vectors, vec_col), m * sub
-        )
-    rotation = None
+    space = {
+        **meta,
+        "mips_max_norm": (
+            _mips_norm(vectors, vec_col, _book_dim(meta["codebooks"]))
+            if meta.get("mips")
+            else None
+        ),
+        "rotation": None,
+        "vec_col": vec_col,
+        "meta_cols": meta.get("meta_cols") or [],
+    }
+    src = _in_layout_space(vectors, space, vec_col)
     if meta.get("rotation"):
-        # an OPQ layout re-learns its rotation for the drifted corpus,
-        # exactly like the coarse centroids and codebooks (all three
-        # are quantizer parameters trained on the same frame)
-        rotation = train_opq_rotation(
+        space["rotation"] = train_opq_rotation(
             src, m=m, id_col=id_col, vec_col=vec_col
         )
-        src = rotate_vectors(src, rotation, vec_col)
-    cents = seed_centroids(src, n_cent, id_col, vec_col)
+        src = _in_layout_space(vectors, space, vec_col)
+    cents = seed_centroids(src, len(meta["centroids"]), id_col, vec_col)
     if lloyd_iters > 0:
         cents = lloyd_refine(src, cents, iters=lloyd_iters, vec_col=vec_col)
-    if residual:
+    if meta.get("residual"):
         books = train_pq_codebooks_residual(
             src, cents, m=m, k=k, id_col=id_col, vec_col=vec_col
         )
@@ -1321,11 +1329,9 @@ def retrain_ivfpq_index(
             src, m=m, k=k, id_col=id_col, vec_col=vec_col
         )
     tmp = path.rstrip("/") + "._retrain"
-    write_ivfpq_index(
-        vectors, tmp, cents, books, id_col, vec_col,
-        residual=residual, normalize=normalize, mips=mips,
-        meta_cols=meta.get("meta_cols") or None,
-        rotation=rotation,
+    _write_ivfpq(
+        vectors, tmp, {**space, "centroids": cents, "codebooks": books},
+        id_col, vec_col,
     )
     buckets = {
         e for d in (path, tmp) for e in os.listdir(d)
@@ -1334,7 +1340,7 @@ def retrain_ivfpq_index(
     swap_partition_dirs(path, tmp, [*sorted(buckets), IVFPQ_META])
     return {
         "rows": int(load_ivfpq_meta(path)["rows_at_build"]),
-        "staleness_before": before,
+        "staleness_before": sidecar_staleness(meta),
     }
 
 
@@ -1346,115 +1352,27 @@ def upsert_ivfpq_index(
     vec_col: str = "embedding",
 ) -> dict:
     """Incremental IVFPQ maintenance — the PQ tier's analogue of
-    ``ann.upsert_ivf_index``: new records are coarse-assigned and
-    PQ-ENCODED with the layout's own persisted quantizers (both read
-    back from the sidecar — a caller can't accidentally encode with a
-    different quantizer), intra-batch duplicates resolve to one
-    survivor (md5-payload total order, as everywhere else), and only
-    the touched ``centroid_id`` partition directories are re-merged
-    and crash-consistently swapped (torn swaps are detected before
-    any write). Last write wins against existing rows by id.
+    ``ann.upsert_ivf_index``: the batch goes through the layout's own
+    row pipeline (:func:`_layout_rows`, with the sidecar's quantizers
+    and space, so a caller can't encode with a different quantizer),
+    intra-batch duplicates resolve to one survivor (md5-payload total
+    order, as everywhere else), and ``ann.upsert_centroid_rows`` merges
+    it into the touched ``centroid_id`` partitions only. Last write
+    wins against existing rows by id.
 
-    Returns ``{"touched": [...], "n_upserted": int}``.
+    Returns ``{"touched": [...], "n_upserted": int, "staleness": float}``.
     """
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        assign_centroids_gemm,
-        bump_sidecar,
-    )
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        check_not_torn,
-        pick_survivors,
-        upsert_keys,
+        upsert_centroid_rows,
     )
 
-    check_not_torn(path)
-    meta = load_ivfpq_meta(path)
-    centroids = [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]]
-    codebooks = meta["codebooks"]
-    residual = bool(meta.get("residual", False))
-    layout_vec_col = meta.get("vec_col")
-    if not layout_vec_col:
-        raise ValueError(
-            f"IVFPQ layout {path!r} stores no raw vectors (a codes-only "
-            "layout from an older build); rebuild it with "
-            "write_ivfpq_index or retrain_ivfpq_index before upserting"
-        )
-    rotation = meta.get("rotation")
-    transformed = (
-        bool(meta.get("normalize", False))
-        or bool(meta.get("mips", False))
-        or rotation is not None
-    )
-    if transformed:
-        # the layout stores RAW vectors next to the transformed-space
-        # codes; stash them before entering the layout's space
-        records = records.withColumn("__raw", F.col(vec_col))
-    if bool(meta.get("normalize", False)):
-        # a normalized layout stores unit vectors; upserts must enter
-        # the same space or their codes would be scale-garbage
-        records = _unit_normalized(records, vec_col)
-    if bool(meta.get("mips", False)):
-        # same space rule for the MIPS layout: augment with the
-        # PERSISTED build-time M (recomputing on the batch would put
-        # new codes in a different space). Records whose norm
-        # outgrew M clamp the sqrt term — counted drift, resolved by
-        # the staleness-triggered retrain.
-        records = mips_augmented(
-            records,
-            vec_col,
-            float(meta["mips_max_norm"]),
-            int(meta["m"]) * len(codebooks[0][0]),
-        )
-    if rotation is not None:
-        # enter the layout's rotated frame with the PERSISTED R —
-        # re-learning on the batch would put new codes in a different
-        # space (same rule as the quantizers)
-        records = rotate_vectors(records, rotation, vec_col)
-
-    # __raw is derived from the same record as the transformed vector,
-    # so ignoring it keeps the duplicate-survivor choice a function of
-    # the record alone, whatever the layout's transform
-    assigned = pick_survivors(
-        assign_centroids_gemm(records, centroids, "euclidean", vec_col),
-        id_col,
-        ignore=("__raw",),
-    )
-    meta_cols = meta.get("meta_cols") or []
-    for c in meta_cols:
-        # the layout carries metadata for filtered probes; an upsert
-        # without it would write NULL-metadata rows that silently
-        # vanish from every filtered search
-        if c not in assigned.columns:
+    def rows_of(meta: dict) -> DataFrame:
+        if not meta.get("vec_col"):
             raise ValueError(
-                f"layout carries meta_cols {meta_cols}; "
-                f"upsert records are missing {c!r}"
+                f"IVFPQ layout {path!r} stores no raw vectors (a codes-only "
+                "layout from an older build); rebuild it with "
+                "write_ivfpq_index or retrain_ivfpq_index before upserting"
             )
-    enc_src, enc_col = assigned, vec_col
-    if residual:
-        # encode exactly as the build did (flag persisted in sidecar)
-        enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
-    # layout columns ride through the encode kernel (as in
-    # write_ivfpq_index), and the encoded batch is materialized once:
-    # the merge reads it for its keys, its partitions and its rows
-    raw = "__raw" if transformed else vec_col
-    enc = pq_encode(
-        enc_src, codebooks, id_col, enc_col,
-        carry_cols=["centroid_id", raw, *meta_cols],
-    )
-    fresh = enc.select(
-        id_col, "centroid_id", F.col(raw).alias(layout_vec_col),
-        *meta_cols, "codes",
-    ).localCheckpoint(eager=True)
-    n_new = fresh.count()
-    if n_new == 0:
-        return {"touched": [], "n_upserted": 0}
-    touched = upsert_keys(
-        spark.read.parquet(path), path, "centroid_id", fresh, id_col
-    )
-    return {
-        "touched": touched,
-        "n_upserted": n_new,
-        "staleness": bump_sidecar(
-            path, IVFPQ_META, meta, "upserted_since_build", n_new
-        ),
-    }
+        return _layout_rows(records, meta, id_col, vec_col, one_per_id=True)
+
+    return upsert_centroid_rows(spark, path, IVFPQ_META, rows_of, id_col)

@@ -70,9 +70,7 @@ def route(layout_path: str | None = None, metric: str = "cosine") -> dict:
         }
     if os.path.exists(os.path.join(layout_path, IVFPQ_META)):
         meta = load_ivfpq_meta(layout_path)
-        check_layout_metric(
-            metric, meta.get("normalize", False), meta.get("mips", False)
-        )
+        check_layout_metric(metric, meta)
         reason = {
             "euclidean": f"{IVFPQ_META} present: 16 B/row pruned probe + rerank",
             "cosine": f"{IVFPQ_META} present, normalized: ADC order "
@@ -142,25 +140,18 @@ def search(
 
             built = int(meta.get("rows_at_build", 0) or 0)
             fetch_k = max(fetch_k, math.ceil(MIPS_FETCH_FLOOR * built))
-        layout = queries.sparkSession.read.parquet(layout_path)
         return ivfpq_topk_rerank(
             queries,
-            layout,
-            [(int(c), v) for c, v in meta["centroids"]],
-            meta["codebooks"],
+            queries.sparkSession.read.parquet(layout_path),
+            meta,
             k=k,
             nprobe=nprobe,
             fetch_k=fetch_k,
+            pre_filter=pre_filter,
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
             id_col=id_col,
             vec_col=vec_col,
-            residual=meta.get("residual", False),
-            metric=metric,
-            normalized=bool(meta.get("normalize", False)),
-            mips=bool(meta.get("mips", False)),
-            pre_filter=pre_filter,
-            rotation=meta.get("rotation"),
         )
     if path == "ivf":
         from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (

@@ -94,7 +94,8 @@ def topk_search(
     Returns ``[query_id, vec_id, score, rank, *payload_cols]`` with
     ``rank`` 1..k in match order (W1's ``enumerate(docs, 1)``).
     Queries whose filter matches nothing simply have no output rows
-    (the P5 empty-guard joins them back).
+    (the P5 empty-guard joins them back). Under cosine a zero-norm
+    query raises, as on every route.
     """
     k = clamp_top_k(k)
     if pre_filter is not None:
@@ -108,9 +109,23 @@ def topk_search(
     if metric == "cosine":
         # pre-project each side's L2 norm ONCE: the naive
         # cosine expression re-folds both norms 2-3x per scored row
-        # (HOF folds are interpreted — ~3x the per-row CPU). Same
-        # operation order as the naive form → bit-identical scores.
-        q = q.withColumn("__qnorm", l2_norm(F.col("__qvec")))
+        # (HOF folds are interpreted — ~3x the per-row CPU).
+        # Same operation order as the naive form → bit-identical scores.
+        # A zero-norm query has no cosine: it raises inside the plan (no
+        # extra job), as the GEMM routes raise on collecting it.
+        qnorm = l2_norm(F.col("__qvec"))
+        q = q.withColumn(
+            "__qnorm",
+            F.when(
+                qnorm == 0,
+                F.raise_error(
+                    F.concat(
+                        F.lit("zero-norm query vectors under cosine: id "),
+                        F.col("query_id").cast("string"),
+                    )
+                ),
+            ).otherwise(qnorm),
+        )
         index = index.withColumn("__vnorm", l2_norm(F.col(vec_col)))
     joined = (
         index.join(F.broadcast(q), per_query_filter)

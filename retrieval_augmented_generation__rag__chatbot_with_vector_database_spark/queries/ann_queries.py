@@ -315,9 +315,7 @@ def ann_ivf_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivf"
         ann.write_ivf_index(emb.filter(F.col("vec_id") % 5 != 0), path, cents)
-        ann.upsert_ivf_index(
-            spark, path, emb.filter(F.col("vec_id") % 5 == 0), cents
-        )
+        ann.upsert_ivf_index(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
         layout = ann.read_ivf_index(spark, path)
         out = ann.ivf_topk_gemm(
             queries, layout, cents, k=K, nprobe=N_PROBE, metric="cosine"
@@ -494,9 +492,9 @@ def ann_ivfpq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/ivfpq"
         pq.write_ivfpq_index(emb, path, cents, books)
-        layout = spark.read.parquet(path)
         rer = pq.ivfpq_topk_rerank(
-            q, layout, cents, books, k=K, nprobe=8, fetch_k=100
+            q, spark.read.parquet(path), pq.load_ivfpq_meta(path), k=K,
+            nprobe=8, fetch_k=100,
         ).select("query_id", F.col("vec_id").alias("r_vec_id"))
         hits = exact.join(
             rer,

@@ -23,9 +23,12 @@ Callers:
   bucket-pruned read) via :func:`delete_keys`; the merge of ``upsert``
   via :func:`rewrite_partitions` (its version-aware last-write-wins
   is :func:`pick_survivors` with a version column);
-- ``operators.ann`` and ``operators.pq``: the IVF and IVFPQ upserts
-  via :func:`upsert_keys` and their per-id deletes via
-  :func:`delete_keys`;
+- ``operators.ann``: the one upsert tail of the IVF and IVFPQ layouts
+  (``ann.upsert_centroid_rows``, called by ``ann.upsert_ivf_index`` and
+  ``pq.upsert_ivfpq_index``) via :func:`upsert_keys`, and their one
+  per-id delete (``ann.delete_centroid_ids``) via :func:`delete_keys`;
+  ``pq.retrain_ivfpq_index`` swaps its rebuilt layout in with
+  :func:`swap_partition_dirs`;
 - ``sources.lexical_index.LexicalIndex``: the postings, term-df and
   doc-store rewrites via :func:`rewrite_partitions`;
 - the ``batch_id`` takedown deletes of ``streaming.neardup``,
@@ -35,6 +38,10 @@ Callers:
 :func:`pick_survivors` is the shared intra-batch survivor rule: one row
 per key, newest version first, then an md5 over the payload columns,
 so duplicates resolve to the same row on every run.
+
+:func:`release_local_checkpoint` frees the blocks of a
+``localCheckpoint`` once the write or collect that consumes it is done
+(the centroid-layout upsert and delete, ``LexicalIndex.create``).
 
 The swap is the dangerous window: a crash between deleting the live
 partition and moving the new one in leaves a missing-or-mixed layout
@@ -124,6 +131,19 @@ def _remove(p: str) -> None:
         shutil.rmtree(p)
     elif os.path.exists(p):
         os.remove(p)
+
+
+def release_local_checkpoint(df: DataFrame) -> None:
+    """Best-effort release of a localCheckpoint's executor blocks once
+    every consumer is done; they otherwise linger until GC, accruing
+    storage in a long-lived session. The checkpointed Dataset's plan is
+    a LogicalRDD over the persisted RDD; unpersisting that RDD frees the
+    blocks. Call it only when the frame will never be read again: the
+    truncated lineage cannot recompute it."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    except Exception:
+        pass  # internal accessor moved — GC will release instead
 
 
 def pick_survivors(

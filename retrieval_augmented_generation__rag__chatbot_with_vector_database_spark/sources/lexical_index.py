@@ -84,6 +84,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
     pick_survivors,
+    release_local_checkpoint,
     rewrite_partitions,
 )
 
@@ -175,20 +176,6 @@ def _doc_rows(docs: DataFrame, side: DataFrame, id_col: str) -> DataFrame:
             F.coalesce("terms", F.array().cast("array<string>")).alias("terms"),
         )
     )
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of a localCheckpoint's executor blocks once
-    every consumer is done (ADVICE r15: they otherwise linger until
-    GC, accruing storage in long-lived sessions that build many
-    indexes). The checkpointed Dataset's plan is a LogicalRDD over the
-    persisted RDD; unpersisting that RDD frees the blocks. MUST only
-    be called when the frame will never be read again — the truncated
-    lineage cannot recompute it."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass  # internal accessor moved — GC will release instead
 
 
 class LexicalIndex:
@@ -372,7 +359,7 @@ class LexicalIndex:
                     f.result()
                 row = stats_f.result()
         finally:
-            _release_local_checkpoint(side)
+            release_local_checkpoint(side)
         with open(self._props_path, "w") as f:
             json.dump(
                 {

@@ -76,7 +76,7 @@ def start_ivfpq_ingest_stream(
     def _process(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
         res = upsert_ivfpq_index(s, layout_path, batch, id_col, vec_col)
-        stale = res.get("staleness", 0.0)
+        stale = res["staleness"]
         if retrain_threshold is None or stale < retrain_threshold:
             return
         rows = s.read.parquet(layout_path).drop("centroid_id", "codes")

@@ -54,7 +54,7 @@ def test_upsert_equals_full_rebuild(spark, emb, cents, tmp_path):
     inc_path = str(tmp_path / "inc")
     full_path = str(tmp_path / "full")
     ann.write_ivf_index(base, inc_path, cents)
-    res = ann.upsert_ivf_index(spark, inc_path, rest, cents)
+    res = ann.upsert_ivf_index(spark, inc_path, rest)
     assert res["n_upserted"] == rest.count()
     ann.write_ivf_index(emb, full_path, cents)
     assert _probe(spark, inc_path, cents, emb) == _probe(
@@ -71,7 +71,7 @@ def test_upsert_rewrites_only_touched_partitions(spark, emb, cents, tmp_path):
     ann.write_ivf_index(emb, path, cents)
     before = _files_md5(path)
     one = emb.filter(F.col("vec_id") == 42)
-    res = ann.upsert_ivf_index(spark, path, one, cents)
+    res = ann.upsert_ivf_index(spark, path, one)
     after = _files_md5(path)
     touched_prefixes = tuple(f"centroid_id={c}/" for c in res["touched"])
     assert len(res["touched"]) >= 1
@@ -94,7 +94,7 @@ def test_upsert_moves_row_when_centroid_changes(spark, emb, cents, tmp_path):
         [(99, [float(x) for x in target_vec], 0)],
         "vec_id long, embedding array<float>, label int",
     )
-    res = ann.upsert_ivf_index(spark, path, moved, cents)
+    res = ann.upsert_ivf_index(spark, path, moved)
     assert cents[0][0] in res["touched"] and old_cid in res["touched"]
     now = ann.read_ivf_index(spark, path).filter(F.col("vec_id") == 99).collect()
     assert len(now) == 1  # exactly one copy — old version gone
@@ -109,7 +109,7 @@ def test_upsert_int8_layout_parity(spark, emb, cents, tmp_path):
     inc_path = str(tmp_path / "inc8")
     full_path = str(tmp_path / "full8")
     ann.write_ivf_index(base, inc_path, cents, compression="int8")
-    ann.upsert_ivf_index(spark, inc_path, rest, cents)
+    ann.upsert_ivf_index(spark, inc_path, rest)
     ann.write_ivf_index(emb, full_path, cents, compression="int8")
     assert _probe(spark, inc_path, cents, emb) == _probe(
         spark, full_path, cents, emb
@@ -123,11 +123,11 @@ def test_staleness_counter_and_meta(spark, emb, cents, tmp_path):
     assert meta["rows_at_build"] == emb.count()
     assert ann.ivf_staleness(path) == 0.0
     batch = emb.filter(F.col("vec_id") < 50)
-    res = ann.upsert_ivf_index(spark, path, batch, cents)
+    res = ann.upsert_ivf_index(spark, path, batch)
     assert res["n_upserted"] == 50
     assert ann.ivf_staleness(path) == pytest.approx(50 / emb.count())
     # empty batch is a no-op
-    res2 = ann.upsert_ivf_index(spark, path, emb.filter(F.lit(False)), cents)
+    res2 = ann.upsert_ivf_index(spark, path, emb.filter(F.lit(False)))
     assert res2["n_upserted"] == 0 and res2["touched"] == []
 
 
@@ -145,55 +145,38 @@ def test_torn_ivf_swap_detected(spark, emb, cents, tmp_path):
     with pytest.raises(RuntimeError, match="torn"):
         ann.read_ivf_index(spark, path)
     with pytest.raises(RuntimeError, match="torn"):
-        ann.upsert_ivf_index(spark, path, emb.limit(1), cents)
+        ann.upsert_ivf_index(spark, path, emb.limit(1))
     os.remove(marker_path_for(path))
     assert ann.read_ivf_index(spark, path).count() == emb.count()
 
 
-def test_upsert_rejects_mismatched_quantizer(spark, emb, cents, tmp_path):
-    """A centroid list that is not the layout's build-time quantizer
-    must be rejected BEFORE any write — rows assigned under a second
-    quantizer silently corrupt nprobe pruning (ADVICE r3 #1)."""
-    path = str(tmp_path / "ivf")
-    ann.write_ivf_index(emb, path, cents)
-    wrong = [(cid, [x + 1.0 for x in vec]) for cid, vec in cents]
-    before = _files_md5(path)
-    with pytest.raises(ValueError, match="quantizer"):
-        ann.upsert_ivf_index(spark, path, emb.limit(3), wrong)
-    assert _files_md5(path) == before  # nothing was written
-
-
-def test_upsert_without_centroid_hash_requires_rebuild(
-    spark, emb, cents, tmp_path
-):
-    """A sidecar without ``centroid_hash`` cannot prove a caller's
-    quantizer is the build-time one; a same-length different list must
-    not slip through on a length check. Raises before any write."""
+def test_upsert_without_centroids_requires_rebuild(spark, emb, cents, tmp_path):
+    """The centroid list is read from the sidecar alone; a sidecar
+    without ``centroids`` cannot place new rows in the build-time cells,
+    so the upsert raises before any write."""
     import json
 
     path = str(tmp_path / "ivf")
     ann.write_ivf_index(emb, path, cents)
     meta = ann.ivf_meta(path)
-    del meta["centroid_hash"]
+    del meta["centroids"]
     with open(os.path.join(path, ann.IVF_META), "w") as f:
         json.dump(meta, f)
-    wrong = [(cid, [x + 1.0 for x in vec]) for cid, vec in cents]
     before = _files_md5(path)
-    for centroids in (wrong, cents, None):
-        with pytest.raises(ValueError, match="rebuild"):
-            ann.upsert_ivf_index(spark, path, emb.limit(3), centroids)
+    with pytest.raises(ValueError, match="rebuild"):
+        ann.upsert_ivf_index(spark, path, emb.limit(3))
     assert _files_md5(path) == before
 
 
 def test_upsert_recovers_centroids_from_sidecar(spark, emb, cents, tmp_path):
-    """centroids=None loads the exact build-time list back from the
-    sidecar — the post-restart recovery path (ADVICE r3 #1)."""
+    """The upsert loads the exact build-time list back from the
+    sidecar — the post-restart recovery path."""
     path = str(tmp_path / "ivf")
     base = emb.filter(F.col("vec_id") % 3 != 0)
     rest = emb.filter(F.col("vec_id") % 3 == 0)
     ann.write_ivf_index(base, path, cents)
     assert ann.load_centroids(path) == cents
-    res = ann.upsert_ivf_index(spark, path, rest)  # no centroids passed
+    res = ann.upsert_ivf_index(spark, path, rest)
     assert res["n_upserted"] == rest.count()
     full_path = str(tmp_path / "full")
     ann.write_ivf_index(emb, full_path, cents)
@@ -213,7 +196,7 @@ def test_upsert_intra_batch_lww(spark, emb, cents, tmp_path):
         [(777, v_a, 1), (777, v_b, 2)],
         "vec_id long, embedding array<float>, label int",
     )
-    res = ann.upsert_ivf_index(spark, path, dup, cents)
+    res = ann.upsert_ivf_index(spark, path, dup)
     rows = (
         ann.read_ivf_index(spark, path).filter(F.col("vec_id") == 777).collect()
     )
@@ -223,7 +206,7 @@ def test_upsert_intra_batch_lww(spark, emb, cents, tmp_path):
     # deterministic: a re-run of the same dup batch picks the same row
     path2 = str(tmp_path / "ivf2")
     ann.write_ivf_index(emb, path2, cents)
-    ann.upsert_ivf_index(spark, path2, dup, cents)
+    ann.upsert_ivf_index(spark, path2, dup)
     rows2 = (
         ann.read_ivf_index(spark, path2).filter(F.col("vec_id") == 777).collect()
     )
@@ -248,3 +231,50 @@ def test_writers_reject_centroid_ids_beyond_int32(spark, emb, tmp_path):
         ann.write_ivf_index(wide, str(tmp_path / "ivf"), wide_cents)
     with pytest.raises(ValueError, match=str(2**40)):
         pq.write_ivfpq_index(wide, str(tmp_path / "ivfpq"), wide_cents, books)
+
+
+def test_centroid_layout_maintenance_releases_checkpoint_blocks(
+    spark, emb, cents, tmp_path
+):
+    """The IVF and IVFPQ upserts and the per-id delete materialize their
+    batch with a localCheckpoint; none of those blocks may outlive the
+    call. Compares RDD ids, not counts: the ContextCleaner may free
+    earlier checkpoints while a call runs."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        pq,
+    )
+
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    base = emb.filter(F.col("vec_id") % 5 != 0)
+    rest = emb.filter(F.col("vec_id") % 5 == 0)
+    ann.write_ivf_index(base, ivf, cents)
+    books = pq.train_pq_codebooks(emb, m=8, k=16)
+    pq.write_ivfpq_index(base, ivfpq, cents, books)
+    jsc = spark.sparkContext._jsc
+    for call in (
+        lambda: pq.upsert_ivfpq_index(spark, ivfpq, rest),
+        lambda: ann.upsert_ivf_index(spark, ivf, rest),
+        lambda: pq.delete_ivfpq_ids(spark, ivfpq, [1, 2, 3]),
+    ):
+        before = set(jsc.getPersistentRDDs().keys())
+        call()
+        assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_empty_ivfpq_upsert_reports_staleness(spark, emb, cents, tmp_path):
+    """An empty batch writes nothing and reports the sidecar's current
+    staleness, like the IVF upsert."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        pq,
+    )
+
+    path = str(tmp_path / "ivfpq")
+    pq.write_ivfpq_index(emb, path, cents, pq.train_pq_codebooks(emb, m=8, k=16))
+    pq.upsert_ivfpq_index(spark, path, emb.filter(F.col("vec_id") < 10))
+    before = _files_md5(path)
+    res = pq.upsert_ivfpq_index(spark, path, emb.filter(F.lit(False)))
+    assert res == {
+        "touched": [], "n_upserted": 0, "staleness": pq.ivfpq_staleness(path)
+    }
+    assert res["staleness"] == pytest.approx(10 / emb.count())
+    assert _files_md5(path) == before

@@ -20,6 +20,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
     dedup,
     pq,
     search,
+    textstats,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.index_table import (
     VectorIndex,
@@ -45,6 +46,17 @@ CEILINGS = {
     "VectorIndex.upsert": 10,
     "LexicalIndex.bm25_topk": 7,
     "duplicate_groups": 30,
+    # a normalized layout with meta_cols
+    "write_ivfpq_index": 2,
+    # a MIPS layout (13 while the retrain ran the M aggregate twice)
+    "retrain_ivfpq_index": 11,
+    "upsert_ivf_index": 13,
+    "delete_ivfpq_ids": 9,
+    # only the calling thread's jobs: create() writes the postings,
+    # term-df and doc store from worker threads, whose jobs carry no
+    # job group
+    "LexicalIndex.create": 4,
+    "gopher_repetition_gate": 20,
 }
 
 
@@ -85,7 +97,15 @@ def calls(spark, tmp_path_factory):
     books = pq.train_pq_codebooks(emb, m=8, k=16)
     cents = ann.seed_centroids(emb, 8)
     pq.write_ivfpq_index(emb, f"{root}/ivfpq", cents, books)
+    pq.write_ivfpq_index(emb, f"{root}/ivfpq_del", cents, books)
     ann.write_ivf_index(emb, f"{root}/ivf", cents, metric="cosine")
+    ann.write_ivf_index(emb, f"{root}/ivf_up", cents, metric="cosine")
+    # a MIPS layout: its retrain enters the augmented space with M
+    aug = pq.mips_augmented(emb, "embedding", pq.mips_max_norm(emb), 18)
+    aug_cents = ann.seed_centroids(aug, 8)
+    aug_books = pq.train_pq_codebooks_residual(aug, aug_cents, m=6, k=16)
+    pq.write_ivfpq_index(emb, f"{root}/ivfpq_mips", aug_cents, aug_books, mips=True)
+    with_source = emb.withColumn("source", F.concat(F.lit("s"), (F.col("vec_id") % 3).cast("string")))
     encoded = pq.pq_encode(emb, books, carry_cols=["embedding"])
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
 
@@ -94,19 +114,22 @@ def calls(spark, tmp_path_factory):
 
     vi = VectorIndex(spark, root, "vi").create(dimension=8)
     vi.upsert(_records(spark, range(40)), batch=1)
+    lex_docs = spark.createDataFrame(
+        [(i, f"spark vector {i % 7} search doc{i}") for i in range(60)],
+        "doc_id long, text string",
+    )
     lex = LexicalIndex(spark, f"{root}/lex").create(
-        spark.createDataFrame(
-            [(i, f"spark vector {i % 7} search doc{i}") for i in range(60)],
-            "doc_id long, text string",
-        ),
-        term_buckets=4,
-        doc_buckets=2,
+        lex_docs, term_buckets=4, doc_buckets=2
     )
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5), (6, 7), (7, 8), (8, 6), (10, 11)],
         "id_a long, id_b long",
     )
     fresh = emb.filter(F.col("vec_id") < 20).withColumn("vec_id", F.col("vec_id") + 10_000)
+    gopher_docs = spark.createDataFrame(
+        [(i, " ".join(["the cat sat"] * (i % 4 + 1) + [f"word{i}"] * 3)) for i in range(30)],
+        "doc_id long, text string",
+    )
     yield {
         "search_ivfpq": lambda: search.search(
             queries(), None, k=5, metric="euclidean", layout_path=f"{root}/ivfpq"
@@ -129,6 +152,21 @@ def calls(spark, tmp_path_factory):
             k=5,
         ).collect(),
         "duplicate_groups": lambda: dedup.duplicate_groups(pairs).collect(),
+        "write_ivfpq_index": lambda: pq.write_ivfpq_index(
+            with_source, f"{root}/ivfpq_cos", cents, books, normalize=True,
+            meta_cols=["source"],
+        ),
+        "retrain_ivfpq_index": lambda: pq.retrain_ivfpq_index(
+            spark, f"{root}/ivfpq_mips", emb
+        ),
+        "upsert_ivf_index": lambda: ann.upsert_ivf_index(spark, f"{root}/ivf_up", fresh),
+        "delete_ivfpq_ids": lambda: pq.delete_ivfpq_ids(spark, f"{root}/ivfpq_del", [1, 2, 3]),
+        "LexicalIndex.create": lambda: LexicalIndex(
+            spark, f"{root}/lex_{uuid.uuid4().hex}"
+        ).create(lex_docs, term_buckets=4, doc_buckets=2),
+        "gopher_repetition_gate": lambda: textstats.gopher_repetition_gate(
+            gopher_docs
+        ).collect(),
     }
     for k, v in before.items():
         spark.conf.set(k, v)

@@ -153,7 +153,7 @@ def test_ivfpq_full_probe_equals_flat_pq(spark, emb, tmp_path):
     ivf = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, layout, cents, books, k=5, nprobe=16, fetch_k=50
+            q, layout, pq.load_ivfpq_meta(path), k=5, nprobe=16, fetch_k=50
         ).collect()
     }
     assert ivf == flat
@@ -179,7 +179,7 @@ def test_ivfpq_pruned_probe_recall_and_partition_filter(spark, emb, tmp_path):
     layout = spark.read.parquet(path)
     q = _queries(emb)
     out = pq.ivfpq_topk_rerank(
-        q, layout, cents, books, k=5, nprobe=8, fetch_k=50
+        q, layout, pq.load_ivfpq_meta(path), k=5, nprobe=8, fetch_k=50
     )
     assert has_partition_filter(out, "centroid_id")
     exact = {
@@ -212,7 +212,8 @@ def test_ivfpq_fetch_below_k_still_returns_k(spark, emb, tmp_path):
         return sorted(
             (r["query_id"], r["rank"], r["vec_id"])
             for r in pq.ivfpq_topk_rerank(
-                q, layout, cents, books, k=5, nprobe=8, fetch_k=fetch_k
+                q, layout, pq.load_ivfpq_meta(path), k=5, nprobe=8,
+                fetch_k=fetch_k,
             ).collect()
         )
 
@@ -276,13 +277,15 @@ def test_ivfpq_upsert_equals_rebuild(spark, emb, tmp_path):
     probe_inc = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(path), cents, books, k=5, nprobe=16
+            q, spark.read.parquet(path), pq.load_ivfpq_meta(path), k=5,
+            nprobe=16,
         ).collect()
     }
     probe_full = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(full), cents, books, k=5, nprobe=16
+            q, spark.read.parquet(full), pq.load_ivfpq_meta(full), k=5,
+            nprobe=16,
         ).collect()
     }
     assert probe_inc == probe_full
@@ -322,7 +325,7 @@ def test_residual_encoding_beats_raw_at_tight_code_budget(spark, tmp_path):
         for r in topk_search(q, emb, k=5, metric="euclidean").collect()
     }
 
-    def recall(path, books, residual):
+    def recall(path):
         # one task reads the whole probe, so the probe's per-task
         # fetch_k cut is the GLOBAL cut and recall is a pure function
         # of ADC order, which is the property under test (a multi-task
@@ -331,8 +334,8 @@ def test_residual_encoding_beats_raw_at_tight_code_budget(spark, tmp_path):
         got = {
             (r["query_id"], r["vec_id"])
             for r in pq.ivfpq_topk_rerank(
-                q, spark.read.parquet(path).coalesce(1), cents, books,
-                k=5, nprobe=8, fetch_k=25, residual=residual,
+                q, spark.read.parquet(path).coalesce(1),
+                pq.load_ivfpq_meta(path), k=5, nprobe=8, fetch_k=25,
             ).collect()
         }
         return len(got & exact) / len(exact)
@@ -343,7 +346,7 @@ def test_residual_encoding_beats_raw_at_tight_code_budget(spark, tmp_path):
     pq.write_ivfpq_index(emb, p_raw, cents, raw_books)
     pq.write_ivfpq_index(emb, p_res, cents, res_books, residual=True)
     assert pq.load_ivfpq_meta(p_res)["residual"] is True
-    r_raw, r_res = recall(p_raw, raw_books, False), recall(p_res, res_books, True)
+    r_raw, r_res = recall(p_raw), recall(p_res)
     assert r_res > r_raw, f"residual {r_res} <= raw {r_raw}"
     assert r_res >= 0.8
 
@@ -369,8 +372,7 @@ def test_residual_upsert_equals_rebuild(spark, emb, tmp_path):
     probe = lambda p: {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(p), cents, books,
-            k=5, nprobe=16, residual=True,
+            q, spark.read.parquet(p), pq.load_ivfpq_meta(p), k=5, nprobe=16,
         ).collect()
     }
     assert probe(inc) == probe(full)
@@ -667,8 +669,8 @@ def test_ivfpq_rotation_upsert_matches_rebuild(spark, emb, tmp_path):
         return {
             (r["query_id"], r["rank"]): (r["vec_id"], round(r["score"], 9))
             for r in pq.ivfpq_topk_rerank(
-                q, layout, cents, books, k=5, nprobe=8,
-                fetch_k=200, rotation=R,
+                q, layout, pq.load_ivfpq_meta(path), k=5, nprobe=8,
+                fetch_k=200,
             ).collect()
         }
 

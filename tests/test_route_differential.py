@@ -9,7 +9,7 @@ centroids or codebooks, so they are fixed and untrained.
 
 The rule every route must follow: rank by score in the metric's
 order, then lowest ``vec_id``; under cosine a zero-norm row has no
-score and is never returned. Bit-identical vectors score identically
+score and is never returned, and a zero-norm query raises. Bit-identical vectors score identically
 on every route, so they must come back lowest id first. Rows whose
 reference scores lie within ``TIE_TOL`` of each other may swap: GEMM
 normalizes before it multiplies and rounds differently from the
@@ -68,7 +68,7 @@ def reference_topk(qids, Q, ids, V, k, metric):
     vec_id asc); under cosine zero-norm rows are left out. Scores use
     the SQL fold's formulas in float64."""
     Q = np.asarray(Q, dtype=np.float64)
-    V = np.asarray(V, dtype=np.float64).reshape(len(ids), -1)
+    V = np.asarray(V, dtype=np.float64).reshape(len(ids), Q.shape[1])
     ids = np.asarray(ids, dtype=np.int64)
     out = {}
     for qid, q in zip(qids, Q):
@@ -93,8 +93,7 @@ def indexes(draw, metric):
     """One small case: ``ids``, ``V`` (n × d), ``qids``, ``Q``, ``k``,
     the partition count, Arrow batch size and a filter name. Rows are
     fresh vectors, copies of an earlier row, scaled copies or zeros;
-    queries are fresh or copies of an index row (non-zero under
-    cosine, where a zero query raises)."""
+    queries are fresh or copies of an index row, so they may be zero."""
     d = draw(st.integers(1, 8))
     n = draw(st.integers(1, 12))
     vec = st.lists(VALUES, min_size=d, max_size=d)
@@ -116,8 +115,6 @@ def indexes(draw, metric):
     queries = []
     for _ in range(draw(st.integers(1, 3))):
         q = rows[draw(st.integers(0, n - 1))] if draw(st.booleans()) else draw(vec)
-        if metric == "cosine" and not any(q):
-            q = [1.0] * d
         queries.append(list(q))
     return {
         "ids": ids,
@@ -173,7 +170,8 @@ def check_route(name, got_rows, case, metric):
 
 
 def _routes(spark, case, metric, tmp):
-    """(route name, rows) for every route that serves ``metric``."""
+    """(route name, a call building its result frame) for every route
+    that serves ``metric``; a route may raise while building it."""
     n = len(case["ids"])
     index = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in zip(case["ids"], case["V"])],
@@ -184,16 +182,20 @@ def _routes(spark, case, metric, tmp):
         "query_id long, qvec array<float>",
     )
     k, flt = case["k"], _filter_column(case["filter"])
-    yield "topk_search", topk_search(queries, index, k=k, metric=metric, pre_filter=flt)
-    yield "topk_search_gemm", topk_search_gemm(
+    yield "topk_search", lambda: topk_search(
         queries, index, k=k, metric=metric, pre_filter=flt
     )
-    yield "search", search.search(queries, index, k=k, metric=metric, pre_filter=flt)
+    yield "topk_search_gemm", lambda: topk_search_gemm(
+        queries, index, k=k, metric=metric, pre_filter=flt
+    )
+    yield "search", lambda: search.search(
+        queries, index, k=k, metric=metric, pre_filter=flt
+    )
     d = len(case["V"][0])
     e0 = [1.0] + [0.0] * (d - 1)
     cents = [(0, e0), (1, [-x for x in e0]), (2, [1.0] * d)]
     assigned = ann.assign_centroids_gemm(index, cents, metric)
-    yield "ivf_topk_gemm", ann.ivf_topk_gemm(
+    yield "ivf_topk_gemm", lambda: ann.ivf_topk_gemm(
         queries, assigned, cents, k=k, nprobe=len(cents), metric=metric,
         pre_filter=flt,
     )
@@ -204,7 +206,7 @@ def _routes(spark, case, metric, tmp):
     pq_cents = [(0, [0.0] * D), (1, [1.0] * D), (2, [-1.0] * D)]
     layout = f"{tmp}/ivfpq_{metric}"
     pq.write_ivfpq_index(index, layout, pq_cents, books, normalize=normalize, mips=mips)
-    yield "ivfpq", search.search(
+    yield "ivfpq", lambda: search.search(
         queries, None, k=k, metric=metric, layout_path=layout,
         nprobe=len(pq_cents), fetch_k=n, pre_filter=flt,
     )
@@ -212,7 +214,9 @@ def _routes(spark, case, metric, tmp):
         enc = pq.pq_encode(index, books, carry_cols=["embedding"])
         if flt is not None:
             enc = enc.filter(flt)
-        yield "pq_topk_rerank", pq.pq_topk_rerank(queries, enc, books, k=k, fetch_k=n)
+        yield "pq_topk_rerank", lambda: pq.pq_topk_rerank(
+            queries, enc, books, k=k, fetch_k=n
+        )
 
 
 @pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
@@ -231,8 +235,13 @@ def test_every_route_matches_the_numpy_reference(spark, metric):
         tmp = tempfile.mkdtemp(prefix="route_diff_")
         spark.conf.set(key, str(case["batch"]))
         try:
-            for name, df in _routes(spark, case, metric, tmp):
-                check_route(name, df.collect(), case, metric)
+            zero_query = metric == "cosine" and not all(any(q) for q in case["Q"])
+            for name, build in _routes(spark, case, metric, tmp):
+                if zero_query:
+                    with pytest.raises(Exception, match="zero-norm query"):
+                        build().collect()
+                else:
+                    check_route(name, build().collect(), case, metric)
         finally:
             spark.conf.set(key, before)
             shutil.rmtree(tmp, ignore_errors=True)
@@ -250,5 +259,19 @@ def test_zero_norm_row_is_never_returned_under_cosine(spark, route, tmp_path):
         "qids": [100], "Q": [[1.0, 0.0]], "k": 3, "parts": 1, "batch": 4,
         "filter": None,
     }
-    rows = dict(_routes(spark, case, "cosine", str(tmp_path)))[route].collect()
+    rows = dict(_routes(spark, case, "cosine", str(tmp_path)))[route]().collect()
     assert [r["vec_id"] for r in sorted(rows, key=lambda r: r["rank"])] == [1, 3]
+
+
+@pytest.mark.parametrize("flt", [None, "none"])
+def test_zero_norm_query_raises_on_every_route_under_cosine(spark, flt, tmp_path):
+    """A zero-norm query has no cosine with any row. Every route raises
+    for it, also when the filter keeps no row."""
+    case = {
+        "ids": [1, 2], "V": [[1.0, 0.0], [0.0, 1.0]],
+        "qids": [100, 101], "Q": [[1.0, 0.0], [0.0, 0.0]], "k": 2,
+        "parts": 1, "batch": 4, "filter": flt,
+    }
+    for name, build in _routes(spark, case, "cosine", str(tmp_path)):
+        with pytest.raises(Exception, match="zero-norm query"):
+            build().collect()

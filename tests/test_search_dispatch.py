@@ -240,8 +240,7 @@ def test_search_ivfpq_layout_equals_direct_rerank(spark, emb, tmp_path):
     want = pq.ivfpq_topk_rerank(
         _queries(emb),
         spark.read.parquet(path),
-        cents,
-        books,
+        pq.load_ivfpq_meta(path),
         k=5,
         nprobe=4,
         fetch_k=25,

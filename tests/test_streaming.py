@@ -592,13 +592,15 @@ def test_ivfpq_ingest_stream_keeps_search_layout_fresh(spark, tmp_path):
     live = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(path), cents, books, k=5, nprobe=16
+            q, spark.read.parquet(path), pq.load_ivfpq_meta(path), k=5,
+            nprobe=16,
         ).collect()
     }
     rebuilt = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, spark.read.parquet(full), cents, books, k=5, nprobe=16
+            q, spark.read.parquet(full), pq.load_ivfpq_meta(full), k=5,
+            nprobe=16,
         ).collect()
     }
     assert live == rebuilt
@@ -721,13 +723,11 @@ def test_ivfpq_ingest_auto_retrain_past_threshold(spark, tmp_path):
 
     # recall contract stays green after the retrain: rerank probe on
     # the fresh quantizers finds each in-corpus query itself at rank 1
-    new_cents = [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]]
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     got = pq.ivfpq_topk_rerank(
-        q, spark.read.parquet(path), new_cents, meta["codebooks"],
-        k=5, nprobe=8,
+        q, spark.read.parquet(path), meta, k=5, nprobe=8,
     )
     self_hits = got.filter(
         (F.col("rank") == 1) & (F.col("query_id") == F.col("vec_id"))
@@ -775,7 +775,8 @@ def test_ivfpq_ingest_retrain_crash_leaves_layout_whole(
     def die_in_write(v):
         raise RuntimeError("rebuild died mid-write")
 
-    real_write = pq.write_ivfpq_index
+    # the retrain writes through the layout's internal writer
+    real_write = pq._write_ivfpq
     die = F.udf(die_in_write, "array<float>")
 
     def dying_write(index, out, *args, **kwargs):
@@ -784,7 +785,7 @@ def test_ivfpq_ingest_retrain_crash_leaves_layout_whole(
             *args, **kwargs,
         )
 
-    monkeypatch.setattr(pq, "write_ivfpq_index", dying_write)
+    monkeypatch.setattr(pq, "_write_ivfpq", dying_write)
     # without AQE the rebuild's shuffle runs inside its write job, so
     # the failure lands after the write has started on its target
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -805,7 +806,7 @@ def test_ivfpq_ingest_retrain_crash_leaves_layout_whole(
     assert pq.ivfpq_staleness(path) >= 0.5
 
     # the replay upserts the batch again and retrains the same layout
-    monkeypatch.setattr(pq, "write_ivfpq_index", real_write)
+    monkeypatch.setattr(pq, "_write_ivfpq", real_write)
     drain()
     assert pq.ivfpq_staleness(path) == 0.0
     assert int(pq.load_ivfpq_meta(path)["rows_at_build"]) == emb.count()

@@ -219,7 +219,7 @@ def test_ivfpq_delete_ids_probe_consistency(spark, tmp_path):
     got = {
         (r["query_id"], r["rank"]): r["vec_id"]
         for r in pq.ivfpq_topk_rerank(
-            q, layout, cents, books, k=5, nprobe=8, fetch_k=200
+            q, layout, pq.load_ivfpq_meta(path), k=5, nprobe=8, fetch_k=200
         ).collect()
     }
     assert not any(v in victims for v in got.values())

@@ -146,6 +146,39 @@ def test_one_probe_plan_and_plain_kernels():
         assert "partial(" in ast.get_source_segment(srcs[f], fn), name
 
 
+def test_one_layout_space_and_a_sidecar_probe():
+    """An IVFPQ layout's space is entered in one function of pq.py:
+    every call that applies ``_unit_normalized``, ``mips_augmented`` or
+    ``rotate_vectors`` to layout rows sits in the same top-level
+    function. The probe takes the layout's space from its sidecar, not
+    as loose arguments, and the IVF upsert takes its centroids from the
+    sidecar alone."""
+    import inspect
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        pq,
+    )
+
+    transforms = {"_unit_normalized", "mips_augmented", "rotate_vectors"}
+    tree = ast.parse(_sources("operators")["operators/pq.py"])
+    callers = {
+        (fn.name, call.func.id)
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Name)
+        and call.func.id in transforms
+    }
+    assert {name for _, name in callers} == transforms
+    assert len({fn for fn, _ in callers}) == 1, sorted(callers)
+    params = set(inspect.signature(pq.ivfpq_topk_rerank).parameters)
+    loose = {"centroids", "codebooks", "residual", "normalized", "mips",
+             "rotation", "metric"}
+    assert params & loose == set()
+    assert "centroids" not in inspect.signature(ann.upsert_ivf_index).parameters
+
+
 def test_each_lexical_weight_is_written_once():
     srcs = _sources("operators", "sources")
     lexical = {f: s for f, s in srcs.items() if f in ("operators/hybrid.py", "sources/lexical_index.py")}
