@@ -28,7 +28,10 @@ Design (FAISS-style IVF, Spark-first):
    ``nprobe`` best centroids per query, scan only the probed
    partitions and score each Arrow batch bucket by bucket against the
    queries probing it (``gemm_topk``), then the per-query top-k
-   window.
+   window. The preparation (query matrix, probe plan, bound kernel) is
+   a :class:`Probe`; :func:`probe_on_spark` runs it as one
+   ``mapInArrow`` stage, and ``operators.search`` runs a small one on
+   the driver.
 
 Recall is tunable by ``nprobe`` (see the ``ann_ivf_recall`` query:
 IVF@nprobe vs the exact scan, per query).
@@ -38,6 +41,8 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -58,6 +63,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sou
     check_not_torn,
     delete_keys,
     pick_survivors,
+    read_parquet,
     release_local_checkpoint,
     upsert_keys,
 )
@@ -368,6 +374,49 @@ def gemm_blocks(batches, *, qids, Qm, q_sq, metric: str, k: int,
             )
 
 
+def _gemm_kernel(qids, Q, Qm, metric: str, k: int, compressed: bool,
+                 by_bucket: dict | None):
+    return partial(
+        gemm_blocks, qids=qids, Qm=Qm, q_sq=(Q * Q).sum(axis=1),
+        metric=metric, k=k, compressed=compressed, by_bucket=by_bucket,
+    )
+
+
+#: the schema every probe kernel emits
+SCORED_SCHEMA = "query_id long, vec_id long, score double"
+
+
+@dataclass(frozen=True)
+class Probe:
+    """One prepared centroid-layout probe, computed once and run by
+    either executor (:func:`probe_on_spark`, or on the driver in
+    ``operators.search``): the kernel bound over the query matrix and
+    the probe plan (Arrow batches → ``SCORED_SCHEMA`` batches), the
+    probed bucket ids, the kernel's input columns as ``kernel name →
+    layout column``, and the final window's metric and ``k``."""
+
+    kernel: Callable
+    probed: list
+    columns: dict
+    metric: str
+    k: int
+
+
+def probe_on_spark(layout: DataFrame, probe: Probe, pre_filter=None) -> DataFrame:
+    """The Spark executor of a :class:`Probe`: the layout scan pruned
+    to the probed ``centroid_id`` directories (PartitionFilters), the
+    ``pre_filter`` pushed into the same scan, the kernel in one
+    ``mapInArrow`` and the per-query top-k window
+    (:func:`topk.rank_top_k`)."""
+    pruned = layout.filter(F.col("centroid_id").isin(probe.probed))
+    if pre_filter is not None:
+        pruned = pruned.filter(pre_filter)
+    scored = pruned.select(
+        *[F.col(src).alias(name) for name, src in probe.columns.items()]
+    ).mapInArrow(probe.kernel, SCORED_SCHEMA)
+    return rank_top_k(scored, probe.k, probe.metric)
+
+
 def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
               by_bucket: dict | None = None) -> DataFrame:
     """The exact scan's and the IVF probe's GEMM top-k: (query_id,
@@ -385,13 +434,8 @@ def gemm_topk(cand: DataFrame, qids, Q, Qm, metric: str, k: int,
     by :func:`topk.rank_top_k`. Rows tied at the k-th score all survive
     the batch, so the window's (score, ``vec_id``) order decides among
     them, as it does on every other route."""
-    kernel = partial(
-        gemm_blocks, qids=qids, Qm=Qm, q_sq=(Q * Q).sum(axis=1),
-        metric=metric, k=k, compressed="q8" in cand.columns,
-        by_bucket=by_bucket,
-    )
-    scored = cand.mapInArrow(kernel, "query_id long, vec_id long, score double")
-    return rank_top_k(scored, k, metric)
+    kernel = _gemm_kernel(qids, Q, Qm, metric, k, "q8" in cand.columns, by_bucket)
+    return rank_top_k(cand.mapInArrow(kernel, SCORED_SCHEMA), k, metric)
 
 
 def ivf_topk_gemm(
@@ -422,24 +466,37 @@ def ivf_topk_gemm(
     (``write_ivf_index(compression="int8")``): when the index carries
     ``q8``/``q8_scale`` instead of the vector column, each Arrow batch
     is dequantized in-kernel (one int8→float64 multiply) before the
-    GEMM — the scan moves ~4x fewer bytes."""
-    compressed = "q8" in index.columns and vec_col not in index.columns
+    GEMM — the scan moves ~4x fewer bytes.
+
+    Pinecone-style filtered ANN: ``pre_filter`` lands in the SAME
+    pruned scan (PushedFilters next to PartitionFilters), so filtered
+    rows never reach the GEMM kernel."""
+    probe = ivf_probe(
+        queries, centroids, k, nprobe, metric,
+        "q8" in index.columns and vec_col not in index.columns,
+        query_id_col, query_vec_col, id_col, vec_col,
+    )
+    return probe_on_spark(index, probe, pre_filter)
+
+
+def ivf_probe(queries: DataFrame, centroids: list[tuple[int, list[float]]],
+              k: int, nprobe: int, metric: str, compressed: bool,
+              query_id_col: str, query_vec_col: str, id_col: str,
+              vec_col: str) -> Probe:
+    """The IVF probe's preparation (:func:`ivf_topk_gemm`): the query
+    matrix, its :func:`probe_plan` and the bound GEMM block kernel."""
     qids, Q, Qm = collect_query_matrix(
         queries, query_id_col, query_vec_col, metric
     )
     probed, by_bucket = probe_plan(Qm, centroids, nprobe, metric)
-    pruned = index.filter(F.col("centroid_id").isin(probed))
-    if pre_filter is not None:
-        # Pinecone-style filtered ANN: the metadata predicate lands in
-        # the SAME pruned scan (PushedFilters next to PartitionFilters)
-        # — filtered rows never reach the GEMM kernel
-        pruned = pruned.filter(pre_filter)
-    cand_cols = [F.col(id_col).alias("vec_id"), F.col("centroid_id")] + (
-        [F.col("q8"), F.col("q8_scale")]
-        if compressed
-        else [F.col(vec_col).alias("__vec")]
+    vecs = {"q8": "q8", "q8_scale": "q8_scale"} if compressed else {"__vec": vec_col}
+    return Probe(
+        kernel=_gemm_kernel(qids, Q, Qm, metric, k, compressed, by_bucket),
+        probed=probed,
+        columns={"vec_id": id_col, "centroid_id": "centroid_id", **vecs},
+        metric=metric,
+        k=k,
     )
-    return gemm_topk(pruned.select(*cand_cols), qids, Q, Qm, metric, k, by_bucket)
 
 
 def ivf_topk_rerank(
@@ -664,7 +721,7 @@ def delete_centroid_ids(spark: SparkSession, path: str,
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
     ids_df = ids_df.distinct().localCheckpoint(eager=True)
     n_deleted, touched = delete_keys(
-        spark.read.parquet(path), path, "centroid_id", ids_df, id_col
+        read_parquet(spark, path), path, "centroid_id", ids_df, id_col
     )
     release_local_checkpoint(ids_df)
     staleness = (
@@ -686,7 +743,7 @@ def ivf_staleness(path: str) -> float:
 def read_ivf_index(spark: SparkSession, path: str) -> DataFrame:
     """Read the layout back, failing loudly on a torn partition swap."""
     check_not_torn(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def upsert_ivf_index(
@@ -753,7 +810,7 @@ def upsert_centroid_rows(spark: SparkSession, path: str, meta_file: str,
     touched = []
     if n_new:
         touched = upsert_keys(
-            spark.read.parquet(path), path, "centroid_id", fresh, id_col
+            read_parquet(spark, path), path, "centroid_id", fresh, id_col
         )
     release_local_checkpoint(fresh)
     return {

@@ -50,10 +50,11 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.fun
     smaller_is_better,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+    Probe,
+    collect_query_matrix,
     list_matrix,
-)
-from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
-    rank_top_k,
+    probe_on_spark,
+    probe_plan,
 )
 
 
@@ -152,16 +153,23 @@ def train_books_and_centroids(
     calls — both are pure functions of ``index``."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         seed_centroids,
     )
 
+    # the caller's local properties (job group, description) ride along,
+    # so the threads' jobs count as the caller's
+    inherit = inheritable_thread_target(index.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         fb = pool.submit(
-            train_pq_codebooks, index, m, k, id_col, vec_col, iters,
+            inherit(train_pq_codebooks), index, m, k, id_col, vec_col, iters,
             max_train_rows,
         )
-        fc = pool.submit(seed_centroids, index, n_centroids, id_col, vec_col)
+        fc = pool.submit(
+            inherit(seed_centroids), index, n_centroids, id_col, vec_col
+        )
         return fb.result(), fc.result()
 
 
@@ -981,15 +989,6 @@ def ivfpq_topk_rerank(
 
     Under cosine a zero-norm row has no score, so it is never
     returned."""
-    import numpy as np
-
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        collect_query_matrix,
-        probe_plan,
-        sidecar_centroids,
-    )
-
-    metric = layout_metric(meta)
     if vec_col not in layout.columns:
         raise ValueError(
             f"IVFPQ layout has no raw-vector column {vec_col!r} (a "
@@ -997,6 +996,27 @@ def ivfpq_topk_rerank(
             "write_ivfpq_index, which stores the vectors next to the codes "
             "(pq_encode carries them with carry_cols=[vec_col])"
         )
+    probe = ivfpq_probe(
+        queries, meta, k, nprobe, fetch_k, query_id_col, query_vec_col,
+        id_col, vec_col,
+    )
+    return probe_on_spark(layout, probe, pre_filter)
+
+
+def ivfpq_probe(queries: DataFrame, meta: dict, k: int, nprobe: int,
+                fetch_k: int, query_id_col: str, query_vec_col: str,
+                id_col: str, vec_col: str) -> Probe:
+    """The IVFPQ probe's preparation (:func:`ivfpq_topk_rerank`): the
+    query matrix, moved into the layout space the sidecar ``meta``
+    describes, its :func:`ann.probe_plan` and the bound
+    :func:`adc_rerank_blocks` kernel, as an ``ann.Probe``."""
+    import numpy as np
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        sidecar_centroids,
+    )
+
+    metric = layout_metric(meta)
     fetch_k = max(fetch_k, k)
     codebooks = meta["codebooks"]
     book_dim = _book_dim(codebooks)
@@ -1027,9 +1047,6 @@ def ivfpq_topk_rerank(
     centroids = sidecar_centroids(meta)
     # the probe runs in the layout's (transformed) euclidean space
     probed, by_bucket = probe_plan(Q, centroids, nprobe, "euclidean")
-    pruned = layout.filter(F.col("centroid_id").isin(probed))
-    if pre_filter is not None:
-        pruned = pruned.filter(pre_filter)
     kernel = partial(
         adc_rerank_blocks,
         qids=qids,
@@ -1049,10 +1066,13 @@ def ivfpq_topk_rerank(
         id_col=id_col,
         vec_col=vec_col,
     )
-    scored = pruned.select(
-        id_col, "codes", "centroid_id", vec_col
-    ).mapInArrow(kernel, "query_id long, vec_id long, score double")
-    return rank_top_k(scored, k, metric)
+    return Probe(
+        kernel=kernel,
+        probed=probed,
+        columns={c: c for c in (id_col, "codes", "centroid_id", vec_col)},
+        metric=metric,
+        k=k,
+    )
 
 
 def adc_rerank_blocks(batches, *, qids, Q, Qr, books, cvec, by_bucket,

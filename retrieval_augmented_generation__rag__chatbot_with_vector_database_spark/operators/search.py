@@ -6,11 +6,24 @@ reference's analog is the argmax index-selection probe before querying
 `pinecone_service.py:148-182` runs one fixed search path); here the
 decision space is the engine's real strategy ladder:
 
-| path        | when                                            |
-|-------------|-------------------------------------------------|
-| ``ivfpq``   | layout dir carries ``_ivfpq_meta.json`` AND the metric matches the layout's transform: raw→euclidean, ``normalize``→cosine, ``mips``→dotproduct (a transformed layout serves exactly its own metric) |
-| ``ivf``     | layout dir carries ``_ivf_meta.json`` AND the metric is the one the layout was assigned under |
-| ``exact_gemm`` | no layout: Arrow GEMM exact scan             |
+| path        | when                                            | executor |
+|-------------|-------------------------------------------------|----------|
+| ``ivfpq``   | layout dir carries ``_ivfpq_meta.json`` AND the metric matches the layout's transform: raw→euclidean, ``normalize``→cosine, ``mips``→dotproduct (a transformed layout serves exactly its own metric) | driver or Spark, by the bytes rule |
+| ``ivf``     | layout dir carries ``_ivf_meta.json`` AND the metric is the one the layout was assigned under | driver or Spark, by the bytes rule |
+| ``exact_gemm`` | no layout: Arrow GEMM exact scan             | Spark |
+
+The bytes rule: the data files of the probed ``centroid_id=<c>``
+directories (only those are listed) hold at most
+:data:`DRIVER_PROBE_BYTES` → the driver runs the probe's kernel, one
+call per probed bucket over a pyarrow read, ranks with
+``topk.rank_top_k_arrays`` and returns a local frame, so the probe
+starts no Spark job; otherwise the same kernel runs in one
+``mapInArrow`` stage followed by ``topk.rank_top_k``. The preparation
+(query matrix, layout space, probe plan, bound kernel: ``ann.Probe``)
+is computed once, before the choice. Per bucket, the driver's
+candidates are each (query, bucket) ADC top-``fetch_k``; a Spark task
+that reads several buckets cuts their union instead, so the driver's
+set is equal (one bucket per task) or a superset.
 
 Rationale: a persisted inverted-file layout always beats rescanning
 (partition-pruned probe reads nprobe bucket dirs); with both quantized
@@ -38,6 +51,25 @@ from pyspark.sql import DataFrame
 #: at ~1% over-fetch on the 500k hard case). Only ever raises
 #: ``fetch_k``, so full-coverage results are unchanged.
 MIPS_FETCH_FLOOR = 0.01
+
+#: a centroid-layout probe whose probed buckets hold at most this many
+#: bytes of data files runs on the driver, larger ones on Spark. It
+#: stays below Spark's ``spark.sql.execution.arrow.localRelationThreshold``
+#: (48 MiB): a pre_filter's local frame of the probed rows is then
+#: always a driver-side ``LocalRelation`` that Spark folds the filter
+#: into, never a relation shipped to executors. The rule reads only the
+#: listing, never the workload.
+DRIVER_PROBE_BYTES = 32 << 20
+
+
+def _arrow_schemas():
+    import pyarrow as pa
+
+    scored = pa.schema([
+        ("query_id", pa.int64()), ("vec_id", pa.int64()), ("score", pa.float64()),
+    ])
+    # row_number() is never null: the same schema as rank_top_k's
+    return scored, scored.append(pa.field("rank", pa.int32(), nullable=False))
 
 
 def route(layout_path: str | None = None, metric: str = "cosine") -> dict:
@@ -132,7 +164,7 @@ def search(
 
     if path == "ivfpq":
         from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.pq import (
-            ivfpq_topk_rerank,
+            ivfpq_probe,
         )
 
         if metric == "dotproduct":
@@ -140,40 +172,23 @@ def search(
 
             built = int(meta.get("rows_at_build", 0) or 0)
             fetch_k = max(fetch_k, math.ceil(MIPS_FETCH_FLOOR * built))
-        return ivfpq_topk_rerank(
-            queries,
-            queries.sparkSession.read.parquet(layout_path),
-            meta,
-            k=k,
-            nprobe=nprobe,
-            fetch_k=fetch_k,
-            pre_filter=pre_filter,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            id_col=id_col,
-            vec_col=vec_col,
+        probe = ivfpq_probe(
+            queries, meta, k, nprobe, fetch_k, query_id_col, query_vec_col,
+            id_col, vec_col,
         )
+        return _run_probe(queries.sparkSession, layout_path, probe, pre_filter)
     if path == "ivf":
         from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-            ivf_topk_gemm,
-            read_ivf_index,
+            ivf_probe,
             sidecar_centroids,
         )
 
-        spark = queries.sparkSession
-        return ivf_topk_gemm(
-            queries,
-            read_ivf_index(spark, layout_path),
-            sidecar_centroids(meta),
-            k=k,
-            nprobe=nprobe,
-            metric=metric,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            id_col=id_col,
-            vec_col=vec_col,
-            pre_filter=pre_filter,
+        probe = ivf_probe(
+            queries, sidecar_centroids(meta), k, nprobe, metric,
+            meta.get("compression") == "int8", query_id_col, query_vec_col,
+            id_col, vec_col,
         )
+        return _run_probe(queries.sparkSession, layout_path, probe, pre_filter)
     if index is None:
         raise ValueError("exact search needs an index frame")
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
@@ -191,3 +206,110 @@ def search(
         vec_col=vec_col,
         pre_filter=pre_filter,
     )
+
+
+def _run_probe(spark, layout_path: str, probe, pre_filter) -> DataFrame:
+    """Run a prepared centroid-layout probe (``ann.Probe``) with the
+    executor the bytes rule picks: the probed buckets' data files are
+    listed (only their directories, behind the torn-swap fence), and a
+    probe of at most :data:`DRIVER_PROBE_BYTES` runs on the driver,
+    anything larger on Spark. A file that disappears between the
+    listing and the driver read (a concurrent swap) re-lists once."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
+        probe_on_spark,
+    )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        partition_files,
+        read_parquet,
+    )
+
+    for attempt in (0, 1):
+        files = partition_files(layout_path, "centroid_id", probe.probed)
+        if sum(n for fs in files.values() for _, n in fs) > DRIVER_PROBE_BYTES:
+            return probe_on_spark(read_parquet(spark, layout_path), probe, pre_filter)
+        try:
+            return _probe_on_driver(spark, files, probe, pre_filter)
+        except FileNotFoundError:
+            if attempt:
+                raise
+
+
+def _probe_on_driver(spark, files: dict, probe, pre_filter) -> DataFrame:
+    """The driver executor: each probed bucket read with pyarrow and
+    handed to the probe's kernel in its own call, the per-query top-k
+    window in numpy (``topk.rank_top_k_arrays``), and the rows returned
+    as a local frame (a ``LocalRelation``: scanning or broadcasting it
+    starts no job).
+
+    ``pre_filter`` keeps Spark's semantics: it runs over a local frame
+    of the probed rows' non-vector columns (and ``centroid_id``), and
+    only the rows it keeps reach the kernel. A deterministic predicate
+    without a Python UDF folds into the local relation and starts no
+    job."""
+    import pyarrow as pa
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
+        rank_top_k_arrays,
+    )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        read_partitions,
+    )
+
+    layout_cols = list(dict.fromkeys(
+        c for c in probe.columns.values() if c != "centroid_id"
+    ))
+    scored_schema, ranked_schema = _arrow_schemas()
+    tables = read_partitions(
+        files, "centroid_id", layout_cols, all_columns=pre_filter is not None
+    )
+    if pre_filter is not None and tables:
+        tables = _driver_filter(spark, tables, pre_filter, layout_cols)
+    names, sources = list(probe.columns), list(probe.columns.values())
+    out = [
+        b
+        for t in tables.values()
+        if t.num_rows
+        for b in probe.kernel(
+            t.select(sources).rename_columns(names).combine_chunks().to_batches()
+        )
+    ]
+    scored = (
+        pa.Table.from_batches(out, schema=scored_schema)
+        if out
+        else scored_schema.empty_table()
+    )
+    qid = scored.column("query_id").to_numpy()
+    vid = scored.column("vec_id").to_numpy()
+    score = scored.column("score").to_numpy()
+    rows, rank = rank_top_k_arrays(qid, vid, score, probe.k, probe.metric)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(qid[rows]), pa.array(vid[rows]), pa.array(score[rows]),
+             pa.array(rank)],
+            schema=ranked_schema,
+        )
+    )
+
+
+def _driver_filter(spark, tables: dict, pre_filter, kernel_cols: list) -> dict:
+    """``tables`` cut to the rows ``pre_filter`` keeps, evaluated by
+    Spark over a local frame of every column the kernel does not decode
+    as a vector (list columns it reads are left out)."""
+    import numpy as np
+    import pyarrow as pa
+
+    whole = pa.concat_tables(tables.values())
+    local = whole.select([
+        c for c in whole.column_names
+        if not (c in kernel_cols and pa.types.is_list(whole.schema.field(c).type))
+    ])
+    local = local.append_column("__row", pa.array(np.arange(whole.num_rows)))
+    kept = np.zeros(whole.num_rows, dtype=bool)
+    rows = [r[0] for r in spark.createDataFrame(local).filter(pre_filter)
+            .select("__row").collect()]
+    kept[np.array(rows, dtype=np.int64)] = True
+    out, at = {}, 0
+    for c, t in tables.items():
+        out[c] = t.filter(pa.array(kept[at:at + t.num_rows]))
+        at += t.num_rows
+    return out

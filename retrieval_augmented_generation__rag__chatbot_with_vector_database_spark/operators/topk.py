@@ -67,6 +67,31 @@ def rank_top_k(scored: DataFrame, k: int, metric: str,
     )
 
 
+def rank_top_k_arrays(query_id, vec_id, score, k: int, metric: str):
+    """:func:`rank_top_k` on the driver, over numpy columns: returns
+    (row indices, ranks) of each query's best ``k`` rows, in
+    (``query_id``, ``rank``) order. The order is the window's: score in
+    the metric's direction, then lowest ``vec_id``; NaN sorts as the
+    largest value, as in Spark (first under a descending metric, last
+    under an ascending one)."""
+    import numpy as np
+
+    nan = np.isnan(score)
+    key = np.where(nan, 0.0, score)
+    if smaller_is_better(metric):
+        keys = (vec_id, key, nan)
+    else:
+        keys = (vec_id, -key, ~nan)
+    order = np.lexsort((*keys, query_id))
+    qs = query_id[order]
+    start = np.r_[True, qs[1:] != qs[:-1]] if len(qs) else np.zeros(0, bool)
+    # position of each row inside its query's run, 1-based
+    first = np.maximum.accumulate(np.where(start, np.arange(len(qs)), 0))
+    rank = np.arange(len(qs)) - first + 1
+    keep = rank <= k
+    return order[keep], rank[keep].astype(np.int32)
+
+
 def topk_search(
     queries: DataFrame,
     index: DataFrame,

@@ -60,6 +60,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sou
     check_not_torn,
     delete_keys,
     pick_survivors,
+    read_parquet,
     rewrite_partitions,
 )
 
@@ -170,13 +171,13 @@ class VectorIndex:
         check_not_torn(self._data_path, self._swap_marker_path)
         if not os.path.exists(self._data_path):
             return self.spark.createDataFrame([], LOGICAL_SCHEMA)
-        return self.spark.read.parquet(self._data_path).drop(BUCKET_COL)
+        return read_parquet(self.spark, self._data_path).drop(BUCKET_COL)
 
     def _pruned_existing(self, touched: list[int]) -> DataFrame:
         """Existing rows of the touched buckets only — the isin filter
         on the partition column becomes a PartitionFilter, so Spark
         never lists or reads the untouched buckets' files."""
-        return self.spark.read.parquet(self._data_path).filter(
+        return read_parquet(self.spark, self._data_path).filter(
             F.col(BUCKET_COL).isin(touched)
         )
 

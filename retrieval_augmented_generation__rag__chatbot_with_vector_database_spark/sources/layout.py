@@ -43,6 +43,13 @@ so duplicates resolve to the same row on every run.
 ``localCheckpoint`` once the write or collect that consumes it is done
 (the centroid-layout upsert and delete, ``LexicalIndex.create``).
 
+Reads: :func:`read_parquet` is ``spark.read.parquet`` with the schema
+taken from the first data file's footer on the driver, so a read starts
+no schema-inference job. :func:`partition_files` lists only the
+requested partition directories and :func:`read_partitions` reads them
+with pyarrow on the driver (a small centroid-layout probe,
+``operators.search``).
+
 The swap is the dangerous window: a crash between deleting the live
 partition and moving the new one in leaves a missing-or-mixed layout
 that a plain reader would silently serve. The protocol makes a torn
@@ -124,6 +131,102 @@ def swap_partition_dirs(
         _remove(old)
     shutil.rmtree(tmp_path)
     os.remove(mp)
+
+
+#: the footer key under which Spark's parquet writer stores the
+#: table's Spark schema as JSON
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-listing rule: names starting with ``_`` or ``.``
+    (markers, ``_SUCCESS``, checksums, swap asides) are not data."""
+    return name.startswith(("_", "."))
+
+
+def read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job:
+    the Spark schema is read on the driver from the footer of the first
+    data file (pyarrow, no Spark job) and passed to ``.schema(...)``.
+    Partition columns are not in the files, so Spark still infers
+    their types from the directory names. A path with no data file, or
+    a file that Spark did not write (no schema key in its footer),
+    raises."""
+    import pyarrow.parquet as papq
+    from pyspark.sql.types import StructType
+
+    first = None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        data = sorted(f for f in files if not _hidden(f))
+        if data:
+            first = os.path.join(root, data[0])
+            break
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    meta = papq.read_schema(first).metadata or {}
+    if SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(
+            f"{first} has no Spark schema in its footer "
+            f"({SPARK_SCHEMA_KEY.decode()}); it was not written by Spark"
+        )
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
+
+
+def partition_files(path: str, part_col: str, values) -> dict:
+    """``value → [(data file, bytes), ...]`` of the ``part_col=<value>``
+    directories of ``path``, listing only those directories; an absent
+    directory holds no rows. Refuses a torn swap first
+    (:func:`check_not_torn`)."""
+    check_not_torn(path)
+    out = {}
+    for v in values:
+        d = os.path.join(path, f"{part_col}={v}")
+        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+        out[v] = [
+            (os.path.join(d, n), os.path.getsize(os.path.join(d, n)))
+            for n in names
+            if not _hidden(n)
+        ]
+    return out
+
+
+def read_partitions(files: dict, part_col: str, columns: list[str],
+                    all_columns: bool = False) -> dict:
+    """``value → pyarrow.Table`` of ``columns`` (of every column with
+    ``all_columns``) read on the driver from :func:`partition_files`'
+    listing, each with its partition value as an int32 ``part_col``
+    column (the type Spark infers for it). Every file is read under the
+    first file's schema. A column of ``columns`` the files lack raises
+    ``ValueError``; a file removed since the listing raises
+    ``FileNotFoundError``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as papq
+
+    listed = [f for fs in files.values() for f, _ in fs]
+    if not listed:
+        return {}
+    schema = papq.read_schema(listed[0])
+    missing = [c for c in columns if c not in schema.names]
+    if missing:
+        raise ValueError(
+            f"layout files have no column(s) {missing} (columns "
+            f"{schema.names}); rebuild the layout"
+        )
+    out = {}
+    for v, fs in files.items():
+        if not fs:
+            continue
+        t = ds.dataset([f for f, _ in fs], schema=schema, format="parquet").to_table(
+            columns=None if all_columns else columns
+        )
+        out[v] = t.append_column(
+            part_col, pa.array(np.full(t.num_rows, v, dtype=np.int32))
+        )
+    return out
 
 
 def _remove(p: str) -> None:

@@ -84,6 +84,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
     pick_survivors,
+    read_parquet,
     release_local_checkpoint,
     rewrite_partitions,
 )
@@ -350,10 +351,16 @@ class LexicalIndex:
 
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
+            # the caller's local properties (job group, description)
+            # ride along, so the writes' jobs count as the caller's
+            inherit = inheritable_thread_target(self.spark)
             with ThreadPoolExecutor(max_workers=3) as pool:
-                stats_f = pool.submit(_write_docs_then_stats)
+                stats_f = pool.submit(inherit(_write_docs_then_stats))
                 futures = [
-                    pool.submit(w) for w in (_write_postings, _write_termdf)
+                    pool.submit(inherit(w))
+                    for w in (_write_postings, _write_termdf)
                 ]
                 for f in futures:
                     f.result()
@@ -384,7 +391,7 @@ class LexicalIndex:
         )
         if not has_parts:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     def postings(self) -> DataFrame:
         self._check_not_torn()

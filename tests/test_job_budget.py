@@ -36,32 +36,42 @@ SESSION = {
 
 #: call → the most jobs it may start (collect included)
 CEILINGS = {
-    "search_ivfpq": 5,
-    "search_ivf": 5,
+    # the 2 jobs of the query-matrix collect: a small layout probe runs
+    # on the driver (5 each while every probe ran on Spark)
+    "search_ivfpq": 2,
+    "search_ivf": 2,
+    # the filter folds into the probed rows' local relation
+    "search_ivfpq_filtered": 2,
+    # the Spark executor: query collect, mapInArrow and the window (5
+    # while the layout read inferred its schema)
+    "search_ivfpq_spark": 4,
     "search_exact": 4,
     # the one-list IVFPQ probe: one mapInArrow and the final window
     # (7 when it was an ADC pass, two broadcast joins and two windows)
     "pq_topk_rerank": 4,
-    "upsert_ivfpq_index": 13,
-    "VectorIndex.upsert": 10,
-    "LexicalIndex.bm25_topk": 7,
+    # the layout, index and lexical reads take their schema from a
+    # footer, not from an inference job (13, 10, 7, 13, 9 before)
+    "upsert_ivfpq_index": 12,
+    "VectorIndex.upsert": 8,
+    "LexicalIndex.bm25_topk": 6,
     "duplicate_groups": 30,
     # a normalized layout with meta_cols
     "write_ivfpq_index": 2,
     # a MIPS layout (13 while the retrain ran the M aggregate twice)
     "retrain_ivfpq_index": 11,
-    "upsert_ivf_index": 13,
-    "delete_ivfpq_ids": 9,
-    # only the calling thread's jobs: create() writes the postings,
-    # term-df and doc store from worker threads, whose jobs carry no
-    # job group
-    "LexicalIndex.create": 4,
+    "upsert_ivf_index": 12,
+    "delete_ivfpq_ids": 8,
+    # create() writes the postings, term-df and doc store from worker
+    # threads; they carry the caller's job group, so all 16 count (the
+    # ceiling was 4 while those threads' jobs went uncounted)
+    "LexicalIndex.create": 16,
     "gopher_repetition_gate": 20,
 }
 
 
 def count_jobs(spark, fn) -> int:
-    """Jobs started by ``fn()`` on this thread."""
+    """Jobs started by ``fn()`` in its own job group: on this thread,
+    and on the engine's worker threads, which inherit it."""
     sc = spark.sparkContext
     group = f"job-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -71,6 +81,17 @@ def count_jobs(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def on_spark(call):
+    """``call`` with every layout probe on the Spark executor."""
+
+    def run():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(search, "DRIVER_PROBE_BYTES", 0)
+            return call()
+
+    return run
 
 
 def _records(spark, ids, dim=8):
@@ -106,6 +127,10 @@ def calls(spark, tmp_path_factory):
     aug_books = pq.train_pq_codebooks_residual(aug, aug_cents, m=6, k=16)
     pq.write_ivfpq_index(emb, f"{root}/ivfpq_mips", aug_cents, aug_books, mips=True)
     with_source = emb.withColumn("source", F.concat(F.lit("s"), (F.col("vec_id") % 3).cast("string")))
+    pq.write_ivfpq_index(
+        with_source, f"{root}/ivfpq_src", cents, books, normalize=True,
+        meta_cols=["source"],
+    )
     encoded = pq.pq_encode(emb, books, carry_cols=["embedding"])
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
 
@@ -134,6 +159,13 @@ def calls(spark, tmp_path_factory):
         "search_ivfpq": lambda: search.search(
             queries(), None, k=5, metric="euclidean", layout_path=f"{root}/ivfpq"
         ).collect(),
+        "search_ivfpq_filtered": lambda: search.search(
+            queries(), None, k=5, metric="cosine",
+            layout_path=f"{root}/ivfpq_src", pre_filter=F.col("source") == "s1",
+        ).collect(),
+        "search_ivfpq_spark": on_spark(lambda: search.search(
+            queries(), None, k=5, metric="euclidean", layout_path=f"{root}/ivfpq"
+        ).collect()),
         "search_ivf": lambda: search.search(
             queries(), None, k=5, metric="cosine", layout_path=f"{root}/ivf"
         ).collect(),

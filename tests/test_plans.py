@@ -146,17 +146,21 @@ def test_top_terms_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in pp(out)
 
 
-def test_ivfpq_cosine_dispatch_keeps_partition_pruning(spark, emb, tmp_path):
+def test_ivfpq_cosine_dispatch_keeps_partition_pruning(spark, emb, tmp_path, monkeypatch):
     """The r7 metric paths ride the same pruned scan: a dispatched
-    cosine probe over a normalized IVFPQ layout still reads only the
-    probed centroid_id partition directories (PartitionFilters — the
-    16 B/row scan promise survives the transform)."""
+    cosine probe over a normalized IVFPQ layout, on the Spark executor,
+    still reads only the probed centroid_id partition directories
+    (PartitionFilters — the 16 B/row scan promise survives the
+    transform)."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
         pq,
     )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import search as dispatch
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.search import (
         search,
     )
+
+    monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
 
     emb_n = pq._unit_normalized(emb, "embedding")
     books = pq.train_pq_codebooks(emb_n, m=8, k=16)
@@ -170,17 +174,21 @@ def test_ivfpq_cosine_dispatch_keeps_partition_pruning(spark, emb, tmp_path):
     assert has_partition_filter(out, "centroid_id")
 
 
-def test_ivfpq_filtered_pushes_filter_into_pruned_scan(spark, emb, tmp_path):
+def test_ivfpq_filtered_pushes_filter_into_pruned_scan(spark, emb, tmp_path, monkeypatch):
     """Metadata-filtered IVFPQ (meta_cols layout + dispatcher
-    pre_filter): the label predicate and the centroid prune land in
-    the SAME bucket scan — PushedFilters beside PartitionFilters, so
-    non-qualifying rows never reach the ADC kernel."""
+    pre_filter) on the Spark executor: the label predicate and the
+    centroid prune land in the SAME bucket scan — PushedFilters beside
+    PartitionFilters, so non-qualifying rows never reach the ADC
+    kernel."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
         pq,
     )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import search as dispatch
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.search import (
         search,
     )
+
+    monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
 
     emb_n = pq._unit_normalized(emb, "embedding")
     books = pq.train_pq_codebooks(emb_n, m=8, k=16)

@@ -3,7 +3,8 @@
 Small indexes over a small integer value set, so exact duplicates,
 scaled copies and zero vectors are common; k may reach or pass the
 row count; a filter may keep nothing; the index is split over several
-partitions and small Arrow batches. At full probe (``nprobe`` = lists)
+partitions and small Arrow batches. The IVF and IVFPQ layout routes go
+through ``search()`` on both of its executors (driver and Spark). At full probe (``nprobe`` = lists)
 and full fetch (``fetch_k`` ≥ n) the answer does not depend on the
 centroids or codebooks, so they are fixed and untrained.
 
@@ -25,7 +26,7 @@ import tempfile
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -169,6 +170,21 @@ def check_route(name, got_rows, case, metric):
     assert set(got) <= set(want), (name, set(got) - set(want))
 
 
+def _on(executor, build):
+    """``build`` with the layout probe forced onto ``executor``: every
+    probe here is small, so it runs on the driver unless the bytes
+    bound is 0."""
+    if executor == "driver":
+        return build
+
+    def on_spark():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(search, "DRIVER_PROBE_BYTES", 0)
+            return build()
+
+    return on_spark
+
+
 def _routes(spark, case, metric, tmp):
     """(route name, a call building its result frame) for every route
     that serves ``metric``; a route may raise while building it."""
@@ -199,17 +215,25 @@ def _routes(spark, case, metric, tmp):
         queries, assigned, cents, k=k, nprobe=len(cents), metric=metric,
         pre_filter=flt,
     )
-    # the IVFPQ flavour that serves this metric, through the front door
+    # the layout routes through the front door, on each executor
+    ivf = f"{tmp}/ivf_{metric}"
+    ann.write_ivf_index(index, ivf, cents, metric=metric)
+    # the IVFPQ flavour that serves this metric
     normalize, mips = pq.LAYOUT_FLAGS[metric]
     D = d + 1 if mips else d
     books = [[[0.0] * D, [1.0] * D]]
     pq_cents = [(0, [0.0] * D), (1, [1.0] * D), (2, [-1.0] * D)]
-    layout = f"{tmp}/ivfpq_{metric}"
-    pq.write_ivfpq_index(index, layout, pq_cents, books, normalize=normalize, mips=mips)
-    yield "ivfpq", lambda: search.search(
-        queries, None, k=k, metric=metric, layout_path=layout,
-        nprobe=len(pq_cents), fetch_k=n, pre_filter=flt,
-    )
+    ivfpq = f"{tmp}/ivfpq_{metric}"
+    pq.write_ivfpq_index(index, ivfpq, pq_cents, books, normalize=normalize, mips=mips)
+    for executor in ("driver", "spark"):
+        yield f"ivf_{executor}", _on(executor, lambda: search.search(
+            queries, None, k=k, metric=metric, layout_path=ivf,
+            nprobe=len(cents), pre_filter=flt,
+        ))
+        yield f"ivfpq_{executor}", _on(executor, lambda: search.search(
+            queries, None, k=k, metric=metric, layout_path=ivfpq,
+            nprobe=len(pq_cents), fetch_k=n, pre_filter=flt,
+        ))
     if metric == "euclidean":
         enc = pq.pq_encode(index, books, carry_cols=["embedding"])
         if flt is not None:
@@ -217,6 +241,26 @@ def _routes(spark, case, metric, tmp):
         yield "pq_topk_rerank", lambda: pq.pq_topk_rerank(
             queries, enc, books, k=k, fetch_k=n
         )
+
+
+#: a filter that keeps no row
+NOTHING_KEPT = {
+    "ids": [1, 2, 3], "V": [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]],
+    "qids": [100], "Q": [[1.0, 0.0]], "k": 2, "parts": 2, "batch": 1,
+    "filter": "none",
+}
+#: k at and past the row count, over bit-identical rows
+K_PAST_N = {
+    "ids": [7, 4, 9], "V": [[1.0, 2.0], [1.0, 2.0], [-1.0, 0.0]],
+    "qids": [100, 101], "Q": [[1.0, 1.0], [-2.0, 1.0]], "k": 5, "parts": 3,
+    "batch": 1, "filter": None,
+}
+#: zero vectors, which have no cosine, beside a copy and a scaled copy
+ZERO_ROWS = {
+    "ids": [3, 1, 2, 5, 6], "V": [[0.0, 0.0], [1.0, 0.0], [0.0, 0.0], [2.0, 0.0], [1.0, 0.0]],
+    "qids": [100], "Q": [[1.0, 0.0]], "k": 5, "parts": 2, "batch": 2,
+    "filter": "even",
+}
 
 
 @pytest.mark.parametrize("metric", ["cosine", "euclidean", "dotproduct"])
@@ -231,6 +275,10 @@ def test_every_route_matches_the_numpy_reference(spark, metric):
         suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
     )
     @given(case=indexes(metric))
+    # the edge cases run whatever hypothesis draws after a source edit
+    @example(case=NOTHING_KEPT)
+    @example(case=K_PAST_N)
+    @example(case=ZERO_ROWS)
     def check(case):
         tmp = tempfile.mkdtemp(prefix="route_diff_")
         spark.conf.set(key, str(case["batch"]))
@@ -249,7 +297,7 @@ def test_every_route_matches_the_numpy_reference(spark, metric):
     check()
 
 
-@pytest.mark.parametrize("route", ["topk_search", "ivfpq"])
+@pytest.mark.parametrize("route", ["topk_search", "ivfpq_driver", "ivfpq_spark"])
 def test_zero_norm_row_is_never_returned_under_cosine(spark, route, tmp_path):
     """Under cosine a zero-norm row has no score. The GEMM scan always
     dropped it; the SQL path and the IVFPQ kernel returned it last

@@ -2,12 +2,18 @@
 strategy per scenario, search() results match the direct-path calls,
 and contradictions fail loudly."""
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
     ann,
     pq,
+)
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+    search as dispatch,
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.search import (
     route,
@@ -223,7 +229,56 @@ def test_search_ivf_layout_equals_direct_probe(spark, emb, tmp_path):
     assert _rows(got) == _rows(want)
 
 
-def test_search_ivfpq_layout_equals_direct_rerank(spark, emb, tmp_path):
+def _ranked(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["vec_id"], r["score"]) for r in df.collect()
+    )
+
+
+def test_driver_executor_rows_do_not_depend_on_files(spark, emb, tmp_path, monkeypatch):
+    """The driver executor calls the kernel once per probed bucket, so
+    its rows (unrounded) are the same for a layout written with one
+    file per bucket and with three, and equal the Spark executor's when
+    each Spark task reads one bucket (one task per file). Its result is
+    a local relation: collecting it starts no job."""
+    books = pq.train_pq_codebooks(emb, m=8, k=16)
+    cents = ann.seed_centroids(emb, 8)
+    one, three = str(tmp_path / "one"), str(tmp_path / "three")
+    pq.write_ivfpq_index(emb, one, cents, books)
+    spark.read.parquet(one).repartition(3).write.partitionBy("centroid_id").parquet(three)
+    shutil.copy(f"{one}/{pq.IVFPQ_META}", three)
+    assert all(
+        len([f for f in os.listdir(f"{three}/{d}") if f.endswith(".parquet")]) == 3
+        for d in os.listdir(three)
+        if d.startswith("centroid_id=")
+    )
+
+    def probe(path):
+        return search(
+            _queries(emb), None, k=5, metric="euclidean", layout_path=path,
+            nprobe=4, fetch_k=25,
+        )
+
+    got = probe(one)
+    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
+    driver = _ranked(got)
+    assert driver == _ranked(probe(three))
+    monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))  # every file its own task
+    try:
+        assert _ranked(probe(one)) == driver
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_search_ivfpq_layout_equals_direct_rerank(spark, emb, tmp_path, monkeypatch):
+    """On the Spark executor the dispatched probe is the direct
+    ``ivfpq_topk_rerank`` over the layout. (The driver executor's
+    candidates are per bucket, not per task: see
+    ``test_driver_executor_rows_do_not_depend_on_files``.)"""
+    monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
     path = str(tmp_path / "ivfpq2")
     books = pq.train_pq_codebooks(emb, m=8, k=16)
     cents = ann.seed_centroids(emb, 8)

@@ -390,3 +390,74 @@ def test_jsonl_ingest_empty_dir_is_empty_not_error(spark, tmp_path):
     clean, quarantined, source_scan = load_jsonl_documents(spark, str(d))
     assert clean.count() == 0 and quarantined.count() == 0
     source_scan.unpersist()
+
+
+def test_read_parquet_takes_the_schema_from_a_footer(spark, tmp_path):
+    """``layout.read_parquet`` gives the schema ``spark.read.parquet``
+    infers, partition columns included, for an index, a lexical index,
+    an IVF layout and an IVFPQ layout, and starts no job doing so. A
+    file that Spark did not write has no schema key and raises."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators import (
+        ann,
+        pq,
+    )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        read_parquet,
+    )
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.lexical_index import (
+        LexicalIndex,
+    )
+
+    vi = VectorIndex(spark, str(tmp_path), "vi").create(dimension=4)
+    vi.upsert(
+        spark.createDataFrame(
+            [(f"id{i}", [float(i), 1.0, 0.0, 2.0], f"text {i}", "src", i) for i in range(12)],
+            "id string, embedding array<float>, text string, source string, "
+            "chunk_index int",
+        ),
+        batch=1,
+    )
+    lex = LexicalIndex(spark, str(tmp_path / "lex")).create(
+        spark.createDataFrame(
+            [(i, f"spark vector doc{i}") for i in range(12)], "doc_id long, text string"
+        ),
+        term_buckets=2,
+        doc_buckets=2,
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, float(i % 3), 0.5]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    ).withColumn("source", F.lit("s"))
+    cents = ann.seed_centroids(emb, 4)
+    ann.write_ivf_index(emb, str(tmp_path / "ivf"), cents, metric="euclidean")
+    books = pq.train_pq_codebooks(emb, m=2, k=4)
+    pq.write_ivfpq_index(emb, str(tmp_path / "ivfpq"), cents, books, meta_cols=["source"])
+    paths = [
+        vi._data_path,
+        lex._postings_path,
+        lex._termdf_path,
+        lex._docs_path,
+        str(tmp_path / "ivf"),
+        str(tmp_path / "ivfpq"),
+    ]
+    sc = spark.sparkContext
+    for path in paths:
+        group = f"read-parquet-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            got = read_parquet(spark, path).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], path
+        assert got == spark.read.parquet(path).schema, path
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    papq.write_table(pa.table({"x": [1, 2]}), str(foreign / "part-0.parquet"))
+    with pytest.raises(ValueError, match="Spark schema"):
+        read_parquet(spark, str(foreign))
