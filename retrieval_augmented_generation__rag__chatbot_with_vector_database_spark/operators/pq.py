@@ -55,6 +55,7 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
     list_matrix,
     probe_on_spark,
     probe_plan,
+    sidecar_centroids,
 )
 
 
@@ -1012,10 +1013,6 @@ def ivfpq_probe(queries: DataFrame, meta: dict, k: int, nprobe: int,
     :func:`adc_rerank_blocks` kernel, as an ``ann.Probe``."""
     import numpy as np
 
-    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
-        sidecar_centroids,
-    )
-
     metric = layout_metric(meta)
     fetch_k = max(fetch_k, k)
     codebooks = meta["codebooks"]
@@ -1100,7 +1097,8 @@ def adc_rerank_blocks(batches, *, qids, Q, Qr, books, cvec, by_bucket,
     ``fetch_k`` covers the probed rows, which is how the full-value
     oracles are constructed). Every cut breaks ADC ties by ``vec_id``,
     so the candidate set is deterministic given the task's bucket
-    assignment."""
+    assignment. The driver executor (``operators.search``) calls the
+    kernel once per probed bucket, so there a "task" is one bucket."""
     import numpy as np
     import pyarrow as pa
 

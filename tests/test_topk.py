@@ -252,3 +252,30 @@ def test_mmr_overflow_guard(spark):
     )
     with pt.raises(Exception, match="max_candidates"):
         mmr_rerank(df, k=2, lam=0.5, max_candidates=5).collect()
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean"])
+def test_numpy_window_equals_rank_top_k(spark, metric):
+    """``rank_top_k_arrays`` is ``rank_top_k``'s window on the driver:
+    the same rows and ranks, with score ties to the lowest vec_id, -0.0
+    equal to 0.0 and NaN sorting as the largest value."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.topk import (
+        rank_top_k,
+        rank_top_k_arrays,
+    )
+
+    nan = float("nan")
+    rows = [
+        (0, 5, 0.5), (0, 3, 0.5), (0, 9, nan), (0, 1, -0.0), (0, 2, 0.0),
+        (0, 7, nan), (0, 4, 2.0), (1, 8, 1.0), (1, 6, nan), (2, 11, 3.0),
+    ]
+    df = spark.createDataFrame(rows, "query_id long, vec_id long, score double")
+    want = [
+        (r["query_id"], r["rank"], r["vec_id"])
+        for r in rank_top_k(df, 4, metric).orderBy("query_id", "rank").collect()
+    ]
+    q = np.array([r[0] for r in rows], dtype=np.int64)
+    v = np.array([r[1] for r in rows], dtype=np.int64)
+    s = np.array([r[2] for r in rows], dtype=np.float64)
+    idx, rank = rank_top_k_arrays(q, v, s, 4, metric)
+    assert list(zip(q[idx].tolist(), rank.tolist(), v[idx].tolist())) == want
