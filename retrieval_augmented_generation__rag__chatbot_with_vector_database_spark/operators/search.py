@@ -53,12 +53,15 @@ from pyspark.sql import DataFrame
 MIPS_FETCH_FLOOR = 0.01
 
 #: a centroid-layout probe whose probed buckets hold at most this many
-#: bytes of data files runs on the driver, larger ones on Spark. It
-#: stays below Spark's ``spark.sql.execution.arrow.localRelationThreshold``
-#: (48 MiB): a pre_filter's local frame of the probed rows is then
-#: always a driver-side ``LocalRelation`` that Spark folds the filter
-#: into, never a relation shipped to executors. The rule reads only the
-#: listing, never the workload.
+#: bytes of data files runs on the driver, larger ones on Spark. The
+#: rule reads only the listing, never the workload. The value is not a
+#: measured crossover: it is kept below Spark's
+#: ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB), under
+#: which a pre_filter's local frame of the probed rows stays a
+#: driver-side ``LocalRelation`` that Spark folds the filter into. The
+#: bound is on compressed on-disk bytes and that threshold on Arrow
+#: bytes in memory, so this is not a guarantee: a frame past the
+#: threshold costs one more job, not other rows.
 DRIVER_PROBE_BYTES = 32 << 20
 
 
@@ -214,7 +217,8 @@ def _run_probe(spark, layout_path: str, probe, pre_filter) -> DataFrame:
     listed (only their directories, behind the torn-swap fence), and a
     probe of at most :data:`DRIVER_PROBE_BYTES` runs on the driver,
     anything larger on Spark. A file that disappears between the
-    listing and the driver read (a concurrent swap) re-lists once."""
+    listing and the driver read, or while the probed directories are
+    listed (a concurrent swap), re-lists once."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.ann import (
         probe_on_spark,
     )
@@ -224,14 +228,15 @@ def _run_probe(spark, layout_path: str, probe, pre_filter) -> DataFrame:
     )
 
     for attempt in (0, 1):
-        files = partition_files(layout_path, "centroid_id", probe.probed)
-        if sum(n for fs in files.values() for _, n in fs) > DRIVER_PROBE_BYTES:
-            return probe_on_spark(read_parquet(spark, layout_path), probe, pre_filter)
         try:
+            files = partition_files(layout_path, "centroid_id", probe.probed)
+            if sum(n for fs in files.values() for _, n in fs) > DRIVER_PROBE_BYTES:
+                break
             return _probe_on_driver(spark, files, probe, pre_filter)
         except FileNotFoundError:
             if attempt:
                 raise
+    return probe_on_spark(read_parquet(spark, layout_path), probe, pre_filter)
 
 
 def _probe_on_driver(spark, files: dict, probe, pre_filter) -> DataFrame:
@@ -242,8 +247,8 @@ def _probe_on_driver(spark, files: dict, probe, pre_filter) -> DataFrame:
     starts no job).
 
     ``pre_filter`` keeps Spark's semantics: it runs over a local frame
-    of the probed rows' non-vector columns (and ``centroid_id``), and
-    only the rows it keeps reach the kernel. A deterministic predicate
+    of the probed rows (every column, with ``centroid_id``), and only
+    the rows it keeps reach the kernel. A deterministic predicate
     without a Python UDF folds into the local relation and starts no
     job."""
     import pyarrow as pa
@@ -263,7 +268,7 @@ def _probe_on_driver(spark, files: dict, probe, pre_filter) -> DataFrame:
         files, "centroid_id", layout_cols, all_columns=pre_filter is not None
     )
     if pre_filter is not None and tables:
-        tables = _driver_filter(spark, tables, pre_filter, layout_cols)
+        tables = _driver_filter(spark, tables, pre_filter)
     names, sources = list(probe.columns), list(probe.columns.values())
     out = [
         b
@@ -291,19 +296,15 @@ def _probe_on_driver(spark, files: dict, probe, pre_filter) -> DataFrame:
     )
 
 
-def _driver_filter(spark, tables: dict, pre_filter, kernel_cols: list) -> dict:
+def _driver_filter(spark, tables: dict, pre_filter) -> dict:
     """``tables`` cut to the rows ``pre_filter`` keeps, evaluated by
-    Spark over a local frame of every column the kernel does not decode
-    as a vector (list columns it reads are left out)."""
+    Spark over a local frame of every column of the probed rows, so a
+    predicate may name any column the Spark executor's scan has."""
     import numpy as np
     import pyarrow as pa
 
     whole = pa.concat_tables(tables.values())
-    local = whole.select([
-        c for c in whole.column_names
-        if not (c in kernel_cols and pa.types.is_list(whole.schema.field(c).type))
-    ])
-    local = local.append_column("__row", pa.array(np.arange(whole.num_rows)))
+    local = whole.append_column("__row", pa.array(np.arange(whole.num_rows)))
     kept = np.zeros(whole.num_rows, dtype=bool)
     rows = [r[0] for r in spark.createDataFrame(local).filter(pre_filter)
             .select("__row").collect()]

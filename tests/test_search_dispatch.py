@@ -273,6 +273,94 @@ def test_driver_executor_rows_do_not_depend_on_files(spark, emb, tmp_path, monke
         spark.conf.set(key, before)
 
 
+def _one_task_per_file(spark):
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    return lambda: spark.conf.set(key, before)
+
+
+def test_driver_filter_may_name_the_vector_column(spark, emb, tmp_path, monkeypatch):
+    """A pre_filter over the layout's vector column runs on the driver
+    executor as it does on Spark's scan, with the same rows."""
+    path = str(tmp_path / "ivfpq")
+    pq.write_ivfpq_index(
+        emb, path, ann.seed_centroids(emb, 8), pq.train_pq_codebooks(emb, m=8, k=16)
+    )
+    keep = F.col("embedding")[0] > 0.0
+
+    def probe():
+        return _ranked(search(
+            _queries(emb), None, k=5, metric="euclidean", layout_path=path,
+            nprobe=4, fetch_k=25, pre_filter=keep,
+        ))
+
+    driver = probe()
+    assert driver
+    monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
+    restore = _one_task_per_file(spark)
+    try:
+        assert probe() == driver
+    finally:
+        restore()
+
+
+def test_driver_executor_relists_once_after_a_concurrent_swap(
+    spark, emb, tmp_path, monkeypatch
+):
+    """A bucket file renamed between the listing and the read, or a
+    directory gone while it is listed, makes the driver executor list
+    the probed directories once more; a second miss raises."""
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources import (
+        layout,
+    )
+
+    path = str(tmp_path / "ivfpq")
+    pq.write_ivfpq_index(
+        emb, path, ann.seed_centroids(emb, 8), pq.train_pq_codebooks(emb, m=8, k=16)
+    )
+
+    def probe():
+        return _ranked(search(
+            _queries(emb), None, k=5, metric="euclidean", layout_path=path,
+            nprobe=4, fetch_k=25,
+        ))
+
+    want = probe()
+    listing = layout.partition_files
+    calls = []
+
+    def swap_after_listing(*a):
+        calls.append(a)
+        files = listing(*a)
+        if len(calls) == 1:
+            f = next(f for fs in files.values() for f, _ in fs)
+            os.rename(f, f.replace("part-", "part-swapped-"))
+        return files
+
+    monkeypatch.setattr(layout, "partition_files", swap_after_listing)
+    assert probe() == want
+    assert len(calls) == 2
+
+    def gone_while_listing(*a):
+        calls.append(a)
+        if len(calls) % 2:
+            raise FileNotFoundError("centroid_id=0")
+        return listing(*a)
+
+    calls.clear()
+    monkeypatch.setattr(layout, "partition_files", gone_while_listing)
+    assert probe() == want
+    assert len(calls) == 2
+
+    def always_gone(*a):
+        raise FileNotFoundError("centroid_id=0")
+
+    monkeypatch.setattr(layout, "partition_files", always_gone)
+    with pytest.raises(FileNotFoundError):
+        probe()
+
+
 def test_search_ivfpq_layout_equals_direct_rerank(spark, emb, tmp_path, monkeypatch):
     """On the Spark executor the dispatched probe is the direct
     ``ivfpq_topk_rerank`` over the layout. (The driver executor's
