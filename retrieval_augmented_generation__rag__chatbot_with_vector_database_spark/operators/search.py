@@ -55,7 +55,9 @@ MIPS_FETCH_FLOOR = 0.01
 #: a centroid-layout probe whose probed buckets hold at most this many
 #: bytes of data files runs on the driver, larger ones on Spark. The
 #: rule reads only the listing, never the workload. The value is not a
-#: measured crossover: it is kept below Spark's
+#: speed crossover (on a 4-core host, over a 300k-row 64-d layout, the
+#: driver was faster at every probe size measured, 9 to 148 MiB); it
+#: bounds the driver's memory per request and is kept below Spark's
 #: ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB), under
 #: which a pre_filter's local frame of the probed rows stays a
 #: driver-side ``LocalRelation`` that Spark folds the filter into. The
