@@ -235,6 +235,14 @@ def _ranked(df):
     )
 
 
+def _one_task_per_file(spark):
+    """Make every Parquet file its own Spark task; returns the undo."""
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(1 << 30))
+    return lambda: spark.conf.set(key, before)
+
+
 def test_driver_executor_rows_do_not_depend_on_files(spark, emb, tmp_path, monkeypatch):
     """The driver executor calls the kernel once per probed bucket, so
     its rows (unrounded) are the same for a layout written with one
@@ -264,20 +272,11 @@ def test_driver_executor_rows_do_not_depend_on_files(spark, emb, tmp_path, monke
     driver = _ranked(got)
     assert driver == _ranked(probe(three))
     monkeypatch.setattr(dispatch, "DRIVER_PROBE_BYTES", 0)
-    key = "spark.sql.files.openCostInBytes"
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(1 << 30))  # every file its own task
+    restore = _one_task_per_file(spark)
     try:
         assert _ranked(probe(one)) == driver
     finally:
-        spark.conf.set(key, before)
-
-
-def _one_task_per_file(spark):
-    key = "spark.sql.files.openCostInBytes"
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(1 << 30))
-    return lambda: spark.conf.set(key, before)
+        restore()
 
 
 def test_driver_filter_may_name_the_vector_column(spark, emb, tmp_path, monkeypatch):
